@@ -4,48 +4,78 @@ The reference's central relational operator (distance_matrix,
 dtw.py:725-828) is a triangular theta self-join with an expensive
 per-pair kernel; its own distribution primitive is the rectangular
 ``block`` (dtw.py:757-761, intended "to distribute the computations over
-multiple nodes", README.md:191-193).  Here the block becomes the Spark
-unit of work:
+multiple nodes", README.md:191-193).
 
-1. series get dense indices and a chunk id ``ci = i // chunk_size``;
-2. the *pair space* is pruned declaratively: only chunk pairs
-   ``ci <= cj`` (triangular symmetry) that intersect the requested block
-   survive — this is partition pruning over the pair space, done before
-   any data moves;
-3. each surviving chunk pair becomes one ``applyInPandas`` group whose
-   kernel computes its intra-block pairs with the batched anti-diagonal
-   DP (kernels/dtw.py), LB_Keogh-prefiltered when max_dist is set;
-4. output is the long-format ``(i, j, d)`` DataFrame — the "condensed"
-   matrix is just this table ordered row-major; a full numpy matrix is
-   materialized only driver-side for small n.
+Every self-matrix here — DTW (:func:`distance_matrix`) and weighted DTW
+(:func:`distance_matrix_weighted`) — runs through ONE pair executor,
+:func:`_pair_matrix`.  It takes the source columns, a pair space (the
+upper triangle, or a ``block`` rectangle with or without ``triu``) and a
+per-pair kernel callback ``kernel(ii, jj, *corpus) -> (i, j, d)`` where
+``corpus`` holds one ``{id: array}`` dict per source column.  One
+persist, one stats pass and one gate — estimated bytes of the columns it
+would broadcast against ``spark.dtaidistance.broadcastMatrixMaxBytes`` —
+choose between two physical strategies:
 
-Scale properties: data duplication per chunk is O(n/chunk_size) (the
-unavoidable all-pairs fan-out), shuffle is keyed by (ci, cj) which is
-uniformly distributed by construction, and within a task pairs of equal
-length are batch-vectorized so Python overhead is amortized over
-thousands of pairs per numpy call.
+* **broadcast pair ranges** (under the gate): the corpus is collected
+  once and broadcast, and work is distributed as ``(lo, hi)`` ranges of
+  the linear pair space.  Each task unranks its pair coordinates in
+  closed form, so the driver never materializes O(n²) pair lists.  The
+  ranges follow the reference's OMP ``guided`` loop
+  (dd_dtw_openmp.c:99), weighted by estimated kernel cost
+  ``len_i·len_j``: each range takes 1/(4·par) of the cost still
+  remaining, so early tasks are big and the tail is fine-grained; on
+  equal lengths cost is proportional to pair count.  A range yields
+  sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so a task's memory
+  stays bounded whatever the pair count.
+* **chunk-pair shuffle** (over the gate): series get a chunk id, the
+  chunk-pair space is pruned declaratively (``ci <= cj`` and the block)
+  before any data moves, each row is replicated to its surviving partner
+  chunks, and each ``(ci, cj)`` group runs the kernel in one
+  ``applyInPandas`` call.
+
+Output is the long-format ``(i, j, d)`` DataFrame — the "condensed"
+matrix is this table ordered row-major; a full numpy matrix is
+materialized only driver-side for small n.  :func:`distance_matrix_cross`
+broadcasts the query set, streams the corpus and runs the same DTW pair
+kernel, :func:`_compute_pairs`.
 """
 
 from __future__ import annotations
 
-import os
+from functools import partial
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from ..kernels.dtw import DtwSettings, dtw_distance_batch, lb_keogh_batch
+from ..kernels.dtw import (DtwSettings, _batch_elems, dtw_distance_batch,
+                           dtw_distance_batch_indexed, lb_keogh_batch)
+from ..kernels.extras import weighted_warping_paths
 from ..resources import track_broadcast, track_persist
 
 PAIR_SCHEMA = "i long, j long, d double"
 
+# Pairs per yield of a broadcast range task.  A range's index, unranking,
+# kernel and output arrays peak near 100 B/pair before the yield, so this
+# bounds a task's Python-side working set near 200 MB however large its
+# range is (measured on a 12M-pair range: 837 MB in one shot, 206 MB in
+# 2M-pair sub-batches).
+_SUB_BATCH_PAIRS = 2_000_000
 
-def _series_np(v) -> np.ndarray:
+# Worker-side bytes of stacked (n, L) corpora kept for the indexed
+# kernel entry; matches the default broadcast gate, so one broadcast
+# corpus always fits.
+_CORPUS_CACHE_BYTES = 256 * 1024 * 1024
+
+
+def _series_np(v) -> Optional[np.ndarray]:
     """Arrow→numpy for a series cell: 1-D array<double> or 2-D
-    array<array<double>> (ndim series arrive as object arrays of rows)."""
+    array<array<double>> (n-D series and weight profiles arrive as
+    object arrays of rows).  A null cell stays None."""
+    if v is None:
+        return None
     a = np.asarray(v)
     if a.dtype == object:
         a = np.stack([np.asarray(x, dtype=np.float64) for x in v])
@@ -60,11 +90,10 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
 
     Pass 1: range-repartition by ``order_col`` (globally ordered partition
     ranges), sort within partitions, persist, and collect the tiny
-    per-partition row counts.  Pass 2: a ``mapInPandas`` running counter
-    plus the broadcast cumulative offsets yields the dense global index.
-    Every stage is parallel; the only driver data is one count per
-    partition.  (Replaces the round-1 global ``row_number()`` that
-    serialized the whole corpus through one task.)
+    per-partition row counts.  Pass 2: a running counter plus the
+    cumulative offsets yields the dense global index.  Every stage is
+    parallel; the only driver data is one count per partition, where a
+    global ``row_number()`` would serialize the corpus through one task.
 
     ``ordered=False`` skips the range exchange and sort entirely and
     indexes rows in the input's existing partition layout — still dense
@@ -81,10 +110,10 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
         # Persist the INPUT before the range exchange: repartitionByRange
         # runs a sampling pass that otherwise re-executes the entire
         # upstream plan once just to pick boundaries, and the exchange
-        # itself executes it a second time (r6: measured 29 s -> ~10 s
-        # for the 15k-series 10x corpus whose upstream is the full
-        # rollup -> gap-fill -> arrays pipeline).  Both passes now read
-        # the cache; release_all() frees it with every other handle.
+        # itself executes it a second time (measured 29 s -> ~10 s for a
+        # 15k-series corpus whose upstream is the full rollup -> gap-fill
+        # -> arrays pipeline).  Both passes now read the cache;
+        # release_all() frees it with every other handle.
         if persist:
             series_df = track_persist(series_df.persist())
         part = (series_df
@@ -112,8 +141,8 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
         # mapInArrow, not mapInPandas: the job only appends a counter
         # column, and an Arrow->pandas->Arrow roundtrip would rebuild
         # every array<double> series cell as per-row Python objects
-        # (r6: measured ~15 s of pure conversion on the 15k x 504
-        # 10x corpus); record batches pass through zero-copy instead.
+        # (~15 s of pure conversion on a 15k x 504 corpus); record
+        # batches pass through zero-copy instead.
         import pyarrow as pa
 
         seen = 0
@@ -140,80 +169,78 @@ def _norm_block(block) -> Tuple[Optional[tuple], bool]:
             (int(block[1][0]), int(block[1][1]))), triu
 
 
+class _SharedCorpus(dict):
+    """An ``{id: array}`` corpus dict that many tasks of one worker share:
+    the broadcast-held corpus.  Only these dicts get their stacked matrix
+    cached; one-shot dicts (shuffle groups, cross batches) are stacked and
+    dropped."""
+
+
+# id(dict) -> (dict, (ids, V), retained bytes), oldest first
 _CORPUS_CACHE: dict = {}
 
 
 def _corpus_matrix(values_by_idx: dict):
-    """(ids, V, pos) for an equal-length 1-D corpus dict, or None.
+    """(sorted ids, V) stacking an equal-length 1-D corpus dict into one
+    (n, L) matrix, or None for ragged or n-D corpora.
 
-    Cached per dict identity: the broadcast path hands every task in a
-    worker the SAME broadcast-held dict, so the (n, L) stack is built
-    once per worker instead of once per task.  The cache holds a strong
-    reference to the dict, which also keeps id() stable."""
+    A :class:`_SharedCorpus` is cached per dict identity, so every task in
+    a worker reuses the stack of the same broadcast-held dict.  The cache
+    holds a strong reference to the dict, which keeps id() stable, and
+    counts both the dict's arrays and the stack against
+    ``_CORPUS_CACHE_BYTES``; past it the oldest entries are evicted (the
+    newest entry always stays)."""
+    shared = isinstance(values_by_idx, _SharedCorpus)
     key = id(values_by_idx)
-    hit = _CORPUS_CACHE.get(key)
+    hit = _CORPUS_CACHE.get(key) if shared else None
     if hit is not None and hit[0] is values_by_idx:
         return hit[1]
-    first = next(iter(values_by_idx.values()), None)
-    if first is None or np.asarray(first).ndim != 1:
-        res = None
-    else:
-        L = len(first)
-        arrs = list(values_by_idx.values())
-        if any(a.ndim != 1 or len(a) != L for a in arrs):
-            res = None
-        else:
-            ids = np.fromiter(values_by_idx.keys(), dtype=np.int64,
-                              count=len(values_by_idx))
-            order = np.argsort(ids)
-            ids = ids[order]
-            V = np.empty((len(ids), L), dtype=np.float64)
-            for row, k in enumerate(order):
-                V[row] = arrs[k]
-            res = (ids, V)
-    if len(_CORPUS_CACHE) > 4:
-        _CORPUS_CACHE.clear()
-    _CORPUS_CACHE[key] = (values_by_idx, res)
+    arrs = list(values_by_idx.values())
+    if not arrs or any(a.ndim != 1 or len(a) != len(arrs[0]) for a in arrs):
+        return None
+    ids = np.fromiter(values_by_idx.keys(), dtype=np.int64, count=len(arrs))
+    order = np.argsort(ids)
+    res = (ids[order], np.stack([arrs[k] for k in order]))
+    if shared:
+        _CORPUS_CACHE[key] = (values_by_idx, res, 2 * res[1].nbytes)
+        while (len(_CORPUS_CACHE) > 1 and sum(
+                e[2] for e in _CORPUS_CACHE.values()) > _CORPUS_CACHE_BYTES):
+            del _CORPUS_CACHE[next(iter(_CORPUS_CACHE))]
     return res
 
 
 def _compute_pairs(left: np.ndarray, right_idx: np.ndarray,
-                   values_by_idx: dict, settings: DtwSettings,
-                   max_buf_elems: int = 8_000_000):
-    """Compute DTW for explicit (i, j) index pairs, batching equal-shape
-    pairs through the vectorized kernel.
+                   values_by_idx: dict, settings: DtwSettings):
+    """The DTW pair kernel: distances for explicit (i, j) id pairs →
+    ``(i, j, d)``, with equal-shape pairs batched through the vectorized
+    kernel at its cache-optimal batch size.
 
-    Batch size is bounded by the DP working set — three (B, r+1) diagonal
-    buffers plus the two (B, len) input stacks — NOT by r·c (the full
-    cost matrix is never materialized); ~8M doubles ≈ 64 MB per buffer
-    keeps thousands of moderate-length pairs in one vectorized sweep.
-
-    Equal-length 1-D corpora without an LB prefilter skip the per-batch
-    stacking entirely: the indexed kernel entry reads series rows from
-    one shared (n, L) matrix (built once per worker), so no input bytes
-    are copied per pair.  Results are identical either way."""
-    use_lb_ = settings.max_dist is not None and settings.max_dist > 0
-    if not use_lb_ and len(left):
-        corpus = _corpus_matrix(values_by_idx)
-        if corpus is not None:
-            from ..kernels.dtw import dtw_distance_batch_indexed
-            ids, V = corpus
-            pi = np.searchsorted(ids, left)
-            pj = np.searchsorted(ids, right_idx)
-            d = dtw_distance_batch_indexed(V, pi, pj, settings=settings)
-            return (np.asarray(left, dtype=np.int64),
-                    np.asarray(right_idx, dtype=np.int64), d)
+    Under ``max_dist`` an LB_Keogh prefilter skips pairs whose bound
+    already exceeds it.  LB_Keogh bounds DTW only when no prefix or suffix
+    can be skipped, so the prefilter is off under ``psi``.  Otherwise
+    equal-length 1-D corpora skip the per-batch stacking: the indexed
+    kernel entry reads series rows from one (n, L) matrix, so no input
+    bytes are copied per pair.  Results are identical either way."""
+    left = np.asarray(left, dtype=np.int64)
+    right_idx = np.asarray(right_idx, dtype=np.int64)
+    use_lb = (settings.max_dist is not None and settings.max_dist > 0
+              and settings.split_psi() == (0, 0, 0, 0))
+    corpus = (_corpus_matrix(values_by_idx)
+              if len(left) and not use_lb else None)
+    if corpus is not None:
+        ids, V = corpus
+        d = dtw_distance_batch_indexed(V, np.searchsorted(ids, left),
+                                       np.searchsorted(ids, right_idx),
+                                       settings=settings)
+        return left, right_idx, d
     out_i, out_j, out_d = [], [], []
-    lens = {i: len(values_by_idx[i]) for i in values_by_idx}
     byshape: dict = {}
     for i, j in zip(left, right_idx):
-        byshape.setdefault((lens[i], lens[j]), []).append((i, j))
-    use_lb = settings.max_dist is not None and settings.max_dist > 0
+        byshape.setdefault((len(values_by_idx[i]), len(values_by_idx[j])),
+                           []).append((i, j))
     for (l1, l2), pairs in byshape.items():
         pairs = np.asarray(pairs, dtype=np.int64)
-        # slice at the kernel's own cache-optimal batch size so each
-        # np.stack copy is a few MB (reused heap), never tens of MB
-        from ..kernels.dtw import _batch_elems
+        # each np.stack copy stays a few MB (reused heap), never tens
         bmax = max(64, _batch_elems() // (l1 + l2 + 1))
         for s in range(0, len(pairs), bmax):
             chunk = pairs[s:s + bmax]
@@ -240,6 +267,15 @@ def _compute_pairs(left: np.ndarray, right_idx: np.ndarray,
     return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_d)
 
 
+def _weighted_pairs(ii: np.ndarray, jj: np.ndarray, vals: dict, wts: dict,
+                    window: Optional[int] = None):
+    """The weighted-DTW pair kernel: row i's weight profile reshapes the
+    local difference (reference dtw_weighted.py:121-152)."""
+    d = [weighted_warping_paths(vals[a], vals[b], weights=wts[a],
+                                window=window)[0] for a, b in zip(ii, jj)]
+    return ii, jj, np.asarray(d, dtype=np.float64)
+
+
 def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None,
                     block=None, chunk_size: Optional[int] = None,
                     index_col: str = "i", values_col: str = "values",
@@ -250,15 +286,13 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     (dtw.py:730, :757-761): with triu (default) only pairs ``i<j`` inside
     the block are produced; with ``triu=False`` the full rectangle.
 
-    ``chunk_size=None`` sizes chunks so the pair space yields ≈8 groups
-    per core — enough units for the scheduler to balance the quadratic
-    per-group cost, while keeping series replication (one copy per
-    partner chunk) low.
+    ``chunk_size`` applies to the chunk-pair shuffle strategy; ``None``
+    sizes chunks so the pair space yields ≈8 groups per core — enough
+    units for the scheduler to balance the quadratic per-group cost,
+    while keeping series replication (one copy per partner chunk) low.
     """
     s = settings if settings is not None else DtwSettings(**kwargs)
     blk, triu = _norm_block(block)
-    settings_json = s.to_json()
-
     src = series_df.select(F.col(index_col).cast("long").alias("i"),
                            F.col(values_col).alias("values"))
     if blk is not None:
@@ -266,76 +300,181 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
         src = src.where(
             ((F.col("i") >= rb) & (F.col("i") < re_)) |
             ((F.col("i") >= cb) & (F.col("i") < ce)))
+    return _pair_matrix(src, ["values"], partial(_compute_pairs, settings=s),
+                        blk, triu, chunk_size)
 
+
+def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
+                             index_col: str = "i", values_col: str = "values",
+                             weights_col: str = "weights") -> DataFrame:
+    """All-pairs *weighted* DTW (reference dtw_weighted.py:121-152
+    distance_matrix): per-point 8-knot weight profiles reshape the local
+    difference of the row series.  The per-pair kernel is
+    kernels/extras.weighted_warping_paths.  Like the reference (triu
+    only, matrix[i,j] uses weights[i]), the output is asymmetric in
+    principle and only i<j pairs are produced.  Runs on the same pair
+    executor as :func:`distance_matrix`; the weight profiles count
+    toward the broadcast gate and ride along on either strategy."""
+    src = series_df.select(F.col(index_col).cast("long").alias("i"),
+                           F.col(values_col).alias("values"),
+                           F.col(weights_col).alias("weights"))
+    return _pair_matrix(src, ["values", "weights"],
+                        partial(_weighted_pairs, window=window))
+
+
+def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
+                 triu: bool = True,
+                 chunk_size: Optional[int] = None) -> DataFrame:
+    """The pair executor: ``src`` holds ``i`` plus ``data_cols`` (already
+    restricted to the block's rows and columns), ``kernel(ii, jj,
+    *dicts)`` computes ``(i, j, d)`` for id pairs given one ``{id:
+    array}`` dict per data column."""
     # Persist BEFORE the single stats pass: the upstream plan (often the
     # whole rollup → gap-fill → arrays pipeline) must execute exactly
-    # once — round 1 executed it twice (stats agg + broadcast collect),
-    # which showed up as a large serial component in the N-vs-4N curve.
+    # once, not once for the stats and again for the collect or shuffle.
     src = track_persist(src.persist())
-    stats = src.agg(F.count("*").alias("n"),
-                    F.avg(F.size("values")).alias("alen"),
-                    F.max("i").alias("imax")).collect()[0]
-    n_total = int(stats["n"] or 0)
-    est_bytes = n_total * float(stats["alen"] or 0) * 8
-    conf = series_df.sparkSession.conf
-    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
-                               str(256 * 1024 * 1024)))
-    # The pair cap only bounds per-task OUTPUT batches (ranges split as
-    # n_pairs/(4·par); rows stream out as Arrow batches), not memory held
-    # — the corpus-bytes gate above is the real memory guard.  r6: raised
-    # 20M → 4B after the driver's sf1.0 leg (15k series, 112.5M pairs,
-    # corpus 60 MB) fell off the broadcast path and paid the blocked
-    # shuffle's series replication + groupBy skew for no reason; pair
-    # ranges stream their output, so even a 4B-pair job holds only one
-    # Arrow batch per task at a time, and corpora too big to broadcast
-    # (the real constraint) still take the shuffle path via the bytes
-    # gate — e.g. a 3x-escalated corpus is ~1.01B pairs at 181 MB, still
-    # broadcastable, while ~5x trips the 256 MB bytes gate first.
-    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
-                             str(4_000_000_000)))
-    # Physical strategy switch: when the whole series set fits in
-    # executor memory, broadcast it and shuffle ONLY pair-range tasks —
-    # the all-pairs fan-out otherwise replicates every series to
-    # ~n/chunk_size partner groups through the shuffle (the dominant
-    # non-kernel cost at bench scale).  Large corpora take the blocked
-    # shuffle path below, which scales to data that cannot be broadcast.
-    if est_bytes <= max_bytes and n_total * (n_total - 1) // 2 <= max_pairs:
-        return _distance_matrix_broadcast(src, s, blk, triu, settings_json)
-
-    par = series_df.sparkSession.sparkContext.defaultParallelism
-    # the broadcast-join fan-out below multiplies each row ~n/chunk_size
-    # times in the map stage — that write must come from enough tasks
-    if src.rdd.getNumPartitions() < max(2, par // 2):
-        src = src.repartition(par)
+    points = [F.size(F.flatten(c))
+              if src.schema[c].dataType.elementType.typeName() == "array"
+              else F.size(c) for c in data_cols]
+    stats = src.agg(F.count("*").alias("n"), F.max("i").alias("imax"),
+                    *[F.avg(p) for p in points]).collect()[0]
+    est_bytes = 8 * int(stats["n"] or 0) * sum(
+        float(a or 0) for a in stats[2:])
+    max_bytes = float(src.sparkSession.conf.get(
+        "spark.dtaidistance.broadcastMatrixMaxBytes", str(256 * 1024 * 1024)))
+    # When the corpus fits in executor memory, broadcast it and move ONLY
+    # pair-range tasks — the chunk-pair plan replicates every series to
+    # ~n/chunk_size partner groups through the shuffle, which only pays
+    # for corpora that cannot be broadcast.
+    if est_bytes <= max_bytes:
+        return _broadcast_ranges(src, data_cols, kernel, blk, triu)
+    par = src.sparkSession.sparkContext.defaultParallelism
     if chunk_size is None:
-        n = int(stats["imax"]) + 1 if stats["imax"] is not None else 1
         n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
-        chunk_size = max(8, -(-n // n_chunks))
-    tagged = _chunk_pair_tagged(src, chunk_size, triu, blk, ["values"], par)
+        chunk_size = max(8, -(-(int(stats["imax"] or 0) + 1) // n_chunks))
+    return _chunk_shuffle(src, data_cols, kernel, blk, triu, chunk_size, par)
 
-    rb_, re__, cb_, ce_ = (-1, -1, -1, -1)
-    if blk is not None:
-        (rb_, re__), (cb_, ce_) = blk
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = DtwSettings.from_json(settings_json)
-        rows_l = pdf[pdf["side"] == 0]
-        rows_r = pdf[pdf["side"] == 1]
-        vals = {}
-        for r in pdf.itertuples(index=False):
-            if r.i not in vals:
-                vals[r.i] = _series_np(r.values)
-        li = np.sort(rows_l["i"].unique())
-        rj = np.sort(rows_r["i"].unique())
-        ii, jj = np.meshgrid(li, rj, indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
+def _collect_corpus(src: DataFrame, data_cols: list) -> Tuple[np.ndarray, list]:
+    """Collect ``i`` + ``data_cols`` once → (sorted ids, one ``{id:
+    float64 array}`` dict per column).
+
+    The collect is one ``toArrow()``: a flat, null-free ``array<double>``
+    column arrives as ONE contiguous values buffer + offsets, and each
+    series becomes a numpy slice view of it — no per-row Python objects.
+    Nested (n-D series, weight profiles) or null-holding columns convert
+    cell by cell."""
+    import pyarrow as pa
+
+    tb = src.select("i", *data_cols).toArrow()
+    keys = [int(i) for i in tb.column("i").to_numpy()]
+    dicts = []
+    for c in data_cols:
+        va = tb.column(c).combine_chunks()
+        if (va.type.value_type == pa.float64() and va.null_count == 0
+                and va.values.null_count == 0):
+            off = va.offsets.to_numpy()
+            buf = va.values.to_numpy()
+            dicts.append(_SharedCorpus(
+                (k, buf[off[r]:off[r + 1]]) for r, k in enumerate(keys)))
+        else:
+            dicts.append(_SharedCorpus(
+                (k, _series_np(v)) for k, v in zip(keys, va.to_pandas())))
+    return np.array(sorted(dicts[0]), dtype=np.int64), dicts
+
+
+def _range_pairs(lo: int, hi: int, rows: np.ndarray,
+                 cols: Optional[np.ndarray], triu: bool,
+                 cap: int = _SUB_BATCH_PAIRS) -> Iterator[tuple]:
+    """``(ii, jj)`` id arrays for positions ``[lo, hi)`` of a linear pair
+    space, in sub-batches of at most ``cap`` positions.  ``cols=None``:
+    the row-major upper triangle over ``rows``, unranked in closed form;
+    otherwise the ``rows × cols`` rectangle, kept to ``i < j`` under
+    ``triu``."""
+    for a in range(lo, hi, cap):
+        p = np.arange(a, min(hi, a + cap), dtype=np.int64)
+        if cols is None:
+            ri, rj = _triu_unrank(p, len(rows))
+            yield rows[ri], rows[rj]
+            continue
+        ii, jj = rows[p // len(cols)], cols[p % len(cols)]
         if triu:
             keep = ii < jj
             ii, jj = ii[keep], jj[keep]
-        if rb_ >= 0:
-            keep = ((ii >= rb_) & (ii < re__) & (jj >= cb_) & (jj < ce_))
-            ii, jj = ii[keep], jj[keep]
-        oi, oj, od = _compute_pairs(ii, jj, vals, st)
+        yield ii, jj
+
+
+def _broadcast_ranges(src: DataFrame, data_cols: list, kernel, blk,
+                      triu: bool) -> DataFrame:
+    """Broadcast strategy: the corpus dicts are broadcast once and the
+    pair space is cut into cost-weighted guided ``(lo, hi)`` range tasks;
+    only the O(n) series ids travel with it."""
+    spark = src.sparkSession
+    sc = spark.sparkContext
+    ids, corpus = _collect_corpus(src, data_cols)
+    lens = np.array([len(corpus[0][int(i)]) for i in ids], dtype=np.int64)
+    if blk is None:
+        rows, cols = ids, None
+        n_pairs = len(ids) * (len(ids) - 1) // 2
+    else:
+        (rb, re_), (cb, ce) = blk
+        rsel, csel = (ids >= rb) & (ids < re_), (ids >= cb) & (ids < ce)
+        rows, cols = ids[rsel], ids[csel]
+        n_pairs = len(rows) * len(cols)
+    if n_pairs == 0:
+        return spark.createDataFrame([], PAIR_SCHEMA)
+    cost_upto, total = (_triu_cost_fn(lens) if blk is None
+                        else _rect_cost_fn(lens[rsel], lens[csel]))
+    ranges = _guided_ranges_cost(cost_upto, n_pairs, total,
+                                 sc.defaultParallelism)
+    # one range per partition, IN ORDER (big ranges first): Spark launches
+    # tasks by partition index as slots free, which is exactly OMP guided
+    # scheduling; .repartition() would round-robin the order away.  Task
+    # k reads range k from the closure: spark.range needs no Python-side
+    # row conversion (measured ~0.1 s less per task than parallelize on a
+    # 4-core local[4] session)
+    rdf = spark.range(len(ranges), numPartitions=len(ranges))
+    bcs = [track_broadcast(sc.broadcast(d)) for d in corpus]
+    space = track_broadcast(sc.broadcast((rows, cols)))
+
+    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dicts = [b.value for b in bcs]
+        rows_, cols_ = space.value
+        for pdf in batches:
+            for k in pdf["id"]:
+                lo, hi = ranges[int(k)]
+                for ii, jj in _range_pairs(lo, hi, rows_, cols_, triu):
+                    if len(ii):
+                        oi, oj, od = kernel(ii, jj, *dicts)
+                        yield pd.DataFrame({"i": oi, "j": oj, "d": od})
+
+    return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
+
+
+def _chunk_shuffle(src: DataFrame, data_cols: list, kernel, blk, triu: bool,
+                   chunk_size: int, par: int) -> DataFrame:
+    """Chunk-pair shuffle strategy: every surviving ``(ci, cj)`` chunk
+    pair is one ``applyInPandas`` group that runs the kernel over its
+    side-0 × side-1 pairs."""
+    # the fan-out multiplies each row ~n/chunk_size times in the map
+    # stage — that write must come from enough tasks
+    if src.rdd.getNumPartitions() < max(2, par // 2):
+        src = src.repartition(par)
+    tagged = _chunk_pair_tagged(src, chunk_size, triu, blk, data_cols, par)
+
+    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
+        first = pdf[~pdf["i"].duplicated()]
+        keys = [int(i) for i in first["i"]]
+        dicts = [{k: _series_np(v) for k, v in zip(keys, first[c])}
+                 for c in data_cols]
+        li = np.sort(pdf.loc[pdf["side"] == 0, "i"].unique())
+        rj = np.sort(pdf.loc[pdf["side"] == 1, "i"].unique())
+        ii, jj = (g.ravel() for g in np.meshgrid(li, rj, indexing="ij"))
+        keep = ii < jj if triu else np.ones(len(ii), dtype=bool)
+        if blk is not None:
+            (rb, re_), (cb, ce) = blk
+            keep &= (ii >= rb) & (ii < re_) & (jj >= cb) & (jj < ce)
+        oi, oj, od = kernel(ii[keep], jj[keep], *dicts)
         return pd.DataFrame({"i": oi, "j": oj, "d": od})
 
     return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
@@ -343,8 +482,8 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
 
 def _chunk_pair_tagged(src: DataFrame, chunk_size: int, triu: bool, blk,
                        data_cols: list, par: int) -> DataFrame:
-    """Shared chunked-shuffle plan: assign chunk ids, prune the chunk-pair
-    space declaratively (triangular symmetry + block restriction — the
+    """Chunked-shuffle plan: assign chunk ids, prune the chunk-pair space
+    declaratively (triangular symmetry + block restriction — the
     reference's own distribution primitive, dtw.py:757-761), replicate
     each row to its surviving partner chunks, and hash-repartition on the
     group key.  Callers groupBy("ci","cj") and apply their kernel.
@@ -355,28 +494,26 @@ def _chunk_pair_tagged(src: DataFrame, chunk_size: int, triu: bool, blk,
     when it did).  groupBy reuses this partitioning, and AQE leaves
     user-specified repartitioning alone.
 
-    Chunk ids (r5, VERDICT r4 item 4): ragged corpora get LENGTH-
-    balanced chunks so each chunk holds ~equal total series length and
-    the quadratic per-group cost stays ~equal under power-law lengths.
-    Scale shape: one parallel histogram aggregate over fine id-range
-    buckets (≤64k rows to the driver — never a single-partition window
-    or a full-id collect), driver prefix-sums it into bucket→chunk
-    boundaries, broadcast-joined back.  Chunk ids stay monotone in
-    ``i``, so the triangular chunk-pair pruning below stays exact.
-    Equal-length corpora keep the plain ``i // chunk_size`` projection
-    (no extra jobs); block restriction keeps fixed-size chunks (its
-    pruning arithmetic indexes chunks by ``id // chunk_size``)."""
+    Ragged corpora get LENGTH-balanced chunks so each chunk holds ~equal
+    total series length and the quadratic per-group cost stays ~equal
+    under power-law lengths.  Scale shape: one parallel histogram
+    aggregate over fine id-range buckets (≤64k rows to the driver — never
+    a single-partition window or a full-id collect), driver prefix-sums
+    it into bucket→chunk boundaries, broadcast-joined back.  Chunk ids
+    stay monotone in ``i``, so the triangular chunk-pair pruning below
+    stays exact.  Equal-length corpora keep the plain ``i // chunk_size``
+    projection (no extra jobs); block restriction keeps fixed-size chunks
+    (its pruning arithmetic indexes chunks by ``id // chunk_size``)."""
     len_col = F.size(data_cols[0])
     probe = None
-    if os.environ.get("DTW_COST_GUIDED", "1") == "1" and blk is None:
+    if blk is None:
         # ONE combined aggregate decides raggedness AND feeds the
-        # histogram bounds — previously this was two extra full scans
+        # histogram bounds
         probe = src.agg(
             (F.min(len_col) != F.max(len_col)).alias("r"),
             F.min("i"), F.max("i"), F.sum(len_col),
             F.count("*")).collect()[0]
-    ragged = bool(probe and probe["r"])
-    if ragged:
+    if probe is not None and probe["r"]:
         _, imin, imax, tot, n_rows = probe
         n_chunks = max(1, -(-int(n_rows) // chunk_size))
         nb = min(max(n_chunks * 64, 256), 65536)
@@ -432,63 +569,34 @@ def _triu_unrank(p: np.ndarray, n: int) -> Tuple[np.ndarray, np.ndarray]:
     return i, j
 
 
-def _guided_ranges(n_pairs: int, par: int) -> list:
-    """Guided-schedule pair ranges (the reference's OMP ``guided``
-    distribution for its matrix loop, dtw.py:681 ``schedule(guided)``,
-    re-expressed for Spark's task scheduler): range k covers
-    ``remaining // (2·par)`` pairs with a floor, so early tasks are big
-    (low fixed cost) and the final wave is fine-grained — on a host
-    where identical tasks spread 5× (neighbor contention), the tail
-    straggler holds at most a small chunk instead of 1/(4·par) of the
-    whole job.  Profiled 32-way on the 1.124M-pair bench corpus: equal
-    128-range schedule idles ~30% of core-seconds in the decay tail
-    (concurrency 32 → 2 over the last third of the wall)."""
-    ranges = []
-    lo = 0
-    floor = max(1, -(-n_pairs // (par * 24)))
-    while lo < n_pairs:
-        # r6: first-wave divisor 2·par -> 4·par.  A range task's fixed
-        # cost is one Arrow iterator + broadcast access (~ms), so the
-        # "big first tasks" motivation barely applies, while at the
-        # sf1.0 scale a 2·par first wave made single tasks ~40 s — any
-        # one slowed worker (GC burst, cpufreq dip) stretched the whole
-        # job by most of a wave.  Halving the wave size halves the
-        # worst-case straggler exposure; outputs are identical (same
-        # pairs, different task boundaries).
-        # ceil like the cost-weighted twin's binary search, so the two
-        # schedules coincide exactly on equal-length corpora
-        size = max(floor, -(-(n_pairs - lo) // (4 * par)))
-        hi = min(n_pairs, lo + size)
-        ranges.append((lo, hi))
-        lo = hi
-    return ranges
-
-
 def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
                         par: int) -> list:
-    """Cost-weighted guided pair ranges (VERDICT r4 item 4): the same
-    guided decay as :func:`_guided_ranges`, but measured in estimated
-    kernel cost rather than pair count.  A DTW pair costs
-    O(len_i · len_j); for the equal-length bench corpus count == cost
-    and the two schedules coincide, but for a power-law ragged corpus
-    (real conversation lengths) an early count-based range can hold
-    10-100x the work of a late one, defeating the guided tail — the
-    reference's OMP loop shares the concern (its guided schedule also
-    decays in *pair count*, dd_dtw_openmp.c:111-116; we can do better
-    because the driver knows every length upfront).
+    """Guided pair ranges measured in estimated kernel cost — the
+    reference's OMP ``guided`` matrix loop (dtw.py:681
+    ``schedule(guided)``, dd_dtw_openmp.c:111-116) re-expressed for
+    Spark's task scheduler.  Range k covers ``remaining_cost / (4·par)``
+    with a floor, so early tasks are big and the final wave is
+    fine-grained: a straggler holds at most a small chunk of the job.
+    A DTW pair costs O(len_i · len_j); the reference decays in pair
+    count, but for a power-law ragged corpus an early count-based range
+    can hold 10-100x the work of a late one, and the driver knows every
+    length upfront.  On equal lengths cost is proportional to count.
+
+    The first wave takes 1/(4·par) rather than 1/(2·par): a range
+    task's fixed cost is ~ms, while a 2·par first wave at a 15k-series
+    corpus made single tasks ~40 s, so any one slowed worker stretched
+    the job by most of a wave.
 
     ``cost_upto(p)`` must return the closed-form cumulative cost of the
     first ``p`` pairs of the linear pair space; boundaries are found by
     binary search on it, so nothing O(n²) is materialized.  Outputs are
-    a partition of [0, n_pairs) — the kernel computes the same pairs in
-    the same per-task order, so results are bit-identical to any other
-    schedule."""
+    a partition of [0, n_pairs) — the kernel computes the same pairs
+    whatever the boundaries, so results do not depend on them."""
     ranges = []
     lo = 0
     cost_lo = 0.0
     floor_c = max(total / n_pairs, total / (par * 24))
     while lo < n_pairs:
-        # same 4·par first wave as _guided_ranges (r6) — see note there
         want = cost_lo + max(floor_c, (total - cost_lo) / (4 * par))
         if want >= total:
             hi = n_pairs
@@ -554,241 +662,17 @@ def _rect_cost_fn(row_lens: np.ndarray, col_lens: np.ndarray):
     return cost_upto, total
 
 
-def _collect_series_dict(src: DataFrame) -> dict:
-    """Collect ``(i, values)`` to a {id: float64 array} dict.
-
-    Flat ``array<double>`` corpora go through ``DataFrame.toArrow()``:
-    the list column arrives as ONE contiguous values buffer + offsets,
-    and each series becomes a numpy slice view of it — no per-row
-    Python objects (r6: ``toPandas`` rebuilt every cell as an object
-    array; at 15k x 504 that conversion dwarfed the driver collect
-    itself).  Nested (n-D) series keep the pandas path."""
-    vtype = src.schema["values"].dataType
-    flat = (vtype.typeName() == "array"
-            and vtype.elementType.typeName() == "double")
-    if flat:
-        tb = src.select("i", "values").toArrow()
-        ids = tb.column("i").to_numpy()
-        va = tb.column("values").combine_chunks()
-        if va.null_count == 0 and va.values.null_count == 0:
-            off = va.offsets.to_numpy()
-            buf = va.values.to_numpy()
-            return {int(ids[k]): buf[off[k]:off[k + 1]]
-                    for k in range(len(ids))}
-    pdf = src.toPandas()
-    return {int(i): _series_np(v)
-            for i, v in zip(pdf["i"], pdf["values"])}
-
-
-def _distance_matrix_broadcast(src: DataFrame, s: DtwSettings, blk, triu,
-                               settings_json: str) -> DataFrame:
-    """Broadcast-corpus physical strategy: series dict broadcast once,
-    work distributed as (lo, hi) pair-range tasks over the triangular
-    pair space.  Pair (i, j) coordinates are derived from the linear
-    range by closed-form unranking INSIDE each task — the driver never
-    materializes or broadcasts the O(n²) pair lists, only the O(n)
-    series ids."""
-    spark = src.sparkSession
-    vals = _collect_series_dict(src)
-    ids = np.array(sorted(vals), dtype=np.int64)
-    bc = track_broadcast(spark.sparkContext.broadcast(vals))
-    par = spark.sparkContext.defaultParallelism
-    n_tasks = max(par * 4, 8)
-
-    n_ids = len(ids)
-    if blk is None:
-        n_pairs = n_ids * (n_ids - 1) // 2
-        rows_b = cols_b = None
-    else:
-        (rb, re_), (cb, ce) = blk
-        rows = ids[(ids >= rb) & (ids < re_)]
-        cols = ids[(ids >= cb) & (ids < ce)]
-        n_pairs = len(rows) * len(cols)
-        rows_b = track_broadcast(spark.sparkContext.broadcast(rows))
-        cols_b = track_broadcast(spark.sparkContext.broadcast(cols))
-    if n_pairs == 0:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    if os.environ.get("DTW_GUIDED", "1") == "1":
-        # one range per partition, IN ORDER (big ranges first): Spark
-        # launches tasks by partition index as slots free, which is
-        # exactly OMP guided scheduling.  parallelize(n items, n slices)
-        # keeps the order; .repartition() would round-robin it away.
-        # Ragged corpora (unequal series lengths) get COST-weighted
-        # boundaries — len_i·len_j, the DTW kernel's actual work — so a
-        # power-law length distribution cannot hide 100x the work in an
-        # early "equal-count" range (r5; DTW_COST_GUIDED=0 reverts to
-        # count-weighted for A/B).  Equal lengths: identical schedule.
-        lens = np.array([vals[int(i)].shape[0] for i in ids],
-                        dtype=np.int64)
-        ragged = lens.min() != lens.max() \
-            and os.environ.get("DTW_COST_GUIDED", "1") == "1"
-        if ragged and blk is None:
-            cost_upto, total = _triu_cost_fn(lens)
-            ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par)
-        elif ragged:
-            pos = {int(v): k for k, v in enumerate(ids)}
-            cost_upto, total = _rect_cost_fn(
-                lens[[pos[int(r)] for r in rows]],
-                lens[[pos[int(c)] for c in cols]])
-            ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par)
-        else:
-            ranges = _guided_ranges(n_pairs, par)
-        rdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(ranges, len(ranges)),
-            "lo long, hi long")
-    else:
-        bounds = np.linspace(0, n_pairs, min(n_tasks, n_pairs) + 1,
-                             dtype=np.int64)
-        ranges = [(int(bounds[k]), int(bounds[k + 1]))
-                  for k in range(len(bounds) - 1) if bounds[k] < bounds[k + 1]]
-        rdf = spark.createDataFrame(ranges, "lo long, hi long") \
-            .repartition(len(ranges))
-    ids_b = track_broadcast(spark.sparkContext.broadcast(ids))
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        st = DtwSettings.from_json(settings_json)
-        v = bc.value
-        for pdf_ in batches:
-            for row in pdf_.itertuples(index=False):
-                p = np.arange(row.lo, row.hi, dtype=np.int64)
-                if blk is None:
-                    ri, rj = _triu_unrank(p, n_ids)
-                    ii, jj = ids_b.value[ri], ids_b.value[rj]
-                else:
-                    rr, cc = rows_b.value, cols_b.value
-                    ii = rr[p // len(cc)]
-                    jj = cc[p % len(cc)]
-                    if triu:
-                        keep = ii < jj
-                        ii, jj = ii[keep], jj[keep]
-                oi, oj, od = _compute_pairs(ii, jj, v, st)
-                yield pd.DataFrame({"i": oi, "j": oj, "d": od})
-
-    return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
-
-
-def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
-                             index_col: str = "i", values_col: str = "values",
-                             weights_col: str = "weights") -> DataFrame:
-    """All-pairs *weighted* DTW (reference dtw_weighted.py:121-152
-    distance_matrix): per-point 8-knot weight profiles reshape the local
-    difference of the row series.  The per-pair kernel is
-    kernels/extras.weighted_warping_paths.  Like the reference (triu
-    only, matrix[i,j] uses weights[i]), the output is asymmetric in
-    principle and only i<j pairs are produced.
-
-    Physical strategy mirrors :func:`distance_matrix`: when the corpus
-    (values + 8-knot weight profiles ≈ 9 doubles/point) fits under the
-    broadcast gate, it is collected once and work distributes as pair-
-    range tasks; otherwise the blocked chunk-pair shuffle path runs —
-    no ungated driver collect at any size."""
-    from ..kernels.extras import weighted_warping_paths
-
-    spark = series_df.sparkSession
-    src = series_df.select(F.col(index_col).cast("long").alias("i"),
-                           F.col(values_col).alias("values"),
-                           F.col(weights_col).alias("weights"))
-    src = track_persist(src.persist())
-    stats = src.agg(F.count("*").alias("n"),
-                    F.avg(F.size("values")).alias("alen"),
-                    F.max("i").alias("imax")).collect()[0]
-    n_total = int(stats["n"] or 0)
-    # values (1 double/point) + weight profile (8 knots/point)
-    est_bytes = n_total * float(stats["alen"] or 0) * 8 * 9
-    conf = spark.conf
-    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
-                               str(256 * 1024 * 1024)))
-    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
-                             str(20_000_000)))
-    if est_bytes > max_bytes or n_total * (n_total - 1) // 2 > max_pairs:
-        return _distance_matrix_weighted_shuffle(src, window, stats)
-    pdf = src.toPandas()
-    vals = {int(r.i): np.asarray(r[1], dtype=np.float64)
-            for r in pdf.itertuples(index=False)}
-    wts = {int(r.i): (None if r[2] is None else np.asarray(
-        [list(x) for x in r[2]], dtype=np.float64))
-        for r in pdf.itertuples(index=False)}
-    ids = np.array(sorted(vals), dtype=np.int64)
-    n = len(ids)
-    bc_v = track_broadcast(spark.sparkContext.broadcast(vals))
-    bc_w = track_broadcast(spark.sparkContext.broadcast(wts))
-    par = spark.sparkContext.defaultParallelism
-    n_pairs = n * (n - 1) // 2
-    if n_pairs == 0:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    bounds = np.linspace(0, n_pairs, min(max(par * 4, 8), n_pairs) + 1,
-                         dtype=np.int64)
-    ranges = [(int(bounds[k]), int(bounds[k + 1]))
-              for k in range(len(bounds) - 1) if bounds[k] < bounds[k + 1]]
-    rdf = spark.createDataFrame(ranges, "lo long, hi long") \
-        .repartition(len(ranges))
-    win = window
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v, w = bc_v.value, bc_w.value
-        for pdf_ in batches:
-            for row in pdf_.itertuples(index=False):
-                p = np.arange(row.lo, row.hi, dtype=np.int64)
-                ri, rj = _triu_unrank(p, n)
-                out = [weighted_warping_paths(v[ids[a]], v[ids[b]],
-                                              weights=w[ids[a]],
-                                              window=win)[0]
-                       for a, b in zip(ri, rj)]
-                yield pd.DataFrame({"i": ids[ri], "j": ids[rj], "d": out})
-
-    return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
-
-
-def _distance_matrix_weighted_shuffle(src: DataFrame, window: Optional[int],
-                                      stats) -> DataFrame:
-    """Blocked chunk-pair fallback for the weighted matrix: same plan
-    shape as the unweighted shuffle path (values AND weight profiles ride
-    the shuffle), so corpora above the broadcast gate never hit the
-    driver."""
-    from ..kernels.extras import weighted_warping_paths
-
-    spark = src.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < max(2, par // 2):
-        src = src.repartition(par)
-    n = int(stats["imax"]) + 1 if stats["imax"] is not None else 1
-    n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
-    chunk_size = max(8, -(-n // n_chunks))
-    tagged = _chunk_pair_tagged(src, chunk_size, True, None,
-                                ["values", "weights"], par)
-    win = window
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals, wts = {}, {}
-        for r in pdf.itertuples(index=False):
-            if r.i not in vals:
-                vals[r.i] = np.asarray(r.values, dtype=np.float64)
-                wts[r.i] = (None if r.weights is None else np.asarray(
-                    [list(x) for x in r.weights], dtype=np.float64))
-        li = np.sort(pdf.loc[pdf["side"] == 0, "i"].unique())
-        rj = np.sort(pdf.loc[pdf["side"] == 1, "i"].unique())
-        ii, jj = np.meshgrid(li, rj, indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
-        keep = ii < jj
-        ii, jj = ii[keep], jj[keep]
-        out = [weighted_warping_paths(vals[a], vals[b], weights=wts[a],
-                                      window=win)[0]
-               for a, b in zip(ii, jj)]
-        return pd.DataFrame({"i": ii, "j": jj,
-                             "d": np.asarray(out, dtype=np.float64)})
-
-    return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
-
-
 def distance_matrix_cross(query_df: DataFrame, corpus_df: DataFrame,
                           settings: Optional[DtwSettings] = None,
                           index_col: str = "i", values_col: str = "values",
                           **kwargs) -> DataFrame:
     """Rectangular cross-set distances (reference ``_matrices`` variant,
     dd_dtw.c:5227-5323): every query × every corpus series.  The query
-    set is broadcast (it is small by assumption); the corpus streams."""
+    set is broadcast (it is small by assumption); the corpus streams, and
+    each batch of (query, corpus) rows runs through the self-matrix pair
+    kernel :func:`_compute_pairs` — series ids identify series, as they
+    do for every matrix here."""
     s = settings if settings is not None else DtwSettings(**kwargs)
-    settings_json = s.to_json()
     q = query_df.select(F.col(index_col).cast("long").alias("qi"),
                         F.col(values_col).alias("qvalues"))
     c = corpus_df.select(F.col(index_col).cast("long").alias("i"),
@@ -796,26 +680,22 @@ def distance_matrix_cross(query_df: DataFrame, corpus_df: DataFrame,
     joined = c.crossJoin(F.broadcast(q))
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        st = DtwSettings.from_json(settings_json)
         for pdf in batches:
-            vals = {}
-            out_q, out_c, out_d = [], [], []
-            byshape = {}
-            arrs_c = [_series_np(v) for v in pdf["values"]]
-            arrs_q = [_series_np(v) for v in pdf["qvalues"]]
-            for k in range(len(pdf)):
-                byshape.setdefault((len(arrs_q[k]), len(arrs_c[k])), []).append(k)
-            for (l1, l2), idxs in byshape.items():
-                bmax = max(16, 4_000_000 // max(l1 * l2, 1))
-                for sft in range(0, len(idxs), bmax):
-                    sel = idxs[sft:sft + bmax]
-                    X1 = np.stack([arrs_q[k] for k in sel])
-                    X2 = np.stack([arrs_c[k] for k in sel])
-                    d = dtw_distance_batch(X1, X2, settings=st)
-                    out_q.extend(pdf["qi"].iloc[sel])
-                    out_c.extend(pdf["i"].iloc[sel])
-                    out_d.extend(d)
-            yield pd.DataFrame({"qi": out_q, "i": out_c, "d": out_d})
+            # one kernel key space per batch: queries 0..nq-1, corpus
+            # series nq.. (query and corpus ids may overlap)
+            qids, qfirst, qk = np.unique(pdf["qi"].to_numpy(),
+                                         return_index=True,
+                                         return_inverse=True)
+            cids, cfirst, ck = np.unique(pdf["i"].to_numpy(),
+                                         return_index=True,
+                                         return_inverse=True)
+            nq = len(qids)
+            vals = {k: _series_np(pdf["qvalues"].iat[r])
+                    for k, r in enumerate(qfirst)}
+            vals.update({nq + k: _series_np(pdf["values"].iat[r])
+                         for k, r in enumerate(cfirst)})
+            oq, oc, od = _compute_pairs(qk, nq + ck, vals, s)
+            yield pd.DataFrame({"qi": qids[oq], "i": cids[oc - nq], "d": od})
 
     return joined.mapInPandas(compute, schema="qi long, i long, d double")
 

@@ -2,7 +2,8 @@
 
 The pure-Python reference (wannesm/dtaidistance) imports with zero build
 steps from /root/reference/src (verified in SURVEY.md §5); it is the
-correctness oracle for all kernel tests (use_c=False paths only).
+correctness oracle for all kernel tests (use_c=False paths only).  The
+``dtw_oracle`` fixture falls back to a textbook DP when it is absent.
 """
 
 import sys
@@ -19,6 +20,18 @@ if REFERENCE_SRC not in sys.path:
 def ref_dtw():
     from dtaidistance import dtw as ref_dtw_mod
 
+    return ref_dtw_mod
+
+
+@pytest.fixture(scope="session")
+def dtw_oracle():
+    """The reference's ``dtaidistance.dtw`` when it imports, else the
+    in-repo textbook DP (tests/textbook_dtw.py) with the same call
+    surface for distance, distance_matrix and distance_array_index."""
+    try:
+        from dtaidistance import dtw as ref_dtw_mod
+    except ImportError:
+        import textbook_dtw as ref_dtw_mod
     return ref_dtw_mod
 
 

@@ -34,22 +34,22 @@ class TestCondensedIndex:
         assert condensed_index(np.array([0]), np.array([1]), 6)[0] == 0
         assert condensed_index(np.array([4]), np.array([5]), 6)[0] == 14
 
-    def test_matches_reference(self, ref_dtw):
+    def test_matches_reference(self, dtw_oracle):
         n = 7
         for a in range(n):
             for b in range(n):
                 if a == b:
                     continue
                 got = int(condensed_index(np.array([a]), np.array([b]), n)[0])
-                assert got == ref_dtw.distance_array_index(a, b, n)
+                assert got == dtw_oracle.distance_array_index(a, b, n)
 
 
 class TestDistanceMatrix:
-    def test_full_matrix_golden(self, spark, ref_dtw):
+    def test_full_matrix_golden(self, spark, dtw_oracle):
         df = _series_df(spark, S6)
         dist = distance_matrix(df, chunk_size=2)
         m = to_matrix(dist, 6)
-        expected = ref_dtw.distance_matrix(S6)
+        expected = dtw_oracle.distance_matrix(S6)
         for i in range(6):
             for j in range(6):
                 if math.isinf(expected[i][j]):
@@ -57,56 +57,71 @@ class TestDistanceMatrix:
                 else:
                     assert m[i][j] == pytest.approx(expected[i][j], rel=1e-15)
 
-    def test_condensed_ordering(self, spark, ref_dtw):
+    def test_condensed_ordering(self, spark, dtw_oracle):
         df = _series_df(spark, S6)
         cond = to_condensed(distance_matrix(df, chunk_size=4), 6)
-        expected = ref_dtw.distance_matrix(S6, compact=True)
+        expected = dtw_oracle.distance_matrix(S6, compact=True)
         np.testing.assert_allclose(cond, np.asarray(expected), rtol=1e-15)
 
-    def test_block_golden(self, spark, ref_dtw):
+    def test_block_golden(self, spark, dtw_oracle):
         # reference tests/test_dtw.py:171-191
         block = ((1, 4), (3, 5))
         df = _series_df(spark, S6)
         dist = distance_matrix(df, block=block, chunk_size=2)
         m = to_matrix(dist, 6, only_triu=True)
-        expected = ref_dtw.distance_matrix(S6, block=block, only_triu=True)
+        expected = dtw_oracle.distance_matrix(S6, block=block, only_triu=True)
         np.testing.assert_allclose(m, np.asarray(expected), rtol=1e-14)
 
-    def test_block_not_triu(self, spark, ref_dtw):
+    def test_block_not_triu(self, spark, dtw_oracle):
         block = ((1, 4), (0, 5), False)
         df = _series_df(spark, S6)
         pdf = distance_matrix(df, block=block, chunk_size=3).toPandas()
         # full rectangle: rows 1..3 × cols 0..4, including i >= j
         assert len(pdf) == 3 * 5
         for row in pdf.itertuples(index=False):
-            expected = ref_dtw.distance(S6[row.i], S6[row.j])
+            expected = dtw_oracle.distance(S6[row.i], S6[row.j])
             assert row.d == pytest.approx(expected, rel=1e-14)
 
-    def test_random_ragged_vs_reference(self, spark, ref_dtw, rng):
+    def test_random_ragged_vs_reference(self, spark, dtw_oracle, rng):
         series = [list(rng.normal(size=int(rng.choice([8, 12, 17])))) for _ in range(15)]
         df = _series_df(spark, series)
         cond = to_condensed(distance_matrix(df, chunk_size=4), 15)
-        expected = np.asarray(ref_dtw.distance_matrix(series, compact=True))
+        expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
-    def test_settings_window_psi(self, spark, ref_dtw, rng):
+    def test_settings_window_psi(self, spark, dtw_oracle, rng):
         series = [list(rng.normal(size=12)) for _ in range(8)]
         df = _series_df(spark, series)
         st = DtwSettings(window=3, psi=1)
         cond = to_condensed(distance_matrix(df, settings=st, chunk_size=3), 8)
-        expected = np.asarray(ref_dtw.distance_matrix(series, compact=True,
-                                                      window=3, psi=1))
+        expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True,
+                                                         window=3, psi=1))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
-    def test_max_dist_lb_prefilter(self, spark, ref_dtw, rng):
+    def test_max_dist_lb_prefilter(self, spark, dtw_oracle, rng):
         series = [list(rng.normal(size=16)) for _ in range(10)]
         df = _series_df(spark, series)
         st = DtwSettings(max_dist=2.0, window=4)
         cond = to_condensed(distance_matrix(df, settings=st, chunk_size=5), 10)
-        expected = np.asarray(ref_dtw.distance_matrix(series, compact=True,
-                                                      max_dist=2.0, window=4))
+        expected = np.asarray(dtw_oracle.distance_matrix(
+            series, compact=True, max_dist=2.0, window=4))
         finite = np.isfinite(expected)
         # pruned pairs are inf on both sides; finite pairs match exactly
+        np.testing.assert_array_equal(np.isfinite(cond), finite)
+        np.testing.assert_allclose(cond[finite], expected[finite], rtol=1e-14)
+
+    def test_max_dist_with_psi_not_prefiltered(self, spark, dtw_oracle, rng):
+        """With psi a prefix can be skipped, so LB_Keogh is no lower bound:
+        [100, 0, 0, 0] vs zeros has DTW 0 but LB 100."""
+        series = [[100.0, 0, 0, 0], [0.0, 0, 0, 0]] + \
+            [list(rng.normal(size=4)) for _ in range(6)]
+        df = _series_df(spark, series)
+        st = DtwSettings(max_dist=1.0, psi=1)
+        cond = to_condensed(distance_matrix(df, settings=st), 8)
+        expected = np.asarray(dtw_oracle.distance_matrix(
+            series, compact=True, max_dist=1.0, psi=1))
+        assert cond[0] == 0.0
+        finite = np.isfinite(expected)
         np.testing.assert_array_equal(np.isfinite(cond), finite)
         np.testing.assert_allclose(cond[finite], expected[finite], rtol=1e-14)
 
@@ -115,7 +130,7 @@ class TestBlockedPath:
     """Force the blocked-shuffle physical strategy (small inputs
     auto-route to the broadcast strategy) and verify identical results."""
 
-    def test_blocked_equals_broadcast(self, spark, ref_dtw, rng):
+    def test_blocked_equals_broadcast(self, spark, dtw_oracle, rng):
         series = [list(rng.normal(size=12)) for _ in range(15)]
         df = _series_df(spark, series)
         spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
@@ -123,10 +138,10 @@ class TestBlockedPath:
             cond = to_condensed(distance_matrix(df, chunk_size=4), 15)
         finally:
             spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
-        expected = np.asarray(ref_dtw.distance_matrix(series, compact=True))
+        expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
-    def test_blocked_block_semantics(self, spark, ref_dtw):
+    def test_blocked_block_semantics(self, spark, dtw_oracle):
         block = ((1, 4), (3, 5))
         df = _series_df(spark, S6)
         spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
@@ -135,14 +150,14 @@ class TestBlockedPath:
                           only_triu=True)
         finally:
             spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
-        expected = ref_dtw.distance_matrix(S6, block=block, only_triu=True)
+        expected = dtw_oracle.distance_matrix(S6, block=block, only_triu=True)
         np.testing.assert_allclose(m, np.asarray(expected), rtol=1e-14)
 
 
 class TestCostAwareScheduling:
     """Cost-weighted guided ranges + length-balanced chunks for ragged
-    corpora (VERDICT r4 item 4): the schedule equalizes estimated
-    kernel cost len_i·len_j, outputs stay bit-identical."""
+    corpora: the schedule equalizes estimated kernel cost len_i·len_j,
+    outputs stay bit-identical."""
 
     def test_cost_ranges_partition_and_guided_profile(self):
         from dtaidistance_spark.operators.matrix import (
@@ -170,36 +185,36 @@ class TestCostAwareScheduling:
             quantum = max(floor_c, (total - c_lo) / (2 * par))
             assert c_hi - c_lo <= quantum + slack, (lo, hi)
 
-    def test_equal_lengths_reduce_to_count_schedule(self):
+    def test_equal_length_schedule_pinned(self):
+        # the dtw_matrix benchmark corpus: 480 equal-length series on 4
+        # cores — 44 guided ranges, the first 1/16 of the pairs
         from dtaidistance_spark.operators.matrix import (
-            _guided_ranges, _guided_ranges_cost, _triu_cost_fn)
+            _guided_ranges_cost, _triu_cost_fn)
 
-        lens = np.full(150, 37, dtype=np.int64)
-        n_pairs = 150 * 149 // 2
-        cost_upto, total = _triu_cost_fn(lens)
-        got = _guided_ranges_cost(cost_upto, n_pairs, total, 16)
-        want = _guided_ranges(n_pairs, 16)
-        # same decay profile (the cost search is ceil-of-quantum where
-        # the count schedule floors, so boundaries drift by ≤1 pair per
-        # range and the tail may pack into ±2 ranges)
-        assert abs(len(got) - len(want)) <= 2
-        for k, ((gl, gh), (wl, wh)) in enumerate(zip(got, want)):
-            assert abs((gh - gl) - (wh - wl)) <= k + 1, k
+        n_pairs = 480 * 479 // 2
+        cost_upto, total = _triu_cost_fn(np.full(480, 504, dtype=np.int64))
+        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, 4)
+        assert len(ranges) == 44
+        assert ranges[0] == (0, 7185)
+        assert ranges[-1][1] == n_pairs
+        assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
 
-    def test_cost_vs_count_schedules_bit_identical(self, spark, rng,
-                                                   monkeypatch):
+    def test_broadcast_vs_shuffle_bit_identical(self, spark, rng):
         series = [list(rng.normal(size=int(n)))
                   for n in rng.integers(6, 60, 20)]
         df = _series_df(spark, series)
-        monkeypatch.setenv("DTW_COST_GUIDED", "1")
         a = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
             .reset_index(drop=True)
-        monkeypatch.setenv("DTW_COST_GUIDED", "0")
-        b = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
-            .reset_index(drop=True)
-        assert a.equals(b)  # bit-identical, schedule only moves work
+        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
+        try:
+            b = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
+                .reset_index(drop=True)
+        finally:
+            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        assert len(a) == 20 * 19 // 2
+        assert a.equals(b)  # bit-identical: the strategy only moves work
 
-    def test_ragged_shuffle_path_matches_reference(self, spark, ref_dtw,
+    def test_ragged_shuffle_path_matches_reference(self, spark, dtw_oracle,
                                                    rng):
         # force the chunked-shuffle strategy on a ragged corpus: chunk
         # ids come from the length-balanced histogram path
@@ -211,10 +226,10 @@ class TestCostAwareScheduling:
             cond = to_condensed(distance_matrix(df, chunk_size=4), 18)
         finally:
             spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
-        expected = np.asarray(ref_dtw.distance_matrix(series, compact=True))
+        expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
-    def test_ragged_block_rectangular_cost_ranges(self, spark, ref_dtw,
+    def test_ragged_block_rectangular_cost_ranges(self, spark, dtw_oracle,
                                                   rng):
         # broadcast strategy + block restriction + ragged lengths: the
         # rectangular cost function drives the ranges
@@ -223,13 +238,13 @@ class TestCostAwareScheduling:
         block = ((0, 7), (4, 12))
         df = _series_df(spark, series)
         m = to_matrix(distance_matrix(df, block=block), 12, only_triu=True)
-        expected = ref_dtw.distance_matrix(series, block=block,
-                                           only_triu=True)
+        expected = dtw_oracle.distance_matrix(series, block=block,
+                                              only_triu=True)
         np.testing.assert_allclose(m, np.asarray(expected), rtol=1e-14)
 
 
 class TestCross:
-    def test_cross_matrix(self, spark, ref_dtw, rng):
+    def test_cross_matrix(self, spark, dtw_oracle, rng):
         corpus = [list(rng.normal(size=10)) for _ in range(12)]
         queries = [list(rng.normal(size=10)) for _ in range(3)]
         cdf = _series_df(spark, corpus)
@@ -239,8 +254,26 @@ class TestCross:
         out = distance_matrix_cross(qdf, cdf).toPandas()
         assert len(out) == 36
         for row in out.itertuples(index=False):
-            expected = ref_dtw.distance(queries[row.qi], corpus[row.i])
+            expected = dtw_oracle.distance(queries[row.qi], corpus[row.i])
             assert row.d == pytest.approx(expected, rel=1e-14)
+
+    def test_cross_max_dist_with_psi(self, spark, dtw_oracle, rng):
+        corpus = [[0.0, 0, 0, 0]] + [list(rng.normal(size=4))
+                                     for _ in range(5)]
+        queries = [[100.0, 0, 0, 0], list(rng.normal(size=4))]
+        cdf = _series_df(spark, corpus)
+        qdf = _series_df(spark, queries)
+        st = DtwSettings(max_dist=1.0, psi=1)
+        out = distance_matrix_cross(qdf, cdf, settings=st).toPandas()
+        assert len(out) == 12
+        for row in out.itertuples(index=False):
+            expected = dtw_oracle.distance(queries[row.qi], corpus[row.i],
+                                           max_dist=1.0, psi=1)
+            if math.isinf(expected):
+                assert math.isinf(row.d)
+            else:
+                assert row.d == pytest.approx(expected, rel=1e-14)
+        assert out.query("qi == 0 and i == 0")["d"].iat[0] == 0.0
 
 
 class TestWithIndex:
@@ -267,14 +300,14 @@ class TestWithIndex:
         assert list(out["i"]) == list(range(n))
         assert list(out["series_id"]) == sorted(r[0] for r in rows)
 
-    def test_matrix_golden_with_32_partition_input(self, spark, ref_dtw):
+    def test_matrix_golden_with_32_partition_input(self, spark, dtw_oracle):
         series = [np.asarray(s, dtype=np.float64) for s in S6]
         df = spark.createDataFrame(
             [(f"id{i}", [float(x) for x in s]) for i, s in enumerate(series)],
             "series_id string, values array<double>").repartition(32)
         idx = with_index(df, order_col="series_id")
         got = to_matrix(distance_matrix(idx), len(series), only_triu=True)
-        exp = ref_dtw.distance_matrix(series)
+        exp = dtw_oracle.distance_matrix(series)
         iu = np.triu_indices(len(series), k=1)
         assert np.allclose(got[iu], exp[iu], rtol=1e-14)
 
@@ -288,3 +321,79 @@ class TestTriuUnrank:
             ei, ej = np.triu_indices(n, k=1)
             assert np.array_equal(i, ei) and np.array_equal(j, ej)
             assert np.array_equal(condensed_index(i, j, n), p)
+
+
+class TestPairExecutor:
+    """The broadcast strategy's per-range generator and worker cache,
+    driven directly without Spark."""
+
+    @pytest.mark.parametrize("space", ["triu", "block_triu", "block_rect"])
+    def test_range_sub_batches_bounded(self, space):
+        from dtaidistance_spark.operators.matrix import (
+            _compute_pairs, _range_pairs)
+
+        ids = np.arange(0, 90, 3, dtype=np.int64)  # sparse ids
+        rng = np.random.default_rng(5)
+        vals = {int(i): rng.normal(size=16) for i in ids}
+        if space == "triu":
+            rows, cols, triu = ids, None, True
+            n_pairs = len(ids) * (len(ids) - 1) // 2
+        else:
+            rows, cols = ids[4:21], ids[9:30]
+            triu = space == "block_triu"
+            n_pairs = len(rows) * len(cols)
+        st = DtwSettings(window=4)
+        cap = 7
+        for lo, hi in [(0, n_pairs), (5, n_pairs - 11), (40, 41)]:
+            one_i, one_j = next(_range_pairs(lo, hi, rows, cols, triu,
+                                             cap=hi - lo))
+            parts = list(_range_pairs(lo, hi, rows, cols, triu, cap=cap))
+            assert len(parts) == -(-(hi - lo) // cap)
+            assert all(len(ii) == len(jj) <= cap for ii, jj in parts)
+            got_i = np.concatenate([ii for ii, _ in parts])
+            got_j = np.concatenate([jj for _, jj in parts])
+            assert np.array_equal(got_i, one_i)
+            assert np.array_equal(got_j, one_j)
+            if triu:
+                assert (got_i < got_j).all()
+            d_one = _compute_pairs(one_i, one_j, vals, st)[2]
+            d_parts = np.concatenate(
+                [_compute_pairs(ii, jj, vals, st)[2] for ii, jj in parts])
+            assert np.array_equal(d_parts, d_one)
+
+    def test_corpus_cache_evicts_past_byte_cap(self, monkeypatch):
+        from dtaidistance_spark.operators import matrix as M
+
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        entry = 2 * 10 * 8 * 8  # 10 series of 8 doubles, dict + stack
+        monkeypatch.setattr(M, "_CORPUS_CACHE_BYTES", 3 * entry)
+        dicts = [M._SharedCorpus((i, np.full(8, float(k))) for i in range(10))
+                 for k in range(5)]
+        first = M._corpus_matrix(dicts[0])
+        assert M._corpus_matrix(dicts[0]) is first  # hit: built once
+        for d in dicts[1:3]:
+            M._corpus_matrix(d)
+        assert len(M._CORPUS_CACHE) == 3  # at the cap, nothing evicted
+        M._corpus_matrix(dicts[3])  # passes the cap: oldest goes
+        assert len(M._CORPUS_CACHE) == 3
+        assert id(dicts[0]) not in M._CORPUS_CACHE
+        assert sum(e[2] for e in M._CORPUS_CACHE.values()) <= 3 * entry
+        ids, V = M._corpus_matrix(dicts[4])
+        assert np.array_equal(ids, np.arange(10)) and (V == 4.0).all()
+        # a ragged corpus has no stacked matrix and is not cached
+        assert M._corpus_matrix(
+            M._SharedCorpus({0: np.zeros(3), 1: np.zeros(4)})) is None
+        assert len(M._CORPUS_CACHE) == 3
+
+    def test_one_shot_dicts_not_cached(self, monkeypatch):
+        """Shuffle groups and cross batches pass plain per-call dicts;
+        they are stacked for the kernel but never retained."""
+        from dtaidistance_spark.operators import matrix as M
+
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        vals = {i: np.full(8, float(i)) for i in range(10)}
+        ids, V = M._corpus_matrix(vals)
+        assert np.array_equal(V[:, 0], np.arange(10.0))
+        ii, jj = np.array([0, 1, 2]), np.array([3, 4, 5])
+        M._compute_pairs(ii, jj, vals, DtwSettings(window=2))
+        assert M._CORPUS_CACHE == {}

@@ -230,9 +230,9 @@ class TestWeightedMatrix:
 
     def test_shuffle_fallback_vs_reference(self, spark, rng):
         """Force the corpus above the broadcast gate so the blocked
-        chunk-pair shuffle path runs (VERDICT r2 wrong#4: the weighted
-        matrix previously always collected the corpus to the driver),
-        and check the same reference parity through it."""
+        chunk-pair shuffle path runs (corpora above the gate must never
+        be collected to the driver), and check the same reference
+        parity through it."""
         from dtaidistance import dtw_weighted as ref_w
         from dtaidistance_spark.operators.matrix import distance_matrix_weighted
 
@@ -245,16 +245,48 @@ class TestWeightedMatrix:
         df = spark.createDataFrame(
             rows, "i long, values array<double>, "
                   "weights array<array<double>>")
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxPairs", "4")
+        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
         try:
             got = distance_matrix_weighted(df).toPandas()
         finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxPairs")
+            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
         assert len(got) == n * (n - 1) // 2
         for r in got.itertuples(index=False):
             exp, _ = ref_w.warping_paths(S[r.i], S[r.j],
                                          weights=weights[r.i])
             assert r.d == pytest.approx(exp, rel=1e-12)
+
+    def test_both_paths_equal_in_process_kernel(self, spark, rng):
+        """Broadcast and shuffle strategies both return, for every i < j
+        pair, exactly the in-process weighted_warping_paths distance
+        with row i's weights (a null profile means unweighted)."""
+        from dtaidistance_spark.kernels.extras import weighted_warping_paths
+        from dtaidistance_spark.operators.matrix import distance_matrix_weighted
+
+        n, L = 7, 20
+        S = rng.normal(0, 1, (n, L))
+        weights = np.abs(rng.normal(0.5, 0.2, (n, L, 8)))
+        weights.sort(axis=2)
+        rows = [(i, S[i].tolist(),
+                 None if i == 3 else [w.tolist() for w in weights[i]])
+                for i in range(n)]
+        df = spark.createDataFrame(
+            rows, "i long, values array<double>, "
+                  "weights array<array<double>>")
+        got = {"broadcast": distance_matrix_weighted(df, window=5).toPandas()}
+        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
+        try:
+            got["shuffle"] = distance_matrix_weighted(df, window=5).toPandas()
+        finally:
+            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        for name, pdf in got.items():
+            assert sorted(zip(pdf["i"], pdf["j"])) == [
+                (i, j) for i in range(n) for j in range(i + 1, n)], name
+            for r in pdf.itertuples(index=False):
+                w = None if r.i == 3 else weights[r.i]
+                exp, _ = weighted_warping_paths(S[r.i], S[r.j], weights=w,
+                                                window=5)
+                assert r.d == exp, (name, r.i, r.j)
 
 
 class TestNdimMatrix:
