@@ -4,6 +4,19 @@ Local mode is the test/bench environment (one JVM, N threads); the same
 configuration carries to a real cluster via spark-submit --py-files, where
 ``spark.sql.shuffle.partitions`` should be sized to ~2-3× total cores and
 AQE re-plans at runtime.
+
+Python workers start from ``dtaidistance_spark.pydaemon``
+(``spark.python.daemon.module``).  Stock ``pyspark.daemon`` workers on
+Python < 3.13 spend ~0.2 s before every task re-reading the central
+directories of ``pyspark.zip``, the py4j zip and the spark-core jar,
+because PySpark calls ``importlib.invalidate_caches()`` per task and
+``zipimporter`` re-reads its archive on that call; the daemon entry
+re-reads an archive only when it changed.  The package root goes first on the workers'
+PYTHONPATH (``spark.executorEnv.PYTHONPATH``), so the daemon imports even
+when the driver found the package through ``sys.path`` alone.
+
+The driver heap defaults to half of ``MemTotal`` (at most 24g);
+``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -11,6 +24,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the sys.path entry this package was imported from (a directory, or the
+# --py-files zip)
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's ``MemTotal``, within [1g, 24g]; 1g (Spark's own
+    default) where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next((int(line.split()[1]) for line in f
+                             if line.startswith("MemTotal:")), 0)
+    except OSError:
+        total_kb = 0
+    return f"{max(1024, min(24 * 1024, total_kb // 2048))}m"
 
 
 def get_spark(app_name: str = "dtaidistance_spark", cores: int | None = None,
@@ -55,7 +84,9 @@ def get_spark(app_name: str = "dtaidistance_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         # r6: allow shuffled-hash join when its size conditions are met
         # (no sort on either side); sort-merge remains the fallback for
         # build sides AQE can't bound.  A/B at the 10x corpus: gap-fill's
@@ -80,8 +111,12 @@ def get_spark(app_name: str = "dtaidistance_spark", cores: int | None = None,
                 f"-XX:+UseParallelGC -XX:ParallelGCThreads={max(2, cores)}")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS",
                 os.environ["OPENBLAS_NUM_THREADS"])
+        .config("spark.python.daemon.module", "dtaidistance_spark.pydaemon")
     )
-    for key, val in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PKG_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    for key, val in conf.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

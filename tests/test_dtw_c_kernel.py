@@ -2,6 +2,9 @@
 to the numpy anti-diagonal path it replaces — every setting combination,
 both inner distances, ragged shapes, degenerate lengths."""
 
+import os
+import stat
+
 import numpy as np
 import pytest
 
@@ -90,3 +93,61 @@ def test_c_disabled_env(monkeypatch):
     assert _dtwc.lib() is None
     # reset the loader state for other tests
     monkeypatch.setattr(_dtwc, "_tried", False)
+
+
+@pytest.fixture
+def fresh_loader(monkeypatch, tmp_path):
+    """Loader state reset, builds under tmp_path, CDLL calls recorded."""
+    monkeypatch.setenv("DTW_C_BUILD_DIR", str(tmp_path))
+    monkeypatch.setattr(_dtwc, "_lib", None)
+    monkeypatch.setattr(_dtwc, "_tried", False)
+    opened = []
+    monkeypatch.setattr(_dtwc.ctypes, "CDLL", opened.append)
+    return opened
+
+
+def _plant(uid=None, mode=0o755):
+    """A fake .so at the exact path the loader would build to."""
+    path = _dtwc._so_path(_dtwc._tag())
+    with open(path, "wb") as f:
+        f.write(b"not an ELF")
+    os.chmod(path, mode)
+    if uid is not None:
+        os.chown(path, uid, -1)
+    return path
+
+
+@pytest.mark.parametrize("mode", [0o666, 0o775, 0o757])
+def test_writable_planted_so_refused(fresh_loader, mode):
+    _plant(mode=mode)
+    with pytest.warns(RuntimeWarning, match="refusing to load"):
+        assert _dtwc.lib() is None
+    assert fresh_loader == []
+
+
+@pytest.mark.skipif(os.getuid() != 0, reason="chown to another user "
+                    "needs root")
+def test_foreign_owned_planted_so_refused(fresh_loader):
+    _plant(uid=os.getuid() + 4242)
+    with pytest.warns(RuntimeWarning, match="refusing to load"):
+        assert _dtwc.lib() is None
+    assert fresh_loader == []
+
+
+def test_private_planted_so_reaches_dlopen(fresh_loader):
+    """The control: an owned, non-writable .so passes the check."""
+    path = _plant()
+    _dtwc.lib()
+    assert fresh_loader == [path]
+
+
+def test_read_only_package_builds_in_private_dir(monkeypatch, tmp_path):
+    monkeypatch.delenv("DTW_C_BUILD_DIR", raising=False)
+    monkeypatch.setattr(_dtwc.os, "access", lambda *a: False)
+    monkeypatch.setattr(_dtwc.tempfile, "tempdir", str(tmp_path))
+    d = _dtwc._build_dir()
+    assert d == str(tmp_path / f"dtaidistance_spark-{os.getuid()}")
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+    os.chmod(d, 0o755)              # no longer private: refused
+    with pytest.warns(RuntimeWarning, match="not a directory private"):
+        assert _dtwc._build_dir() is None
