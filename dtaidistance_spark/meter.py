@@ -18,9 +18,9 @@ The meter decomposes a timed window's CPU into:
 - ``neighbor`` — whole-box busy CPU minus own: other tenants;
 - ``steal``    — hypervisor steal; ``iowait`` — I/O wait.
 
-scripts/quiet_pair.py (the scaling-evidence harness) uses the same
-primitives; bench.py stamps every per-query timing with a window so a
-noisy driver run is self-diagnosing instead of judge-adjudicated.
+bench.py stamps every per-query timing with a window, and the
+benchmark child (perfbench/child.py) meters every timed pass, so a
+noisy run is self-diagnosing from its own artifact.
 """
 
 from __future__ import annotations

@@ -84,7 +84,7 @@ def _series_np(v) -> Optional[np.ndarray]:
 
 def with_index(series_df: DataFrame, order_col: str = "series_id",
                index_col: str = "i", num_partitions: Optional[int] = None,
-               persist: bool = True, ordered: bool = True) -> DataFrame:
+               persist: bool = True) -> DataFrame:
     """Assign dense 0-based indices by ``order_col`` ordering — two-pass
     per-partition offset scheme, no single-partition exchange.
 
@@ -94,34 +94,23 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
     cumulative offsets yields the dense global index.  Every stage is
     parallel; the only driver data is one count per partition, where a
     global ``row_number()`` would serialize the corpus through one task.
-
-    ``ordered=False`` skips the range exchange and sort entirely and
-    indexes rows in the input's existing partition layout — still dense
-    and stable for a deterministic upstream plan, but in no particular
-    ``order_col`` order.  Use it when the index only needs to be a dense
-    handle (e.g. symmetric all-pairs jobs that join names back at the
-    end): it removes the range-partitioner sampling pass (which re-executes
-    the upstream plan) and the sort.
     """
     spark = series_df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    if ordered:
-        # Persist the INPUT before the range exchange: repartitionByRange
-        # runs a sampling pass that otherwise re-executes the entire
-        # upstream plan once just to pick boundaries, and the exchange
-        # itself executes it a second time (measured 29 s -> ~10 s for a
-        # 15k-series corpus whose upstream is the full rollup -> gap-fill
-        # -> arrays pipeline).  Both passes now read the cache;
-        # release_all() frees it with every other handle.
-        if persist:
-            series_df = track_persist(series_df.persist())
-        part = (series_df
-                .repartitionByRange(num_partitions, F.col(order_col))
-                .sortWithinPartitions(order_col)
-                .withColumn("__pid", F.spark_partition_id()))
-    else:
-        part = series_df.withColumn("__pid", F.spark_partition_id())
+    # Persist the INPUT before the range exchange: repartitionByRange
+    # runs a sampling pass that otherwise re-executes the entire
+    # upstream plan once just to pick boundaries, and the exchange
+    # itself executes it a second time (measured 29 s -> ~10 s for a
+    # 15k-series corpus whose upstream is the full rollup -> gap-fill
+    # -> arrays pipeline).  Both passes now read the cache;
+    # release_all() frees it with every other handle.
+    if persist:
+        series_df = track_persist(series_df.persist())
+    part = (series_df
+            .repartitionByRange(num_partitions, F.col(order_col))
+            .sortWithinPartitions(order_col)
+            .withColumn("__pid", F.spark_partition_id()))
     if persist:
         part = track_persist(part.persist())
     counts = {r["__pid"]: r["cnt"] for r in
@@ -279,12 +268,19 @@ def _weighted_pairs(ii: np.ndarray, jj: np.ndarray, vals: dict, wts: dict,
 def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None,
                     block=None, chunk_size: Optional[int] = None,
                     index_col: str = "i", values_col: str = "values",
+                    order_col: Optional[str] = None,
                     **kwargs) -> DataFrame:
     """All-pairs DTW distances → long DataFrame ``(i, j, d)``.
 
     ``block=((rb,re),(cb,ce)[,triu])`` follows reference semantics
     (dtw.py:730, :757-761): with triu (default) only pairs ``i<j`` inside
     the block are produced; with ``triu=False`` the full rectangle.
+
+    ``order_col`` replaces ``index_col``: ``i`` is then the 0-based rank
+    of ``order_col``, the index ``with_index(order_col=...)`` assigns.
+    The broadcast strategy ranks on the driver after its one corpus
+    collect, so no index pass runs; the shuffle strategy calls
+    :func:`with_index`.
 
     ``chunk_size`` applies to the chunk-pair shuffle strategy; ``None``
     sizes chunks so the pair space yields ≈8 groups per core — enough
@@ -293,15 +289,18 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     """
     s = settings if settings is not None else DtwSettings(**kwargs)
     blk, triu = _norm_block(block)
-    src = series_df.select(F.col(index_col).cast("long").alias("i"),
-                           F.col(values_col).alias("values"))
-    if blk is not None:
+    key = (F.col(order_col) if order_col is not None
+           else F.col(index_col).cast("long").alias("i"))
+    src = series_df.select(key, F.col(values_col).alias("values"))
+    if blk is not None and order_col is None:
+        # drop rows outside the block early; ranked ids do not exist
+        # yet under order_col, and the executor keeps only block pairs
         (rb, re_), (cb, ce) = blk
         src = src.where(
             ((F.col("i") >= rb) & (F.col("i") < re_)) |
             ((F.col("i") >= cb) & (F.col("i") < ce)))
     return _pair_matrix(src, ["values"], partial(_compute_pairs, settings=s),
-                        blk, triu, chunk_size)
+                        blk, triu, chunk_size, order_col)
 
 
 def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
@@ -323,12 +322,13 @@ def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
 
 
 def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
-                 triu: bool = True,
-                 chunk_size: Optional[int] = None) -> DataFrame:
-    """The pair executor: ``src`` holds ``i`` plus ``data_cols`` (already
-    restricted to the block's rows and columns), ``kernel(ii, jj,
+                 triu: bool = True, chunk_size: Optional[int] = None,
+                 order_col: Optional[str] = None) -> DataFrame:
+    """The pair executor: ``src`` holds ``i`` or, with ``order_col``,
+    that column to rank ``i`` by, plus ``data_cols``; ``kernel(ii, jj,
     *dicts)`` computes ``(i, j, d)`` for id pairs given one ``{id:
-    array}`` dict per data column."""
+    array}`` dict per data column.  Both strategies keep only the
+    block's pairs, so rows outside it may stay in ``src``."""
     # Persist BEFORE the single stats pass: the upstream plan (often the
     # whole rollup → gap-fill → arrays pipeline) must execute exactly
     # once, not once for the stats and again for the collect or shuffle.
@@ -336,7 +336,8 @@ def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
     points = [F.size(F.flatten(c))
               if src.schema[c].dataType.elementType.typeName() == "array"
               else F.size(c) for c in data_cols]
-    stats = src.agg(F.count("*").alias("n"), F.max("i").alias("imax"),
+    imax = F.max("i") if order_col is None else F.count("*") - 1
+    stats = src.agg(F.count("*").alias("n"), imax.alias("imax"),
                     *[F.avg(p) for p in points]).collect()[0]
     est_bytes = 8 * int(stats["n"] or 0) * sum(
         float(a or 0) for a in stats[2:])
@@ -347,7 +348,10 @@ def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
     # ~n/chunk_size partner groups through the shuffle, which only pays
     # for corpora that cannot be broadcast.
     if est_bytes <= max_bytes:
-        return _broadcast_ranges(src, data_cols, kernel, blk, triu)
+        return _broadcast_ranges(src, data_cols, kernel, blk, triu,
+                                 order_col)
+    if order_col is not None:
+        src = with_index(src, order_col=order_col).drop(order_col)
     par = src.sparkSession.sparkContext.defaultParallelism
     if chunk_size is None:
         n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
@@ -355,19 +359,33 @@ def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
     return _chunk_shuffle(src, data_cols, kernel, blk, triu, chunk_size, par)
 
 
-def _collect_corpus(src: DataFrame, data_cols: list) -> Tuple[np.ndarray, list]:
-    """Collect ``i`` + ``data_cols`` once → (sorted ids, one ``{id:
-    float64 array}`` dict per column).
+def _collect_corpus(src: DataFrame, data_cols: list,
+                    order_col: Optional[str] = None) -> Tuple[np.ndarray, list]:
+    """Collect ``i`` (or ``order_col``) + ``data_cols`` once → (sorted
+    ids, one ``{id: float64 array}`` dict per column).
 
     The collect is one ``toArrow()``: a flat, null-free ``array<double>``
     column arrives as ONE contiguous values buffer + offsets, and each
     series becomes a numpy slice view of it — no per-row Python objects.
     Nested (n-D series, weight profiles) or null-holding columns convert
-    cell by cell."""
-    import pyarrow as pa
+    cell by cell.
 
-    tb = src.select("i", *data_cols).toArrow()
-    keys = [int(i) for i in tb.column("i").to_numpy()]
+    With ``order_col`` the id of a row is its 0-based rank in a stable
+    Arrow sort of that column: Arrow compares strings by bytes, which is
+    Spark's string order, and nulls go first as in Spark's ascending
+    sort, so on distinct values the ids equal :func:`with_index`'s."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tb = src.select(order_col or "i", *data_cols).toArrow()
+    if order_col is None:
+        keys = [int(i) for i in tb.column("i").to_numpy()]
+    else:
+        rank = np.empty(tb.num_rows, dtype=np.int64)
+        rank[pc.sort_indices(tb.column(order_col),
+                             null_placement="at_start").to_numpy()] = \
+            np.arange(tb.num_rows)
+        keys = rank.tolist()
     dicts = []
     for c in data_cols:
         va = tb.column(c).combine_chunks()
@@ -405,13 +423,13 @@ def _range_pairs(lo: int, hi: int, rows: np.ndarray,
 
 
 def _broadcast_ranges(src: DataFrame, data_cols: list, kernel, blk,
-                      triu: bool) -> DataFrame:
+                      triu: bool, order_col: Optional[str] = None) -> DataFrame:
     """Broadcast strategy: the corpus dicts are broadcast once and the
     pair space is cut into cost-weighted guided ``(lo, hi)`` range tasks;
     only the O(n) series ids travel with it."""
     spark = src.sparkSession
     sc = spark.sparkContext
-    ids, corpus = _collect_corpus(src, data_cols)
+    ids, corpus = _collect_corpus(src, data_cols, order_col)
     lens = np.array([len(corpus[0][int(i)]) for i in ids], dtype=np.int64)
     if blk is None:
         rows, cols = ids, None

@@ -142,7 +142,9 @@ def gap_fill(agg: DataFrame, bucket: str, policy: str = "zero_count",
 
     Scale note: the grid is generated with a two-level explode (days ×
     intra-day offsets) so no ``sequence()`` array exceeds 1440 elements
-    regardless of the series' time span.
+    regardless of the series' time span.  Consumers that only need the
+    zero-filled global grid as dense arrays use :func:`dense_arrays`,
+    which builds no grid.
     """
     trunc, step = BUCKET_SPEC[bucket]
     # GLOBAL align derives corpus bounds AND the series list from ONE
@@ -256,6 +258,57 @@ def series_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
         .select("series_id", "t0", F.lit(step).alias("step_s"),
                 F.col("n").cast("int").alias("n"), "values")
     )
+
+
+def dense_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
+                 span_cap: int | None = None, fill: float = 0.0) -> DataFrame:
+    """Zero-fill, globally aligned dense arrays in ONE per-series
+    aggregate: the rows of ``series_arrays(gap_fill(agg, bucket,
+    policy="zero", align="global", span_cap=span_cap), bucket,
+    value_col)``, without the grid.
+
+    The aggregate builds a ``{unix seconds: value}`` map of each
+    series' buckets.  A one-row ``[b0, b1]`` bounds aggregate reads the
+    map keys of that same per-series aggregate, so both branches share
+    its exchange (``ReusedExchange``) and the tier runs once;
+    ``span_cap`` trims ``b0`` as in :func:`gap_fill`.  The row is
+    broadcast back, and every array is ``n = (b1 - b0)/step + 1`` map
+    lookups at ``b0 + k·step``; a missing bucket reads ``fill``.  A
+    series with no bucket in ``[b0, b1]`` keeps an all-``fill`` row, as
+    the grid join does.  With ``fill=0.0`` the output equals the
+    chain's for every ``value_col`` (the chain zero-fills ``cnt`` and
+    ``sum`` gaps itself); another ``fill`` also lands in ``cnt``/``sum``
+    gaps here.
+
+    The map is built in the aggregate's result, once per series: a map
+    built inside the ``transform`` lambda would be rebuilt for every
+    element, because lambda bodies are interpreted and never share
+    subexpressions.  Bucket arithmetic is in seconds, which assumes the
+    session time zone has a fixed UTC offset (the engine runs in UTC).
+    """
+    _, step = BUCKET_SPEC[bucket]
+    secs = F.unix_seconds(F.col("bucket_ts"))
+    per_series = agg.groupBy("series_id").agg(
+        F.map_from_entries(F.collect_list(F.struct(
+            secs, F.col(value_col).cast("double")))).alias("_m"))
+    b0, b1 = F.col("b0"), F.col("b1")
+    keys = F.map_keys("_m")
+    bounds = per_series.agg(F.min(F.array_min(keys)).alias("b0"),
+                            F.max(F.array_max(keys)).alias("b1"))
+    if span_cap is not None:
+        bounds = bounds.select(
+            F.greatest(b0, b1 - int(span_cap - 1) * step).alias("b0"), b1)
+    # n is null only on an empty tier, which joins to no rows; the
+    # coalesce keeps ``n`` and ``values`` non-nullable, as in the chain
+    n = F.coalesce(((b1 - b0) / step + 1).cast("int"), F.lit(0))
+    bounds = bounds.select(b0, n.alias("n"))
+    lookup = F.transform(
+        F.sequence(F.lit(0), F.col("n") - 1),
+        lambda k: F.coalesce(F.element_at(F.col("_m"), b0 + k * step),
+                             F.lit(float(fill))))
+    return per_series.crossJoin(F.broadcast(bounds)).select(
+        "series_id", F.timestamp_seconds(b0).alias("t0"),
+        F.lit(step).alias("step_s"), "n", lookup.alias("values"))
 
 
 def rollup_distinct(points: DataFrame, bucket: str = "1h",

@@ -110,15 +110,26 @@ def event_points_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation to SortAggregate (full sort of the raw scan per tier —
     the dominant rollup cost at sf1.0); a decimal buffer is fixed-width
     mutable, so the same plan runs as a map-side-partial HashAggregate.
-    Exact for ts >= epoch and 0 <= event_id < 10^18 — both pinned by
-    the testdata generator contract (TESTDATA.md: seed-42 synthetic,
-    2024+ timestamps, dense int64 event ids)."""
+    Exact for ts >= epoch and 0 <= event_id < 10^18 (the testdata
+    generator contract, TESTDATA.md: 2024+ timestamps, dense int64 event
+    ids).  A row outside that domain fails the query through
+    ``raise_error``: ``lpad`` would cut a 19-digit id and a negative
+    number would break the digit order, so the key would silently
+    misorder first/last."""
     ev = _events(spark, sf_dir)
-    seq = F.concat(
-        F.lpad(F.unix_micros(F.col("ts").cast("timestamp")).cast("string"),
-               20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 18, "0"),
-    ).cast("decimal(38,0)")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    eid = F.col("event_id")
+    seq = F.when(
+        (us < 0) | (eid < 0) | (eid >= 10 ** 18),
+        F.raise_error(F.concat(
+            F.lit("event_points_rollup: the decimal(38,0) ordering key "
+                  "needs ts >= 1970-01-01 and 0 <= event_id < 10^18; got "
+                  "event_id="), eid.cast("string"),
+            F.lit(" ts="), F.col("ts").cast("string"))),
+    ).otherwise(F.concat(
+        F.lpad(us.cast("string"), 20, "0"),
+        F.lpad(eid.cast("string"), 18, "0"),
+    ).cast("decimal(38,0)"))
     return ev.select(
         F.concat(F.lit("user"), F.col("user_id").cast("string")).alias("series_id"),
         seq.alias("seq"),
@@ -1179,30 +1190,29 @@ HOURLY_SPAN_CAP = 504  # trailing 21 days of hourly buckets
 
 
 def hourly_series(spark, sf_dir, min_len: int = 24) -> DataFrame:
-    """Gap-filled per-user hourly event-count arrays — the engine's dense
-    series input for DTW.
+    """Zero-filled per-user hourly event-count arrays on one global grid —
+    the engine's dense series input for DTW.
 
-    ``span_cap`` bounds the global grid to the trailing
-    ``HOURLY_SPAN_CAP`` hourly buckets: with global alignment one
-    long-lived series otherwise forces a full-span dense row for *every*
-    series (grid rows = n_series × corpus span — the 100×-scale killer
-    flagged in rounds 1-2; the fix existed in gap_fill but the flagship
-    path didn't use it).  All downstream consumers (DTW matrices,
-    subsequence search, kmeans, linkage) see equal-length trailing-window
-    arrays; the subsequence_topk SQL oracle applies the same cap."""
+    Built by ONE per-series aggregate (``rollup.dense_arrays``) over the
+    1h tier: the same rows the ``gap_fill(policy="zero",
+    align="global")`` → ``series_arrays`` chain gives, without the grid
+    explode and join.  ``span_cap`` bounds the global grid to the
+    trailing ``HOURLY_SPAN_CAP`` hourly buckets: with global alignment
+    one long-lived series otherwise forces a full-span dense row for
+    *every* series (n_series × corpus span).  All downstream consumers
+    (DTW matrices, subsequence search, kmeans, linkage) see equal-length
+    trailing-window arrays; the subsequence_topk SQL oracle applies the
+    same cap.  Every array has the shared grid length, so ``min_len``
+    keeps all series or none."""
     agg1h = R.rollup_points(event_points_rollup(spark, sf_dir), "1h")
-    # global alignment: one shared time grid → equal-length arrays →
-    # the DTW kernel batches every pair in one vectorized sweep
-    filled = R.gap_fill(agg1h, "1h", policy="zero", align="global",
-                        span_cap=HOURLY_SPAN_CAP)
-    arrays = R.series_arrays(filled, "1h", value_col="cnt")
+    arrays = R.dense_arrays(agg1h, "1h", "cnt", span_cap=HOURLY_SPAN_CAP)
     return arrays.where(F.col("n") >= min_len)
 
 
 def q_dtw_distance_matrix(spark, sf_dir):
-    series = with_index(hourly_series(spark, sf_dir), order_col="series_id")
     st = DtwSettings(window=24)
-    dist = distance_matrix(series, settings=st, chunk_size=128)
+    dist = distance_matrix(hourly_series(spark, sf_dir), settings=st,
+                           chunk_size=128, order_col="series_id")
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1213,11 +1223,7 @@ def q_dtw_daily_pairs(spark, sf_dir):
     recurrence (reference dtw.py:233-319 semantics: squared-euclidean
     inner distance, sqrt at the end) as an anti-diagonal recursive CTE —
     the driver-level value oracle for the DTW kernel itself."""
-    agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    arrays = R.series_arrays(filled, "1d", value_col="cnt")
-    series = with_index(arrays, order_col="series_id") \
-        .where(F.col("i") < 32)
+    series = _daily_series(spark, sf_dir, 32)
     dist = distance_matrix(series, settings=DtwSettings(), chunk_size=128)
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
@@ -1231,11 +1237,7 @@ def q_dtw_banded_pairs(spark, sf_dir):
     psi relaxation (reference dtw.py:336-337,:386-396): border cells
     (0,j), (i,0) are 0 for i,j <= psi, and the final distance is the min
     of the corner and the last psi cells of the last row/column."""
-    agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    arrays = R.series_arrays(filled, "1d", value_col="cnt")
-    series = with_index(arrays, order_col="series_id") \
-        .where(F.col("i") < 32)
+    series = _daily_series(spark, sf_dir, 32)
     dist = distance_matrix(series, settings=DtwSettings(window=12, psi=2),
                            chunk_size=128)
     return dist.select("i", "j", F.round("d", 6).alias("d"))
@@ -1259,8 +1261,7 @@ def _daily_series(spark, sf_dir, cap: int) -> DataFrame:
     """First ``cap`` per-user daily count series on the global grid —
     the shared short-series input of the value-oracled DP queries."""
     agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    arrays = R.series_arrays(filled, "1d", value_col="cnt")
+    arrays = R.dense_arrays(agg1d, "1d", "cnt")
     return with_index(arrays, order_col="series_id").where(F.col("i") < cap)
 
 
@@ -1419,11 +1420,7 @@ def q_dtw_block_pairs(spark, sf_dir):
     """Block-restricted distance matrix (reference dtw.py:757-761 — the
     reference's own multi-node distribution primitive): rows [0,16) ×
     cols [8,32) of the 32-series daily matrix, triangular."""
-    agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    arrays = R.series_arrays(filled, "1d", value_col="cnt")
-    series = with_index(arrays, order_col="series_id") \
-        .where(F.col("i") < 32)
+    series = _daily_series(spark, sf_dir, 32)
     dist = distance_matrix(series, settings=DtwSettings(),
                            block=((0, 16), (8, 32)), chunk_size=128)
     return dist.select("i", "j", F.round("d", 6).alias("d"))
@@ -1475,9 +1472,8 @@ def q_dtw_ndim_daily_pairs(spark, sf_dir):
     Spark and the DuckDB CTE replay see bit-identical inputs (a daily
     *sum* would depend on float summation order)."""
     agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    cnt_arr = R.series_arrays(filled, "1d", value_col="cnt")
-    max_arr = R.series_arrays(filled, "1d", value_col="max") \
+    cnt_arr = R.dense_arrays(agg1d, "1d", "cnt")
+    max_arr = R.dense_arrays(agg1d, "1d", "max") \
         .select("series_id", F.col("values").alias("values2"))
     nd = (cnt_arr.join(max_arr, "series_id")
           .select("series_id",
@@ -1596,11 +1592,7 @@ def q_dtw_knn(spark, sf_dir):
     selectivity gate (operators/subsequence.py, oracled via
     subsequence_topk) — pruning under psi relaxation is unsound for
     LB_Keogh, so the whole-series kNN ranks the exact matrix."""
-    agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    filled = R.gap_fill(agg1d, "1d", policy="zero", align="global")
-    arrays = R.series_arrays(filled, "1d", value_col="cnt")
-    series = with_index(arrays, order_col="series_id") \
-        .where(F.col("i") < 32)
+    series = _daily_series(spark, sf_dir, 32)
     dist = distance_matrix(series, settings=DtwSettings(window=12,
                                                         psi=2),
                            chunk_size=128)
@@ -2178,9 +2170,8 @@ def q_dtw_ndim_matrix(spark, sf_dir):
     value sum) per user — reference dtw_ndim.py:43-94 semantics (summed
     per-dim squared differences inside one DP)."""
     agg1h = R.rollup_points(event_points_rollup(spark, sf_dir), "1h")
-    filled = R.gap_fill(agg1h, "1h", policy="zero", align="global")
-    cnt_arr = R.series_arrays(filled, "1h", value_col="cnt")
-    sum_arr = R.series_arrays(filled, "1h", value_col="sum") \
+    cnt_arr = R.dense_arrays(agg1h, "1h", "cnt")
+    sum_arr = R.dense_arrays(agg1h, "1h", "sum") \
         .select("series_id", F.col("values").alias("values2"))
     nd = (cnt_arr.join(sum_arr, "series_id")
           .where(F.col("n") >= 24)

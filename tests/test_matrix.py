@@ -6,7 +6,7 @@ import math
 import numpy as np
 import pytest
 
-from dtaidistance_spark.kernels.dtw import DtwSettings
+from dtaidistance_spark.kernels.dtw import DtwSettings, dtw_distance
 from dtaidistance_spark.operators.matrix import (
     condensed_index, distance_matrix, distance_matrix_cross, to_condensed,
     to_matrix, with_index,
@@ -310,6 +310,59 @@ class TestWithIndex:
         exp = dtw_oracle.distance_matrix(series)
         iu = np.triu_indices(len(series), k=1)
         assert np.allclose(got[iu], exp[iu], rtol=1e-14)
+
+
+class TestOrderCol:
+    """``distance_matrix(order_col=...)`` ranks ``i`` itself; it must equal
+    the matrix over ``with_index(order_col=...)`` on both strategies."""
+
+    @pytest.fixture(scope="class")
+    def keyed(self, spark):
+        rng = np.random.default_rng(7)
+        # byte order, not locale order: upper case before lower case,
+        # multi-byte UTF-8 after ASCII
+        keys = [f"s{k:02d}" for k in range(20)] + ["Z", "a", "é", "ä", "s1"]
+        rows = [(k, [float(x) for x in rng.normal(size=int(n))])
+                for k, n in zip(keys, rng.integers(5, 40, len(keys)))]
+        order = rng.permutation(len(rows))
+        # shuffled rows in a scattered partition layout
+        return spark.createDataFrame(
+            [rows[k] for k in order],
+            "series_id string, values array<double>").repartition(7)
+
+    def _both(self, df, **kw):
+        def table(d):
+            return d.toPandas().sort_values(["i", "j"]).reset_index(drop=True)
+        got = table(distance_matrix(df, order_col="series_id", **kw))
+        want = table(distance_matrix(with_index(df, order_col="series_id"),
+                                     **kw))
+        return got, want
+
+    @pytest.mark.parametrize("block", [None, ((2, 10), (5, 20)),
+                                       ((0, 6), (3, 25), False)])
+    def test_broadcast_equals_with_index(self, spark, keyed, block):
+        got, want = self._both(keyed, block=block, window=4)
+        assert len(got) > 0
+        assert got.equals(want)
+
+    @pytest.mark.parametrize("block", [None, ((2, 10), (5, 20))])
+    def test_shuffle_equals_with_index(self, spark, keyed, block):
+        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "1")
+        try:
+            got, want = self._both(keyed, block=block, chunk_size=8)
+        finally:
+            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        assert len(got) > 0
+        assert got.equals(want)
+
+    def test_ranks_follow_spark_order(self, spark, keyed):
+        ids = [r[0] for r in keyed.orderBy("series_id").collect()]
+        n = len(ids)
+        pdf = distance_matrix(keyed, order_col="series_id").toPandas()
+        assert len(pdf) == n * (n - 1) // 2
+        vals = {r[0]: np.asarray(r[1]) for r in keyed.collect()}
+        for row in pdf.head(40).itertuples():
+            assert row.d == dtw_distance(vals[ids[row.i]], vals[ids[row.j]])
 
 
 class TestTriuUnrank:

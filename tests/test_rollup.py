@@ -11,7 +11,8 @@ import pytest
 
 from dtaidistance_spark.operators.ingest import transcript_points
 from dtaidistance_spark.operators.rollup import (
-    gap_fill, rollup_cascade, rollup_points, series_arrays,
+    BUCKET_SPEC, dense_arrays, gap_fill, rollup_cascade, rollup_points,
+    series_arrays,
 )
 from dtaidistance_spark.sources.transcripts import synth_transcripts
 
@@ -185,6 +186,90 @@ class TestSeriesArrays:
         agg_one = agg.where(f"series_id = '{one['series_id']}'") \
             .orderBy("bucket_ts").toPandas()
         np.testing.assert_allclose(one["values"], agg_one["cnt"].astype(float))
+
+
+class TestDenseArrays:
+    """``dense_arrays`` against the chain it replaces,
+    ``series_arrays(gap_fill(policy="zero", align="global"))``."""
+
+    # bucket offsets per series: "a" has gaps and a null max, "b" spans
+    # the corpus end, "c" lies wholly before the last 10 buckets
+    OFFSETS = {"a": [0, 1, 5, 9], "b": [3, 40], "c": [0, 2]}
+
+    def _agg(self, spark, bucket):
+        import datetime as dt
+
+        step = BUCKET_SPEC[bucket][1]
+        t0 = dt.datetime(2024, 1, 1)
+        rows = []
+        for sid, offs in self.OFFSETS.items():
+            for k, off in enumerate(offs):
+                v = float(off) + 0.25
+                mx = None if (sid, k) == ("a", 2) else v + 1.0
+                rows.append((sid, t0 + dt.timedelta(seconds=off * step),
+                             k + 1, v, v, mx, v, v))
+        return spark.createDataFrame(
+            rows, "series_id string, bucket_ts timestamp, cnt long, "
+                  "sum double, min double, max double, first double, "
+                  "last double")
+
+    @pytest.mark.parametrize("bucket", ["1h", "1d"])
+    @pytest.mark.parametrize("span_cap", [None, 10, 1000])
+    def test_equals_gap_fill_chain(self, spark, bucket, span_cap):
+        agg = self._agg(spark, bucket)
+        for col in ("cnt", "sum", "max"):
+            want = series_arrays(
+                gap_fill(agg, bucket, policy="zero", align="global",
+                         span_cap=span_cap), bucket, value_col=col)
+            got = dense_arrays(agg, bucket, col, span_cap=span_cap)
+            assert got.schema == want.schema, col
+            assert (sorted(map(tuple, got.collect()))
+                    == sorted(map(tuple, want.collect()))), col
+
+    def test_series_before_window_keeps_zero_row(self, spark):
+        agg = self._agg(spark, "1h")
+        rows = {r["series_id"]: r for r in
+                dense_arrays(agg, "1h", "cnt", span_cap=10).collect()}
+        assert sorted(rows) == ["a", "b", "c"]
+        for r in rows.values():
+            assert r["n"] == 10 and len(r["values"]) == 10
+        assert rows["a"]["values"] == [0.0] * 10
+        assert rows["c"]["values"] == [0.0] * 10
+        # "b"'s bucket 40 is the last position; bucket 3 is cut
+        assert rows["b"]["values"] == [0.0] * 9 + [2.0]
+        assert dense_arrays(agg.where("false"), "1h", "cnt").count() == 0
+
+    def test_span_shorter_than_cap(self, spark):
+        agg = self._agg(spark, "1d")
+        rows = {r["series_id"]: r for r in
+                dense_arrays(agg, "1d", "max", span_cap=1000).collect()}
+        assert {r["n"] for r in rows.values()} == {41}
+        a = rows["a"]["values"]
+        # the null max at offset 5 reads as the fill, like a gap
+        assert (a[0], a[1], a[5], a[9]) == (1.25, 2.25, 0.0, 10.25)
+        assert sum(1 for x in a if x) == 3
+
+    def test_plan_one_aggregate_no_grid(self, spark):
+        df = dense_arrays(self._agg(spark, "1h"), "1h", "cnt")
+        df.collect()
+        qe = df._jdf.queryExecution()
+        logical = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        for plan in (logical, physical):
+            assert "Generate" not in plan
+            assert "HashJoin" not in plan and "SortMergeJoin" not in plan
+        assert all(line.strip().startswith("+- Join Cross")
+                   for line in logical.splitlines() if "Join" in line)
+        # the map is built once per series in the aggregate; the lambda
+        # only looks it up
+        built = [line for line in logical.splitlines()
+                 if "map_from_entries(collect_list" in line]
+        assert built and all("Aggregate [series_id" in line for line in built)
+        lam = [line for line in logical.splitlines() if "transform(" in line]
+        assert lam and not any("map_from_entries" in line
+                               or "collect_list" in line for line in lam)
+        # the bounds row reuses the per-series aggregate's exchange
+        assert "ReusedExchange" in physical
 
 
 class TestDistinctSketchRollup:
