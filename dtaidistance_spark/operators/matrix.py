@@ -49,6 +49,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..kernels.dtw import (DtwSettings, _batch_elems, dtw_distance_batch,
                            dtw_distance_batch_indexed, lb_keogh_batch)
@@ -280,7 +281,9 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     of ``order_col``, the index ``with_index(order_col=...)`` assigns.
     The broadcast strategy ranks on the driver after its one corpus
     collect, so no index pass runs; the shuffle strategy calls
-    :func:`with_index`.
+    :func:`with_index`.  ``order_col`` must be a string or integral
+    column: the driver's order of floating-point NaN differs from
+    Spark's.
 
     ``chunk_size`` applies to the chunk-pair shuffle strategy; ``None``
     sizes chunks so the pair space yields ≈8 groups per core — enough
@@ -289,6 +292,11 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     """
     s = settings if settings is not None else DtwSettings(**kwargs)
     blk, triu = _norm_block(block)
+    if order_col is not None and not isinstance(
+            series_df.schema[order_col].dataType, (T.StringType,
+                                                   T.IntegralType)):
+        raise TypeError(f"order_col {order_col!r} must be a string or "
+                        "integral column")
     key = (F.col(order_col) if order_col is not None
            else F.col(index_col).cast("long").alias("i"))
     src = series_df.select(key, F.col(values_col).alias("values"))
@@ -372,8 +380,10 @@ def _collect_corpus(src: DataFrame, data_cols: list,
 
     With ``order_col`` the id of a row is its 0-based rank in a stable
     Arrow sort of that column: Arrow compares strings by bytes, which is
-    Spark's string order, and nulls go first as in Spark's ascending
-    sort, so on distinct values the ids equal :func:`with_index`'s."""
+    Spark's string order, integers by value, and nulls go first as in
+    Spark's ascending sort, so on distinct string or integral values
+    the ids equal :func:`with_index`'s (floats are not: Arrow puts NaN
+    with the nulls, Spark above every number)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

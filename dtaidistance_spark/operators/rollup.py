@@ -260,8 +260,8 @@ def series_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
     )
 
 
-def dense_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
-                 span_cap: int | None = None, fill: float = 0.0) -> DataFrame:
+def dense_arrays(agg: DataFrame, bucket: str, value_col: str | list,
+                 span_cap: int | None = None) -> DataFrame:
     """Zero-fill, globally aligned dense arrays in ONE per-series
     aggregate: the rows of ``series_arrays(gap_fill(agg, bucket,
     policy="zero", align="global", span_cap=span_cap), bucket,
@@ -273,12 +273,11 @@ def dense_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
     its exchange (``ReusedExchange``) and the tier runs once;
     ``span_cap`` trims ``b0`` as in :func:`gap_fill`.  The row is
     broadcast back, and every array is ``n = (b1 - b0)/step + 1`` map
-    lookups at ``b0 + k·step``; a missing bucket reads ``fill``.  A
-    series with no bucket in ``[b0, b1]`` keeps an all-``fill`` row, as
-    the grid join does.  With ``fill=0.0`` the output equals the
-    chain's for every ``value_col`` (the chain zero-fills ``cnt`` and
-    ``sum`` gaps itself); another ``fill`` also lands in ``cnt``/``sum``
-    gaps here.
+    lookups at ``b0 + k·step``; a missing bucket reads 0.0.  A series
+    with no bucket in ``[b0, b1]`` keeps an all-zero row, as the grid
+    join does.  A list of value columns gives n-D elements ``[v1, v2,
+    ...]`` (the n-D DTW layout) from the same one aggregate, each column
+    zero-filled as the single-column form fills it.
 
     The map is built in the aggregate's result, once per series: a map
     built inside the ``transform`` lambda would be rebuilt for every
@@ -288,9 +287,14 @@ def dense_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
     """
     _, step = BUCKET_SPEC[bucket]
     secs = F.unix_seconds(F.col("bucket_ts"))
+    if isinstance(value_col, str):
+        val, zero = F.col(value_col).cast("double"), F.lit(0.0)
+    else:
+        val = F.array(*[F.coalesce(F.col(c).cast("double"), F.lit(0.0))
+                        for c in value_col])
+        zero = F.array(*[F.lit(0.0)] * len(value_col))
     per_series = agg.groupBy("series_id").agg(
-        F.map_from_entries(F.collect_list(F.struct(
-            secs, F.col(value_col).cast("double")))).alias("_m"))
+        F.map_from_entries(F.collect_list(F.struct(secs, val))).alias("_m"))
     b0, b1 = F.col("b0"), F.col("b1")
     keys = F.map_keys("_m")
     bounds = per_series.agg(F.min(F.array_min(keys)).alias("b0"),
@@ -305,7 +309,7 @@ def dense_arrays(agg: DataFrame, bucket: str, value_col: str = "sum",
     lookup = F.transform(
         F.sequence(F.lit(0), F.col("n") - 1),
         lambda k: F.coalesce(F.element_at(F.col("_m"), b0 + k * step),
-                             F.lit(float(fill))))
+                             zero))
     return per_series.crossJoin(F.broadcast(bounds)).select(
         "series_id", F.timestamp_seconds(b0).alias("t0"),
         F.lit(step).alias("step_s"), "n", lookup.alias("values"))

@@ -102,34 +102,30 @@ def event_points_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pass over the raw events instead of two.  Queries that emit
     ``seq`` itself (latency, sessionize) keep the windowed variant.
 
-    r6: the surrogate is a DECIMAL(38,0) — zero-padded decimal digits
-    of unix_micros(ts) (20) ++ event_id (18), built by string concat so
-    no decimal arithmetic can lose precision.  The r5 ``struct(ts,
-    event_id)`` key ordered identically but a struct-typed min_by/max_by
-    buffer is not UnsafeRow-mutable, which silently demoted every tier
-    aggregation to SortAggregate (full sort of the raw scan per tier —
-    the dominant rollup cost at sf1.0); a decimal buffer is fixed-width
-    mutable, so the same plan runs as a map-side-partial HashAggregate.
-    Exact for ts >= epoch and 0 <= event_id < 10^18 (the testdata
-    generator contract, TESTDATA.md: 2024+ timestamps, dense int64 event
-    ids).  A row outside that domain fails the query through
-    ``raise_error``: ``lpad`` would cut a 19-digit id and a negative
-    number would break the digit order, so the key would silently
-    misorder first/last."""
+    r6: the surrogate is a DECIMAL(38,0), ``unix_micros(ts) * 10^18 +
+    event_id``.  The r5 ``struct(ts, event_id)`` key ordered
+    identically but a struct-typed min_by/max_by buffer is not
+    UnsafeRow-mutable, which silently demoted every tier aggregation to
+    SortAggregate (full sort of the raw scan per tier — the dominant
+    rollup cost at sf1.0); a decimal buffer is fixed-width mutable, so
+    the same plan runs as a map-side-partial HashAggregate.  The decimal
+    arithmetic is exact: any int64 micros times 10^18 stays under 38
+    digits, so every timestamp, pre-epoch ones included, orders right,
+    and no per-row string is formatted or parsed.  The key needs
+    0 <= event_id < 10^18 (the testdata generator contract, TESTDATA.md:
+    dense int64 event ids); a row outside it fails the query through
+    ``raise_error``, since its id would spill into the micros digits
+    and silently misorder first/last."""
     ev = _events(spark, sf_dir)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp")).cast("decimal(20,0)")
     eid = F.col("event_id")
     seq = F.when(
-        (us < 0) | (eid < 0) | (eid >= 10 ** 18),
+        (eid < 0) | (eid >= 10 ** 18),
         F.raise_error(F.concat(
             F.lit("event_points_rollup: the decimal(38,0) ordering key "
-                  "needs ts >= 1970-01-01 and 0 <= event_id < 10^18; got "
-                  "event_id="), eid.cast("string"),
-            F.lit(" ts="), F.col("ts").cast("string"))),
-    ).otherwise(F.concat(
-        F.lpad(us.cast("string"), 20, "0"),
-        F.lpad(eid.cast("string"), 18, "0"),
-    ).cast("decimal(38,0)"))
+                  "needs 0 <= event_id < 10^18; got event_id="),
+            eid.cast("string"))),
+    ).otherwise((us * 10 ** 18 + eid).cast("decimal(38,0)"))
     return ev.select(
         F.concat(F.lit("user"), F.col("user_id").cast("string")).alias("series_id"),
         seq.alias("seq"),
@@ -1472,13 +1468,7 @@ def q_dtw_ndim_daily_pairs(spark, sf_dir):
     Spark and the DuckDB CTE replay see bit-identical inputs (a daily
     *sum* would depend on float summation order)."""
     agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
-    cnt_arr = R.dense_arrays(agg1d, "1d", "cnt")
-    max_arr = R.dense_arrays(agg1d, "1d", "max") \
-        .select("series_id", F.col("values").alias("values2"))
-    nd = (cnt_arr.join(max_arr, "series_id")
-          .select("series_id",
-                  F.zip_with("values", "values2",
-                             lambda a, b: F.array(a, b)).alias("values")))
+    nd = R.dense_arrays(agg1d, "1d", ["cnt", "max"])
     series = with_index(nd, order_col="series_id").where(F.col("i") < 24)
     dist = distance_matrix(series, settings=DtwSettings(), chunk_size=128)
     return dist.select("i", "j", F.round("d", 6).alias("d"))
@@ -2170,14 +2160,7 @@ def q_dtw_ndim_matrix(spark, sf_dir):
     value sum) per user — reference dtw_ndim.py:43-94 semantics (summed
     per-dim squared differences inside one DP)."""
     agg1h = R.rollup_points(event_points_rollup(spark, sf_dir), "1h")
-    cnt_arr = R.dense_arrays(agg1h, "1h", "cnt")
-    sum_arr = R.dense_arrays(agg1h, "1h", "sum") \
-        .select("series_id", F.col("values").alias("values2"))
-    nd = (cnt_arr.join(sum_arr, "series_id")
-          .where(F.col("n") >= 24)
-          .select("series_id",
-                  F.zip_with("values", "values2",
-                             lambda a, b: F.array(a, b)).alias("values")))
+    nd = R.dense_arrays(agg1h, "1h", ["cnt", "sum"]).where(F.col("n") >= 24)
     series = with_index(nd, order_col="series_id")
     dist = distance_matrix(series.where(F.col("i") < 64),
                            settings=DtwSettings(window=24))

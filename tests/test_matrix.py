@@ -364,6 +364,24 @@ class TestOrderCol:
         for row in pdf.head(40).itertuples():
             assert row.d == dtw_distance(vals[ids[row.i]], vals[ids[row.j]])
 
+    def test_integral_key_equals_with_index(self, spark, keyed):
+        # distinct negative and multi-digit keys: numeric order, not
+        # digit order
+        rows = keyed.collect()
+        keys = np.random.default_rng(3).permutation(
+            np.arange(-12, len(rows) - 12)) * 11
+        ints = spark.createDataFrame(
+            [(int(k), r["values"]) for k, r in zip(keys, rows)],
+            "series_id long, values array<double>").repartition(5)
+        got, want = self._both(ints, window=4)
+        assert len(got) > 0
+        assert got.equals(want)
+
+    def test_float_key_rejected(self, spark, keyed):
+        floats = keyed.selectExpr("double('NaN') AS series_id", "values")
+        with pytest.raises(TypeError, match="string or integral"):
+            distance_matrix(floats, order_col="series_id")
+
 
 class TestTriuUnrank:
     def test_inverse_of_condensed(self):

@@ -226,6 +226,22 @@ class TestDenseArrays:
             assert (sorted(map(tuple, got.collect()))
                     == sorted(map(tuple, want.collect()))), col
 
+    @pytest.mark.parametrize("span_cap", [None, 10])
+    def test_nd_equals_zipped_columns(self, spark, span_cap):
+        agg = self._agg(spark, "1h")
+        one = {c: {r["series_id"]: r for r in
+                   dense_arrays(agg, "1h", c, span_cap=span_cap).collect()}
+               for c in ("cnt", "max")}
+        got = {r["series_id"]: r for r in
+               dense_arrays(agg, "1h", ["cnt", "max"],
+                            span_cap=span_cap).collect()}
+        assert sorted(got) == ["a", "b", "c"]
+        for sid, r in got.items():
+            cnt, mx = one["cnt"][sid], one["max"][sid]
+            assert (r["t0"], r["n"]) == (cnt["t0"], cnt["n"])
+            assert r["values"] == [[a, b] for a, b in
+                                   zip(cnt["values"], mx["values"])]
+
     def test_series_before_window_keeps_zero_row(self, spark):
         agg = self._agg(spark, "1h")
         rows = {r["series_id"]: r for r in
