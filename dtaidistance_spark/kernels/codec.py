@@ -3,30 +3,30 @@ timestamps (Pelkonen et al., "Gorilla: A Fast, Scalable, In-Memory Time
 Series Database", VLDB 2015 — public paper; this is an independent
 implementation).
 
-Pure numpy, no Spark imports: the engine invokes ``encode_chunk`` /
-``decode_chunk`` inside ``mapInPandas`` with one chunk per series slice.
-Round-trips are exact to the float64 bit pattern (tested), which is what
-the north rule's bit-for-bit tier parity needs.
+Pure numpy + Python ints, no Spark imports: the engine invokes
+``encode_chunk`` / ``decode_chunk`` inside ``applyInPandas`` /
+``mapInPandas`` with one chunk per series slice.  Round-trips are exact
+to the float64 bit pattern (tested), which is what the north rule's
+bit-for-bit tier parity needs.
 
-Format (version 2, "columnar Gorilla"): unlike the classic bit-serial
-layout, control codes, window headers, and payload bits live in separate
-byte-aligned sections so BOTH encode and decode are fully vectorized
-numpy (bit-plane passes over the token array + ``bitwise_xor.accumulate``
-for the XOR chain) — no per-value Python loop.  The value stream uses a
-per-block (64 tokens) leading/length window instead of Gorilla's
-sequentially-adaptive one; semantics (XOR with previous, zeros cost one
-bit, delta-of-delta timestamp buckets 7/9/12/64) are unchanged.
+One format, Gorilla's classic bit-serial layout.  The engine's chunks
+are one series × UTC day of the 1h tier, so at most 24 points; at that
+size a per-value loop costs less than any vectorized pass (24 points:
+~0.1 ms to encode, where a numpy bit-plane codec paid ~1.7 ms of fixed
+per-call cost).  Layout, one MSB-first bit stream, zero-padded to a
+whole byte at the end:
 
-Layout (all sections byte-aligned, big-bit-endian within a section):
-
+  u8  version (= 1; any other byte is rejected on decode)
   u32 n
-  ts:  i64 ts[0]; n>1: u64 zigzag(delta0);
-       n>2: zero-plane (1 bit per dod: 0 = dod==0), bucket-plane (2 bits
-       per NONZERO dod: 0→7, 1→9, 2→12, 3→64 bits), payload (zigzag dods)
-  val: u64 bits[0];
-       n>1: per-block 11-bit window headers (5b lead + 6b len, len 64→0),
-       zero-plane (1 bit per xor token), payload (window-length bits per
-       nonzero token, pre-shifted by the block's trailing-zero count)
+  ts:  i64 ts[0]; n>1: u64 zigzag(ts[1] - ts[0]);
+       then per dod (n-2 of them): '0' for dod == 0, else a bucket code
+       and the zigzag dod in that many bits: '10' 7, '110' 9, '1110' 12,
+       '1111' 64
+  val: u64 bits[0]; then per XOR with the previous value: '0' for an
+       unchanged value, '10' + the meaningful bits inside the previous
+       window when they fit it, else '11' + 5-bit leading-zero count
+       (capped at 31) + 6-bit length (64 stored as 0) + the meaningful
+       bits, which opens a new window
 """
 
 from __future__ import annotations
@@ -35,210 +35,10 @@ import numpy as np
 
 __all__ = ["encode_chunk", "decode_chunk"]
 
-_BLOCK = 64               # value-window block size (tokens)
-_TS_BUCKETS = (7, 9, 12, 64)
+_VERSION = 1
+# (payload width, code, code length) per nonzero delta-of-delta bucket
+_DOD_BUCKETS = ((7, 0b10, 2), (9, 0b110, 3), (12, 0b1110, 4), (64, 0b1111, 4))
 
-
-# --- vectorized bit-plane helpers -----------------------------------------
-
-
-def _pack_bits(vals: np.ndarray, widths: np.ndarray) -> bytes:
-    """Pack ``vals[k]``'s low ``widths[k]`` bits MSB-first into bytes."""
-    vals = vals.astype(np.uint64, copy=False)
-    widths = widths.astype(np.int64, copy=False)
-    total = int(widths.sum())
-    if total == 0:
-        return b""
-    offs = np.cumsum(widths) - widths
-    bits = np.zeros(total, dtype=np.uint8)
-    for b in range(int(widths.max())):
-        sel = widths > b
-        exp = (widths[sel] - 1 - b).astype(np.uint64)
-        bits[offs[sel] + b] = ((vals[sel] >> exp) & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
-
-
-def _unpack_bits(bits: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`_pack_bits`; ``bits`` is the 0/1 uint8 array."""
-    widths = widths.astype(np.int64, copy=False)
-    out = np.zeros(len(widths), dtype=np.uint64)
-    if len(widths) == 0 or widths.max() == 0:
-        return out
-    offs = np.cumsum(widths) - widths
-    for b in range(int(widths.max())):
-        sel = widths > b
-        out[sel] = (out[sel] << np.uint64(1)) | bits[offs[sel] + b]
-    return out
-
-
-def _bitlen64(x: np.ndarray) -> np.ndarray:
-    """Per-element bit length of uint64 (0 for 0) — binary-reduction."""
-    x = x.astype(np.uint64, copy=True)
-    bl = np.zeros(x.shape, dtype=np.int64)
-    for sh in (32, 16, 8, 4, 2, 1):
-        m = x >= (np.uint64(1) << np.uint64(sh))
-        bl += np.where(m, sh, 0)
-        x = np.where(m, x >> np.uint64(sh), x)
-    return bl + (x > 0)
-
-
-def _zigzag64(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.int64, copy=False)
-    return ((v << 1) ^ (v >> 63)).astype(np.uint64)
-
-
-def _unzigzag64(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64, copy=False)
-    return ((u >> np.uint64(1)) ^ (np.uint64(0) - (u & np.uint64(1)))) \
-        .astype(np.int64)
-
-
-def _be_u64(x: int) -> bytes:
-    return int(x).to_bytes(8, "big")
-
-
-# --- encode ----------------------------------------------------------------
-
-
-def _encode_v2(ts_s: np.ndarray, values: np.ndarray) -> bytes:
-    """v2 vectorized bit-plane encoder — amortizes ~O(max_width) numpy
-    passes over the whole chunk; preferred for large chunks."""
-    ts_s = np.asarray(ts_s, dtype=np.int64)
-    values = np.asarray(values, dtype=np.float64)
-    n = len(ts_s)
-    assert len(values) == n
-    out = [int(n).to_bytes(4, "big")]
-    if n == 0:
-        return b"".join(out)
-
-    # --- timestamps ---
-    out.append(_be_u64(np.uint64(ts_s[0])))
-    if n > 1:
-        out.append(_be_u64(_zigzag64(np.array([ts_s[1] - ts_s[0]]))[0]))
-    if n > 2:
-        dods = np.diff(np.diff(ts_s))
-        z = _zigzag64(dods)
-        nz = z != 0
-        out.append(np.packbits(nz.astype(np.uint8)).tobytes())
-        znz = z[nz]
-        bl = _bitlen64(znz)
-        bucket = np.searchsorted(np.array(_TS_BUCKETS), bl)  # 0..3
-        out.append(_pack_bits(bucket.astype(np.uint64),
-                              np.full(len(bucket), 2, np.int64)))
-        widths = np.array(_TS_BUCKETS, np.int64)[bucket]
-        out.append(_pack_bits(znz, widths))
-
-    # --- values ---
-    bits = values.view(np.uint64)
-    out.append(_be_u64(bits[0]))
-    if n > 1:
-        x = bits[1:] ^ bits[:-1]
-        m = len(x)
-        nblocks = -(-m // _BLOCK)
-        blk = np.arange(m) // _BLOCK
-        nzv = x != np.uint64(0)
-        # per-block window over nonzero tokens: lead = min leading zeros,
-        # trail = min trailing zeros (all-zero block → lead 0 / len 0)
-        bl_hi = _bitlen64(x)
-        lowbit = _bitlen64(x & (np.uint64(0) - x))  # ctz+1, 0 for x==0
-        lead_tok = np.where(nzv, 64 - bl_hi, 64)
-        trail_tok = np.where(nzv, lowbit - 1, 64)
-        lead_blk = np.full(nblocks, 64, np.int64)
-        trail_blk = np.full(nblocks, 64, np.int64)
-        np.minimum.at(lead_blk, blk, lead_tok)
-        np.minimum.at(trail_blk, blk, trail_tok)
-        lead_blk = np.minimum(lead_blk, 31)
-        empty = lead_blk + trail_blk >= 64
-        lead_blk[empty] = 0
-        len_blk = np.where(empty, 0, 64 - lead_blk - trail_blk)
-        # headers: 5b lead + 6b len (len 64 stored as 0)
-        hdr = (lead_blk.astype(np.uint64) << np.uint64(6)) | \
-              np.uint64(0x3F) & (len_blk % 64).astype(np.uint64)
-        out.append(_pack_bits(hdr, np.full(nblocks, 11, np.int64)))
-        out.append(np.packbits(nzv.astype(np.uint8)).tobytes())
-        shift = (64 - lead_blk - len_blk)[blk].astype(np.uint64)
-        widths_v = np.where(nzv, len_blk[blk], 0)
-        out.append(_pack_bits(x >> shift, widths_v))
-    return b"".join(out)
-
-
-# --- decode ----------------------------------------------------------------
-
-
-def _decode_v2(payload: bytes):
-    """Inverse of :func:`_encode_v2` — vectorized bit-plane extraction +
-    ``bitwise_xor.accumulate``."""
-    buf = memoryview(payload)
-    n = int.from_bytes(buf[:4], "big")
-    pos = 4
-    ts = np.empty(n, dtype=np.int64)
-    vals = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return ts, vals
-
-    def take(nbytes: int) -> bytes:
-        nonlocal pos
-        b = bytes(buf[pos:pos + nbytes])
-        pos += nbytes
-        return b
-
-    ts[0] = np.uint64(int.from_bytes(take(8), "big")).astype(np.int64)
-    if n > 1:
-        d0 = _unzigzag64(np.array([int.from_bytes(take(8), "big")],
-                                  dtype=np.uint64))[0]
-    if n > 2:
-        nz = np.unpackbits(np.frombuffer(take(-(-(n - 2) // 8)), np.uint8),
-                           count=n - 2).astype(bool)
-        k = int(nz.sum())
-        bucket_bits = np.unpackbits(np.frombuffer(take(-(-(2 * k) // 8)),
-                                                  np.uint8), count=2 * k)
-        bucket = _unpack_bits(bucket_bits, np.full(k, 2, np.int64))
-        widths = np.array(_TS_BUCKETS, np.int64)[bucket.astype(np.int64)]
-        total = int(widths.sum())
-        pl = np.unpackbits(np.frombuffer(take(-(-total // 8)), np.uint8),
-                           count=total)
-        znz = _unpack_bits(pl, widths)
-        dods = np.zeros(n - 2, dtype=np.int64)
-        dods[nz] = _unzigzag64(znz)
-        deltas = d0 + np.concatenate([[0], np.cumsum(dods)])
-        ts[1:] = ts[0] + np.cumsum(deltas)
-    elif n == 2:
-        ts[1] = ts[0] + d0
-
-    v0 = np.uint64(int.from_bytes(take(8), "big"))
-    if n == 1:
-        vals[0] = np.array([v0], np.uint64).view(np.float64)[0]
-        return ts, vals
-    m = n - 1
-    nblocks = -(-m // _BLOCK)
-    hdr_bits = np.unpackbits(np.frombuffer(take(-(-(11 * nblocks) // 8)),
-                                           np.uint8), count=11 * nblocks)
-    hdr = _unpack_bits(hdr_bits, np.full(nblocks, 11, np.int64))
-    lead_blk = (hdr >> np.uint64(6)).astype(np.int64)
-    len_blk = (hdr & np.uint64(0x3F)).astype(np.int64)
-    # len==0 in header means either an all-zero block (no payload bits) or
-    # a true 64-bit window (only possible with lead 0 and a nonzero token);
-    # disambiguate after reading the zero-plane
-    nzv = np.unpackbits(np.frombuffer(take(-(-m // 8)), np.uint8),
-                        count=m).astype(bool)
-    blk = np.arange(m) // _BLOCK
-    has_nz = np.zeros(nblocks, dtype=bool)
-    np.logical_or.at(has_nz, blk, nzv)
-    len_blk = np.where((len_blk == 0) & has_nz, 64, len_blk)
-    widths_v = np.where(nzv, len_blk[blk], 0)
-    total_v = int(widths_v.sum())
-    pl_v = np.unpackbits(np.frombuffer(take(-(-total_v // 8)), np.uint8),
-                         count=total_v)
-    mant = _unpack_bits(pl_v, widths_v)
-    shift = (64 - lead_blk - len_blk)[blk]
-    shift = np.where(shift < 0, 0, shift).astype(np.uint64)
-    x = np.where(nzv, mant << shift, np.uint64(0))
-    stream = np.concatenate([[v0], x]).astype(np.uint64)
-    vals[:] = np.bitwise_xor.accumulate(stream).view(np.float64)
-    return ts, vals
-
-
-# --- v1 scalar bit-stream implementation (round 1) ---
 
 class _BitWriter:
     """MSB-first bit appender; flushes whole bytes incrementally so a
@@ -266,11 +66,12 @@ class _BitWriter:
 
 
 class _BitReader:
-    """MSB-first bit cursor over bytes; O(n) total like the writer."""
+    """MSB-first bit cursor over bytes; O(n) total like the writer.  The
+    trailing zero padding is never read: every count is explicit."""
 
     __slots__ = ("data", "idx", "acc", "nacc")
 
-    def __init__(self, data: bytes, nbits: int = 0):
+    def __init__(self, data: bytes):
         self.data = data
         self.idx = 0
         self.acc = 0
@@ -295,17 +96,14 @@ def _unzigzag(u: int) -> int:
     return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
 
 
-_DOD_BUCKETS = ((7, 0b10, 2), (9, 0b110, 3), (12, 0b1110, 4), (32, 0b1111, 4))
-
-
-def _encode_v1(ts_s: np.ndarray, values: np.ndarray) -> bytes:
-    """v1 scalar bit-stream encoder (round-1 implementation) — low fixed
-    cost per chunk; preferred for small chunks."""
+def encode_chunk(ts_s: np.ndarray, values: np.ndarray) -> bytes:
+    """Encode int64 second-timestamps + float64 values into one payload."""
     ts_s = np.asarray(ts_s, dtype=np.int64)
     values = np.asarray(values, dtype=np.float64)
     n = len(ts_s)
     assert len(values) == n
     w = _BitWriter()
+    w.write(_VERSION, 8)
     w.write(n, 32)
     if n == 0:
         return w.to_bytes()
@@ -313,18 +111,16 @@ def _encode_v1(ts_s: np.ndarray, values: np.ndarray) -> bytes:
     w.write(int(ts_s[0]) & ((1 << 64) - 1), 64)
     if n > 1:
         w.write(_zigzag(int(ts_s[1]) - int(ts_s[0])), 64)
-    deltas = np.diff(ts_s)
-    dods = np.diff(deltas)
-    for dod in dods:
+    for dod in np.diff(ts_s, 2):
         dod = int(dod)
         if dod == 0:
             w.write(0, 1)
             continue
         z = _zigzag(dod)
         for width, code, codelen in _DOD_BUCKETS:
-            if z < (1 << width) or width == 32:
+            if z < (1 << width):
                 w.write(code, codelen)
-                w.write(z, width if width != 32 else 64)
+                w.write(z, width)
                 break
     # --- values ---
     bits = values.view(np.uint64)
@@ -355,13 +151,15 @@ def _encode_v1(ts_s: np.ndarray, values: np.ndarray) -> bytes:
     return w.to_bytes()
 
 
-def _decode_v1(payload: bytes):
-    """Inverse of :func:`encode_chunk` → (ts_s int64 array, values array)."""
-    # bit count: we stored to_bytes with MSB-first writer and LSB padding,
-    # so the reader must know the true bit length — recover by re-reading
-    # greedily; instead we rely on the writer's zero padding being ignored
-    # because counts are explicit.
-    r = _BitReader(payload, len(payload) * 8)
+def decode_chunk(payload: bytes):
+    """Inverse of :func:`encode_chunk` → (ts_s int64, values float64).
+
+    Payloads come from storage, so a leading byte other than the one
+    format version is refused rather than misread."""
+    r = _BitReader(payload)
+    ver = r.read(8)
+    if ver != _VERSION:
+        raise ValueError(f"unknown chunk format version {ver}")
     n = r.read(32)
     ts = np.empty(n, dtype=np.int64)
     vals = np.empty(n, dtype=np.float64)
@@ -398,47 +196,11 @@ def _decode_v1(payload: bytes):
         if r.read(1) == 0:
             bits[i] = prev
             continue
-        if r.read(1) == 0:  # '10' reuse window
-            mean = r.read(length)
-            x = mean << (64 - lead - length)
-        else:  # '11' new window
+        if r.read(1) == 1:  # '11' new window
             lead = r.read(5)
-            length = r.read(6)
-            if length == 0:
-                length = 64
-            mean = r.read(length)
-            x = mean << (64 - lead - length)
-        prev = prev ^ x
+            length = r.read(6) or 64
+        # '10' reuses the current window
+        prev ^= r.read(length) << (64 - lead - length)
         bits[i] = prev
     vals[:] = bits.view(np.float64)
     return ts, vals
-
-
-# --- public API: size-dispatched format (leading version byte) -------------
-
-_V2_MIN_N = 256
-
-
-def encode_chunk(ts_s: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode int64 second-timestamps + float64 values into one payload.
-
-    Two wire formats behind one version byte: the scalar bit-stream (v1)
-    wins below ~256 points (the vectorized path pays ~max_bit_width numpy
-    passes of fixed cost), the columnar bit-plane format (v2) wins above
-    (measured 3-5× on 100k+ chunks).  Retention-tier chunks are often
-    small (one series-day of a 1h tier = 24 points), so the dispatch
-    matters in practice."""
-    n = len(ts_s)
-    if n < _V2_MIN_N:
-        return b"\x01" + _encode_v1(ts_s, values)
-    return b"\x02" + _encode_v2(ts_s, values)
-
-
-def decode_chunk(payload: bytes):
-    """Inverse of :func:`encode_chunk` → (ts_s int64, values float64)."""
-    ver = payload[0]
-    if ver == 1:
-        return _decode_v1(payload[1:])
-    if ver == 2:
-        return _decode_v2(payload[1:])
-    raise ValueError(f"unknown chunk format version {ver}")

@@ -1,16 +1,16 @@
 """Chunk compression operator: tier rows → Gorilla-encoded binary chunks.
 
-``compress_tier`` groups a (gap-filled) aggregate tier into fixed-span
-chunks per series and encodes each with the Gorilla codec inside
-``applyInPandas`` (one Arrow batch = many chunks, no per-row Python).
-``decompress_chunks`` is the exact inverse; round-trip equality is the
-acceptance test.
+``compress_tier`` groups a (gap-filled) aggregate tier into one chunk per
+series × UTC day and encodes each with the Gorilla codec
+(``kernels/codec.py``) inside ``applyInPandas`` (one Arrow batch = many
+chunks, no per-row Python).  ``decompress_chunks`` is the exact inverse;
+round-trip equality is the acceptance test.
 
-Chunk span is one UTC day by default: at 1m resolution that is ≤1440
-points per chunk — small enough to decode in one task, large enough to
-amortize the header.  The chunk table is the engine's cold-storage format
-(binary payload column + typed metadata), partitionable by chunk_start
-date for retention-by-partition-drop.
+A day of the 1h tier is at most 24 points (1,440 at 1m), small enough
+for the codec's bit-serial loop and to decode in one task.  The chunk
+table is the engine's cold-storage format (binary payload column + typed
+metadata), partitionable by chunk_start date for
+retention-by-partition-drop.
 """
 
 from __future__ import annotations
@@ -28,27 +28,27 @@ from ..kernels.codec import decode_chunk, encode_chunk
 CHUNK_SCHEMA = ("series_id string, chunk_start timestamp, codec string, "
                 "n int, first_val double, checksum long, payload binary")
 
+_CHUNK_SPAN = "day"
+# Encoder groups are series-hash buckets, not series: one Arrow group
+# then carries ~n_series/_NUM_BUCKETS series and the encoder splits
+# chunks with numpy inside, so the per-group Python/Arrow overhead is
+# amortized over thousands of chunks (a per-series groupBy costs one
+# exchange per series — measured 6 s of pure group overhead at 1,500
+# 64-point series).  The count bounds the group size: at any scale a
+# bucket holds ~|tier| / 128 rows (128 ≈ 2-4 groups per core on
+# local[32]).
+_NUM_BUCKETS = 128
 
-def compress_tier(agg: DataFrame, value_col: str = "sum",
-                  chunk_span: str = "day",
-                  num_buckets: int = 128) -> DataFrame:
-    """Encode one tier into chunks: (series_id, chunk_start) → payload.
 
-    Groups by a *hash bucket* of series rather than per series: one
-    Arrow group then carries ~n_series/num_buckets series and the
-    encoder splits chunks with numpy inside, so the per-group
-    Python/Arrow overhead is amortized over thousands of chunks (a
-    per-series groupBy costs one exchange per series — measured 6 s of
-    pure group overhead at 1,500 64-point series on this box).
-    ``num_buckets`` bounds the group size: at any scale a bucket holds
-    ~|tier| / num_buckets rows, so size it to keep buckets within
-    executor memory (default 128 ≈ 2-4 groups per core on local[32])."""
+def compress_tier(agg: DataFrame, value_col: str = "sum") -> DataFrame:
+    """Encode one tier into chunks: (series_id, chunk_start) → payload,
+    one chunk per series and UTC day."""
     src = agg.select(
         "series_id",
-        F.date_trunc(chunk_span, F.col("bucket_ts")).alias("chunk_start"),
+        F.date_trunc(_CHUNK_SPAN, F.col("bucket_ts")).alias("chunk_start"),
         F.col("bucket_ts").cast("long").alias("ts_s"),
         F.coalesce(F.col(value_col).cast("double"), F.lit(float("nan"))).alias("v"),
-        F.pmod(F.xxhash64("series_id"), F.lit(num_buckets)).alias("__bkt"),
+        F.pmod(F.xxhash64("series_id"), F.lit(_NUM_BUCKETS)).alias("__bkt"),
     )
 
     def encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels.dtw import (DtwSettings, _batch_elems, dtw_distance_batch,
+from ..kernels.dtw import (DtwSettings, _BATCH_ELEMS, dtw_distance_batch,
                            dtw_distance_batch_indexed, lb_keogh_batch)
 from ..kernels.extras import weighted_warping_paths
 from ..resources import track_broadcast, track_persist
@@ -83,10 +83,9 @@ def _series_np(v) -> Optional[np.ndarray]:
     return a.astype(np.float64, copy=False)
 
 
-def with_index(series_df: DataFrame, order_col: str = "series_id",
-               index_col: str = "i", num_partitions: Optional[int] = None,
-               persist: bool = True) -> DataFrame:
-    """Assign dense 0-based indices by ``order_col`` ordering — two-pass
+def with_index(series_df: DataFrame,
+               order_col: str = "series_id") -> DataFrame:
+    """Assign a dense 0-based index ``i`` by ``order_col`` ordering — two-pass
     per-partition offset scheme, no single-partition exchange.
 
     Pass 1: range-repartition by ``order_col`` (globally ordered partition
@@ -96,9 +95,7 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
     parallel; the only driver data is one count per partition, where a
     global ``row_number()`` would serialize the corpus through one task.
     """
-    spark = series_df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = series_df.sparkSession.sparkContext.defaultParallelism
     # Persist the INPUT before the range exchange: repartitionByRange
     # runs a sampling pass that otherwise re-executes the entire
     # upstream plan once just to pick boundaries, and the exchange
@@ -106,14 +103,12 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
     # 15k-series corpus whose upstream is the full rollup -> gap-fill
     # -> arrays pipeline).  Both passes now read the cache;
     # release_all() frees it with every other handle.
-    if persist:
-        series_df = track_persist(series_df.persist())
+    series_df = track_persist(series_df.persist())
     part = (series_df
             .repartitionByRange(num_partitions, F.col(order_col))
             .sortWithinPartitions(order_col)
             .withColumn("__pid", F.spark_partition_id()))
-    if persist:
-        part = track_persist(part.persist())
+    part = track_persist(part.persist())
     counts = {r["__pid"]: r["cnt"] for r in
               part.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
     offsets = {}
@@ -121,11 +116,11 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    out_schema = part.drop("__pid").schema.add(index_col, "long")
+    out_schema = part.drop("__pid").schema.add("i", "long")
     in_names = [f.name for f in part.schema.fields]
     pid_pos = in_names.index("__pid")
     keep_pos = [k for k, name in enumerate(in_names) if name != "__pid"]
-    out_names = [in_names[k] for k in keep_pos] + [index_col]
+    out_names = [in_names[k] for k in keep_pos] + ["i"]
 
     def assign(batches):
         # mapInArrow, not mapInPandas: the job only appends a counter
@@ -231,7 +226,7 @@ def _compute_pairs(left: np.ndarray, right_idx: np.ndarray,
     for (l1, l2), pairs in byshape.items():
         pairs = np.asarray(pairs, dtype=np.int64)
         # each np.stack copy stays a few MB (reused heap), never tens
-        bmax = max(64, _batch_elems() // (l1 + l2 + 1))
+        bmax = max(64, _BATCH_ELEMS // (l1 + l2 + 1))
         for s in range(0, len(pairs), bmax):
             chunk = pairs[s:s + bmax]
             X1 = np.stack([values_by_idx[i] for i in chunk[:, 0]])

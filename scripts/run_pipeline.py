@@ -5,7 +5,7 @@
         [--convs 10000]  # or omit --input to synthesize deterministically
 
 Runs the full resumable pipeline: transcripts → points → 1m/1h/1d tiers →
-gap-fill → Gorilla chunks → dense arrays → banded blocked DTW matrix,
+Gorilla chunks → zero-filled dense arrays → banded blocked DTW matrix,
 with every stage checkpointed (parquet + manifest) so a rerun resumes
 from the last completed stage (operators/checkpoint.py).  Emits a JSON
 metrics line at the end.
@@ -56,11 +56,11 @@ def main():
     from dtaidistance_spark.operators.checkpoint import read_manifest, run_stage
     from dtaidistance_spark.operators.compress import compress_tier
     from dtaidistance_spark.operators.ingest import transcript_points
-    from dtaidistance_spark.operators.matrix import distance_matrix, with_index
+    from dtaidistance_spark.operators.matrix import distance_matrix
     from dtaidistance_spark.sources.transcripts import synth_transcripts
 
     wd = args.workdir
-    fp = f"v1-convs{args.convs}-w{args.window}"
+    fp = f"v2-convs{args.convs}-w{args.window}"
     t0 = time.time()
 
     if args.input:
@@ -93,16 +93,15 @@ def main():
         tr_agg = agg1h.where(F.col("series_id").endswith(":turn_rate"))
         sids = (tr_agg.select("series_id").distinct()
                 .orderBy("series_id").limit(args.series_limit))
-        filled = R.gap_fill(tr_agg.join(F.broadcast(sids), "series_id"),
-                            "1h", policy="zero", align="global")
-        return with_index(R.series_arrays(filled, "1h", value_col="cnt"),
-                          order_col="series_id")
+        return R.dense_arrays(tr_agg.join(F.broadcast(sids), "series_id"),
+                              "1h", "cnt")
 
     series = run_stage(spark, "series_1h", build_series, wd, fingerprint=fp)
     dist = run_stage(
         spark, "dtw_matrix",
         lambda: distance_matrix(series,
-                                settings=DtwSettings(window=args.window)),
+                                settings=DtwSettings(window=args.window),
+                                order_col="series_id"),
         wd, fingerprint=fp)
 
     metrics = {

@@ -2,6 +2,8 @@
 (FIXTURES.md §8: decode(encode(values)) must equal values to the float64
 bit pattern)."""
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -69,3 +71,61 @@ def test_gapfilled_rollup_series():
     vals = np.where(rng.random(n) < 0.3, 0.0, rng.poisson(5, n).astype(float))
     payload = _roundtrip(ts, vals)
     assert len(payload) < n * 8
+
+
+@pytest.mark.parametrize("first_byte", [0x02, 0x00, 0xFF])
+def test_unknown_version_byte_rejected(first_byte):
+    # 0x02 was the columnar format's version byte; payloads come from
+    # storage, so any byte but the one known version must fail loudly
+    payload = bytearray(encode_chunk(np.arange(4, dtype=np.int64),
+                                     np.arange(4, dtype=np.float64)))
+    assert payload[0] == 0x01
+    payload[0] = first_byte
+    with pytest.raises(ValueError, match="unknown chunk format version"):
+        decode_chunk(bytes(payload))
+
+
+_SPECIALS = np.array([np.nan, np.inf, -np.inf, -0.0])
+
+
+def _golden_chunks():
+    """Seeded 1h-tier day chunks (1-24 points at whole hours, with
+    NaN/±inf/-0.0 mixed in) and 255-point chunks of irregular seconds."""
+    rng = np.random.default_rng(20240101)
+    day = 1704067200
+    for n in range(1, 25):
+        for _ in range(3):
+            hours = np.sort(rng.choice(24, size=n, replace=False))
+            ts = day + 3600 * hours
+            vals = np.round(rng.gamma(2.0, 10.0, size=n), 2)
+            k = rng.integers(0, n + 1)
+            vals[rng.choice(n, size=k, replace=False)] = \
+                rng.choice(_SPECIALS, size=k)
+            yield ts.astype(np.int64), vals
+            day += 86400
+    for _ in range(4):
+        n = 255
+        ts = day + np.cumsum(rng.integers(0, 180, size=n))
+        vals = np.sin(np.arange(n) / 5.0) * rng.normal(size=n) * 1e3
+        vals[rng.choice(n, size=12, replace=False)] = \
+            rng.choice(_SPECIALS, size=12)
+        yield ts.astype(np.int64), vals
+
+
+def test_wire_format_golden_digest():
+    """Pins the stored payload bytes: chunks already written must stay
+    decodable and re-encode identically."""
+    h = hashlib.sha256()
+    total = 0
+    for ts, vals in _golden_chunks():
+        payload = encode_chunk(ts, vals)
+        h.update(len(payload).to_bytes(4, "big"))
+        h.update(payload)
+        total += len(payload)
+        ts2, vals2 = decode_chunk(payload)
+        np.testing.assert_array_equal(ts2, ts)
+        np.testing.assert_array_equal(vals2.view(np.uint64),
+                                      vals.view(np.uint64))
+    assert total == 19568
+    assert h.hexdigest() == ("1e5fceeda9f02f63b850320f7ab94e0d"
+                             "a7cdcf81c8302aaa914c1bb74bf7b91c")

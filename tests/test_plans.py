@@ -41,6 +41,21 @@ class TestPlans:
         # (the struct key silently demoted it to SortAggregate)
         assert "SortAggregate" not in plan, plan
 
+    def test_compress_roundtrip_plan_is_key_free(self, spark):
+        """The codec path reads only sum per (series, hour): Catalyst
+        prunes the first/last aggregates and with them the surrogate
+        ordering key and its domain guard, which the full rollup plan
+        carries."""
+        from dtaidistance_spark.operators import rollup as R
+        from dtaidistance_spark.plans import driver_queries as DQ
+        key_parts = ("raise_error", "unix_micros", "decimal(38", "min_by")
+        full = _plan(R.rollup_points(
+            DQ.event_points_rollup(spark, SF_DIR), "1h"))
+        assert all(k in full for k in key_parts), full
+        plan = _plan(DQ.q_compress_roundtrip_1h(spark, SF_DIR))
+        for k in key_parts:
+            assert k not in plan, plan
+
     def test_latency_quantiles_reuses_partitioning(self, spark):
         """The rank windows over (series_id, bucket_ts) and the final
         group-by must all reuse the series_id hash partitioning — two

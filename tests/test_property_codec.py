@@ -54,11 +54,12 @@ class TestCodecProperties:
         _roundtrip_bits(ts, vals)
 
     @settings(max_examples=20, deadline=None)
-    @given(st.integers(min_value=250, max_value=520), st.data())
-    def test_roundtrip_across_size_dispatch(self, n, data):
-        """Chunks straddling the 256-point scalar/vectorized dispatch
-        boundary (kernels/codec.py) — both encoders must round-trip
-        arbitrary bit patterns identically."""
+    @given(st.integers(min_value=250, max_value=1440), st.data())
+    def test_roundtrip_long_chunks(self, n, data):
+        """Chunks up to a 1m-tier day (1,440 points), far past the 24
+        points of the 1h-tier day chunks the engine writes — the
+        bit-serial codec must round-trip arbitrary bit patterns at any
+        length."""
         ts = (1_600_000_000 + 60 * np.arange(n)).astype(np.int64)
         # a few adversarial doubles scattered into an otherwise smooth
         # series (full _any_double lists at n>250 would be slow to draw)
