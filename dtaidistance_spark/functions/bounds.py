@@ -48,9 +48,10 @@ def _self_pairs(base: DataFrame, other: DataFrame) -> DataFrame:
     set, ``other`` carries per-j derived columns).
 
     Plan gate: when the series set fits the broadcast budget —
-    ``spark.dtaidistance.broadcastMatrixMaxBytes`` (shared with the
-    matrix executor) and ``spark.dtaidistance.broadcastMatrixMaxPairs``
-    (read only here) — broadcast ``other`` (no shuffle).
+    ``spark.dtaidistance.broadcastMatrixMaxBytes`` and
+    ``spark.dtaidistance.broadcastMatrixMaxPairs``, both read only here
+    (the matrix executor broadcasts its corpus in fixed-size blocks
+    instead) — broadcast ``other`` (no shuffle).
     Above it, fall back to the chunk-pair shuffle plan — tag each base
     row with its chunk's partner chunks via a tiny broadcast (ci, cj)
     table, then equi-join on the partner chunk so both sides move

@@ -8,9 +8,9 @@ builds into a per-user 0700 directory under the system tmp instead.  So
 that nobody else can plant code this process loads, a .so not owned by
 this user or writable by group or others is refused before ``dlopen``,
 as is a per-user directory that is not private (a warning, then the
-numpy path).  Any other failure — no compiler, dlopen error — degrades
-silently to ``lib() is None`` and callers fall back to the numpy path,
-which is bit-identical.
+numpy path).  Any other failure — a compiler error, a dlopen error —
+warns once per process with its reason and degrades to ``lib() is
+None``: callers fall back to the numpy path, which is bit-identical.
 
 Set ``DTW_C_KERNEL=0`` to disable the C path entirely (A/B harness).
 """
@@ -73,51 +73,45 @@ def _tag() -> str:
 
 
 def _compile(tag: str) -> str | None:
-    """Compile the kernel to its tagged .so path; returns the path or
-    None.  A file lock serializes concurrent builders; the compile
-    writes to a temp name and renames atomically, so a reader never
-    dlopens a half-written file."""
+    """Compile the kernel to its tagged .so path; returns the path, or
+    None when there is no build directory.  A failed build raises with
+    the compiler's exit status and stderr tail.  A file lock serializes
+    concurrent builders; the compile writes to a temp name and renames
+    atomically, so a reader never dlopens a half-written file."""
     out = _so_path(tag)
     if out is None:
         return None
     if os.path.exists(out):
         return out
-    lock_path = out + ".lock"
-    try:
-        import fcntl
+    import fcntl
 
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if os.path.exists(out):
-                return out
-            fd, tmp = tempfile.mkstemp(suffix=".so", dir=os.path.dirname(out))
-            os.close(fd)
-            # -ffp-contract=off: forbid FMA contraction of d*d + m —
-            # contraction changes the last ULP and breaks bit-equality
-            # with the numpy path (numpy never fuses).
-            # -mprefer-vector-width=512: gcc defaults to 256-bit vectors
-            # on this uarch; measured +17% single-core and +5.6% at
-            # 32-way saturation (no downclock penalty), ops unchanged.
-            cmd = ["cc", *_CFLAGS, "-fPIC", "-shared", "-o", tmp, _SRC,
-                   "-lm"]
-            try:
-                r = subprocess.run(cmd, capture_output=True, timeout=120)
-                if r.returncode != 0:
-                    os.unlink(tmp)
-                    return None
-                # whatever the umask: the load check refuses a .so that
-                # is group- or world-writable
-                os.chmod(tmp, 0o755)
-                os.rename(tmp, out)
-                return out
-            except Exception:
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-                return None
-    except Exception:
-        return None
+    with open(out + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(out):
+            return out
+        fd, tmp = tempfile.mkstemp(suffix=".so", dir=os.path.dirname(out))
+        os.close(fd)
+        # -ffp-contract=off: forbid FMA contraction of d*d + m —
+        # contraction changes the last ULP and breaks bit-equality
+        # with the numpy path (numpy never fuses).
+        # -mprefer-vector-width=512: gcc defaults to 256-bit vectors
+        # on this uarch; measured +17% single-core and +5.6% at
+        # 32-way saturation (no downclock penalty), ops unchanged.
+        cmd = ["cc", *_CFLAGS, "-fPIC", "-shared", "-o", tmp, _SRC, "-lm"]
+        try:
+            r = subprocess.run(cmd, capture_output=True, timeout=120)
+            if r.returncode != 0:
+                tail = r.stderr.decode(errors="replace").strip()[-500:]
+                raise RuntimeError(f"cc exited with status {r.returncode}: "
+                                   f"{tail}")
+            # whatever the umask: the load check refuses a .so that
+            # is group- or world-writable
+            os.chmod(tmp, 0o755)
+            os.rename(tmp, out)
+            return out
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
 
 def lib():
@@ -164,6 +158,9 @@ def lib():
             ctypes.c_void_p,                           # out
         ]
         _lib = cdll
-    except Exception:
+    except Exception as e:
+        warnings.warn(f"C DTW kernel unavailable ({type(e).__name__}: {e}); "
+                      "using the numpy DTW path", RuntimeWarning,
+                      stacklevel=2)
         _lib = None
     return _lib

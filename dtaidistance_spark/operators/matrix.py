@@ -11,27 +11,26 @@ Every self-matrix here — DTW (:func:`distance_matrix`) and weighted DTW
 :func:`_pair_matrix`.  It takes the source columns, a pair space (the
 upper triangle, or a ``block`` rectangle with or without ``triu``) and a
 per-pair kernel callback ``kernel(ii, jj, *corpus) -> (i, j, d)`` where
-``corpus`` holds one ``{id: array}`` dict per source column.  One
-persist, one stats pass and one gate — estimated bytes of the columns it
-would broadcast against ``spark.dtaidistance.broadcastMatrixMaxBytes`` —
-choose between two physical strategies:
+``corpus`` holds one ``{id: array}`` dict per source column, and has one
+physical strategy, blocked broadcast pair ranges:
 
-* **broadcast pair ranges** (under the gate): the corpus is collected
-  once and broadcast, and work is distributed as ``(lo, hi)`` ranges of
-  the linear pair space.  Each task unranks its pair coordinates in
-  closed form, so the driver never materializes O(n²) pair lists.  The
-  ranges follow the reference's OMP ``guided`` loop
+* the corpus is collected once, cut in id order into K blocks of at
+  most ``_BLOCK_BYTES`` and each block is broadcast on its own;
+* the pair space becomes tiles in the reference's ``block`` shape, one
+  per block pair, so a tile reads at most two blocks;
+* one guided schedule over the tiles' summed cost cuts work into
+  ``(lo, hi)`` ranges of a tile's linear pair space.  A task unranks its
+  pairs in closed form, so the driver never materializes O(n²) pair
+  lists.  The ranges follow the reference's OMP ``guided`` loop
   (dd_dtw_openmp.c:99), weighted by estimated kernel cost
   ``len_i·len_j``: each range takes 1/(4·par) of the cost still
-  remaining, so early tasks are big and the tail is fine-grained; on
-  equal lengths cost is proportional to pair count.  A range yields
-  sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so a task's memory
-  stays bounded whatever the pair count.
-* **chunk-pair shuffle** (over the gate): series get a chunk id, the
-  chunk-pair space is pruned declaratively (``ci <= cj`` and the block)
-  before any data moves, each row is replicated to its surviving partner
-  chunks, and each ``(ci, cj)`` group runs the kernel in one
-  ``applyInPandas`` call.
+  remaining, so early tasks are big and the tail is fine-grained.  A
+  range yields sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so a
+  task's memory stays bounded whatever the pair count;
+* each tile's ranges run in their own ``mapInPandas`` branch, unioned
+  in schedule order.  A branch's closure references only its tile's
+  blocks: PySpark ships a task every broadcast its closure references,
+  and a reused worker keeps only those.
 
 Output is the long-format ``(i, j, d)`` DataFrame — the "condensed"
 matrix is this table ordered row-major; a full numpy matrix is
@@ -42,7 +41,9 @@ kernel, :func:`_compute_pairs`.
 
 from __future__ import annotations
 
-from functools import partial
+import bisect
+import weakref
+from functools import partial, reduce
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -65,10 +66,14 @@ PAIR_SCHEMA = "i long, j long, d double"
 # 2M-pair sub-batches).
 _SUB_BATCH_PAIRS = 2_000_000
 
-# Worker-side bytes of stacked (n, L) corpora kept for the indexed
-# kernel entry; matches the default broadcast gate, so one broadcast
-# corpus always fits.
-_CORPUS_CACHE_BYTES = 256 * 1024 * 1024
+# Series bytes per broadcast block, and the worker-side bytes of stacked
+# (n, L) corpora kept for the indexed kernel entry.  They are sized
+# together: a task reads at most two blocks, whose joint stack is
+# 2·_BLOCK_BYTES, so a Python worker peaks near two live blocks plus the
+# cache, 4·_BLOCK_BYTES = 512 MB — what one corpus at the former 256 MB
+# broadcast limit plus its cached stack took before blocks.
+_BLOCK_BYTES = 128 * 1024 * 1024
+_CORPUS_CACHE_BYTES = 2 * _BLOCK_BYTES
 
 
 def _series_np(v) -> Optional[np.ndarray]:
@@ -156,12 +161,26 @@ def _norm_block(block) -> Tuple[Optional[tuple], bool]:
 
 class _SharedCorpus(dict):
     """An ``{id: array}`` corpus dict that many tasks of one worker share:
-    the broadcast-held corpus.  Only these dicts get their stacked matrix
-    cached; one-shot dicts (shuffle groups, cross batches) are stacked and
-    dropped."""
+    a broadcast block, or a tile's join of two blocks, whose ``parts``
+    are those blocks.  Only these dicts get their stacked matrix cached;
+    one-shot dicts (cross batches) are stacked and dropped."""
+
+    parts: tuple = ()
+
+    @classmethod
+    def join(cls, blocks) -> dict:
+        """One block as it is; two as one dict over both."""
+        if len(blocks) == 1:
+            return blocks[0]
+        out = cls()
+        for b in blocks:
+            out.update(b)
+        out.parts = tuple(blocks)
+        return out
 
 
-# id(dict) -> (dict, (ids, V), retained bytes), oldest first
+# ids of the blocks a stack holds -> (weakrefs to them, (ids, V)),
+# oldest first
 _CORPUS_CACHE: dict = {}
 
 
@@ -169,28 +188,35 @@ def _corpus_matrix(values_by_idx: dict):
     """(sorted ids, V) stacking an equal-length 1-D corpus dict into one
     (n, L) matrix, or None for ragged or n-D corpora.
 
-    A :class:`_SharedCorpus` is cached per dict identity, so every task in
-    a worker reuses the stack of the same broadcast-held dict.  The cache
-    holds a strong reference to the dict, which keeps id() stable, and
-    counts both the dict's arrays and the stack against
-    ``_CORPUS_CACHE_BYTES``; past it the oldest entries are evicted (the
-    newest entry always stays)."""
+    A :class:`_SharedCorpus` is cached by the blocks it holds, so every
+    task of a tile in a worker reuses one stack.  The cache holds those
+    blocks weakly — the worker's broadcast registry owns them — and
+    counts only the stacks against ``_CORPUS_CACHE_BYTES``: a miss first
+    drops the stacks of blocks the worker has let go, then the oldest
+    until the new stack fits (the newest entry always stays)."""
     shared = isinstance(values_by_idx, _SharedCorpus)
-    key = id(values_by_idx)
+    parts = (values_by_idx.parts or (values_by_idx,)) if shared else ()
+    key = tuple(map(id, parts))
     hit = _CORPUS_CACHE.get(key) if shared else None
-    if hit is not None and hit[0] is values_by_idx:
+    if hit is not None and all(r() is p for r, p in zip(hit[0], parts)):
         return hit[1]
     arrs = list(values_by_idx.values())
     if not arrs or any(a.ndim != 1 or len(a) != len(arrs[0]) for a in arrs):
         return None
+    if shared:
+        for k in [k for k, e in _CORPUS_CACHE.items()
+                  if any(r() is None for r in e[0])]:
+            del _CORPUS_CACHE[k]
+        need = len(arrs) * arrs[0].nbytes
+        while _CORPUS_CACHE and need + sum(
+                e[1][1].nbytes for e in _CORPUS_CACHE.values()) \
+                > _CORPUS_CACHE_BYTES:
+            del _CORPUS_CACHE[next(iter(_CORPUS_CACHE))]
     ids = np.fromiter(values_by_idx.keys(), dtype=np.int64, count=len(arrs))
     order = np.argsort(ids)
     res = (ids[order], np.stack([arrs[k] for k in order]))
     if shared:
-        _CORPUS_CACHE[key] = (values_by_idx, res, 2 * res[1].nbytes)
-        while (len(_CORPUS_CACHE) > 1 and sum(
-                e[2] for e in _CORPUS_CACHE.values()) > _CORPUS_CACHE_BYTES):
-            del _CORPUS_CACHE[next(iter(_CORPUS_CACHE))]
+        _CORPUS_CACHE[key] = (tuple(map(weakref.ref, parts)), res)
     return res
 
 
@@ -272,18 +298,20 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     (dtw.py:730, :757-761): with triu (default) only pairs ``i<j`` inside
     the block are produced; with ``triu=False`` the full rectangle.
 
-    ``order_col`` replaces ``index_col``: ``i`` is then the 0-based rank
-    of ``order_col``, the index ``with_index(order_col=...)`` assigns.
-    The broadcast strategy ranks on the driver after its one corpus
-    collect, so no index pass runs; the shuffle strategy calls
-    :func:`with_index`.  ``order_col`` must be a string or integral
-    column: the driver's order of floating-point NaN differs from
-    Spark's.
+    ``index_col`` must hold one distinct, non-null id per series; a null
+    or duplicate id raises ``ValueError``.  ``order_col`` replaces
+    ``index_col``: ``i`` is then the 0-based rank of ``order_col``, the
+    index ``with_index(order_col=...)`` assigns, ranked on the driver
+    after the corpus collect, so no index pass runs.  ``order_col`` must
+    be a string or integral column: the driver's order of floating-point
+    NaN differs from Spark's.
 
-    ``chunk_size`` applies to the chunk-pair shuffle strategy; ``None``
-    sizes chunks so the pair space yields ≈8 groups per core — enough
-    units for the scheduler to balance the quadratic per-group cost,
-    while keeping series replication (one copy per partner chunk) low.
+    The call runs one Spark job, the corpus collect, and broadcasts the
+    corpus in blocks; the returned DataFrame computes the pairs.
+
+    ``chunk_size`` is ignored.  It sized the groups of a chunk-pair
+    shuffle strategy that the blocked broadcast replaced, and stays in
+    the signature so that existing callers keep working.
     """
     s = settings if settings is not None else DtwSettings(**kwargs)
     blk, triu = _norm_block(block)
@@ -297,13 +325,13 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
     src = series_df.select(key, F.col(values_col).alias("values"))
     if blk is not None and order_col is None:
         # drop rows outside the block early; ranked ids do not exist
-        # yet under order_col, and the executor keeps only block pairs
+        # yet under order_col, and null ids stay for the collect to reject
         (rb, re_), (cb, ce) = blk
-        src = src.where(
-            ((F.col("i") >= rb) & (F.col("i") < re_)) |
-            ((F.col("i") >= cb) & (F.col("i") < ce)))
+        i = F.col("i")
+        src = src.where(i.isNull() | ((i >= rb) & (i < re_)) |
+                        ((i >= cb) & (i < ce)))
     return _pair_matrix(src, ["values"], partial(_compute_pairs, settings=s),
-                        blk, triu, chunk_size, order_col)
+                        blk, triu, order_col, index_col)
 
 
 def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
@@ -315,55 +343,81 @@ def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
     kernels/extras.weighted_warping_paths.  Like the reference (triu
     only, matrix[i,j] uses weights[i]), the output is asymmetric in
     principle and only i<j pairs are produced.  Runs on the same pair
-    executor as :func:`distance_matrix`; the weight profiles count
-    toward the broadcast gate and ride along on either strategy."""
+    executor as :func:`distance_matrix`; the weight profiles ride along
+    in the broadcast blocks and count toward their bytes."""
     src = series_df.select(F.col(index_col).cast("long").alias("i"),
                            F.col(values_col).alias("values"),
                            F.col(weights_col).alias("weights"))
     return _pair_matrix(src, ["values", "weights"],
-                        partial(_weighted_pairs, window=window))
+                        partial(_weighted_pairs, window=window),
+                        index_col=index_col)
 
 
 def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
-                 triu: bool = True, chunk_size: Optional[int] = None,
-                 order_col: Optional[str] = None) -> DataFrame:
+                 triu: bool = True, order_col: Optional[str] = None,
+                 index_col: str = "i") -> DataFrame:
     """The pair executor: ``src`` holds ``i`` or, with ``order_col``,
     that column to rank ``i`` by, plus ``data_cols``; ``kernel(ii, jj,
     *dicts)`` computes ``(i, j, d)`` for id pairs given one ``{id:
-    array}`` dict per data column.  Both strategies keep only the
-    block's pairs, so rows outside it may stay in ``src``."""
-    # Persist BEFORE the single stats pass: the upstream plan (often the
-    # whole rollup → gap-fill → arrays pipeline) must execute exactly
-    # once, not once for the stats and again for the collect or shuffle.
-    src = track_persist(src.persist())
-    points = [F.size(F.flatten(c))
-              if src.schema[c].dataType.elementType.typeName() == "array"
-              else F.size(c) for c in data_cols]
-    imax = F.max("i") if order_col is None else F.count("*") - 1
-    stats = src.agg(F.count("*").alias("n"), imax.alias("imax"),
-                    *[F.avg(p) for p in points]).collect()[0]
-    est_bytes = 8 * int(stats["n"] or 0) * sum(
-        float(a or 0) for a in stats[2:])
-    max_bytes = float(src.sparkSession.conf.get(
-        "spark.dtaidistance.broadcastMatrixMaxBytes", str(256 * 1024 * 1024)))
-    # When the corpus fits in executor memory, broadcast it and move ONLY
-    # pair-range tasks — the chunk-pair plan replicates every series to
-    # ~n/chunk_size partner groups through the shuffle, which only pays
-    # for corpora that cannot be broadcast.
-    if est_bytes <= max_bytes:
-        return _broadcast_ranges(src, data_cols, kernel, blk, triu,
-                                 order_col)
-    if order_col is not None:
-        src = with_index(src, order_col=order_col).drop(order_col)
-    par = src.sparkSession.sparkContext.defaultParallelism
-    if chunk_size is None:
-        n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
-        chunk_size = max(8, -(-(int(stats["imax"] or 0) + 1) // n_chunks))
-    return _chunk_shuffle(src, data_cols, kernel, blk, triu, chunk_size, par)
+    array}`` dict per data column.  Rows outside the block may stay in
+    ``src``: only the block's series are broadcast.  ``index_col`` names
+    the source of ``i`` in errors."""
+    spark = src.sparkSession
+    sc = spark.sparkContext
+    ids, corpus = _collect_corpus(src, data_cols, order_col, index_col)
+    if blk is not None:
+        (rb, re_), (cb, ce) = blk
+        ids = ids[((ids >= rb) & (ids < re_)) | ((ids >= cb) & (ids < ce))]
+    keys = ids.tolist()
+    lens = np.array([len(corpus[0][k]) for k in keys], dtype=np.int64)
+    nbytes = np.array([sum(d[k].nbytes for d in corpus if d[k] is not None)
+                       for k in keys], dtype=np.int64)
+    cuts = _block_cuts(nbytes, _BLOCK_BYTES)
+    tiles = _tiles(ids, lens, cuts, blk, triu)
+    if not tiles:
+        return spark.createDataFrame([], PAIR_SCHEMA)
+    plan = _tile_schedule([t[5] for t in tiles], sc.defaultParallelism)
+    bcs = [track_broadcast(sc.broadcast(
+        [_SharedCorpus((k, d[k]) for k in keys[lo:hi]) for d in corpus]))
+        for lo, hi in zip(cuts, cuts[1:])]
+
+    # one range per partition, IN ORDER (big ranges first): Spark launches
+    # tasks by partition index as slots free, which is exactly OMP guided
+    # scheduling; .repartition() would round-robin the order away.  Task
+    # k reads range k from the closure: spark.range needs no Python-side
+    # row conversion (measured ~0.1 s less per task than parallelize on a
+    # 4-core local[4] session)
+    branches = [
+        spark.range(len(ranges), numPartitions=len(ranges)).mapInPandas(
+            _range_task([bcs[x] for x in sorted({a, b})], ranges, rows,
+                        cols, tri, kernel), schema=PAIR_SCHEMA)
+        for (a, b, rows, cols, tri, _), ranges in zip(tiles, plan)]
+    return reduce(DataFrame.union, branches)
+
+
+def _range_task(blocks: list, ranges: list, rows: np.ndarray,
+                cols: Optional[np.ndarray], triu: bool, kernel):
+    """One tile's ``mapInPandas`` function: task k runs ``ranges[k]`` of
+    the tile's pair space over the join of its ≤ 2 block broadcasts, the
+    only ones its closure references."""
+
+    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dicts = [_SharedCorpus.join(d)
+                 for d in zip(*(b.value for b in blocks))]
+        for pdf in batches:
+            for k in pdf["id"]:
+                lo, hi = ranges[int(k)]
+                for ii, jj in _range_pairs(lo, hi, rows, cols, triu):
+                    if len(ii):
+                        oi, oj, od = kernel(ii, jj, *dicts)
+                        yield pd.DataFrame({"i": oi, "j": oj, "d": od})
+
+    return compute
 
 
 def _collect_corpus(src: DataFrame, data_cols: list,
-                    order_col: Optional[str] = None) -> Tuple[np.ndarray, list]:
+                    order_col: Optional[str] = None,
+                    index_col: str = "i") -> Tuple[np.ndarray, list]:
     """Collect ``i`` (or ``order_col``) + ``data_cols`` once → (sorted
     ids, one ``{id: float64 array}`` dict per column).
 
@@ -373,6 +427,8 @@ def _collect_corpus(src: DataFrame, data_cols: list,
     Nested (n-D series, weight profiles) or null-holding columns convert
     cell by cell.
 
+    Without ``order_col`` a null or repeated ``i`` raises ``ValueError``
+    naming ``index_col``: a repeated id would silently keep one series.
     With ``order_col`` the id of a row is its 0-based rank in a stable
     Arrow sort of that column: Arrow compares strings by bytes, which is
     Spark's string order, integers by value, and nulls go first as in
@@ -384,7 +440,15 @@ def _collect_corpus(src: DataFrame, data_cols: list,
 
     tb = src.select(order_col or "i", *data_cols).toArrow()
     if order_col is None:
-        keys = [int(i) for i in tb.column("i").to_numpy()]
+        col = tb.column("i")
+        if col.null_count:
+            raise ValueError(f"index column {index_col!r} holds a null id")
+        keys = col.to_numpy()
+        uniq, counts = np.unique(keys, return_counts=True)
+        if (counts > 1).any():
+            raise ValueError(f"index column {index_col!r} holds id "
+                             f"{int(uniq[counts > 1][0])} more than once")
+        keys = keys.tolist()
     else:
         rank = np.empty(tb.num_rows, dtype=np.int64)
         rank[pc.sort_indices(tb.column(order_col),
@@ -406,6 +470,84 @@ def _collect_corpus(src: DataFrame, data_cols: list,
     return np.array(sorted(dicts[0]), dtype=np.int64), dicts
 
 
+def _block_cuts(nbytes: np.ndarray, cap: int) -> list:
+    """Cut points ``[0, ..., n]`` splitting consecutive series into
+    blocks of at most ``cap`` bytes; a series above ``cap`` is a block of
+    its own."""
+    cum = np.cumsum(nbytes)
+    cuts = [0]
+    while cuts[-1] < len(cum):
+        s = cuts[-1]
+        e = int(np.searchsorted(cum, (cum[s - 1] if s else 0) + cap,
+                                side="right"))
+        cuts.append(max(e, s + 1))
+    return cuts
+
+
+def _tiles(ids: np.ndarray, lens: np.ndarray, cuts: list, blk,
+           triu: bool) -> list:
+    """The pair space as tiles ``(a, b, rows, cols, triu, space)`` over
+    the id-sorted blocks ``ids[cuts[k]:cuts[k + 1]]``, in row-major block
+    order.  Without ``blk``: the triangle of each block (``cols=None``)
+    and the rectangle of each block pair ``a < b``.  With it: the block
+    rows of block ``a`` × the block cols of block ``b``, for ``a <= b``
+    under ``triu`` (a later block holds no ``j > i`` partner of an earlier
+    one), every ``(a, b)`` otherwise; only a diagonal tile keeps the
+    ``i < j`` filter.  ``space`` is ``(cost_upto, n_pairs, total)``; tiles
+    without pairs are dropped."""
+    if blk is None:
+        rsel = csel = np.ones(len(ids), dtype=bool)
+    else:
+        (rb, re_), (cb, ce) = blk
+        rsel, csel = (ids >= rb) & (ids < re_), (ids >= cb) & (ids < ce)
+    out = []
+    for a in range(len(cuts) - 1):
+        ra = slice(cuts[a], cuts[a + 1])
+        for b in range(a if blk is None or triu else 0, len(cuts) - 1):
+            if blk is None and a == b:
+                rows, cols = ids[ra], None
+                n_pairs = len(rows) * (len(rows) - 1) // 2
+                cost_upto, total = _triu_cost_fn(lens[ra])
+            else:
+                cb_ = slice(cuts[b], cuts[b + 1])
+                rm, cm = rsel[ra], csel[cb_]
+                rows, cols = ids[ra][rm], ids[cb_][cm]
+                n_pairs = len(rows) * len(cols)
+                cost_upto, total = _rect_cost_fn(lens[ra][rm], lens[cb_][cm])
+            if n_pairs:
+                out.append((a, b, rows, cols, triu and a == b,
+                            (cost_upto, n_pairs, total)))
+    return out
+
+
+def _tile_schedule(spaces: list, par: int) -> list:
+    """Each tile's ``(lo, hi)`` ranges, in its own pair positions: ONE
+    guided schedule (:func:`_guided_ranges_cost`) over the tiles' pair
+    spaces laid end to end, its ranges cut where one tile ends and the
+    next begins.  ``spaces`` holds ``(cost_upto, n_pairs, total)`` per
+    tile; with one tile the schedule is that tile's own."""
+    starts = [0]
+    base = [0.0]
+    for _, n_pairs, total in spaces:
+        starts.append(starts[-1] + n_pairs)
+        base.append(base[-1] + total)
+
+    def cost_upto(p: int) -> float:
+        t = min(bisect.bisect_right(starts, p) - 1, len(spaces) - 1)
+        return base[t] + spaces[t][0](p - starts[t])
+
+    out: list = [[] for _ in spaces]
+    t = 0
+    for lo, hi in _guided_ranges_cost(cost_upto, starts[-1], base[-1], par):
+        while lo < hi:
+            while starts[t + 1] <= lo:
+                t += 1
+            end = min(hi, starts[t + 1])
+            out[t].append((lo - starts[t], end - starts[t]))
+            lo = end
+    return out
+
+
 def _range_pairs(lo: int, hi: int, rows: np.ndarray,
                  cols: Optional[np.ndarray], triu: bool,
                  cap: int = _SUB_BATCH_PAIRS) -> Iterator[tuple]:
@@ -425,155 +567,6 @@ def _range_pairs(lo: int, hi: int, rows: np.ndarray,
             keep = ii < jj
             ii, jj = ii[keep], jj[keep]
         yield ii, jj
-
-
-def _broadcast_ranges(src: DataFrame, data_cols: list, kernel, blk,
-                      triu: bool, order_col: Optional[str] = None) -> DataFrame:
-    """Broadcast strategy: the corpus dicts are broadcast once and the
-    pair space is cut into cost-weighted guided ``(lo, hi)`` range tasks;
-    only the O(n) series ids travel with it."""
-    spark = src.sparkSession
-    sc = spark.sparkContext
-    ids, corpus = _collect_corpus(src, data_cols, order_col)
-    lens = np.array([len(corpus[0][int(i)]) for i in ids], dtype=np.int64)
-    if blk is None:
-        rows, cols = ids, None
-        n_pairs = len(ids) * (len(ids) - 1) // 2
-    else:
-        (rb, re_), (cb, ce) = blk
-        rsel, csel = (ids >= rb) & (ids < re_), (ids >= cb) & (ids < ce)
-        rows, cols = ids[rsel], ids[csel]
-        n_pairs = len(rows) * len(cols)
-    if n_pairs == 0:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    cost_upto, total = (_triu_cost_fn(lens) if blk is None
-                        else _rect_cost_fn(lens[rsel], lens[csel]))
-    ranges = _guided_ranges_cost(cost_upto, n_pairs, total,
-                                 sc.defaultParallelism)
-    # one range per partition, IN ORDER (big ranges first): Spark launches
-    # tasks by partition index as slots free, which is exactly OMP guided
-    # scheduling; .repartition() would round-robin the order away.  Task
-    # k reads range k from the closure: spark.range needs no Python-side
-    # row conversion (measured ~0.1 s less per task than parallelize on a
-    # 4-core local[4] session)
-    rdf = spark.range(len(ranges), numPartitions=len(ranges))
-    bcs = [track_broadcast(sc.broadcast(d)) for d in corpus]
-    space = track_broadcast(sc.broadcast((rows, cols)))
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dicts = [b.value for b in bcs]
-        rows_, cols_ = space.value
-        for pdf in batches:
-            for k in pdf["id"]:
-                lo, hi = ranges[int(k)]
-                for ii, jj in _range_pairs(lo, hi, rows_, cols_, triu):
-                    if len(ii):
-                        oi, oj, od = kernel(ii, jj, *dicts)
-                        yield pd.DataFrame({"i": oi, "j": oj, "d": od})
-
-    return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
-
-
-def _chunk_shuffle(src: DataFrame, data_cols: list, kernel, blk, triu: bool,
-                   chunk_size: int, par: int) -> DataFrame:
-    """Chunk-pair shuffle strategy: every surviving ``(ci, cj)`` chunk
-    pair is one ``applyInPandas`` group that runs the kernel over its
-    side-0 × side-1 pairs."""
-    # the fan-out multiplies each row ~n/chunk_size times in the map
-    # stage — that write must come from enough tasks
-    if src.rdd.getNumPartitions() < max(2, par // 2):
-        src = src.repartition(par)
-    tagged = _chunk_pair_tagged(src, chunk_size, triu, blk, data_cols, par)
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf[~pdf["i"].duplicated()]
-        keys = [int(i) for i in first["i"]]
-        dicts = [{k: _series_np(v) for k, v in zip(keys, first[c])}
-                 for c in data_cols]
-        li = np.sort(pdf.loc[pdf["side"] == 0, "i"].unique())
-        rj = np.sort(pdf.loc[pdf["side"] == 1, "i"].unique())
-        ii, jj = (g.ravel() for g in np.meshgrid(li, rj, indexing="ij"))
-        keep = ii < jj if triu else np.ones(len(ii), dtype=bool)
-        if blk is not None:
-            (rb, re_), (cb, ce) = blk
-            keep &= (ii >= rb) & (ii < re_) & (jj >= cb) & (jj < ce)
-        oi, oj, od = kernel(ii[keep], jj[keep], *dicts)
-        return pd.DataFrame({"i": oi, "j": oj, "d": od})
-
-    return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
-
-
-def _chunk_pair_tagged(src: DataFrame, chunk_size: int, triu: bool, blk,
-                       data_cols: list, par: int) -> DataFrame:
-    """Chunked-shuffle plan: assign chunk ids, prune the chunk-pair space
-    declaratively (triangular symmetry + block restriction — the
-    reference's own distribution primitive, dtw.py:757-761), replicate
-    each row to its surviving partner chunks, and hash-repartition on the
-    group key.  Callers groupBy("ci","cj") and apply their kernel.
-
-    The explicit repartition matters: the UDF stage's cost is CPU
-    (quadratic pairs per group), not bytes — AQE's byte-based partition
-    coalescing must not shrink its parallelism (observed 3×32 cores idle
-    when it did).  groupBy reuses this partitioning, and AQE leaves
-    user-specified repartitioning alone.
-
-    Ragged corpora get LENGTH-balanced chunks so each chunk holds ~equal
-    total series length and the quadratic per-group cost stays ~equal
-    under power-law lengths.  Scale shape: one parallel histogram
-    aggregate over fine id-range buckets (≤64k rows to the driver — never
-    a single-partition window or a full-id collect), driver prefix-sums
-    it into bucket→chunk boundaries, broadcast-joined back.  Chunk ids
-    stay monotone in ``i``, so the triangular chunk-pair pruning below
-    stays exact.  Equal-length corpora keep the plain ``i // chunk_size``
-    projection (no extra jobs); block restriction keeps fixed-size chunks
-    (its pruning arithmetic indexes chunks by ``id // chunk_size``)."""
-    len_col = F.size(data_cols[0])
-    probe = None
-    if blk is None:
-        # ONE combined aggregate decides raggedness AND feeds the
-        # histogram bounds
-        probe = src.agg(
-            (F.min(len_col) != F.max(len_col)).alias("r"),
-            F.min("i"), F.max("i"), F.sum(len_col),
-            F.count("*")).collect()[0]
-    if probe is not None and probe["r"]:
-        _, imin, imax, tot, n_rows = probe
-        n_chunks = max(1, -(-int(n_rows) // chunk_size))
-        nb = min(max(n_chunks * 64, 256), 65536)
-        span = int(imax) - int(imin) + 1
-        bexpr = ((F.col("i") - F.lit(int(imin))) * nb / span).cast("long")
-        hist = sorted(src.groupBy(bexpr.alias("b"))
-                      .agg(F.sum(len_col).alias("s")).collect())
-        target = max(1.0, float(tot) / n_chunks)
-        cum = 0
-        mapping = []
-        for r in hist:
-            # chunk from the length mass BEFORE the bucket: monotone
-            # nondecreasing in b, hence in i
-            mapping.append((int(r["b"]),
-                            min(int(cum / target), n_chunks - 1)))
-            cum += int(r["s"])
-        mdf = src.sparkSession.createDataFrame(mapping, "b long, chunk long")
-        src = src.withColumn("b", bexpr) \
-                 .join(F.broadcast(mdf), "b").drop("b")
-    else:
-        src = src.withColumn("chunk", (F.col("i") / chunk_size).cast("long"))
-    chunks = src.select("chunk").distinct()
-    ca = chunks.select(F.col("chunk").alias("ci"))
-    cb_df = chunks.select(F.col("chunk").alias("cj"))
-    cp = ca.crossJoin(cb_df)
-    if triu:
-        cp = cp.where(F.col("ci") <= F.col("cj"))
-    if blk is not None:
-        (rb, re_), (cb, ce) = blk
-        cp = cp.where(
-            (F.col("ci") >= rb // chunk_size) & (F.col("ci") <= (re_ - 1) // chunk_size) &
-            (F.col("cj") >= cb // chunk_size) & (F.col("cj") <= (ce - 1) // chunk_size))
-    left = src.join(F.broadcast(cp), src["chunk"] == cp["ci"]) \
-              .select("ci", "cj", F.lit(0).alias("side"), "i", *data_cols)
-    right = src.join(F.broadcast(cp), src["chunk"] == cp["cj"]) \
-               .select("ci", "cj", F.lit(1).alias("side"), "i", *data_cols)
-    return left.unionByName(right).repartition(4 * par, "ci", "cj")
 
 
 def _triu_unrank(p: np.ndarray, n: int) -> Tuple[np.ndarray, np.ndarray]:

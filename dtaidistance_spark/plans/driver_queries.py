@@ -1208,7 +1208,7 @@ def hourly_series(spark, sf_dir, min_len: int = 24) -> DataFrame:
 def q_dtw_distance_matrix(spark, sf_dir):
     st = DtwSettings(window=24)
     dist = distance_matrix(hourly_series(spark, sf_dir), settings=st,
-                           chunk_size=128, order_col="series_id")
+                           order_col="series_id")
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1220,7 +1220,7 @@ def q_dtw_daily_pairs(spark, sf_dir):
     inner distance, sqrt at the end) as an anti-diagonal recursive CTE —
     the driver-level value oracle for the DTW kernel itself."""
     series = _daily_series(spark, sf_dir, 32)
-    dist = distance_matrix(series, settings=DtwSettings(), chunk_size=128)
+    dist = distance_matrix(series, settings=DtwSettings())
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1234,8 +1234,7 @@ def q_dtw_banded_pairs(spark, sf_dir):
     (0,j), (i,0) are 0 for i,j <= psi, and the final distance is the min
     of the corner and the last psi cells of the last row/column."""
     series = _daily_series(spark, sf_dir, 32)
-    dist = distance_matrix(series, settings=DtwSettings(window=12, psi=2),
-                           chunk_size=128)
+    dist = distance_matrix(series, settings=DtwSettings(window=12, psi=2))
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1418,7 +1417,7 @@ def q_dtw_block_pairs(spark, sf_dir):
     cols [8,32) of the 32-series daily matrix, triangular."""
     series = _daily_series(spark, sf_dir, 32)
     dist = distance_matrix(series, settings=DtwSettings(),
-                           block=((0, 16), (8, 32)), chunk_size=128)
+                           block=((0, 16), (8, 32)))
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1470,7 +1469,7 @@ def q_dtw_ndim_daily_pairs(spark, sf_dir):
     agg1d = R.rollup_points(event_points_rollup(spark, sf_dir), "1d")
     nd = R.dense_arrays(agg1d, "1d", ["cnt", "max"])
     series = with_index(nd, order_col="series_id").where(F.col("i") < 24)
-    dist = distance_matrix(series, settings=DtwSettings(), chunk_size=128)
+    dist = distance_matrix(series, settings=DtwSettings())
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 
@@ -1479,7 +1478,7 @@ def q_dtw_flagship(spark, sf_dir):
     blocked DTW matrix → similarity join back to series ids."""
     series = with_index(hourly_series(spark, sf_dir), order_col="series_id")
     st = DtwSettings(window=12, psi=2)
-    dist = distance_matrix(series, settings=st, chunk_size=128)
+    dist = distance_matrix(series, settings=st)
     ids = series.select("i", "series_id")
     out = (dist
            .join(ids.withColumnRenamed("series_id", "series_a"), on="i")
@@ -1583,9 +1582,7 @@ def q_dtw_knn(spark, sf_dir):
     subsequence_topk) — pruning under psi relaxation is unsound for
     LB_Keogh, so the whole-series kNN ranks the exact matrix."""
     series = _daily_series(spark, sf_dir, 32)
-    dist = distance_matrix(series, settings=DtwSettings(window=12,
-                                                        psi=2),
-                           chunk_size=128)
+    dist = distance_matrix(series, settings=DtwSettings(window=12, psi=2))
     d6 = dist.select("i", "j", F.round("d", 6).alias("d"))
     sym = d6.unionAll(d6.select(F.col("j").alias("i"),
                                 F.col("i").alias("j"), "d"))

@@ -55,3 +55,29 @@ def spark():
     s = get_spark(app_name="tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def in_blocks(monkeypatch):
+    """``in_blocks(nbytes, run)`` returns ``run()`` computed with the pair
+    executor's corpus cut into broadcast blocks of at most ``nbytes``,
+    and asserts that each matrix call in it cut at least three."""
+    from dtaidistance_spark.operators import matrix as M
+
+    def run_in_blocks(nbytes, run):
+        counts = []
+        cut = M._block_cuts
+
+        def spy(sizes, cap):
+            cuts = cut(sizes, cap)
+            counts.append(len(cuts) - 1)
+            return cuts
+
+        with monkeypatch.context() as m:
+            m.setattr(M, "_BLOCK_BYTES", nbytes)
+            m.setattr(M, "_block_cuts", spy)
+            out = run()
+        assert counts and min(counts) >= 3, counts
+        return out
+
+    return run_in_blocks

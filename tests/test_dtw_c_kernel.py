@@ -4,6 +4,7 @@ both inner distances, ragged shapes, degenerate lengths."""
 
 import os
 import stat
+import warnings
 
 import numpy as np
 import pytest
@@ -151,3 +152,38 @@ def test_read_only_package_builds_in_private_dir(monkeypatch, tmp_path):
     os.chmod(d, 0o755)              # no longer private: refused
     with pytest.warns(RuntimeWarning, match="not a directory private"):
         assert _dtwc._build_dir() is None
+
+
+def test_failed_build_warns_with_reason(fresh_loader, monkeypatch):
+    """A compiler failure falls back to numpy with one warning that
+    carries cc's exit status and stderr, and leaves no temp file."""
+    monkeypatch.setattr(_dtwc, "_CFLAGS", [*_dtwc._CFLAGS,
+                                           "-fno-such-flag-here"])
+    with pytest.warns(RuntimeWarning,
+                      match=r"status \d+: .*-fno-such-flag-here"):
+        assert _dtwc.lib() is None
+    assert not [f for f in os.listdir(os.environ["DTW_C_BUILD_DIR"])
+                if f.endswith(".so")]
+    assert fresh_loader == []
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _dtwc.lib() is None  # once per process: no second warning
+
+
+def test_dlopen_error_warns(fresh_loader, monkeypatch):
+    _plant()
+
+    def fail(path):
+        raise OSError(f"{path}: invalid ELF header")
+
+    monkeypatch.setattr(_dtwc.ctypes, "CDLL", fail)
+    with pytest.warns(RuntimeWarning, match="OSError: .*invalid ELF header"):
+        assert _dtwc.lib() is None
+
+
+def test_disabled_kernel_does_not_warn(fresh_loader, monkeypatch):
+    monkeypatch.setenv("DTW_C_KERNEL", "0")
+    monkeypatch.setattr(_dtwc, "_CFLAGS", ["-fno-such-flag-here"])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _dtwc.lib() is None

@@ -47,7 +47,7 @@ class TestCondensedIndex:
 class TestDistanceMatrix:
     def test_full_matrix_golden(self, spark, dtw_oracle):
         df = _series_df(spark, S6)
-        dist = distance_matrix(df, chunk_size=2)
+        dist = distance_matrix(df, chunk_size=2)  # accepted, ignored
         m = to_matrix(dist, 6)
         expected = dtw_oracle.distance_matrix(S6)
         for i in range(6):
@@ -59,7 +59,7 @@ class TestDistanceMatrix:
 
     def test_condensed_ordering(self, spark, dtw_oracle):
         df = _series_df(spark, S6)
-        cond = to_condensed(distance_matrix(df, chunk_size=4), 6)
+        cond = to_condensed(distance_matrix(df), 6)
         expected = dtw_oracle.distance_matrix(S6, compact=True)
         np.testing.assert_allclose(cond, np.asarray(expected), rtol=1e-15)
 
@@ -67,7 +67,7 @@ class TestDistanceMatrix:
         # reference tests/test_dtw.py:171-191
         block = ((1, 4), (3, 5))
         df = _series_df(spark, S6)
-        dist = distance_matrix(df, block=block, chunk_size=2)
+        dist = distance_matrix(df, block=block)
         m = to_matrix(dist, 6, only_triu=True)
         expected = dtw_oracle.distance_matrix(S6, block=block, only_triu=True)
         np.testing.assert_allclose(m, np.asarray(expected), rtol=1e-14)
@@ -75,7 +75,7 @@ class TestDistanceMatrix:
     def test_block_not_triu(self, spark, dtw_oracle):
         block = ((1, 4), (0, 5), False)
         df = _series_df(spark, S6)
-        pdf = distance_matrix(df, block=block, chunk_size=3).toPandas()
+        pdf = distance_matrix(df, block=block).toPandas()
         # full rectangle: rows 1..3 × cols 0..4, including i >= j
         assert len(pdf) == 3 * 5
         for row in pdf.itertuples(index=False):
@@ -85,7 +85,7 @@ class TestDistanceMatrix:
     def test_random_ragged_vs_reference(self, spark, dtw_oracle, rng):
         series = [list(rng.normal(size=int(rng.choice([8, 12, 17])))) for _ in range(15)]
         df = _series_df(spark, series)
-        cond = to_condensed(distance_matrix(df, chunk_size=4), 15)
+        cond = to_condensed(distance_matrix(df), 15)
         expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
@@ -93,7 +93,7 @@ class TestDistanceMatrix:
         series = [list(rng.normal(size=12)) for _ in range(8)]
         df = _series_df(spark, series)
         st = DtwSettings(window=3, psi=1)
-        cond = to_condensed(distance_matrix(df, settings=st, chunk_size=3), 8)
+        cond = to_condensed(distance_matrix(df, settings=st), 8)
         expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True,
                                                          window=3, psi=1))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
@@ -102,7 +102,7 @@ class TestDistanceMatrix:
         series = [list(rng.normal(size=16)) for _ in range(10)]
         df = _series_df(spark, series)
         st = DtwSettings(max_dist=2.0, window=4)
-        cond = to_condensed(distance_matrix(df, settings=st, chunk_size=5), 10)
+        cond = to_condensed(distance_matrix(df, settings=st), 10)
         expected = np.asarray(dtw_oracle.distance_matrix(
             series, compact=True, max_dist=2.0, window=4))
         finite = np.isfinite(expected)
@@ -127,37 +127,69 @@ class TestDistanceMatrix:
 
 
 class TestBlockedPath:
-    """Force the blocked-shuffle physical strategy (small inputs
-    auto-route to the broadcast strategy) and verify identical results."""
+    """Cut the corpus into several broadcast blocks (small inputs fit in
+    one) and verify results identical to the one-block run."""
 
-    def test_blocked_equals_broadcast(self, spark, dtw_oracle, rng):
+    def test_blocked_equals_broadcast(self, spark, dtw_oracle, rng,
+                                      in_blocks):
         series = [list(rng.normal(size=12)) for _ in range(15)]
         df = _series_df(spark, series)
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            cond = to_condensed(distance_matrix(df, chunk_size=4), 15)
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        one = to_condensed(distance_matrix(df), 15)
+        # 96 B per series: 4 series per block, K = 4
+        cond = in_blocks(4 * 96, lambda: to_condensed(distance_matrix(df),
+                                                      15))
+        assert np.array_equal(cond, one)
         expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
-    def test_blocked_block_semantics(self, spark, dtw_oracle):
+    def test_blocked_block_semantics(self, spark, dtw_oracle, in_blocks):
         block = ((1, 4), (3, 5))
         df = _series_df(spark, S6)
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            m = to_matrix(distance_matrix(df, block=block, chunk_size=2), 6,
-                          only_triu=True)
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        one = to_matrix(distance_matrix(df, block=block), 6, only_triu=True)
+        # the block's 4 series, 72 B each: one per block
+        m = in_blocks(72, lambda: to_matrix(distance_matrix(df, block=block),
+                                            6, only_triu=True))
+        assert np.array_equal(m, one)
         expected = dtw_oracle.distance_matrix(S6, block=block, only_triu=True)
         np.testing.assert_allclose(m, np.asarray(expected), rtol=1e-14)
 
+    def test_blocked_block_rect_and_ndim(self, spark, rng, in_blocks):
+        series = [rng.normal(size=(10, 2)) for _ in range(9)]
+        df = spark.createDataFrame(
+            [(i, s.tolist()) for i, s in enumerate(series)],
+            "i long, values array<array<double>>")
+        block = ((1, 7), (0, 9), False)
+
+        def run():
+            return distance_matrix(df, block=block, window=3).toPandas() \
+                .sort_values(["i", "j"]).reset_index(drop=True)
+
+        one = run()
+        got = in_blocks(2 * 160, run)
+        assert len(got) == 6 * 9
+        assert got.equals(one)
+        for r in got.itertuples(index=False):
+            assert r.d == dtw_distance(series[r.i], series[r.j], window=3)
+
+    def test_repeated_id_rejected(self, spark):
+        # a repeated id would keep one of its series and drop the rest
+        rows = [(0, [1.0, 2.0]), (1, [2.0, 3.0]), (1, [0.0, 1.0])]
+        df = spark.createDataFrame(rows, "k long, values array<double>")
+        with pytest.raises(ValueError, match="'k' holds id 1 more than once"):
+            distance_matrix(df, index_col="k")
+
+    @pytest.mark.parametrize("block", [None, ((0, 1), (0, 2))])
+    def test_null_id_rejected(self, spark, block):
+        df = spark.createDataFrame([(0, [1.0]), (None, [2.0])],
+                                   "k long, values array<double>")
+        with pytest.raises(ValueError, match="'k' holds a null id"):
+            distance_matrix(df, index_col="k", block=block)
+
 
 class TestCostAwareScheduling:
-    """Cost-weighted guided ranges + length-balanced chunks for ragged
-    corpora: the schedule equalizes estimated kernel cost len_i·len_j,
-    outputs stay bit-identical."""
+    """Cost-weighted guided ranges over block tiles for ragged corpora:
+    the schedule equalizes estimated kernel cost len_i·len_j, outputs
+    stay bit-identical."""
 
     def test_cost_ranges_partition_and_guided_profile(self):
         from dtaidistance_spark.operators.matrix import (
@@ -199,33 +231,87 @@ class TestCostAwareScheduling:
         assert ranges[-1][1] == n_pairs
         assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
 
-    def test_broadcast_vs_shuffle_bit_identical(self, spark, rng):
+    @pytest.mark.parametrize("space", ["triu", "block_triu", "block_rect"])
+    def test_tile_schedule_partitions_pair_space(self, space):
+        from dtaidistance_spark.operators.matrix import (
+            _block_cuts, _range_pairs, _tile_schedule, _tiles)
+
+        rng = np.random.default_rng(11)
+        ids = np.sort(rng.choice(400, 40, replace=False)).astype(np.int64)
+        lens = rng.integers(5, 50, len(ids)).astype(np.int64)
+        blk, triu = {"triu": (None, True),
+                     "block_triu": (((ids[3], ids[30]), (ids[10], 400)),
+                                    True),
+                     "block_rect": (((ids[3], ids[30]), (ids[10], 400)),
+                                    False)}[space]
+        cuts = _block_cuts(8 * lens, 8 * 120)
+        assert len(cuts) - 1 >= 3
+        block_of = np.repeat(np.arange(len(cuts) - 1), np.diff(cuts))
+        tiles = _tiles(ids, lens, cuts, blk, triu)
+        plan = _tile_schedule([t[5] for t in tiles], 4)
+        got = []
+        for (a, b, rows, cols, tri, (_, n_pairs, _)), ranges in zip(tiles,
+                                                                  plan):
+            # the tile's ranges partition its pair space, in order
+            assert ranges[0][0] == 0 and ranges[-1][1] == n_pairs
+            assert all(r[1] == q[0] for r, q in zip(ranges, ranges[1:]))
+            for lo, hi in ranges:
+                for ii, jj in _range_pairs(lo, hi, rows, cols, tri):
+                    touched = set(block_of[np.searchsorted(ids, ii)]) | \
+                        set(block_of[np.searchsorted(ids, jj)])
+                    assert touched <= {a, b}  # at most two blocks
+                    got += zip(ii.tolist(), jj.tolist())
+        if blk is None:
+            want = [(int(i), int(j)) for k, i in enumerate(ids)
+                    for j in ids[k + 1:]]
+        else:
+            (rb, re_), (cb, ce) = blk
+            want = [(int(i), int(j)) for i in ids[(ids >= rb) & (ids < re_)]
+                    for j in ids[(ids >= cb) & (ids < ce)]
+                    if i < j or not triu]
+        assert sorted(got) == sorted(want)
+        assert len(got) == len(set(got))  # every pair exactly once
+
+    def test_one_block_schedule_pinned(self):
+        # one block is the plain schedule: the pinned 44 ranges above
+        from dtaidistance_spark.operators.matrix import (
+            _block_cuts, _tile_schedule, _tiles)
+
+        ids = np.arange(480, dtype=np.int64)
+        lens = np.full(480, 504, dtype=np.int64)
+        cuts = _block_cuts(8 * lens, 128 * 1024 * 1024)
+        assert cuts == [0, 480]
+        tiles = _tiles(ids, lens, cuts, None, True)
+        (ranges,) = _tile_schedule([t[5] for t in tiles], 4)
+        assert len(ranges) == 44
+        assert ranges[0] == (0, 7185)
+        assert ranges[-1][1] == 480 * 479 // 2
+
+    def test_blocked_vs_one_block_bit_identical(self, spark, rng,
+                                                in_blocks):
         series = [list(rng.normal(size=int(n)))
                   for n in rng.integers(6, 60, 20)]
         df = _series_df(spark, series)
-        a = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
-            .reset_index(drop=True)
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            b = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
-                .reset_index(drop=True)
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
-        assert len(a) == 20 * 19 // 2
-        assert a.equals(b)  # bit-identical: the strategy only moves work
 
-    def test_ragged_shuffle_path_matches_reference(self, spark, dtw_oracle,
-                                                   rng):
-        # force the chunked-shuffle strategy on a ragged corpus: chunk
-        # ids come from the length-balanced histogram path
+        def run():
+            return distance_matrix(df).toPandas().sort_values(["i", "j"]) \
+                .reset_index(drop=True)
+
+        a = run()
+        b = in_blocks(8 * 60 * 4, run)
+        assert len(a) == 20 * 19 // 2
+        assert a.equals(b)  # bit-identical: blocks only move work
+
+    def test_ragged_blocked_matches_reference(self, spark, dtw_oracle, rng,
+                                              in_blocks):
+        # ragged lengths cut into blocks of unequal series counts
         series = [list(rng.normal(size=int(n)))
                   for n in rng.integers(6, 80, 18)]
         df = _series_df(spark, series)
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            cond = to_condensed(distance_matrix(df, chunk_size=4), 18)
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        one = to_condensed(distance_matrix(df), 18)
+        cond = in_blocks(8 * 150, lambda: to_condensed(distance_matrix(df),
+                                                       18))
+        assert np.array_equal(cond, one)
         expected = np.asarray(dtw_oracle.distance_matrix(series, compact=True))
         np.testing.assert_allclose(cond, expected, rtol=1e-14)
 
@@ -314,7 +400,7 @@ class TestWithIndex:
 
 class TestOrderCol:
     """``distance_matrix(order_col=...)`` ranks ``i`` itself; it must equal
-    the matrix over ``with_index(order_col=...)`` on both strategies."""
+    the matrix over ``with_index(order_col=...)``, in one block or many."""
 
     @pytest.fixture(scope="class")
     def keyed(self, spark):
@@ -345,15 +431,14 @@ class TestOrderCol:
         assert len(got) > 0
         assert got.equals(want)
 
-    @pytest.mark.parametrize("block", [None, ((2, 10), (5, 20))])
-    def test_shuffle_equals_with_index(self, spark, keyed, block):
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "1")
-        try:
-            got, want = self._both(keyed, block=block, chunk_size=8)
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+    @pytest.mark.parametrize("block", [None, ((2, 10), (5, 20)),
+                                       ((0, 6), (3, 25), False)])
+    def test_blocked_equals_with_index(self, spark, keyed, block, in_blocks):
+        got, want = in_blocks(8 * 80, lambda: self._both(keyed, block=block))
+        one, _ = self._both(keyed, block=block)
         assert len(got) > 0
         assert got.equals(want)
+        assert got.equals(one)
 
     def test_ranks_follow_spark_order(self, spark, keyed):
         ids = [r[0] for r in keyed.orderBy("series_id").collect()]
@@ -395,8 +480,8 @@ class TestTriuUnrank:
 
 
 class TestPairExecutor:
-    """The broadcast strategy's per-range generator and worker cache,
-    driven directly without Spark."""
+    """The pair executor's per-range generator, block schedule and
+    worker cache, driven directly without Spark."""
 
     @pytest.mark.parametrize("space", ["triu", "block_triu", "block_rect"])
     def test_range_sub_batches_bounded(self, space):
@@ -436,7 +521,7 @@ class TestPairExecutor:
         from dtaidistance_spark.operators import matrix as M
 
         monkeypatch.setattr(M, "_CORPUS_CACHE", {})
-        entry = 2 * 10 * 8 * 8  # 10 series of 8 doubles, dict + stack
+        entry = 10 * 8 * 8  # the stack of 10 series of 8 doubles
         monkeypatch.setattr(M, "_CORPUS_CACHE_BYTES", 3 * entry)
         dicts = [M._SharedCorpus((i, np.full(8, float(k))) for i in range(10))
                  for k in range(5)]
@@ -447,8 +532,9 @@ class TestPairExecutor:
         assert len(M._CORPUS_CACHE) == 3  # at the cap, nothing evicted
         M._corpus_matrix(dicts[3])  # passes the cap: oldest goes
         assert len(M._CORPUS_CACHE) == 3
-        assert id(dicts[0]) not in M._CORPUS_CACHE
-        assert sum(e[2] for e in M._CORPUS_CACHE.values()) <= 3 * entry
+        assert (id(dicts[0]),) not in M._CORPUS_CACHE
+        assert sum(e[1][1].nbytes for e in M._CORPUS_CACHE.values()) \
+            <= 3 * entry
         ids, V = M._corpus_matrix(dicts[4])
         assert np.array_equal(ids, np.arange(10)) and (V == 4.0).all()
         # a ragged corpus has no stacked matrix and is not cached
@@ -456,9 +542,27 @@ class TestPairExecutor:
             M._SharedCorpus({0: np.zeros(3), 1: np.zeros(4)})) is None
         assert len(M._CORPUS_CACHE) == 3
 
+    def test_two_block_stack_cached_and_released(self, monkeypatch):
+        """A tile's join of two blocks stacks once per worker, keyed by
+        the blocks; the stack goes once the worker lets a block go."""
+        from dtaidistance_spark.operators import matrix as M
+
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        lo = M._SharedCorpus((i, np.full(4, float(i))) for i in range(3))
+        hi = M._SharedCorpus((i, np.full(4, float(i))) for i in range(3, 5))
+        ids, V = M._corpus_matrix(M._SharedCorpus.join([lo, hi]))
+        assert np.array_equal(ids, np.arange(5))
+        assert np.array_equal(V[:, 0], np.arange(5.0))
+        again = M._corpus_matrix(M._SharedCorpus.join([lo, hi]))
+        assert again[1] is V  # a fresh join of the same blocks hits
+        assert M._SharedCorpus.join([lo]) is lo
+        del hi, again
+        M._corpus_matrix(lo)  # a miss drops the stack of the freed block
+        assert list(M._CORPUS_CACHE) == [(id(lo),)]
+
     def test_one_shot_dicts_not_cached(self, monkeypatch):
-        """Shuffle groups and cross batches pass plain per-call dicts;
-        they are stacked for the kernel but never retained."""
+        """Cross batches pass plain per-call dicts; they are stacked for
+        the kernel but never retained."""
         from dtaidistance_spark.operators import matrix as M
 
         monkeypatch.setattr(M, "_CORPUS_CACHE", {})

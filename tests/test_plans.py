@@ -109,6 +109,26 @@ class TestPlans:
         # stay hash-partitioned
         assert plan.count("Exchange SinglePartition") <= 1, plan
 
+    @pytest.mark.parametrize("kw", [{}, {"block": ((0, 6), (3, 12))},
+                                    {"order_col": "i"}])
+    def test_distance_matrix_call_runs_one_job(self, spark, kw):
+        """A matrix call's only job is the corpus collect: no persist
+        and no stats pass run before it, and the pair ranges run when
+        the result is."""
+        from dtaidistance_spark.operators.matrix import distance_matrix
+        df = spark.createDataFrame(
+            [(i, [float(i), 1.0, float(i % 3)]) for i in range(12)],
+            "i long, values array<double>")
+        sc = spark.sparkContext
+        group = f"matrix-call-jobs-{sorted(kw)}"
+        sc.setJobGroup(group, "distance_matrix call")
+        try:
+            dist = distance_matrix(df, **kw)
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert dist.count() > 0
+
     @pytest.mark.parametrize("event_id", [-1, 10 ** 18])
     def test_surrogate_key_domain_fails_loudly(self, spark, tmp_path,
                                                event_id):

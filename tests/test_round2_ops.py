@@ -228,11 +228,9 @@ class TestWeightedMatrix:
                                          weights=weights[r.i])
             assert r.d == pytest.approx(exp, rel=1e-12)
 
-    def test_shuffle_fallback_vs_reference(self, spark, rng):
-        """Force the corpus above the broadcast gate so the blocked
-        chunk-pair shuffle path runs (corpora above the gate must never
-        be collected to the driver), and check the same reference
-        parity through it."""
+    def test_blocked_vs_reference(self, spark, rng, in_blocks):
+        """Cut the corpus into several broadcast blocks, weight profiles
+        included, and check the same reference parity through them."""
         from dtaidistance import dtw_weighted as ref_w
         from dtaidistance_spark.operators.matrix import distance_matrix_weighted
 
@@ -245,21 +243,23 @@ class TestWeightedMatrix:
         df = spark.createDataFrame(
             rows, "i long, values array<double>, "
                   "weights array<array<double>>")
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            got = distance_matrix_weighted(df).toPandas()
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+        one = distance_matrix_weighted(df).toPandas() \
+            .sort_values(["i", "j"]).reset_index(drop=True)
+        # 2160 B per series (values + profiles): two per block
+        got = in_blocks(2 * 8 * L * 9, lambda: distance_matrix_weighted(df)
+                        .toPandas().sort_values(["i", "j"])
+                        .reset_index(drop=True))
+        assert got.equals(one)
         assert len(got) == n * (n - 1) // 2
         for r in got.itertuples(index=False):
             exp, _ = ref_w.warping_paths(S[r.i], S[r.j],
                                          weights=weights[r.i])
             assert r.d == pytest.approx(exp, rel=1e-12)
 
-    def test_both_paths_equal_in_process_kernel(self, spark, rng):
-        """Broadcast and shuffle strategies both return, for every i < j
-        pair, exactly the in-process weighted_warping_paths distance
-        with row i's weights (a null profile means unweighted)."""
+    def test_both_paths_equal_in_process_kernel(self, spark, rng, in_blocks):
+        """One block and several both return, for every i < j pair,
+        exactly the in-process weighted_warping_paths distance with row
+        i's weights (a null profile means unweighted)."""
         from dtaidistance_spark.kernels.extras import weighted_warping_paths
         from dtaidistance_spark.operators.matrix import distance_matrix_weighted
 
@@ -273,12 +273,13 @@ class TestWeightedMatrix:
         df = spark.createDataFrame(
             rows, "i long, values array<double>, "
                   "weights array<array<double>>")
-        got = {"broadcast": distance_matrix_weighted(df, window=5).toPandas()}
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
-        try:
-            got["shuffle"] = distance_matrix_weighted(df, window=5).toPandas()
-        finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
+
+        def run():
+            return distance_matrix_weighted(df, window=5).toPandas() \
+                .sort_values(["i", "j"]).reset_index(drop=True)
+
+        got = {"one_block": run(), "blocks": in_blocks(2 * 8 * L * 9, run)}
+        assert got["blocks"].equals(got["one_block"])
         for name, pdf in got.items():
             assert sorted(zip(pdf["i"], pdf["j"])) == [
                 (i, j) for i in range(n) for j in range(i + 1, n)], name
