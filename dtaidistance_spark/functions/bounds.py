@@ -11,11 +11,12 @@ engine-native surface (and the driver-oracle query path).
 
 ub_euclidean (reference ed.py:47-79, equal lengths) is a one-liner:
 sqrt of the summed squared differences.
+
+Both run over one unhinted (i < j) self-join whose physical plan Spark
+chooses from its own size estimate (:func:`_self_pairs`).
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,54 +48,20 @@ def _self_pairs(base: DataFrame, other: DataFrame) -> DataFrame:
     """All ordered pairs (i < j) of ``base`` × ``other`` (same series
     set, ``other`` carries per-j derived columns).
 
-    Plan gate: when the series set fits the broadcast budget —
-    ``spark.dtaidistance.broadcastMatrixMaxBytes`` and
-    ``spark.dtaidistance.broadcastMatrixMaxPairs``, both read only here
-    (the matrix executor broadcasts its corpus in fixed-size blocks
-    instead) — broadcast ``other`` (no shuffle).
-    Above it, fall back to the chunk-pair shuffle plan — tag each base
-    row with its chunk's partner chunks via a tiny broadcast (ci, cj)
-    table, then equi-join on the partner chunk so both sides move
-    through a keyed shuffle instead of an executor-OOM broadcast
-    (ADVICE r3: the unconditional broadcast was a trap at corpus
-    scale)."""
-    from ..resources import track_persist
-
-    spark = base.sparkSession
-    base = track_persist(base.persist())
-    stats = base.agg(F.count("*").alias("n"),
-                     F.avg(F.size("v")).alias("alen")).collect()[0]
-    n = int(stats["n"] or 0)
-    est_bytes = n * float(stats["alen"] or 0) * 8
-    conf = spark.conf
-    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
-                               str(256 * 1024 * 1024)))
-    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
-                             str(20_000_000)))
-    if est_bytes <= max_bytes and n * (n - 1) // 2 <= max_pairs:
-        return base.join(F.broadcast(other), F.col("i") < F.col("j"))
-
-    par = spark.sparkContext.defaultParallelism
-    n_chunks = max(1, int(math.ceil(math.sqrt(16.0 * par))))
-    cs = max(8, -(-n // n_chunks))
-    cp = spark.createDataFrame(
-        [(ci, cj) for ci in range(n_chunks) for cj in range(n_chunks)
-         if ci <= cj], "ci int, cj int")
-    left = base.withColumn("ci", (F.col("i") / cs).cast("int")) \
-               .join(F.broadcast(cp), "ci")
-    right = other.withColumn("cj", (F.col("j") / cs).cast("int"))
-    return (left.join(right, "cj")
-            .where(F.col("i") < F.col("j"))
-            .drop("ci", "cj"))
+    One unhinted non-equi join: Spark plans a BroadcastNestedLoopJoin
+    when its own size estimate of a side is under
+    ``spark.sql.autoBroadcastJoinThreshold`` and a CartesianProduct
+    otherwise, which keeps per-task memory bounded at corpus scale.
+    Nothing runs until the result does."""
+    return base.join(other, F.col("i") < F.col("j"))
 
 
 def lb_keogh_pairs(series_df: DataFrame, window: int,
                    index_col: str = "i",
                    values_col: str = "values") -> DataFrame:
     """All ordered pairs (i < j): LB_Keogh(s_i, envelope(s_j)) — the
-    admissible DTW lower bound, entirely JVM-side.  The self-join
-    broadcasts the envelope side under the matrix broadcast gate and
-    takes the chunk-pair shuffle plan above it."""
+    admissible DTW lower bound, entirely JVM-side, over one self-join
+    (see :func:`_self_pairs`)."""
     base = series_df.select(F.col(index_col).cast("long").alias("i"),
                             F.col(values_col).alias("v"))
     lo, hi = envelope_cols("vj", window)

@@ -1,42 +1,24 @@
 """Pure-numpy media codecs for the multimodal pipeline.
 
-Real decoders for the raster/audio formats decodable from public specs
-with only the standard library — binary PPM (P6, netpbm spec), 24-bit
-uncompressed BMP (BITMAPINFOHEADER, BI_RGB), RIFF/WAVE audio —
-PCM16, unsigned PCM8, multi-channel downmix, and **IMA ADPCM**
-(format 0x11, the public IMA/DVI 4-bit compressed codec: block state
-headers + bit-serial step reconstruction, so compressed audio decodes
-natively too), ITU-T G.711 a-law/µ-law expansion, and IEEE-float —,
-**PNG** (r5: all five color types — truecolor,
-grayscale, palette/PLTE, gray+alpha and RGBA (alpha dropped) — at 8-
-and 16-bit depth (high-byte reduction) — stdlib
-``zlib`` inflate + the five scanline unfilters None/Sub/Up/Average/
-Paeth from the public PNG spec §9; Adam7 interlace — seven
-independently filtered subsampled passes, spec §8.2 — decodes too), and **baseline JPEG** (r5: ITU-T T.81 sequential DCT —
-canonical Huffman entropy decode per Annex F, dequantize + de-zigzag +
-exact float IDCT per A.3.3, chroma replication upsample, JFIF
-YCbCr→RGB; grayscale and 3-component frames with any integer-ratio
-sampling factors, restart markers, 8-bit precision) — so the decode →
-resize → feature path in ``operators/multimodal.py`` exercises genuine
-byte parsing of the two most common real-corpus compressed image
-formats instead of a hash stub (VERDICT r3 item 6 + r4 item 3).
-**Progressive JPEG** (SOF2, late r5) is decoded too: spectral
-selection, successive approximation (DC bit refinement, AC EOB-run +
-correction-bit refinement per T.81 G.1.2), interleaved DC and
-per-component AC scans, restart markers, between-scan table
-definition.  **GIF** (late r5) decodes too: GIF89a/87a descriptor
-walk, global/local palettes, extension skipping, and real
-variable-width dictionary LZW (grow-to-12-bits, CLEAR reset) for
-single-frame images, including the four-pass interlaced row order.  Lossless/arithmetic/12-bit
-JPEG and MP3/non-MJPEG video remain behind the honest
-``NotImplementedError`` codec boundary (they need external codecs).
+Real decoders for the formats ``synth_media`` writes, each parsed
+byte-for-byte from its public spec with only the standard library:
+
+* binary PPM (P6, netpbm spec);
+* **PNG** (all five color types — truecolor, grayscale, palette/PLTE,
+  gray+alpha and RGBA (alpha dropped) — at every legal bit depth,
+  stdlib ``zlib`` inflate + the five scanline unfilters None/Sub/Up/
+  Average/Paeth of spec §9, Adam7 interlace per spec §8.2);
+* RIFF/WAVE audio: PCM16, unsigned PCM8 and IEEE float32, with a
+  multi-channel downmix;
+* RIFF/AVI video with uncompressed DIB frames.
+
+Everything else (JPEG, GIF, BMP, compressed WAVE or AVI codecs, MP3)
+sniffs as ``'unknown'`` or raises ``NotImplementedError`` in the
+decoder, and ``operators/multimodal.py::decode_features`` takes its
+hash-stub path (or raises with ``fake=False``).
 
 Encoders exist so tests and ``synth_media`` can build deterministic
-payloads without any imaging library.  The JPEG encoder is a minimal
-independent implementation (FDCT + quantize + run-length Huffman with
-programmatically generated canonical tables) used by the tests as a
-roundtrip oracle; it shares no tables or state with the decoder beyond
-the public spec's constants.
+payloads without any imaging library.
 """
 
 from __future__ import annotations
@@ -46,28 +28,20 @@ import zlib
 
 import numpy as np
 
-__all__ = ["encode_ppm", "decode_ppm", "encode_bmp", "decode_bmp",
-           "encode_png", "decode_png", "encode_wav", "decode_wav",
-           "encode_jpeg", "encode_jpeg_progressive", "decode_jpeg",
-           "encode_avi", "decode_avi", "encode_gif", "decode_gif",
+__all__ = ["encode_ppm", "decode_ppm", "encode_png", "decode_png",
+           "encode_wav", "decode_wav", "encode_avi", "decode_avi",
            "decode_raster", "sniff_format"]
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def sniff_format(payload: bytes) -> str:
-    """'ppm' | 'bmp' | 'png' | 'jpeg' | 'wav' | 'avi' | 'unknown' from
-    magic bytes."""
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
+    """'ppm' | 'png' | 'wav' | 'avi' | 'unknown' from magic bytes.
+    Any other format, JPEG, GIF and BMP included, is 'unknown'."""
     if payload[:2] == b"P6":
         return "ppm"
-    if payload[:2] == b"BM":
-        return "bmp"
     if payload[:8] == _PNG_SIG:
         return "png"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return "wav"
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
@@ -80,14 +54,8 @@ def decode_raster(payload: bytes) -> np.ndarray:
     fmt = sniff_format(payload)
     if fmt == "ppm":
         return decode_ppm(payload)
-    if fmt == "bmp":
-        return decode_bmp(payload)
     if fmt == "png":
         return decode_png(payload)
-    if fmt == "jpeg":
-        return decode_jpeg(payload)
-    if fmt == "gif":
-        return decode_gif(payload)
     raise ValueError(f"not a supported raster payload (fmt={fmt})")
 
 
@@ -103,165 +71,31 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     return hdr + pcm
 
 
-# IMA/DVI ADPCM tables (public IMA "Recommended Practices for
-# Enhancing Digital Audio Compatibility", rev 3.00; also RFC 3551 §4.5.1)
-_IMA_STEPS = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
-    37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
-    157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
-    544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-    1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-    4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
-    12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-    29794, 32767], dtype=np.int64)
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8,
-                       -1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-
-
-def _ima_step(predictor: int, index: int, nibble: int):
-    """One IMA ADPCM state transition → (new predictor, new index).
-    The reconstruction formula diff = (step·code + step/2) / 4 is
-    evaluated bit-serially (step>>3 + conditional step>>2/>>1/step) as
-    the spec prescribes — integer-exact, so encoder and decoder stay in
-    lockstep."""
-    step = int(_IMA_STEPS[index])
-    diff = step >> 3
-    if nibble & 1:
-        diff += step >> 2
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 4:
-        diff += step
-    predictor = predictor - diff if nibble & 8 else predictor + diff
-    predictor = max(-32768, min(32767, predictor))
-    index = max(0, min(88, index + int(_IMA_INDEX[nibble])))
-    return predictor, index
-
-
-def encode_wav_adpcm(samples: np.ndarray, sample_rate: int = 16000,
-                     block_align: int = 256) -> bytes:
-    """Mono int16 → IMA ADPCM RIFF/WAVE (format tag 0x11): 4 bits per
-    sample in ``block_align``-byte blocks, each led by a 4-byte state
-    header (int16 predictor = the block's first output sample, step
-    index, reserved).  The encoder quantizes against the decoder's own
-    reconstruction so drift never accumulates."""
-    s = np.asarray(samples, dtype=np.int64)
-    spb = (block_align - 4) * 2 + 1  # samples per block
-    index = 0
-    out = bytearray()
-    for b0 in range(0, len(s), spb):
-        blk = s[b0:b0 + spb]
-        predictor = int(blk[0])
-        out += struct.pack("<hBB", predictor, index, 0)
-        nibbles = []
-        for x in map(int, blk[1:]):
-            step = int(_IMA_STEPS[index])
-            delta = x - predictor
-            code = 8 if delta < 0 else 0
-            delta = abs(delta)
-            if delta >= step:
-                code |= 4
-                delta -= step
-            if delta >= step >> 1:
-                code |= 2
-                delta -= step >> 1
-            if delta >= step >> 2:
-                code |= 1
-            predictor, index = _ima_step(predictor, index, code)
-            nibbles.append(code)
-        nibbles += [0] * ((spb - 1) - len(nibbles))  # pad final block
-        for lo, hi in zip(nibbles[0::2], nibbles[1::2]):
-            out.append(lo | (hi << 4))
-    byte_rate = sample_rate * block_align // spb
-    hdr = (b"RIFF" + struct.pack("<I", 52 + len(out)) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHHHH", 20, 0x11, 1, sample_rate,
-                                   byte_rate, block_align, 4, 2, spb)
-           + b"fact" + struct.pack("<II", 4, len(s))
-           + b"data" + struct.pack("<I", len(out)))
-    return hdr + bytes(out)
-
-
-def _decode_ima_blocks(data: bytes, block_align: int) -> np.ndarray:
-    spb = (block_align - 4) * 2 + 1
-    out = []
-    for b0 in range(0, len(data), block_align):
-        blk = data[b0:b0 + block_align]
-        if len(blk) < 4:
-            raise ValueError("truncated IMA ADPCM block")
-        predictor, index, _ = struct.unpack_from("<hBB", blk, 0)
-        if index > 88:
-            raise ValueError("corrupt IMA ADPCM step index")
-        samples = [predictor]
-        for byte in blk[4:]:
-            for nib in (byte & 0x0F, byte >> 4):
-                predictor, index = _ima_step(predictor, index, nib)
-                samples.append(predictor)
-        out += samples[:spb]
-    return np.asarray(out, dtype=np.int16)
-
-
-def _g711_tables():
-    """Expansion tables for the two ITU-T G.711 companding laws,
-    derived from the standard's segment/mantissa layout (both are
-    algorithmically defined, no tabulated constants needed).
-
-    µ-law: byte = ~(sign | exponent<<4 | mantissa); linear =
-    ((mantissa<<3 | 0x84) << exponent) - 0x84, sign-applied.
-    A-law: byte = toggled with 0x55; segment 0 is linear
-    (2·mantissa+1)<<3, segments 1-7 are ((mantissa|0x10)·2+1)<<segment+2.
-    """
-    codes = np.arange(256, dtype=np.int64)
-    # µ-law
-    u = ~codes & 0xFF
-    sign = np.where(u & 0x80, -1, 1)
-    exp = (u >> 4) & 0x07
-    mant = u & 0x0F
-    ulaw = sign * (((mant << 3) | 0x84) << exp) - sign * 0x84
-    # A-law (after the 0x55 toggle, bit 7 SET means positive)
-    a = codes ^ 0x55
-    sign_a = np.where(a & 0x80, 1, -1)
-    seg = (a >> 4) & 0x07
-    mant_a = a & 0x0F
-    low = (mant_a * 2 + 1) << 3                      # segment 0
-    high = ((mant_a + 16) * 2 + 1) << (seg + 2)      # segments 1-7
-    alaw = sign_a * np.where(seg == 0, low, high)
-    return (alaw.astype(np.int16), np.clip(
-        ulaw, -32768, 32767).astype(np.int16))
-
-
-_ALAW_TABLE, _ULAW_TABLE = _g711_tables()
-
-
 def decode_wav(payload: bytes):
     """RIFF/WAVE bytes → (mono int16 sample array, sample_rate).  Walks
     the chunk list (a spec-conformant file may carry LIST/fact chunks
     before ``data``).  Decodes PCM16, unsigned PCM8 (rescaled to
-    int16), IEEE float32 ([-1, 1] rescaled with clipping), ITU-T G.711
-    a-law/µ-law expansion, and IMA ADPCM (format 0x11, mono —
-    ``fact``-trimmed, so the encoder's final-block padding is
-    dropped); multi-channel PCM/float/G.711 downmixes by the
-    floor-mean of each frame, tolerating a trailing partial frame.
-    MP3 stays behind the NotImplementedError codec boundary."""
+    int16) and IEEE float32 ([-1, 1] rescaled with clipping);
+    multi-channel input downmixes by the floor-mean of each frame,
+    tolerating a trailing partial frame.  Any other format tag
+    (ADPCM, G.711, MP3, ...) raises NotImplementedError."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos = 12
     fmt = None
     data = None
-    n_fact = None
     while pos + 8 <= len(payload):
         cid = payload[pos:pos + 4]
         size = struct.unpack("<I", payload[pos + 4:pos + 8])[0]
         body = payload[pos + 8:pos + 8 + size]
         if cid == b"fmt ":
             fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"fact" and size >= 4:
-            n_fact = struct.unpack("<I", body[:4])[0]
         elif cid == b"data":
             data = body
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("WAVE payload missing fmt or data chunk")
-    tag, ch, sample_rate, _rate, block_align, bits = fmt
+    tag, ch, sample_rate, _rate, _align, bits = fmt
     if ch < 1:
         raise ValueError("WAVE fmt chunk declares zero channels")
     if tag == 1 and bits == 16:
@@ -275,21 +109,10 @@ def decode_wav(payload: bytes):
             data[:len(data) // (4 * ch) * 4 * ch], dtype="<f4")
         samples = np.clip(np.trunc(f.astype(np.float64) * 32767.0),
                           -32768, 32767).astype(np.int16)
-    elif tag == 6 and bits == 8:  # ITU-T G.711 A-law
-        a8 = np.frombuffer(data[:len(data) // ch * ch], dtype=np.uint8)
-        samples = _ALAW_TABLE[a8]
-    elif tag == 7 and bits == 8:  # ITU-T G.711 µ-law
-        u8 = np.frombuffer(data[:len(data) // ch * ch], dtype=np.uint8)
-        samples = _ULAW_TABLE[u8]
-    elif tag == 0x11 and bits == 4 and ch == 1:
-        samples = _decode_ima_blocks(data, block_align)
-        if n_fact is not None:  # trim the final block's padding
-            samples = samples[:n_fact]
-        return samples, sample_rate
     else:
         raise NotImplementedError(
             f"WAVE format tag={tag} bits={bits} ch={ch} is not decoded "
-            "natively; MP3 needs soundfile/ffmpeg")
+            "natively; it needs soundfile/ffmpeg")
     if ch > 1:  # deterministic downmix: per-frame floor-mean
         frames = samples.reshape(-1, ch).astype(np.int32)
         samples = (frames.sum(axis=1) // ch).astype(np.int16)
@@ -600,1058 +423,13 @@ def _png_unfilter_pass(raw: np.ndarray, bpp: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# BMP: 14-byte file header + 40-byte BITMAPINFOHEADER, 24bpp BI_RGB,
-# bottom-up rows padded to 4 bytes, BGR channel order
-# ---------------------------------------------------------------------------
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB → 24-bit uncompressed BMP bytes."""
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, c = img.shape
-    if c != 3:
-        raise ValueError("24-bit BMP requires 3 channels")
-    row_size = (3 * w + 3) // 4 * 4
-    raster = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = img[y, :, ::-1].tobytes()  # RGB → BGR
-        raster += row + b"\x00" * (row_size - len(row))
-    data_off = 14 + 40
-    file_size = data_off + len(raster)
-    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, data_off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raster),
-                       2835, 2835, 0, 0)
-    return header + info + bytes(raster)
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """24-bit uncompressed BMP bytes → (h, w, 3) uint8 RGB (handles
-    bottom-up and top-down rows, 4-byte row padding)."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = struct.unpack_from("<I", payload, 14)[0]
-    if hdr_size < 40:
-        raise ValueError("only BITMAPINFOHEADER (>=40 bytes) supported")
-    w, h_signed = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ValueError(f"only 24bpp BI_RGB supported (bpp={bpp}, "
-                         f"compression={compression})")
-    top_down = h_signed < 0
-    h = abs(h_signed)
-    row_size = (3 * w + 3) // 4 * 4
-    out = np.empty((h, w, 3), dtype=np.uint8)
-    for r in range(h):
-        off = data_off + r * row_size
-        row = np.frombuffer(payload[off:off + 3 * w],
-                            dtype=np.uint8).reshape(w, 3)
-        y = r if top_down else h - 1 - r
-        out[y] = row[:, ::-1]  # BGR → RGB
-    return out
-
-
-# ---------------------------------------------------------------------------
-# JPEG (public spec, ITU-T T.81 / ISO 10918-1): baseline sequential DCT.
-# Decoder scope: 8-bit precision, Huffman entropy coding, single
-# interleaved scan, 1-component (grayscale) or 3-component (JFIF YCbCr)
-# frames with integer-ratio sampling factors, restart markers.
-# Progressive (SOF2), arithmetic coding, 12-bit, and hierarchical modes
-# raise NotImplementedError — the honest codec boundary.
-#
-# The per-symbol entropy loop is Python (documented slow path: media
-# decode runs inside the Arrow mapInPandas operator, never in a
-# relational hot path); dequantize / de-zigzag / IDCT / upsample /
-# color-convert are batched numpy over all blocks of a component.
-# ---------------------------------------------------------------------------
-
-
-def _zigzag_index() -> np.ndarray:
-    """The spec's zig-zag scan order (T.81 Figure 5) as a (64,) array of
-    flat 8×8 indices, generated from the diagonal-walk rule rather than
-    pasted as a literal: diagonal d = row+col; odd diagonals walk
-    top-right → bottom-left (row ascending), even ones the reverse."""
-    order = []
-    for d in range(15):
-        rows = range(max(0, d - 7), min(d, 7) + 1)
-        for r in (rows if d % 2 else reversed(list(rows))):
-            order.append(r * 8 + (d - r))
-    return np.asarray(order, dtype=np.int64)
-
-
-_ZZ = _zigzag_index()
-_UNZZ = np.argsort(_ZZ)  # position of flat index k in the zigzag stream
-
-
-def _dct_basis() -> np.ndarray:
-    """Orthonormal 8-point DCT-II matrix A with A[u, x] =
-    0.5·c(u)·cos((2x+1)uπ/16), c(0)=1/√2 — the exact float transform of
-    T.81 A.3.3: F = A·f·Aᵀ, f = Aᵀ·F·A."""
-    u = np.arange(8)[:, None].astype(np.float64)
-    x = np.arange(8)[None, :].astype(np.float64)
-    a = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16.0)
-    a[0, :] /= np.sqrt(2.0)
-    return a
-
-
-_DCT_A = _dct_basis()
-
-
-class _HuffTable:
-    """Canonical JPEG Huffman table (T.81 Annex C generation, Annex F
-    DECODE procedure): BITS[1..16] code-length counts + HUFFVAL symbol
-    list → mincode/maxcode/valptr arrays for O(code length) decode."""
-
-    def __init__(self, bits, huffval):
-        if sum(bits) != len(huffval):
-            raise ValueError("DHT: BITS total != number of symbols")
-        self.huffval = list(huffval)
-        self.mincode = [0] * 17
-        self.maxcode = [-1] * 17
-        self.valptr = [0] * 17
-        code = 0
-        k = 0
-        for ln in range(1, 17):
-            n = bits[ln - 1]
-            if n:
-                self.valptr[ln] = k
-                self.mincode[ln] = code
-                code += n
-                k += n
-                self.maxcode[ln] = code - 1
-            if code > (1 << ln):
-                raise ValueError("DHT: over-subscribed Huffman table")
-            code <<= 1
-
-    def decode(self, br: "_BitReader") -> int:
-        code = br.read_bit()
-        ln = 1
-        while code > self.maxcode[ln]:
-            if ln >= 16:
-                raise ValueError("invalid Huffman code (>16 bits)")
-            code = (code << 1) | br.read_bit()
-            ln += 1
-        return self.huffval[self.valptr[ln] + code - self.mincode[ln]]
-
-
-class _BitReader:
-    """MSB-first bit reader over already de-stuffed entropy bytes."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("truncated JPEG entropy segment")
-        b = (self.data[self.pos] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return b
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map s received bits to the signed value."""
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
-def _split_entropy(payload: bytes, pos: int):
-    """From the start of entropy-coded data, strip 0xFF00 byte stuffing
-    and split at RSTn markers → (list of de-stuffed segments, position
-    of the terminating marker's 0xFF byte)."""
-    segments = []
-    cur = bytearray()
-    n = len(payload)
-    while pos < n:
-        b = payload[pos]
-        if b != 0xFF:
-            cur.append(b)
-            pos += 1
-            continue
-        nxt = payload[pos + 1] if pos + 1 < n else 0xD9
-        if nxt == 0x00:           # stuffed literal 0xFF
-            cur.append(0xFF)
-            pos += 2
-        elif 0xD0 <= nxt <= 0xD7:  # restart marker
-            segments.append(bytes(cur))
-            cur = bytearray()
-            pos += 2
-        else:                      # any real marker ends the scan
-            break
-    segments.append(bytes(cur))
-    return segments, pos
-
-
-def _seq_scan(coefs, comps, scan, mcux, mcuy):
-    """One interleaved sequential scan (T.81 F.2.2): DC difference +
-    AC run/size coding for every data unit of every MCU."""
-    order, _, _, _, _, segments, dc_tabs, ac_tabs, dri = scan
-    seg_i = 0
-    br = _BitReader(segments[0])
-    preds = [0] * len(comps)
-    for mcu in range(mcux * mcuy):
-        if dri and mcu and mcu % dri == 0:
-            seg_i += 1
-            if seg_i >= len(segments):
-                raise ValueError("JPEG missing restart segment")
-            br = _BitReader(segments[seg_i])
-            preds = [0] * len(comps)
-        my, mx = divmod(mcu, mcux)
-        for idx, tdc, tac in order:
-            _, hs, vs, _ = comps[idx]
-            dc_t, ac_t = dc_tabs[tdc], ac_tabs[tac]
-            for v in range(vs):
-                for hrz in range(hs):
-                    blk = coefs[idx][(my * vs + v) * (mcux * hs)
-                                     + (mx * hs + hrz)]
-                    s = dc_t.decode(br)
-                    if s > 11:
-                        raise ValueError("invalid DC size category")
-                    diff = _extend(br.receive(s), s) if s else 0
-                    preds[idx] += diff
-                    blk[0] = preds[idx]
-                    k = 1
-                    while k < 64:
-                        rs = ac_t.decode(br)
-                        r, s = rs >> 4, rs & 0xF
-                        if s == 0:
-                            if r == 15:  # ZRL: 16 zeros
-                                k += 16
-                                continue
-                            break        # EOB
-                        k += r
-                        if k > 63:
-                            raise ValueError("AC run past block end")
-                        blk[k] = _extend(br.receive(s), s)
-                        k += 1
-
-
-def _comp_grid(comps, idx, mcux, hmax, vmax, w, h):
-    """Non-interleaved scan geometry for one component (T.81 A.2.2):
-    (blocks across, blocks down, row stride in the MCU-padded store)."""
-    _, hs, vs, _ = comps[idx]
-    cw = -(-w * hs // hmax)
-    ch = -(-h * vs // vmax)
-    return -(-cw // 8), -(-ch // 8), mcux * hs
-
-
-def _prog_scan(coefs, comps, scan, mcux, mcuy, hmax, vmax, w, h):
-    """Accumulate one progressive scan into the coefficient store
-    (T.81 G.2): DC scans may be interleaved; AC scans are per-component
-    over that component's own (non-MCU-padded) block raster."""
-    order, ss, se, ah, al, segments, dc_tabs, ac_tabs, dri = scan
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive scan mixes DC and AC bands")
-        _prog_dc_scan(coefs, comps, order, segments, dc_tabs, ah, al,
-                      dri, mcux, mcuy, hmax, vmax, w, h)
-        return
-    if len(order) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    idx, _, tac = order[0]
-    nbx, nby, stride = _comp_grid(comps, idx, mcux, hmax, vmax, w, h)
-    if ah == 0:
-        _prog_ac_first(coefs[idx], ac_tabs[tac], segments, ss, se, al,
-                       dri, nbx, nby, stride)
-    else:
-        _prog_ac_refine(coefs[idx], ac_tabs[tac], segments, ss, se, al,
-                        dri, nbx, nby, stride)
-
-
-def _dc_unit(br, blk, dc_t, preds, idx, ah, al):
-    """One data unit of a progressive DC scan: first pass (Ah=0) codes
-    the size-category/diff pair of coef>>Al; refinement passes append
-    one low-order bit per block (T.81 G.1.2.1)."""
-    if ah == 0:
-        s = dc_t.decode(br)
-        if s > 11:
-            raise ValueError("invalid DC size category")
-        diff = _extend(br.receive(s), s) if s else 0
-        preds[idx] += diff
-        blk[0] = preds[idx] << al
-    elif br.read_bit():
-        blk[0] = int(blk[0]) | (1 << al)
-
-
-def _prog_dc_scan(coefs, comps, order, segments, dc_tabs, ah, al, dri,
-                  mcux, mcuy, hmax, vmax, w, h):
-    seg_i = 0
-    br = _BitReader(segments[0])
-    preds = [0] * len(comps)
-    if len(order) > 1:  # interleaved: MCU walk over the padded grid
-        for mcu in range(mcux * mcuy):
-            if dri and mcu and mcu % dri == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    raise ValueError("JPEG missing restart segment")
-                br = _BitReader(segments[seg_i])
-                preds = [0] * len(comps)
-            my, mx = divmod(mcu, mcux)
-            for idx, tdc, _ in order:
-                _, hs, vs, _ = comps[idx]
-                dc_t = dc_tabs[tdc] if ah == 0 else None
-                for v in range(vs):
-                    for hrz in range(hs):
-                        blk = coefs[idx][(my * vs + v) * (mcux * hs)
-                                         + (mx * hs + hrz)]
-                        _dc_unit(br, blk, dc_t, preds, idx, ah, al)
-    else:  # single component: its own block raster
-        idx, tdc, _ = order[0]
-        dc_t = dc_tabs[tdc] if ah == 0 else None
-        nbx, nby, stride = _comp_grid(comps, idx, mcux, hmax, vmax, w, h)
-        cnt = 0
-        for by in range(nby):
-            for bx in range(nbx):
-                if dri and cnt and cnt % dri == 0:
-                    seg_i += 1
-                    if seg_i >= len(segments):
-                        raise ValueError("JPEG missing restart segment")
-                    br = _BitReader(segments[seg_i])
-                    preds = [0] * len(comps)
-                cnt += 1
-                _dc_unit(br, coefs[idx][by * stride + bx], dc_t, preds,
-                         idx, ah, al)
-
-
-def _prog_ac_first(coefs_c, ac_t, segments, ss, se, al, dri,
-                   nbx, nby, stride):
-    """First AC pass of a spectral band (T.81 G.1.2.2): run/size pairs
-    scaled by 2^Al plus EOB-run codes spanning whole blocks."""
-    seg_i = 0
-    br = _BitReader(segments[0])
-    eobrun = 0
-    cnt = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if dri and cnt and cnt % dri == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    raise ValueError("JPEG missing restart segment")
-                br = _BitReader(segments[seg_i])
-                eobrun = 0
-            cnt += 1
-            if eobrun:
-                eobrun -= 1
-                continue
-            blk = coefs_c[by * stride + bx]
-            k = ss
-            while k <= se:
-                rs = ac_t.decode(br)
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    eobrun = (1 << r) - 1  # run includes this block
-                    if r:
-                        eobrun += br.receive(r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("AC run past band end")
-                blk[k] = _extend(br.receive(s), s) << al
-                k += 1
-
-
-def _refine_nonzero(br, blk, k, p1, m1):
-    """Apply one buffered correction bit to an already-nonzero
-    coefficient: grow its magnitude by 2^Al if the bit is set and that
-    bit isn't already present (T.81 G.1.2.3)."""
-    if br.read_bit() and not (int(blk[k]) & p1):
-        blk[k] += p1 if blk[k] >= 0 else m1
-
-
-def _prog_ac_refine(coefs_c, ac_t, segments, ss, se, al, dri,
-                    nbx, nby, stride):
-    """AC refinement pass (T.81 G.1.2.3): newly-nonzero coefficients
-    arrive as size-1 run codes; every already-nonzero coefficient
-    crossed — including the remainder of a block where an EOB run
-    starts, and all nonzero coefficients of blocks the run covers —
-    consumes one correction bit."""
-    p1, m1 = 1 << al, -1 << al
-    seg_i = 0
-    br = _BitReader(segments[0])
-    eobrun = 0
-    cnt = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if dri and cnt and cnt % dri == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    raise ValueError("JPEG missing restart segment")
-                br = _BitReader(segments[seg_i])
-                eobrun = 0
-            cnt += 1
-            blk = coefs_c[by * stride + bx]
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = ac_t.decode(br)
-                    r, s = rs >> 4, rs & 0xF
-                    val = 0
-                    if s:
-                        if s != 1:
-                            raise ValueError(
-                                "AC refinement size category must be 1")
-                        val = p1 if br.read_bit() else m1
-                    elif r != 15:
-                        eobrun = 1 << r  # includes this block's tail
-                        if r:
-                            eobrun += br.receive(r)
-                        break
-                    # advance past r zero-history positions (16 for ZRL),
-                    # correcting nonzero coefficients crossed on the way
-                    while k <= se:
-                        if blk[k] != 0:
-                            _refine_nonzero(br, blk, k, p1, m1)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val:
-                        if k > se:
-                            raise ValueError(
-                                "AC refinement run past band end")
-                        blk[k] = val
-                    k += 1
-            if eobrun:
-                while k <= se:  # correction bits for the block remainder
-                    if blk[k] != 0:
-                        _refine_nonzero(br, blk, k, p1, m1)
-                    k += 1
-                eobrun -= 1
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline or progressive JPEG bytes → (h, w, 3) uint8 RGB
-    (grayscale replicated across channels, matching
-    :func:`decode_raster`'s contract).
-
-    Sequential (SOF0/SOF1) streams take the single-interleaved-scan MCU
-    loop; progressive (SOF2) streams accumulate coefficients scan by
-    scan — spectral selection (Ss..Se bands), successive approximation
-    (DC arithmetic-shift + AC magnitude point transform, first and
-    refinement passes with EOB-run coding, T.81 G.1.2), interleaved DC
-    and per-component AC scans, restart markers, and between-scan table
-    redefinition (tables are snapshotted per scan).  Both modes share
-    one dequantize → de-zigzag → IDCT → upsample → YCbCr reconstruction,
-    so a sequential and a progressive encoding of the same quantized
-    coefficients decode to bit-identical pixels (the test oracle)."""
-    if payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG payload")
-    qt = {}        # table id -> (64,) int array in zigzag order
-    dc_tabs = {}
-    ac_tabs = {}
-    frame = None   # (h, w, [(cid, hs, vs, tq), ...])
-    progressive = False
-    restart = 0
-    scans = []     # (order, Ss, Se, Ah, Al, segments, dc snap, ac snap, dri)
-    pos = 2
-    n = len(payload)
-    while pos < n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        while pos < n and payload[pos] == 0xFF:  # fill bytes
-            pos += 1
-        m = payload[pos]
-        pos += 1
-        if m == 0xD9:  # EOI
-            break
-        if m == 0x01 or 0xD0 <= m <= 0xD7:  # TEM / stray RST: no body
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        body = payload[pos + 2:pos + seglen]
-        pos += seglen
-        if m in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended sequential
-            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise NotImplementedError(
-                    f"only 8-bit JPEG precision is decoded natively "
-                    f"(got {prec})")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * i)
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            frame = (h, w, comps)
-        elif m == 0xC2:  # SOF2 progressive (huffman)
-            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise NotImplementedError(
-                    f"only 8-bit JPEG precision is decoded natively "
-                    f"(got {prec})")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * i)
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            frame = (h, w, comps)
-            progressive = True
-        elif m in (0xC3, 0xC5, 0xC6, 0xC7,
-                   0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF marker 0x{m:02X} (lossless / arithmetic / "
-                "differential) is outside this decoder; needs "
-                "Pillow/libjpeg")
-        elif m == 0xC4:  # DHT — may hold several tables
-            off = 0
-            while off < len(body):
-                tc_th = body[off]
-                bits = list(body[off + 1:off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17:off + 17 + nv])
-                tab = _HuffTable(bits, vals)
-                (dc_tabs if tc_th >> 4 == 0 else ac_tabs)[tc_th & 0xF] = tab
-                off += 17 + nv
-        elif m == 0xDB:  # DQT — may hold several tables
-            off = 0
-            while off < len(body):
-                pq_tq = body[off]
-                if pq_tq >> 4 == 0:
-                    q = np.frombuffer(body[off + 1:off + 65],
-                                      dtype=np.uint8).astype(np.int64)
-                    off += 65
-                else:  # 16-bit precision table
-                    q = np.frombuffer(body[off + 1:off + 129],
-                                      dtype=">u2").astype(np.int64)
-                    off += 129
-                qt[pq_tq & 0xF] = q
-        elif m == 0xDD:  # DRI
-            (restart,) = struct.unpack_from(">H", body, 0)
-        elif m == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            comps = frame[2]
-            if not progressive and ns != len(comps):
-                raise NotImplementedError(
-                    "only single interleaved sequential scans are decoded "
-                    "natively (non-interleaved sequential needs libjpeg)")
-            order = []
-            for i in range(ns):
-                cs, tt = struct.unpack_from(">BB", body, 1 + 2 * i)
-                idx = next(j for j, c in enumerate(comps) if c[0] == cs)
-                order.append((idx, tt >> 4, tt & 0xF))
-            ss, se, ahal = body[1 + 2 * ns:4 + 2 * ns]
-            segments, pos = _split_entropy(payload, pos)
-            # snapshot the Huffman tables and restart interval in effect
-            # for THIS scan — later DHT/DRI segments may redefine them
-            scans.append((order, ss, se, ahal >> 4, ahal & 0xF, segments,
-                          dict(dc_tabs), dict(ac_tabs), restart))
-            if not progressive:
-                break
-        # else: APPn / COM / DNL — skipped
-    if frame is None or not scans:
-        raise ValueError("JPEG missing SOF or SOS")
-    h, w, comps = frame
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # zigzag-order coefficient store per component, one row per block
-    coefs = [np.zeros((mcuy * c[2] * mcux * c[1], 64), dtype=np.int64)
-             for c in comps]
-    if progressive:
-        for scan in scans:
-            _prog_scan(coefs, comps, scan, mcux, mcuy, hmax, vmax, w, h)
-    else:
-        _seq_scan(coefs, comps, scans[0], mcux, mcuy)
-
-    planes = []
-    for ci, (cid, hs, vs, tq) in enumerate(comps):
-        q = qt[tq]
-        blocks = coefs[ci] * q[None, :]          # dequantize (zigzag)
-        blocks = blocks[:, _UNZZ].reshape(-1, 8, 8)  # de-zigzag
-        spatial = np.einsum("ux,nuv,vy->nxy", _DCT_A, blocks.astype(
-            np.float64), _DCT_A)                 # f = Aᵀ·F·A batched
-        spatial = np.clip(np.round(spatial) + 128, 0, 255)
-        bw = mcux * hs
-        plane = spatial.reshape(mcuy * vs, bw, 8, 8) \
-            .transpose(0, 2, 1, 3).reshape(mcuy * vs * 8, bw * 8)
-        cw = -(-w * hs // hmax)   # ceil(w·hs/hmax): component size
-        ch = -(-h * vs // vmax)
-        plane = plane[:ch, :cw]
-        if hs != hmax or vs != vmax:
-            if hmax % hs or vmax % vs:
-                raise NotImplementedError(
-                    "non-integer chroma sampling ratios need libjpeg")
-            plane = np.repeat(np.repeat(plane, vmax // vs, axis=0),
-                              hmax // hs, axis=1)
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        g = planes[0].astype(np.uint8)
-        return np.stack([g, g, g], axis=2)
-    if len(planes) != 3:
-        raise NotImplementedError(
-            f"{len(planes)}-component JPEG (CMYK?) needs libjpeg")
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], axis=2)), 0,
-                   255).astype(np.uint8)
-
-
-# --- JPEG encoder (minimal, for tests/synthetic payloads only) -------------
-
-
-def _huff_codes(bits, huffval):
-    """Canonical code assignment (T.81 Annex C): symbol -> (code, len)."""
-    codes = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            codes[huffval[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-# Encoder-side tables.  DC: the public Annex K luminance layout (also
-# exercises multi-length canonical decoding).  AC: a programmatically
-# generated flat table — all 162 baseline AC symbols (EOB, ZRL, and
-# (run 0..15, size 1..10)) at code length 8, a valid canonical table
-# since 162 ≤ 256 with no shorter codes.
-_ENC_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_ENC_DC_VALS = list(range(12))
-_ENC_AC_VALS = [0x00, 0xF0] + [(r << 4) | s
-                               for r in range(16) for s in range(1, 11)]
-_ENC_AC_BITS = [0] * 16
-_ENC_AC_BITS[7] = len(_ENC_AC_VALS)  # all codes at length 8
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:        # byte stuffing
-                self.out.append(0x00)
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.write(0x7F, 8 - self.nbits)  # pad with 1s
-        return bytes(self.out)
-
-
-def _encode_block(bw, zz, pred, dc_codes, ac_codes) -> int:
-    """FDCT-quantized coefficients (zigzag order) → entropy bits;
-    returns the new DC predictor."""
-    diff = int(zz[0]) - pred
-    s = int(abs(diff)).bit_length()
-    code, ln = dc_codes[s]
-    bw.write(code, ln)
-    if s:
-        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    run = 0
-    last_nz = np.nonzero(zz[1:])[0]
-    last_nz = (last_nz[-1] + 1) if len(last_nz) else 0
-    for k in range(1, last_nz + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            run -= 16
-        s = int(abs(v)).bit_length()
-        code, ln = ac_codes[(run << 4) | s]
-        bw.write(code, ln)
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        code, ln = ac_codes[0x00]  # EOB
-        bw.write(code, ln)
-    return int(zz[0])
-
-
-def _fdct_quant(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """(H, W) float plane (H, W multiples of 8) → (nblocks, 64) int
-    quantized coefficients in zigzag order, block raster order."""
-    hh, ww = plane.shape
-    blocks = plane.reshape(hh // 8, 8, ww // 8, 8) \
-        .transpose(0, 2, 1, 3).reshape(-1, 8, 8) - 128.0
-    f = np.einsum("ux,nxy,vy->nuv", _DCT_A, blocks, _DCT_A)
-    zz = f.reshape(-1, 64)[:, _ZZ]
-    return np.round(zz / q[None, :]).astype(np.int64)
-
-
-def _pad_to(plane: np.ndarray, bh: int, bw_: int) -> np.ndarray:
-    """Edge-replicate pad to (bh, bw_)."""
-    h, w = plane.shape
-    return np.pad(plane, ((0, bh - h), (0, bw_ - w)), mode="edge")
-
-
-def _prep_jpeg(img, quant, subsample):
-    """Shared encoder front half: RGB→YCbCr, optional 4:2:0 box-average
-    chroma, MCU-aligned edge padding, FDCT + quantization.  Returns
-    (h, w, q, samp, per-component zigzag coefficient arrays, mcux,
-    mcuy) — both the sequential and progressive encoders entropy-code
-    the SAME coefficients, which is what makes cross-mode decodes a
-    bit-identical oracle."""
-    img = np.asarray(img, dtype=np.uint8)
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    q = (np.full(64, int(quant), dtype=np.int64)
-         if np.isscalar(quant) else np.asarray(quant, dtype=np.int64))
-    if gray:
-        planes = [img.astype(np.float64)]
-        samp = [(1, 1)]
-    else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        if subsample:
-            def _box2(p):
-                hh = (p.shape[0] + 1) // 2 * 2
-                ww = (p.shape[1] + 1) // 2 * 2
-                p = _pad_to(p, hh, ww)
-                return p.reshape(hh // 2, 2, ww // 2, 2).mean(axis=(1, 3))
-            planes = [y, _box2(cb), _box2(cr)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y, cb, cr]
-            samp = [(1, 1), (1, 1), (1, 1)]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    comp_zz = []
-    for p, (hs, vs) in zip(planes, samp):
-        comp_zz.append(_fdct_quant(
-            _pad_to(p, mcuy * vs * 8, mcux * hs * 8), q))
-    return h, w, q, samp, comp_zz, mcux, mcuy
-
-
-def encode_jpeg(img: np.ndarray, quant: int | np.ndarray = 1,
-                subsample: bool = False,
-                restart_interval: int = 0) -> bytes:
-    """(h, w) grayscale or (h, w, 3) uint8 RGB → baseline JPEG bytes.
-
-    ``quant`` is either a scalar (flat quantization table — 1 gives a
-    near-lossless stream bounded only by DCT rounding, which is what
-    the roundtrip tests pin) or a full (64,) table in zigzag order.
-    ``subsample=True`` encodes color as 4:2:0 (2×2 box-averaged
-    chroma); ``restart_interval`` emits DRI + RSTn markers so decoders
-    exercise the restart path.  Test/synthetic use only — a real corpus
-    encoder would use the Annex K psychovisual tables.
-    """
-    h, w, q, samp, comp_zz, mcux, mcuy = _prep_jpeg(img, quant, subsample)
-    gray = len(samp) == 1
-    dc_codes = _huff_codes(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_codes = _huff_codes(_ENC_AC_BITS, _ENC_AC_VALS)
-
-    def _dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    dqt = bytes([0]) + bytes(int(v) for v in q)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
-    nc = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hs, vs = samp[i]
-        sof += bytes([i + 1, (hs << 4) | vs, 0])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    out += _dht(0, 0, _ENC_DC_BITS, _ENC_DC_VALS)
-    out += _dht(1, 0, _ENC_AC_BITS, _ENC_AC_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])  # all components use tables 0/0
-    sos += bytes([0, 63, 0])         # Ss/Se/Ah-Al (baseline fixed)
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    bw = _BitWriter()
-    preds = [0] * nc
-    rst = 0
-    for mcu in range(mcux * mcuy):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            out += bw.flush()
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            preds = [0] * nc
-        my, mx = divmod(mcu, mcux)
-        for ci in range(nc):
-            hs, vs = samp[ci]
-            for v in range(vs):
-                for hz in range(hs):
-                    bi = (my * vs + v) * (mcux * hs) + (mx * hs + hz)
-                    preds[ci] = _encode_block(
-                        bw, comp_zz[ci][bi], preds[ci],
-                        dc_codes, ac_codes)
-    out += bw.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# Progressive AC table: the flat sequential table plus the EOB-run
-# symbols (nb<<4, nb=1..14, T.81 Table G.1) — 176 codes all at length 8,
-# still a valid canonical table (176 <= 256).
-_ENC_ACP_VALS = _ENC_AC_VALS + [nb << 4 for nb in range(1, 15)]
-_ENC_ACP_BITS = [0] * 16
-_ENC_ACP_BITS[7] = len(_ENC_ACP_VALS)
-
-
-def _emit_eobrun(bw, ac_codes, eobrun, corr=None):
-    """Flush a pending EOB run: symbol nb<<4 (nb = floor(log2 run)),
-    the run's low nb bits, then any buffered refinement correction
-    bits (T.81 G.1.2.2/G.1.2.3)."""
-    if eobrun:
-        nb = eobrun.bit_length() - 1
-        code, ln = ac_codes[nb << 4]
-        bw.write(code, ln)
-        if nb:
-            bw.write(eobrun, nb)
-        for b in corr or ():
-            bw.write(b, 1)
-    return 0, []
-
-
-def _enc_dc_prog(bw, zz, preds, ci, ah, al, dc_codes):
-    """One block of a progressive DC scan (encoder side)."""
-    if ah == 0:
-        t = int(zz[0]) >> al          # arithmetic shift, sign-preserving
-        diff = t - preds[ci]
-        preds[ci] = t
-        s = abs(diff).bit_length()
-        code, ln = dc_codes[s]
-        bw.write(code, ln)
-        if s:
-            bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    else:
-        bw.write((int(zz[0]) >> al) & 1, 1)
-
-
-def _enc_ac_first(bw, zz, ss, se, al, ac_codes, eobrun):
-    """One block of a first AC pass: run/size over |coef|>>Al with
-    EOB-run accumulation across blocks; returns the updated run."""
-    r = 0
-    for k in range(ss, se + 1):
-        t = int(zz[k])
-        a = (-t if t < 0 else t) >> al
-        if a == 0:
-            r += 1
-            continue
-        eobrun, _ = _emit_eobrun(bw, ac_codes, eobrun)
-        while r > 15:
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            r -= 16
-        s = a.bit_length()
-        code, ln = ac_codes[(r << 4) | s]
-        bw.write(code, ln)
-        bw.write(a if t > 0 else ~a, s)
-        r = 0
-    if r:
-        eobrun += 1
-        if eobrun == 0x7FFF:
-            eobrun, _ = _emit_eobrun(bw, ac_codes, eobrun)
-    return eobrun
-
-
-def _enc_ac_refine(bw, zz, ss, se, al, ac_codes, eobrun, corr):
-    """One block of an AC refinement pass (T.81 G.1.2.3 via the
-    public-domain libjpeg jcphuff structure): newly-nonzero
-    coefficients (|coef|>>Al == 1) get size-1 run codes; correction
-    bits of previously-nonzero coefficients are buffered and emitted
-    after the code (or EOB run) that carries them."""
-    absv = {}
-    eob = ss - 1                      # last newly-nonzero position
-    for k in range(ss, se + 1):
-        absv[k] = abs(int(zz[k])) >> al
-        if absv[k] == 1:
-            eob = k
-    r = 0
-    pend = []                         # this block's buffered bits
-    for k in range(ss, se + 1):
-        t = absv[k]
-        if t == 0:
-            r += 1
-            continue
-        while r > 15 and k <= eob:    # ZRLs not foldable into the EOB
-            eobrun, corr = _emit_eobrun(bw, ac_codes, eobrun, corr)
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            r -= 16
-            for b in pend:
-                bw.write(b, 1)
-            pend = []
-        if t > 1:                     # previously nonzero: buffer a bit
-            pend.append(t & 1)
-            continue
-        eobrun, corr = _emit_eobrun(bw, ac_codes, eobrun, corr)
-        code, ln = ac_codes[(r << 4) | 1]
-        bw.write(code, ln)
-        bw.write(0 if int(zz[k]) < 0 else 1, 1)
-        for b in pend:
-            bw.write(b, 1)
-        pend = []
-        r = 0
-    if r > 0 or pend:
-        eobrun += 1
-        corr.extend(pend)
-        if eobrun == 0x7FFF:
-            eobrun, corr = _emit_eobrun(bw, ac_codes, eobrun, corr)
-    return eobrun, corr
-
-
-def _default_scan_script(nc):
-    """A libjpeg-style spectral-selection + successive-approximation
-    script: coarse DC, split AC bands at Al=2, two AC refinement
-    rounds, DC refinement last — exercises every progressive decode
-    path (interleaved DC, EOB runs, ZRL-in-refinement, band splits)."""
-    comps = list(range(nc))
-    script = [(comps, 0, 0, 0, 1)]
-    script += [([c], 1, 5, 0, 2) for c in comps]
-    script += [([c], 6, 63, 0, 2) for c in comps]
-    script += [([c], 1, 63, 2, 1) for c in comps]
-    script += [([c], 1, 63, 1, 0) for c in comps]
-    script.append((comps, 0, 0, 1, 0))
-    return script
-
-
-def encode_jpeg_progressive(img: np.ndarray,
-                            quant: int | np.ndarray = 1,
-                            subsample: bool = False,
-                            restart_interval: int = 0,
-                            script=None) -> bytes:
-    """(h, w) grayscale or (h, w, 3) uint8 RGB → progressive (SOF2)
-    JPEG bytes.  Shares :func:`_prep_jpeg` with the sequential encoder,
-    so ``decode_jpeg(encode_jpeg_progressive(img, q))`` must equal
-    ``decode_jpeg(encode_jpeg(img, q))`` bit-for-bit — the progressive
-    test oracle.  ``script`` is a list of (component indices, Ss, Se,
-    Ah, Al) scans; the default exercises spectral selection and both
-    successive-approximation pass kinds.  The AC Huffman table is
-    deliberately emitted AFTER the first scan to exercise between-scan
-    table definition.  Test/synthetic use only."""
-    h, w, q, samp, comp_zz, mcux, mcuy = _prep_jpeg(img, quant, subsample)
-    nc = len(samp)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    if script is None:
-        script = _default_scan_script(nc)
-    dc_codes = _huff_codes(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_codes = _huff_codes(_ENC_ACP_BITS, _ENC_ACP_VALS)
-
-    def _dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-
-    out = bytearray(b"\xff\xd8")
-    dqt = bytes([0]) + bytes(int(v) for v in q)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hs, vs = samp[i]
-        sof += bytes([i + 1, (hs << 4) | vs, 0])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof
-    out += _dht(0, 0, _ENC_DC_BITS, _ENC_DC_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    ac_dht_emitted = False
-    for scomps, ss, se, ah, al in script:
-        if ss > 0 and not ac_dht_emitted:   # between-scan DHT on purpose
-            out += _dht(1, 0, _ENC_ACP_BITS, _ENC_ACP_VALS)
-            ac_dht_emitted = True
-        sos = bytes([len(scomps)])
-        for c in scomps:
-            sos += bytes([c + 1, 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-        # enumerate the scan's data units: interleaved MCU walk for
-        # multi-component DC, per-component block raster otherwise
-        units = []
-        if len(scomps) > 1:
-            for mcu in range(mcux * mcuy):
-                my, mx = divmod(mcu, mcux)
-                group = []
-                for c in scomps:
-                    hs, vs = samp[c]
-                    for v in range(vs):
-                        for hz in range(hs):
-                            group.append(
-                                (c, (my * vs + v) * (mcux * hs)
-                                 + (mx * hs + hz)))
-                units.append(group)
-        else:
-            c = scomps[0]
-            hs, vs = samp[c]
-            cw = -(-w * hs // hmax)
-            ch = -(-h * vs // vmax)
-            nbx, nby = -(-cw // 8), -(-ch // 8)
-            stride = mcux * hs
-            for by in range(nby):
-                for bx in range(nbx):
-                    units.append([(c, by * stride + bx)])
-
-        bw = _BitWriter()
-        preds = [0] * nc
-        eobrun = 0
-        corr = []
-        rst = 0
-        for ui, group in enumerate(units):
-            if restart_interval and ui and ui % restart_interval == 0:
-                eobrun, corr = _emit_eobrun(bw, ac_codes, eobrun, corr)
-                out += bw.flush()
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                preds = [0] * nc
-            for c, bi in group:
-                zz = comp_zz[c][bi]
-                if ss == 0:
-                    _enc_dc_prog(bw, zz, preds, c, ah, al, dc_codes)
-                elif ah == 0:
-                    eobrun = _enc_ac_first(bw, zz, ss, se, al,
-                                           ac_codes, eobrun)
-                else:
-                    eobrun, corr = _enc_ac_refine(bw, zz, ss, se, al,
-                                                  ac_codes, eobrun, corr)
-        eobrun, corr = _emit_eobrun(bw, ac_codes, eobrun, corr)
-        out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
 # AVI (Microsoft RIFF container, public AVI 1.0 / OpenDML spec): RIFF
 # 'AVI ' + LIST hdrl (avih main header + LIST strl (strh stream header
 # + strf BITMAPINFOHEADER)) + LIST movi with one frame chunk per video
-# frame + idx1 index.  Two codecs, both self-contained: '00db' raw
-# frames (uncompressed bottom-up BGR DIB rows, 4-byte-aligned stride,
-# biCompression=0 BI_RGB) and '00dc' MJPEG frames (each chunk is one
-# complete JPEG stream, decoded by this module's own decode_jpeg —
-# baseline or progressive).  Anything else (H.264 & co) stays behind
-# the NotImplementedError codec boundary.
+# frame + idx1 index.  One codec: '00db' raw frames (uncompressed
+# bottom-up BGR DIB rows, 4-byte-aligned stride, biCompression=0
+# BI_RGB).  Anything else (MJPEG, H.264 & co) stays behind the
+# NotImplementedError codec boundary.
 # ---------------------------------------------------------------------------
 
 
@@ -1665,14 +443,9 @@ def _riff_list(ltype: bytes, body: bytes) -> bytes:
     return _riff_chunk(b"LIST", ltype + body)
 
 
-def encode_avi(frames, codec: str = "raw", fps: int = 10,
-               quant: int | np.ndarray = 1) -> bytes:
-    """List of (h, w, 3) uint8 RGB frames → AVI bytes.
-
-    ``codec='raw'`` writes '00db' BI_RGB DIB chunks (lossless — the
-    pixel-formula oracle path); ``codec='mjpeg'`` writes '00dc' chunks,
-    each a complete JPEG from this module's encoder at ``quant``.
-    Emits a spec-shaped idx1 index (keyframe flag, offsets relative to
+def encode_avi(frames, fps: int = 10) -> bytes:
+    """List of (h, w, 3) uint8 RGB frames → AVI bytes of '00db' BI_RGB
+    DIB chunks (lossless — the pixel-formula oracle path).  Emits a spec-shaped idx1 index (keyframe flag, offsets relative to
     the 'movi' fourcc) so decoders that read it see a real file."""
     frames = [np.asarray(f, dtype=np.uint8) for f in frames]
     if not frames:
@@ -1680,31 +453,24 @@ def encode_avi(frames, codec: str = "raw", fps: int = 10,
     h, w, _ = frames[0].shape
     if any(f.shape != (h, w, 3) for f in frames):
         raise ValueError("all AVI frames must share one (h, w, 3) shape")
-    if codec == "raw":
-        ckid, handler, compression = b"00db", b"DIB ", 0
-        stride = (w * 3 + 3) // 4 * 4
-        payloads = []
-        for f in frames:
-            rows = np.zeros((h, stride), dtype=np.uint8)
-            rows[:, :w * 3] = f[::-1, :, ::-1].reshape(h, w * 3)  # BGR, up
-            payloads.append(rows.tobytes())
-    elif codec == "mjpeg":
-        ckid, handler = b"00dc", b"MJPG"
-        compression = struct.unpack("<I", b"MJPG")[0]
-        payloads = [encode_jpeg(f, quant=quant) for f in frames]
-    else:
-        raise ValueError(f"unsupported AVI codec {codec!r}")
+    ckid = b"00db"
+    stride = (w * 3 + 3) // 4 * 4
+    payloads = []
+    for f in frames:
+        rows = np.zeros((h, stride), dtype=np.uint8)
+        rows[:, :w * 3] = f[::-1, :, ::-1].reshape(h, w * 3)  # BGR, up
+        payloads.append(rows.tobytes())
     maxbuf = max(len(p) for p in payloads)
     n = len(frames)
 
     avih = struct.pack("<10I", 1_000_000 // fps, maxbuf * fps, 0,
                        0x10,          # AVIF_HASINDEX
                        n, 0, 1, maxbuf, w, h) + b"\x00" * 16
-    strh = (b"vids" + handler
+    strh = (b"vids" + b"DIB "
             + struct.pack("<10I", 0, 0, 0, 1, fps, 0, n, maxbuf,
                           0xFFFFFFFF, 0)
             + struct.pack("<4H", 0, 0, w, h))
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, compression,
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
                        len(payloads[0]), 0, 0, 0, 0)
     hdrl = _riff_list(b"hdrl", _riff_chunk(b"avih", avih)
                       + _riff_list(b"strl", _riff_chunk(b"strh", strh)
@@ -1753,8 +519,8 @@ def _avi_walk(payload: bytes, pos: int, lim: int, out: dict) -> None:
 def decode_avi(payload: bytes):
     """AVI bytes → (list of (h, w, 3) uint8 RGB frames, meta dict with
     w/h/fps/compression).  Raw BI_RGB DIB chunks are unpacked exactly
-    (bottom-up BGR, padded stride); MJPEG chunks go through
-    :func:`decode_jpeg`.  Other codecs raise NotImplementedError."""
+    (bottom-up BGR, padded stride); other codecs raise
+    NotImplementedError."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
     out: dict = {}
@@ -1765,9 +531,6 @@ def decode_avi(payload: bytes):
     nrows = abs(h)
     imgs = []
     for body in out["frames"]:
-        if body[:3] == b"\xff\xd8\xff":  # MJPEG: one JPEG per chunk
-            imgs.append(decode_jpeg(body))
-            continue
         if out["compression"] != 0 or out.get("bits") != 24:
             raise NotImplementedError(
                 f"AVI codec 0x{out['compression']:08X}/"
@@ -1785,201 +548,3 @@ def decode_avi(payload: bytes):
             "compression": out["compression"],
             "n_frames": len(imgs)}
     return imgs, meta
-
-
-# ---------------------------------------------------------------------------
-# GIF (public spec, GIF89a/87a): logical screen descriptor + color
-# table(s) + image blocks whose pixel indices are LZW-compressed with
-# variable-width codes (start min_code_size+1 bits, grow to 12, CLEAR
-# resets).  Scope: single-frame decode with global or local palette,
-# sequential or interlaced row order; extensions are skipped.
-# ---------------------------------------------------------------------------
-
-
-def _gif_lzw_encode(indices: np.ndarray, mcs: int) -> bytes:
-    """GIF-variant LZW: real dictionary growth (not the fixed-width
-    'uncompressed GIF' trick), CLEAR emitted at table overflow."""
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code, width):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    width = mcs + 1
-    table = {}
-    next_code = end + 1
-    emit(clear, width)
-    cur = int(indices[0])
-    for k in map(int, indices[1:]):
-        if (cur, k) in table:
-            cur = table[(cur, k)]
-            continue
-        emit(cur, width)
-        table[(cur, k)] = next_code
-        next_code += 1
-        if next_code > (1 << width) and width < 12:
-            width += 1
-        if next_code >= 4096:
-            emit(clear, width)
-            table.clear()
-            next_code = end + 1
-            width = mcs + 1
-        cur = k
-    emit(cur, width)
-    emit(end, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_lzw_decode(data: bytes, mcs: int, n_expected: int) -> np.ndarray:
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    out = np.empty(n_expected, dtype=np.uint8)
-    n_out = 0
-    acc = nbits = pos = 0
-    width = mcs + 1
-    table = [bytes([i]) for i in range(1 << mcs)] + [b"", b""]
-    prev = None
-
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated GIF LZW stream")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = table[: end + 1]
-            width = mcs + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(table[prev] + entry[:1])
-        elif code == len(table):
-            entry = table[prev] + table[prev][:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt GIF LZW code")
-        out[n_out:n_out + len(entry)] = np.frombuffer(entry, dtype=np.uint8)
-        n_out += len(entry)
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-        prev = code
-        if n_out >= n_expected:
-            break
-    if n_out != n_expected:
-        raise ValueError(f"GIF pixel count mismatch ({n_out} != "
-                         f"{n_expected})")
-    return out
-
-
-def _gif_interlace_rows(h: int) -> list:
-    """GIF interlace row transmission order (spec appendix E): pass 1
-    every 8th row from 0, pass 2 every 8th from 4, pass 3 every 4th
-    from 2, pass 4 every 2nd from 1."""
-    return [*range(0, h, 8), *range(4, h, 8),
-            *range(2, h, 4), *range(1, h, 2)]
-
-
-def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
-    """(h, w, 3) uint8 with ≤256 distinct colors → single-frame GIF89a
-    (global palette, real LZW).  ``interlace=True`` transmits rows in
-    the four-pass interlace order and sets the descriptor flag."""
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, _ = img.shape
-    flat = img.reshape(-1, 3)
-    palette, indices = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError("GIF encode requires <= 256 distinct colors")
-    # palette size must be a power of two >= 2 per the descriptor field
-    pbits = max(1, int(np.ceil(np.log2(max(len(palette), 2)))))
-    pal = np.zeros((1 << pbits, 3), dtype=np.uint8)
-    pal[:len(palette)] = palette
-    mcs = max(2, pbits)
-    if interlace:
-        indices = indices.reshape(h, w)[_gif_interlace_rows(h)].ravel()
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | ((pbits - 1) & 0x07), 0, 0])  # GCT flag + size
-    out += pal.tobytes()
-    out += (b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
-            + bytes([0x40 if interlace else 0x00]))
-    out.append(mcs)
-    lzw = _gif_lzw_encode(indices.astype(np.int64), mcs)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def decode_gif(payload: bytes) -> np.ndarray:
-    """Single-frame GIF → (h, w, 3) uint8 RGB (first image block of an
-    animated stream; interlaced rows are reordered back)."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    packed, _bg, _ar = payload[10], payload[11], payload[12]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(payload[pos:pos + 3 * n],
-                            dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(payload):
-        b = payload[pos]
-        pos += 1
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos:pos + 8])
-        ipacked = payload[pos + 8]
-        pos += 9
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            pal = np.frombuffer(payload[pos:pos + 3 * n],
-                                dtype=np.uint8).reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image without a color table")
-        mcs = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while payload[pos]:
-            ln = payload[pos]
-            lzw += payload[pos + 1:pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decode(bytes(lzw), mcs, w * h).reshape(h, w)
-        if ipacked & 0x40:  # interlaced: rows arrive in pass order
-            deinterlaced = np.empty_like(idx)
-            deinterlaced[_gif_interlace_rows(h)] = idx
-            idx = deinterlaced
-        return pal[idx.ravel()].reshape(h, w, 3)
-    raise ValueError(f"GIF stream has no image block ({sw}x{sh} screen)")

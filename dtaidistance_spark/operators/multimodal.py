@@ -1,29 +1,20 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Binary media are opaque ``binary`` columns with typed metadata; the
-decode / feature-extract / resize / frame-sample operators are Arrow-
-batched ``mapInPandas`` stages.  The codec boundary is split:
+Binary media are opaque ``binary`` columns with typed metadata;
+``decode_features`` is an Arrow-batched ``mapInPandas`` stage.  The
+codec boundary is split:
 
-* **Real decode** for PPM (P6), 24-bit BMP, PNG (r5: 8-bit truecolor,
-  stdlib zlib inflate + Sub/Up/Average/Paeth unfiltering) and — late
-  r5 — **baseline JPEG** (T.81 sequential DCT: canonical Huffman,
-  dequantize + de-zigzag + exact IDCT, chroma upsample, JFIF
-  YCbCr→RGB), all parsed byte-for-byte by the pure-numpy codecs in
-  ``kernels/media.py``; ``synth_media`` alternates genuine PPM and PNG
-  payloads for its image rows (both lossless, so the ``media_features``
-  DuckDB oracle validates the decoded pixel values exactly); the lossy
-  JPEG path is pinned by spec-formula goldens and bounded roundtrips
-  in tests/test_pipeline.py::TestJpegCodec instead.
-* **Real video** (late r5): RIFF/AVI container parse with lossless
-  raw-DIB ('00db') and MJPEG ('00dc', each chunk one JPEG through the
-  native decoder — baseline or progressive) frame chunks, feeding both
-  ``decode_features`` and ``sample_frames``.
-* **Honest stub** for everything needing an external codec (MP3,
-  non-MJPEG video): with ``fake=True`` (default) a deterministic
-  hash-derived decoder stands in (schemas, batching, partitioning and
-  downstream math stay real and testable); with ``fake=False`` the
-  boundary raises ``NotImplementedError`` where Pillow/ffmpeg/
-  soundfile would be invoked.
+* **Real decode** for the formats ``synth_media`` writes — PPM (P6),
+  PNG, PCM/float RIFF/WAVE and raw-DIB ('00db') RIFF/AVI — parsed
+  byte-for-byte by the pure-numpy codecs in ``kernels/media.py``.  All
+  four are lossless, so the ``media_features`` DuckDB oracle validates
+  the decoded values exactly.
+* **Honest stub** for every other format (JPEG, GIF, BMP, compressed
+  WAVE or AVI codecs, MP3, ...): with ``fake=True`` (default) a
+  deterministic hash-derived decoder stands in (schemas, batching,
+  partitioning and downstream math stay real and testable); with
+  ``fake=False`` the boundary raises where Pillow/ffmpeg/soundfile
+  would be invoked.
 """
 
 from __future__ import annotations
@@ -34,7 +25,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..kernels.media import (decode_avi, decode_raster, decode_wav,
                              encode_avi, encode_png, encode_ppm,
@@ -87,8 +77,7 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     unfilter path); audio rows carry a real RIFF/WAVE PCM16 payload;
     video rows carry a real uncompressed-DIB AVI (one lossless '00db'
     BGR frame chunk per frame, so the per-frame pixel formula stays
-    SQL-replayable too — the MJPEG flavor is pinned by pytest
-    roundtrips instead).  The decoded pixels follow the same integer
+    SQL-replayable too).  The decoded pixels follow the same integer
     formula either way, so the SQL pixel oracle covers every container
     format."""
 
@@ -108,7 +97,7 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                 else:
                     payload = encode_avi(
                         [_synth_frame(mid, fi)
-                         for fi in range(mid % 7 + 3)], codec="raw")
+                         for fi in range(mid % 7 + 3)])
                 rows.append((mid, kind, payload, _IMG_W, _IMG_H, 16000,
                              mid % 7 + 3))
             yield pd.DataFrame(rows, columns=[
@@ -184,10 +173,10 @@ def decode_features(media: DataFrame, n_features: int = 16,
                     fake: bool = True) -> DataFrame:
     """media → fixed-width feature vectors (the embedding-extraction
     stage of a training-data pipeline).  Batched: one pandas frame per
-    Arrow batch, one numpy matrix per batch.  Raster payloads
-    (PPM/BMP/PNG/JPEG magic), WAVE payloads, and AVI video payloads
-    (raw DIB or MJPEG chunks) go through the REAL decoders; other
-    formats use the hash stub (or raise with ``fake=False``)."""
+    Arrow batch, one numpy matrix per batch.  PPM and PNG images,
+    PCM/float WAVE audio and raw-DIB AVI video go through the REAL
+    decoders.  Any other payload, or one those decoders reject, uses
+    the hash stub (or raises with ``fake=False``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -207,8 +196,8 @@ def decode_features(media: DataFrame, n_features: int = 16,
                         feats.append(_fake_decode(p, n_features).tolist())
                     else:
                         raise NotImplementedError(
-                            "real decoding of media beyond PPM/BMP/PNG/"
-                            "JPEG/GIF/WAV/AVI requires Pillow/ffmpeg/"
+                            "real decoding of media beyond PPM/PNG/"
+                            "PCM WAVE/raw AVI requires Pillow/ffmpeg/"
                             "soundfile, not available in this environment")
                 except (ValueError, NotImplementedError):
                     # corrupt-but-sniffable payloads (truncated stream,
@@ -225,77 +214,3 @@ def decode_features(media: DataFrame, n_features: int = 16,
     return media.mapInPandas(
         run, schema="media_id long, kind string, features array<double>")
 
-
-def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 6,
-                  fake: bool = True) -> DataFrame:
-    """Image resize stage: decode → (h, w) float array → area-average
-    downsample → flattened pixels.  Real Spark plumbing, stubbed codec."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                if row.kind != "image":
-                    continue
-                p = bytes(row.payload)
-                try:
-                    if sniff_format(p) != "unknown":
-                        rgb = decode_raster(p)
-                        img = rgb.mean(axis=2) / 255.0  # gray in [0, 1)
-                    elif not fake:
-                        raise NotImplementedError(
-                            "real image decode unavailable")
-                    else:
-                        img = _fake_decode(
-                            p, row.width * row.height).reshape(
-                            row.height, row.width)
-                except (ValueError, NotImplementedError):
-                    if not fake:
-                        raise
-                    img = _fake_decode(p, row.width * row.height).reshape(
-                        row.height, row.width)
-                fy, fx = img.shape[0] // out_h, img.shape[1] // out_w
-                small = img[:out_h * fy, :out_w * fx] \
-                    .reshape(out_h, fy, out_w, fx).mean(axis=(1, 3))
-                rows.append((row.media_id, out_w, out_h,
-                             small.ravel().tolist()))
-            yield pd.DataFrame(rows, columns=["media_id", "out_w", "out_h",
-                                              "pixels"])
-
-    return media.mapInPandas(
-        run, schema="media_id long, out_w int, out_h int, pixels array<double>")
-
-
-def sample_frames(media: DataFrame, every_k: int = 2,
-                  fake: bool = True) -> DataFrame:
-    """Video frame-sampling stage: one output row per kept frame.
-    AVI payloads are REALLY decoded (every ``every_k``-th frame chunk,
-    raw DIB or MJPEG) and signed with the exact integer-mean
-    signature; non-AVI video uses the hash stub (or raises with
-    ``fake=False``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                if row.kind != "video":
-                    continue
-                p = bytes(row.payload)
-                if sniff_format(p) == "avi":
-                    frames, _ = decode_avi(p)
-                    for fi in range(0, len(frames), every_k):
-                        rows.append((row.media_id, fi,
-                                     _frame_sig(frames[fi])))
-                    continue
-                for fi in range(0, int(row.n_frames), every_k):
-                    if not fake:
-                        raise NotImplementedError(
-                            "real decode of non-AVI video needs ffmpeg")
-                    frame_sig = float(_fake_decode(
-                        p + fi.to_bytes(2, "big"), 1)[0])
-                    rows.append((row.media_id, fi, frame_sig))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx",
-                                              "frame_sig"])
-
-    return media.mapInPandas(
-        run, schema="media_id long, frame_idx int, frame_sig double")

@@ -1287,8 +1287,8 @@ def q_bounds_pairs(spark, sf_dir):
     """LB_Keogh (window=12) + Euclidean upper bound over the same 32
     daily series as ONE long-format result (metric ∈ {lb_keogh,
     ub_euclidean}) — merges the two former standalone queries into one
-    driver-window slot; both remain pure JVM column algebra
-    (functions/bounds.py, size-gated broadcast since r4 ADVICE)."""
+    driver-window slot; both remain pure JVM column algebra over one
+    unhinted self-join that Spark plans itself (functions/bounds.py)."""
     from ..functions.bounds import lb_keogh_pairs, ub_euclidean_pairs
 
     series = _daily_series(spark, sf_dir, 32)

@@ -111,38 +111,6 @@ class TestAsofJoin:
         assert plan.count("Exchange hashpartitioning") == 1
 
 
-class TestAsofStream:
-    def test_stream_equals_batch(self, spark, tmp_path):
-        # two file chunks drained availableNow must reproduce the batch
-        # asof_join over the full input (order-insensitive)
-        import datetime as dt
-
-        from dtaidistance_spark.streaming.asof_stream import (
-            run_asof_enrich_stream,
-        )
-
-        schema = "k long, ts timestamp, lv double"
-        rows1 = [(1, _ts(9, 30), 10.0), (1, _ts(10, 0), 11.0)]
-        rows2 = [(1, _ts(12, 45), 12.0), (2, _ts(10, 5), 20.0),
-                 (3, _ts(10, 0), 30.0)]
-        src = str(tmp_path / "src")
-        spark.createDataFrame(rows1, schema).write.mode("append").parquet(src)
-        spark.createDataFrame(rows2, schema).write.mode("append").parquet(src)
-        dim = spark.createDataFrame(
-            [(1, _ts(10, 0), 100.0), (1, _ts(12, 0), 120.0),
-             (2, _ts(10, 0), 200.0)],
-            "k long, ts timestamp, rv double")
-
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        run_asof_enrich_stream(spark, src, schema, dim, on="k",
-                               out_dir=out, checkpoint_dir=ckpt)
-        got = spark.read.parquet(out).orderBy("k", "ts").toPandas()
-        want = (asof_join(spark.read.parquet(src), dim, on="k")
-                .orderBy("k", "ts").toPandas())
-        assert got[want.columns].equals(want)
-        assert len(got) == 3
-
-
 class TestAsofNearest:
     def test_nearest_hand_rows(self, spark, frames):
         left, right = frames

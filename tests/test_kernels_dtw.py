@@ -244,53 +244,3 @@ class TestDba:
         d_center = np.mean([k.dtw_distance(c, s) for s in series])
         d_member = np.mean([k.dtw_distance(series[0], s) for s in series])
         assert d_center <= d_member + 1e-9
-
-
-class TestSktimeConnector:
-    """Adapter parity with reference connectors/sktime.py:17-38: accepts
-    sktime's column-major (n, 1) panel cells, passes settings through,
-    needs no sktime import."""
-
-    def test_column_vector_equals_kernel(self):
-        import numpy as np
-        from dtaidistance_spark.connectors.sktime import dtw_distance
-        from dtaidistance_spark.kernels.dtw import (DtwSettings,
-                                                    dtw_distance as kd)
-        rng = np.random.default_rng(7)
-        a, b = rng.normal(size=40), rng.normal(size=35)
-        assert dtw_distance(a[:, None], b[:, None]) == kd(a, b, DtwSettings())
-
-    def test_settings_passthrough_and_factory(self):
-        import numpy as np
-        from dtaidistance_spark.connectors.sktime import (dtw_distance,
-                                                          dtw_distance_create)
-        from dtaidistance_spark.kernels.dtw import DtwSettings, dtw_distance as kd
-        rng = np.random.default_rng(11)
-        a, b = rng.normal(size=30), rng.normal(size=30)
-        want = kd(a, b, DtwSettings(window=5, psi=2))
-        assert dtw_distance(a[:, None], b[:, None],
-                            {"window": 5, "psi": 2}) == want
-        fn = dtw_distance_create(window=5, psi=2)
-        assert fn(a[:, None], b[:, None]) == want
-
-    def test_reference_parity(self):
-        """Same inputs through the reference's own connector when the
-        reference tree is present (column handling + kwargs contract)."""
-        import os
-        import sys
-        import numpy as np
-        ref = "/root/reference/src"
-        if not os.path.isdir(ref):  # pragma: no cover
-            import pytest
-            pytest.skip("reference absent")
-        sys.path.insert(0, ref)
-        try:
-            from dtaidistance.connectors.sktime import dtw_distance as ref_fn
-        finally:
-            sys.path.remove(ref)
-        from dtaidistance_spark.connectors.sktime import dtw_distance
-        rng = np.random.default_rng(3)
-        a, b = rng.normal(size=25)[:, None], rng.normal(size=25)[:, None]
-        assert abs(dtw_distance(a, b) - ref_fn(a, b)) < 1e-12
-        assert abs(dtw_distance(a, b, {"window": 4})
-                   - ref_fn(a, b, {"window": 4})) < 1e-12

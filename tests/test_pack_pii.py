@@ -369,31 +369,51 @@ class TestReviewFixes:
         pts, kept = rdp_epsilon(np.array([[0, 0], [0, 3]]), epsilon=100.0)
         assert kept == [0, 1] and pts.shape == (2, 2)
 
-    def test_interval_parser(self):
-        import pytest as _pytest
-
-        from dtaidistance_spark.streaming.match_stream import \
-            parse_interval_ms
-
-        assert parse_interval_ms("1 day") == 86_400_000
-        assert parse_interval_ms("90 seconds") == 90_000
-        with _pytest.raises(ValueError, match="interval must be"):
-            parse_interval_ms("90s")
-
     def test_decode_features_corrupt_payload_fake_fallback(self, spark):
-        from dtaidistance_spark.operators.multimodal import decode_features
+        """A payload the native codecs do not decode — a sniffable but
+        corrupt PNG, or a format without a decoder (JPEG, GIF, BMP, an
+        ADPCM WAVE, an MJPEG AVI) — gets the hash stub with fake=True
+        and raises with fake=False."""
+        import struct
 
-        # valid PNG magic, garbage body: sniffable but undecodable
-        bad = b"\x89PNG\r\n\x1a\n" + b"\x00" * 32
-        media = spark.createDataFrame(
-            [(0, "image", bytearray(bad), 4, 4, 0, 0.0, 0)],
-            "media_id long, kind string, payload binary, width int, "
-            "height int, sample_rate int, duration_s double, n_frames int")
-        out = decode_features(media, n_features=4, fake=True).collect()
-        assert len(out) == 1 and len(out[0]["features"]) == 4
+        import numpy as np
         import pytest as _pytest
-        with _pytest.raises(Exception):
-            decode_features(media, n_features=4, fake=False).collect()
+
+        from dtaidistance_spark.kernels.media import encode_avi
+        from dtaidistance_spark.operators.multimodal import (_fake_decode,
+                                                             decode_features)
+
+        mjpeg = bytearray(encode_avi([np.zeros((2, 2, 3), np.uint8)]))
+        comp = mjpeg.index(b"strf") + 8 + 16  # strf biCompression
+        mjpeg[comp:comp + 4] = b"MJPG"
+        mjpeg = bytes(mjpeg).replace(b"DIB ", b"MJPG").replace(b"00db",
+                                                                 b"00dc")
+        adpcm_fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 4055, 256, 4,
+                                2, 505)
+        payloads = {
+            # valid PNG magic, garbage body: sniffable but undecodable
+            "png": b"\x89PNG\r\n\x1a\n" + b"\x00" * 32,
+            "jpeg": b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\xff\xd9",
+            "gif": b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0, 0, 0) + b";",
+            "bmp": (b"BM" + struct.pack("<IHHI", 58, 0, 0, 54)
+                    + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4,
+                                  0, 0, 0, 0) + b"\x00" * 4),
+            "adpcm": (b"RIFF" + struct.pack("<I", 44) + b"WAVE"
+                      + b"fmt " + struct.pack("<I", 20) + adpcm_fmt
+                      + b"data" + struct.pack("<I", 4) + b"\x00" * 4),
+            "mjpeg": mjpeg,
+        }
+        for name, bad in payloads.items():
+            media = spark.createDataFrame(
+                [(0, "image", bytearray(bad), 4, 4, 0, 0.0, 0)],
+                "media_id long, kind string, payload binary, width int, "
+                "height int, sample_rate int, duration_s double, "
+                "n_frames int")
+            out = decode_features(media, n_features=4, fake=True).collect()
+            assert len(out) == 1, name
+            assert out[0]["features"] == _fake_decode(bad, 4).tolist(), name
+            with _pytest.raises(Exception):
+                decode_features(media, n_features=4, fake=False).collect()
 
 
 class TestQualityClassifier:

@@ -129,6 +129,23 @@ class TestPlans:
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
         assert dist.count() > 0
 
+    def test_bounds_call_runs_no_job(self, spark):
+        """A bounds call only builds a plan: no persist and no stats
+        pass run before its result is forced."""
+        from dtaidistance_spark.functions.bounds import lb_keogh_pairs
+        df = spark.createDataFrame(
+            [(i, [float(i), 1.0, float(i % 3)]) for i in range(12)],
+            "i long, values array<double>")
+        sc = spark.sparkContext
+        group = "bounds-call-jobs"
+        sc.setJobGroup(group, "lb_keogh_pairs call")
+        try:
+            out = lb_keogh_pairs(df, window=2)
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out.count() == 12 * 11 // 2
+
     @pytest.mark.parametrize("event_id", [-1, 10 ** 18])
     def test_surrogate_key_domain_fails_loudly(self, spark, tmp_path,
                                                event_id):

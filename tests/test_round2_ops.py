@@ -643,32 +643,51 @@ class TestBoundsColumnAlgebra:
             assert r.ub == pytest.approx(ed_distance(S[r.i], S[r.j]),
                                          rel=1e-12)
 
-    def test_bounds_shuffle_fallback_vs_broadcast(self, spark, rng):
-        """Force the corpus above the broadcast gate so the chunk-pair
-        shuffle plan runs (ADVICE r3: the unconditional broadcast was an
-        OOM trap at corpus scale) and pin identical results."""
+    def test_bounds_broadcast_vs_cartesian_plans(self, spark, rng,
+                                                 tmp_path):
+        """The bounds self-join is one unhinted join that Spark plans
+        itself: a BroadcastNestedLoopJoin while its size estimate of a
+        side is under autoBroadcastJoinThreshold (a parquet input is
+        sized from its files), a CartesianProduct with broadcasting
+        off.  Both plans give identical pairs."""
         from dtaidistance_spark.functions.bounds import (lb_keogh_pairs,
                                                          ub_euclidean_pairs)
 
         n, L, w = 8, 40, 7
         S = rng.normal(0, 1, (n, L))
-        df = spark.createDataFrame(
+        path = str(tmp_path / "series")
+        spark.createDataFrame(
             [(i, S[i].tolist()) for i in range(n)],
-            "i long, values array<double>")
-        bc_lb = lb_keogh_pairs(df, window=w).toPandas() \
-            .sort_values(["i", "j"]).reset_index(drop=True)
-        bc_ub = ub_euclidean_pairs(df).toPandas() \
-            .sort_values(["i", "j"]).reset_index(drop=True)
-        spark.conf.set("spark.dtaidistance.broadcastMatrixMaxPairs", "4")
+            "i long, values array<double>").write.parquet(path)
+        df = spark.read.parquet(path)
+
+        def run():
+            out = {}
+            for col, q in (("lb", lb_keogh_pairs(df, window=w)),
+                           ("ub", ub_euclidean_pairs(df))):
+                plan = q._jdf.queryExecution().executedPlan().toString()
+                got = q.toPandas().sort_values(["i", "j"]) \
+                    .reset_index(drop=True)
+                out[col] = (got, plan)
+            return out
+
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        bc = run()
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
         try:
-            sh_lb = lb_keogh_pairs(df, window=w).toPandas() \
-                .sort_values(["i", "j"]).reset_index(drop=True)
-            sh_ub = ub_euclidean_pairs(df).toPandas() \
-                .sort_values(["i", "j"]).reset_index(drop=True)
+            cp = run()
         finally:
-            spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxPairs")
-        assert (sh_lb["lb"] == bc_lb["lb"]).all() and len(sh_lb) == len(bc_lb)
-        assert (sh_ub["ub"] == bc_ub["ub"]).all() and len(sh_ub) == len(bc_ub)
+            spark.conf.set(key, old)
+        for col in ("lb", "ub"):
+            (bc_df, bc_plan), (cp_df, cp_plan) = bc[col], cp[col]
+            assert "BroadcastNestedLoopJoin" in bc_plan, bc_plan
+            assert "CartesianProduct" not in bc_plan, bc_plan
+            assert "CartesianProduct" in cp_plan, cp_plan
+            assert "BroadcastNestedLoopJoin" not in cp_plan, cp_plan
+            assert len(bc_df) == len(cp_df) == n * (n - 1) // 2
+            assert (bc_df[["i", "j"]] == cp_df[["i", "j"]]).all().all()
+            assert (bc_df[col] == cp_df[col]).all()
 
     def test_lb_is_admissible_for_banded_dtw(self, spark, rng):
         """lb_keogh(window=w) <= dtw(window=w) — the pruning contract."""
