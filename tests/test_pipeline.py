@@ -80,6 +80,25 @@ class TestMultimodal:
         assert (f1["features"].map(tuple) == f2["features"].map(tuple)).all()
         assert all(len(v) == 8 for v in f1["features"])
 
+    def test_frame_sampling_real_avi_values(self, spark):
+        """Video rows carry a real uncompressed-DIB AVI: each video
+        feature samples frame ⌊f·n_frames/n_features⌋, and its value
+        must equal the exact integer mean of the deterministic frame
+        formula, computed independently here."""
+        from dtaidistance_spark.operators.multimodal import _synth_frame
+
+        media = synth_media(spark, n=12)
+        out = decode_features(media, n_features=8) \
+            .where("kind = 'video'").orderBy("media_id").toPandas()
+        assert out["media_id"].tolist() == [2, 5, 8, 11]
+        for row in out.itertuples(index=False):
+            mid = int(row.media_id)
+            nf = mid % 7 + 3
+            for k, got in enumerate(row.features):
+                f = _synth_frame(mid, k * nf // 8)
+                exp = int(f.sum(dtype=np.int64)) / f.size / 255.0
+                assert got == exp  # bit-exact, not approx
+
     def test_real_codec_path(self, spark):
         # every synth payload (PPM/PNG/WAV/AVI) now has a REAL decoder:
         # fake=False must succeed on the whole synthetic table...
@@ -118,6 +137,25 @@ class TestAviCodec:
                for _ in range(3)]
         dec2, _ = decode_avi(encode_avi(odd))
         assert all((a == b).all() for a, b in zip(odd, dec2))
+
+    def test_mjpeg_frames_match_jpeg_decoder(self):
+        """MJPEG frames ('00dc' chunks, biCompression 'MJPG') go where a
+        bare JPEG goes: no JPEG decoder exists, so decode_avi collects
+        the frames and raises NotImplementedError on the codec."""
+        from dtaidistance_spark.kernels.media import (decode_avi,
+                                                      encode_avi,
+                                                      sniff_format)
+
+        rng = np.random.default_rng(59)
+        frames = [rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
+                  for _ in range(4)]
+        payload = bytearray(encode_avi(frames))
+        comp = payload.index(b"strf") + 8 + 16  # strf biCompression
+        payload[comp:comp + 4] = b"MJPG"
+        payload = bytes(payload).replace(b"00db", b"00dc")
+        assert sniff_format(payload) == "avi"
+        with pytest.raises(NotImplementedError, match="0x47504A4D"):
+            decode_avi(payload)
 
     def test_codec_boundary(self):
         import struct as _struct
@@ -602,8 +640,11 @@ class TestMediaCodecs:
         with pytest.raises(ValueError):
             decode_wav(bad)
 
-    def test_wav_float32(self):
-        """IEEE-float WAVE: [-1, 1] rescaled to int16, clipped outside."""
+    def test_wav_g711_and_float(self):
+        """G.711 a-law/µ-law WAVE has no decoder: decode_wav raises
+        NotImplementedError, the boundary decode_features turns into
+        the hash stub.  IEEE-float WAVE: [-1, 1] rescaled to int16,
+        clipped outside."""
         import struct as _struct
 
         from dtaidistance_spark.kernels.media import decode_wav
@@ -616,9 +657,34 @@ class TestMediaCodecs:
                     + b"fmt " + _struct.pack("<I", len(body)) + body
                     + b"data" + _struct.pack("<I", len(data)) + data)
 
+        for tag in (6, 7):  # WAVE_FORMAT_ALAW, WAVE_FORMAT_MULAW
+            with pytest.raises(NotImplementedError, match=f"tag={tag}"):
+                decode_wav(wav(tag, 8, bytes([0xFF, 0x00, 0x80, 0x7F])))
         f = np.array([0.0, 0.5, -1.0, 2.0], dtype="<f4")  # 2.0 clips
         got, _ = decode_wav(wav(3, 32, f.tobytes(), ba=4))
         assert got.tolist() == [0, 16383, -32767, 32767]
+
+    def test_wav_ima_adpcm(self):
+        """IMA ADPCM (format 0x11) has no decoder: a spec-conformant
+        stream (20-byte fmt, a fact chunk before data) still sniffs as
+        WAVE, and decode_wav walks past the fact chunk and raises
+        NotImplementedError on the format tag."""
+        import struct as _struct
+
+        from dtaidistance_spark.kernels.media import decode_wav, sniff_format
+
+        # 1-block mono stream: predictor 100, index 5, nibbles 3 and 12
+        blk = _struct.pack("<hBB", 100, 5, 0) + bytes([3 | (12 << 4)])
+        spb = (len(blk) - 4) * 2 + 1
+        payload = (b"RIFF" + _struct.pack("<I", 52 + len(blk)) + b"WAVE"
+                   + b"fmt " + _struct.pack("<IHHIIHHHH", 20, 0x11, 1,
+                                            8000, 8000 * len(blk) // spb,
+                                            len(blk), 4, 2, spb)
+                   + b"fact" + _struct.pack("<II", 4, spb)
+                   + b"data" + _struct.pack("<I", len(blk)) + blk)
+        assert sniff_format(payload) == "wav"
+        with pytest.raises(NotImplementedError, match="tag=17 bits=4"):
+            decode_wav(payload)
 
     def test_audio_features_are_real_rms(self, spark):
         """Audio feature values must equal the frame RMS of the known
@@ -635,6 +701,66 @@ class TestMediaCodecs:
             exp = [np.sqrt(np.mean(s[f * 256:(f + 1) * 256] ** 2)) / 32768.0
                    for f in range(8)]
             assert np.allclose(list(r.features), exp, atol=1e-15)
+
+class TestJpegCodec:
+    """JPEG has no decoder in kernels/media.py: a JPEG payload sniffs as
+    'unknown', so decode_raster rejects it and decode_features takes
+    the hash-stub path (or raises with fake=False)."""
+
+    def test_codec_boundary_lossless_raises(self):
+        import struct
+
+        from dtaidistance_spark.kernels.media import (decode_raster,
+                                                      sniff_format)
+
+        sof3 = struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
+        lossless = (b"\xff\xd8"
+                    + b"\xff\xc3" + struct.pack(">H", 2 + len(sof3))
+                    + sof3)
+        baseline = lossless.replace(b"\xff\xc3", b"\xff\xc0")
+        for payload in (lossless, baseline):
+            assert sniff_format(payload) == "unknown"
+            with pytest.raises(ValueError, match="fmt=unknown"):
+                decode_raster(payload)
+
+    def test_decode_features_parses_jpeg_payload(self, spark):
+        """Operator plumbing: a JPEG payload is not parsed; its features
+        are exactly the hash stub of its bytes with fake=True, and
+        fake=False raises at the codec boundary."""
+        from dtaidistance_spark.operators.multimodal import (MEDIA_SCHEMA,
+                                                             _fake_decode)
+
+        payload = (b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01\x01\x00"
+                   b"\x00\x01\x00\x01\x00\x00\xff\xd9")
+        media = spark.createDataFrame(
+            [(0, "image", bytearray(payload), 32, 24, 16000, 3)],
+            schema=MEDIA_SCHEMA)
+        out = decode_features(media, n_features=8).collect()
+        assert len(out) == 1
+        assert out[0]["features"] == _fake_decode(payload, 8).tolist()
+        with pytest.raises(Exception, match="Pillow"):
+            decode_features(media, n_features=8, fake=False).collect()
+
+
+class TestGifCodec:
+    """GIF has no decoder in kernels/media.py."""
+
+    def test_extension_skip_and_dispatch(self):
+        """A GIF89a with a graphic-control extension between its color
+        table and image block sniffs as 'unknown', and decode_raster
+        dispatches it nowhere: it raises."""
+        from dtaidistance_spark.kernels.media import (decode_raster,
+                                                      sniff_format)
+
+        payload = (b"GIF89a" + bytes([1, 0, 1, 0, 0x80, 0, 0])
+                   + bytes([0, 0, 0, 255, 255, 255])
+                   + bytes([0x21, 0xF9, 4, 0, 0, 0, 0, 0])
+                   + b"\x2c" + bytes([0, 0, 0, 0, 1, 0, 1, 0, 0])
+                   + bytes([2, 2, 0x4C, 0x01, 0]) + b"\x3b")
+        assert sniff_format(payload) == "unknown"
+        with pytest.raises(ValueError, match="fmt=unknown"):
+            decode_raster(payload)
+
 
 class TestSaltedIngest:
     """North-rule skew mandate: salted repartitioning for power-law turn
@@ -754,14 +880,30 @@ class TestCodecProperties:
 
         prop()
 
-    def test_ppm_wav_roundtrip_property(self):
+    def test_bmp_ppm_wav_roundtrip_property(self):
+        """PPM and PCM16 WAVE roundtrip exactly; a BMP of the same image
+        has no decoder, so it sniffs as 'unknown' and decode_raster
+        rejects it."""
+        import struct as _struct
+
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
         from dtaidistance_spark.kernels.media import (decode_ppm,
+                                                      decode_raster,
                                                       decode_wav,
                                                       encode_ppm,
-                                                      encode_wav)
+                                                      encode_wav,
+                                                      sniff_format)
+
+        def bmp(img):  # 24-bit BI_RGB DIB: bottom-up BGR, 4-byte stride
+            h, w = img.shape[:2]
+            pad = bytes((-3 * w) % 4)
+            rows = b"".join(img[y, :, ::-1].tobytes() + pad
+                            for y in range(h - 1, -1, -1))
+            return (b"BM" + _struct.pack("<IHHI", 54 + len(rows), 0, 0, 54)
+                    + _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
+                                   len(rows), 0, 0, 0, 0) + rows)
 
         @settings(max_examples=30, deadline=None)
         @given(st.integers(1, 16), st.integers(1, 16),
@@ -769,6 +911,10 @@ class TestCodecProperties:
         def prop(h, w, seed):
             rng = np.random.default_rng(seed)
             img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            b = bmp(img)
+            assert sniff_format(b) == "unknown"
+            with pytest.raises(ValueError):
+                decode_raster(b)
             assert np.array_equal(decode_ppm(encode_ppm(img)), img)
             pcm = rng.integers(-2**15, 2**15, h * w + 1,
                                dtype=np.int64).astype(np.int16)

@@ -643,13 +643,14 @@ class TestBoundsColumnAlgebra:
             assert r.ub == pytest.approx(ed_distance(S[r.i], S[r.j]),
                                          rel=1e-12)
 
-    def test_bounds_broadcast_vs_cartesian_plans(self, spark, rng,
-                                                 tmp_path):
+    def test_bounds_shuffle_fallback_vs_broadcast(self, spark, rng,
+                                                  tmp_path):
         """The bounds self-join is one unhinted join that Spark plans
         itself: a BroadcastNestedLoopJoin while its size estimate of a
         side is under autoBroadcastJoinThreshold (a parquet input is
-        sized from its files), a CartesianProduct with broadcasting
-        off.  Both plans give identical pairs."""
+        sized from its files), and the non-broadcast fallback, a
+        CartesianProduct, with broadcasting off.  Both plans give
+        identical pairs."""
         from dtaidistance_spark.functions.bounds import (lb_keogh_pairs,
                                                          ub_euclidean_pairs)
 
