@@ -32,8 +32,9 @@ r5, per-query CPU-attribution meters ("queries_load": own / neighbor /
 steal / iowait average cores over every timed window, via
 dtaidistance_spark.meter) — this box is a shared VM and the meters make
 a noise-inflated run distinguishable from a real regression directly
-from the artifact.  For the N-vs-4N scaling-efficiency evidence, run
-scripts/scaling_report.py.
+from the artifact.  For an N-vs-4N scaling-efficiency comparison, run
+this harness at SPARK_GRAFT_CPUS=N and =4N on a host with 4N cores
+(BASELINE.md, targets).
 """
 
 from __future__ import annotations

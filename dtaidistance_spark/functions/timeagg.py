@@ -54,6 +54,28 @@ def _epoch_us(col):
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 
+def decimal_order_key(ts_col: str, order_col: str, caller: str):
+    """``unix_micros(ts) * 10^18 + order_col`` as one DECIMAL(38,0),
+    ordered exactly like ``struct(ts, order_col)``: any int64 micros
+    times 10^18 stays under 38 digits, so pre-epoch timestamps order
+    right and no per-row string is formatted or parsed.  A min_by/max_by
+    buffer of this type is fixed-width mutable, so the aggregate over it
+    runs as a map-side-partial HashAggregate, where a struct-typed buffer
+    silently demotes it to SortAggregate.  The key needs ``0 <=
+    order_col < 10^18``; a row outside it fails the query through
+    ``raise_error`` naming ``caller``, since its value would spill into
+    the micros digits and silently misorder first/last."""
+    us = _epoch_us(ts_col).cast("decimal(20,0)")
+    o = F.col(order_col)
+    return F.when(
+        (o < 0) | (o >= 10 ** 18),
+        F.raise_error(F.concat(
+            F.lit(f"{caller}: the decimal(38,0) ordering key needs "
+                  f"0 <= {order_col} < 10^18; got {order_col}="),
+            o.cast("string"))),
+    ).otherwise((us * 10 ** 18 + o).cast("decimal(38,0)"))
+
+
 def counter_delta(
     points: DataFrame,
     series_col: str = "series_id",
@@ -339,26 +361,19 @@ def candlestick(
     combine associatively), so this is the cheapest aggregate in the
     family and scales at scan speed.
 
-    ``pack_key=True`` (single integral ``order_cols`` only) packs the
-    ``(ts, order_col)`` struct into one DECIMAL(38,0) — zero-padded
-    decimal digits of ``unix_micros(ts)`` (20) ++ the order col (18).
-    Identical ordering => identical open/close, but the min_by/max_by
-    buffer becomes fixed-width mutable, so the aggregation actually
-    RUNS as the map-side-partial HashAggregate described above — a
-    struct-typed buffer silently demotes it to SortAggregate (full
-    sort per bucket; r6).  Requires ts >= epoch and
-    0 <= order_col < 10^18; the struct key remains the default for
-    anything else.
+    ``pack_key=True`` (single integral ``order_cols`` only) orders on
+    :func:`decimal_order_key` instead of the struct: identical ordering
+    => identical open/close, but a fixed-width buffer, so the
+    aggregation actually RUNS as the map-side-partial HashAggregate
+    described above (a struct buffer demotes it to SortAggregate, a
+    full sort per bucket; r6).  An order col outside ``0 <= order_col <
+    10^18`` fails the query.
     """
     trunc = _TRUNC[every]
     if pack_key:
         if len(order_cols) != 1:
             raise ValueError("pack_key requires exactly one order col")
-        key = F.concat(
-            F.lpad(F.unix_micros(F.col(ts_col).cast("timestamp"))
-                   .cast("string"), 20, "0"),
-            F.lpad(F.col(order_cols[0]).cast("string"), 18, "0"),
-        ).cast("decimal(38,0)")
+        key = decimal_order_key(ts_col, order_cols[0], "candlestick")
     else:
         key = F.struct(F.col(ts_col), *[F.col(c) for c in order_cols])
     return (

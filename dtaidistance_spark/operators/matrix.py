@@ -24,7 +24,11 @@ physical strategy, blocked broadcast pair ranges:
   lists.  The ranges follow the reference's OMP ``guided`` loop
   (dd_dtw_openmp.c:99), weighted by estimated kernel cost
   ``len_i·len_j``: each range takes 1/(4·par) of the cost still
-  remaining, so early tasks are big and the tail is fine-grained.  A
+  remaining, so early tasks are big and the tail is fine-grained, but
+  no range holds less than ``_TASK_FLOOR_S`` of estimated kernel time
+  (capped at 1/par of the job), so a task's fixed cost stays small
+  beside its kernel work.  The caller gives the kernel's time per
+  computed cell, from which the cost unit's seconds follow.  A
   range yields sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so a
   task's memory stays bounded whatever the pair count;
 * each tile's ranges run in their own ``mapInPandas`` branch, unioned
@@ -74,6 +78,18 @@ _SUB_BATCH_PAIRS = 2_000_000
 # broadcast limit plus its cached stack took before blocks.
 _BLOCK_BYTES = 128 * 1024 * 1024
 _CORPUS_CACHE_BYTES = 2 * _BLOCK_BYTES
+
+# Least estimated kernel seconds per range task: ~10x a Python task's
+# fixed cost, measured at 56 ms of slot time per trivial mapInPandas task
+# on a local[4] session (4-vCPU host; 200 vs 8 one-row tasks).
+_TASK_FLOOR_S = 0.5
+
+# Kernel seconds per computed DP cell.  The C DTW kernel: 29.4 us per
+# pair over 23,136 band cells (504 points, window 24), single-thread on a
+# 4-vCPU host.  weighted_warping_paths with an 8-knot profile: 4.7-5.6 us
+# per cell at 100-300 points on the same host.
+_DTW_CELL_S = 1.27e-9
+_WEIGHTED_CELL_S = 5e-6
 
 
 def _series_np(v) -> Optional[np.ndarray]:
@@ -331,7 +347,8 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
         src = src.where(i.isNull() | ((i >= rb) & (i < re_)) |
                         ((i >= cb) & (i < ce)))
     return _pair_matrix(src, ["values"], partial(_compute_pairs, settings=s),
-                        blk, triu, order_col, index_col)
+                        _DTW_CELL_S, s.window, blk, triu, order_col,
+                        index_col)
 
 
 def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
@@ -350,16 +367,18 @@ def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
                            F.col(weights_col).alias("weights"))
     return _pair_matrix(src, ["values", "weights"],
                         partial(_weighted_pairs, window=window),
-                        index_col=index_col)
+                        _WEIGHTED_CELL_S, window, index_col=index_col)
 
 
-def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
-                 triu: bool = True, order_col: Optional[str] = None,
+def _pair_matrix(src: DataFrame, data_cols: list, kernel, cell_s: float,
+                 window: Optional[int], blk=None, triu: bool = True,
+                 order_col: Optional[str] = None,
                  index_col: str = "i") -> DataFrame:
     """The pair executor: ``src`` holds ``i`` or, with ``order_col``,
     that column to rank ``i`` by, plus ``data_cols``; ``kernel(ii, jj,
     *dicts)`` computes ``(i, j, d)`` for id pairs given one ``{id:
-    array}`` dict per data column.  Rows outside the block may stay in
+    array}`` dict per data column, at about ``cell_s`` seconds per cell
+    of a DP band ``window`` wide.  Rows outside the block may stay in
     ``src``: only the block's series are broadcast.  ``index_col`` names
     the source of ``i`` in errors."""
     spark = src.sparkSession
@@ -376,7 +395,8 @@ def _pair_matrix(src: DataFrame, data_cols: list, kernel, blk=None,
     tiles = _tiles(ids, lens, cuts, blk, triu)
     if not tiles:
         return spark.createDataFrame([], PAIR_SCHEMA)
-    plan = _tile_schedule([t[5] for t in tiles], sc.defaultParallelism)
+    plan = _tile_schedule([t[5] for t in tiles], sc.defaultParallelism,
+                          _cost_s(lens, window, cell_s))
     bcs = [track_broadcast(sc.broadcast(
         [_SharedCorpus((k, d[k]) for k in keys[lo:hi]) for d in corpus]))
         for lo, hi in zip(cuts, cuts[1:])]
@@ -520,12 +540,22 @@ def _tiles(ids: np.ndarray, lens: np.ndarray, cuts: list, blk,
     return out
 
 
-def _tile_schedule(spaces: list, par: int) -> list:
+def _cost_s(lens: np.ndarray, window: Optional[int], cell_s: float) -> float:
+    """Estimated kernel seconds per cost unit ``len_i·len_j``: ``cell_s``
+    times the share of an L×L matrix inside the band ``|i - j| <
+    window``, at the corpus' mean length L."""
+    L = max(float(lens.mean()), 1.0)
+    w = L if not window else min(max(float(window), 1.0), L)
+    return cell_s * (1.0 - (L - w) * (L - w + 1) / (L * L))
+
+
+def _tile_schedule(spaces: list, par: int, cost_s: float) -> list:
     """Each tile's ``(lo, hi)`` ranges, in its own pair positions: ONE
     guided schedule (:func:`_guided_ranges_cost`) over the tiles' pair
     spaces laid end to end, its ranges cut where one tile ends and the
     next begins.  ``spaces`` holds ``(cost_upto, n_pairs, total)`` per
-    tile; with one tile the schedule is that tile's own."""
+    tile and ``cost_s`` the estimated kernel seconds per cost unit; with
+    one tile the schedule is that tile's own."""
     starts = [0]
     base = [0.0]
     for _, n_pairs, total in spaces:
@@ -538,7 +568,8 @@ def _tile_schedule(spaces: list, par: int) -> list:
 
     out: list = [[] for _ in spaces]
     t = 0
-    for lo, hi in _guided_ranges_cost(cost_upto, starts[-1], base[-1], par):
+    for lo, hi in _guided_ranges_cost(cost_upto, starts[-1], base[-1], par,
+                                      cost_s):
         while lo < hi:
             while starts[t + 1] <= lo:
                 t += 1
@@ -586,7 +617,7 @@ def _triu_unrank(p: np.ndarray, n: int) -> Tuple[np.ndarray, np.ndarray]:
 
 
 def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
-                        par: int) -> list:
+                        par: int, cost_s: float) -> list:
     """Guided pair ranges measured in estimated kernel cost — the
     reference's OMP ``guided`` matrix loop (dtw.py:681
     ``schedule(guided)``, dd_dtw_openmp.c:111-116) re-expressed for
@@ -598,10 +629,17 @@ def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
     can hold 10-100x the work of a late one, and the driver knows every
     length upfront.  On equal lengths cost is proportional to count.
 
-    The first wave takes 1/(4·par) rather than 1/(2·par): a range
-    task's fixed cost is ~ms, while a 2·par first wave at a 15k-series
-    corpus made single tasks ~40 s, so any one slowed worker stretched
-    the job by most of a wave.
+    The first wave takes 1/(4·par) rather than 1/(2·par): a 2·par first
+    wave at a 15k-series corpus made single tasks ~40 s, so any one
+    slowed worker stretched the job by most of a wave.
+
+    A range task has a fixed cost, 56 ms of slot time per trivial task
+    on a local[4] session, so no range holds less than
+    ``_TASK_FLOOR_S`` (~10x that) of estimated kernel time, with
+    ``cost_s`` the estimated seconds per cost unit.  That floor is
+    capped at ``total / par``, so a small job still fills every slot; a
+    corpus with hours of kernel time keeps the plain guided schedule,
+    whose ``total / (24·par)`` floor is the larger one there.
 
     ``cost_upto(p)`` must return the closed-form cumulative cost of the
     first ``p`` pairs of the linear pair space; boundaries are found by
@@ -611,7 +649,8 @@ def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
     ranges = []
     lo = 0
     cost_lo = 0.0
-    floor_c = max(total / n_pairs, total / (par * 24))
+    floor_c = max(total / n_pairs, total / (par * 24),
+                  min(_TASK_FLOOR_S / cost_s, total / par))
     while lo < n_pairs:
         want = cost_lo + max(floor_c, (total - cost_lo) / (4 * par))
         if want >= total:

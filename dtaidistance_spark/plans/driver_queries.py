@@ -108,24 +108,15 @@ def event_points_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UnsafeRow-mutable, which silently demoted every tier aggregation to
     SortAggregate (full sort of the raw scan per tier — the dominant
     rollup cost at sf1.0); a decimal buffer is fixed-width mutable, so
-    the same plan runs as a map-side-partial HashAggregate.  The decimal
-    arithmetic is exact: any int64 micros times 10^18 stays under 38
-    digits, so every timestamp, pre-epoch ones included, orders right,
-    and no per-row string is formatted or parsed.  The key needs
-    0 <= event_id < 10^18 (the testdata generator contract, TESTDATA.md:
-    dense int64 event ids); a row outside it fails the query through
-    ``raise_error``, since its id would spill into the micros digits
-    and silently misorder first/last."""
+    the same plan runs as a map-side-partial HashAggregate.  The key
+    (``timeagg.decimal_order_key``) is exact for every timestamp,
+    pre-epoch ones included, and needs 0 <= event_id < 10^18 (the
+    testdata generator contract, TESTDATA.md: dense int64 event ids); a
+    row outside it fails the query."""
+    from ..functions.timeagg import decimal_order_key
+
     ev = _events(spark, sf_dir)
-    us = F.unix_micros(F.col("ts").cast("timestamp")).cast("decimal(20,0)")
-    eid = F.col("event_id")
-    seq = F.when(
-        (eid < 0) | (eid >= 10 ** 18),
-        F.raise_error(F.concat(
-            F.lit("event_points_rollup: the decimal(38,0) ordering key "
-                  "needs 0 <= event_id < 10^18; got event_id="),
-            eid.cast("string"))),
-    ).otherwise((us * 10 ** 18 + eid).cast("decimal(38,0)"))
+    seq = decimal_order_key("ts", "event_id", "event_points_rollup")
     return ev.select(
         F.concat(F.lit("user"), F.col("user_id").cast("string")).alias("series_id"),
         seq.alias("seq"),

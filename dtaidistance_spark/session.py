@@ -11,9 +11,12 @@ Python < 3.13 spend ~0.2 s before every task re-reading the central
 directories of ``pyspark.zip``, the py4j zip and the spark-core jar,
 because PySpark calls ``importlib.invalidate_caches()`` per task and
 ``zipimporter`` re-reads its archive on that call; the daemon entry
-re-reads an archive only when it changed.  The package root goes first on the workers'
-PYTHONPATH (``spark.executorEnv.PYTHONPATH``), so the daemon imports even
-when the driver found the package through ``sys.path`` alone.
+re-reads an archive only when it changed, and it pre-imports the Arrow
+UDF stack and freezes its heap before it forks, so a reused worker's
+per-task ``gc.collect()`` skips those imports' objects.  The package
+root goes first on the workers' PYTHONPATH
+(``spark.executorEnv.PYTHONPATH``), so the daemon imports even when the
+driver found the package through ``sys.path`` alone.
 
 The driver heap defaults to half of ``MemTotal`` (at most 24g);
 ``SPARK_GRAFT_DRIVER_MEM`` overrides it.

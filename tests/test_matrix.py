@@ -191,45 +191,98 @@ class TestCostAwareScheduling:
     the schedule equalizes estimated kernel cost len_i·len_j, outputs
     stay bit-identical."""
 
+    PAR = 32
+
     def test_cost_ranges_partition_and_guided_profile(self):
+        # an hour of kernel time: the total / (24·par) floor (4.7 s) is
+        # above the time floor, so this is the plain guided profile
+        self._check_profile(3600.0)
+
+    def test_cost_ranges_time_floor(self):
+        from dtaidistance_spark.operators.matrix import _TASK_FLOOR_S
+
+        # 40 s over 32 slots: ranges of at least the floor's seconds
+        assert self.PAR < len(self._check_profile(40.0)) \
+            <= np.ceil(40.0 / _TASK_FLOOR_S)
+        # 1 ms: the floor is capped at 1/par of the job, so a small job
+        # still fills every slot
+        assert len(self._check_profile(1e-3)) == self.PAR
+
+    def _check_profile(self, job_s):
         from dtaidistance_spark.operators.matrix import (
-            _guided_ranges_cost, _triu_cost_fn)
+            _TASK_FLOOR_S, _guided_ranges_cost, _triu_cost_fn)
 
         rng = np.random.default_rng(3)
         lens = (5 + rng.pareto(1.5, 200) * 40).astype(np.int64)  # power law
         n = len(lens)
         n_pairs = n * (n - 1) // 2
         cost_upto, total = _triu_cost_fn(lens)
-        par = 32
-        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par)
+        par = self.PAR
+        cost_s = job_s / total
+        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par, cost_s)
         # exact partition of the linear pair space
         assert ranges[0][0] == 0 and ranges[-1][1] == n_pairs
         assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
         assert all(lo < hi for lo, hi in ranges)
-        # guided profile in COST: each range holds at most the guided
-        # quantum of the cost remaining at its start, up to one pair of
-        # binary-search overshoot
+        # guided profile in COST: each range holds the guided quantum of
+        # the cost remaining at its start, or the floor, up to one pair of
+        # binary-search overshoot; only the last range may hold less
         sl = np.sort(lens)
         slack = float(sl[-1] * sl[-2])  # max possible single-pair cost
-        floor_c = max(total / n_pairs, total / (par * 24))
-        for lo, hi in ranges:
+        floor_c = max(total / n_pairs, total / (par * 24),
+                      min(_TASK_FLOOR_S / cost_s, total / par))
+        for k, (lo, hi) in enumerate(ranges):
             c_lo, c_hi = cost_upto(lo), cost_upto(hi)
-            quantum = max(floor_c, (total - c_lo) / (2 * par))
+            quantum = max(floor_c, (total - c_lo) / (4 * par))
             assert c_hi - c_lo <= quantum + slack, (lo, hi)
+            if k < len(ranges) - 1:
+                assert c_hi - c_lo >= quantum, (lo, hi)
+        return ranges
 
     def test_equal_length_schedule_pinned(self):
-        # the dtw_matrix benchmark corpus: 480 equal-length series on 4
-        # cores — 44 guided ranges, the first 1/16 of the pairs
+        # the dtw_matrix benchmark corpus: 480 equal-length series of 504
+        # points, window 24, on 4 cores — 3.38 s of estimated C-kernel
+        # time, so 7 ranges of the 0.5 s floor (17,017 pairs) and a tail
         from dtaidistance_spark.operators.matrix import (
-            _guided_ranges_cost, _triu_cost_fn)
+            _DTW_CELL_S, _cost_s, _guided_ranges_cost, _triu_cost_fn)
 
         n_pairs = 480 * 479 // 2
-        cost_upto, total = _triu_cost_fn(np.full(480, 504, dtype=np.int64))
-        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, 4)
-        assert len(ranges) == 44
-        assert ranges[0] == (0, 7185)
+        lens = np.full(480, 504, dtype=np.int64)
+        cost_upto, total = _triu_cost_fn(lens)
+        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, 4,
+                                     _cost_s(lens, 24, _DTW_CELL_S))
+        assert len(ranges) == 7
+        assert ranges[0] == (0, 17017)
         assert ranges[-1][1] == n_pairs
         assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+
+    def test_long_job_keeps_plain_guided_schedule(self):
+        # 15k series of 504 points hold ~55 min of kernel time: the
+        # total / (24·par) floor (34 s) is above the time floor, so the
+        # ranges are the plain guided schedule's, cut by the formula below
+        from dtaidistance_spark.operators.matrix import (
+            _DTW_CELL_S, _cost_s, _guided_ranges_cost, _triu_cost_fn)
+
+        n, par = 15_000, 4
+        n_pairs = n * (n - 1) // 2
+        lens = np.full(n, 504, dtype=np.int64)
+        cost_upto, total = _triu_cost_fn(lens)
+        ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par,
+                                     _cost_s(lens, 24, _DTW_CELL_S))
+        plain, lo, cost_lo = [], 0, 0.0
+        floor_c = max(total / n_pairs, total / (par * 24))
+        while lo < n_pairs:
+            want = cost_lo + max(floor_c, (total - cost_lo) / (4 * par))
+            a, b = lo + 1, n_pairs       # least p with cost_upto(p) >= want
+            while a < b and want < total:
+                mid = (a + b) // 2
+                a, b = (a, mid) if cost_upto(mid) >= want else (mid + 1, b)
+            hi = a if want < total else n_pairs
+            plain.append((lo, hi))
+            cost_lo, lo = cost_upto(hi), hi
+        assert ranges == plain
+        assert len(ranges) == 44
+        assert ranges[0] == (0, 7030782)
 
     @pytest.mark.parametrize("space", ["triu", "block_triu", "block_rect"])
     def test_tile_schedule_partitions_pair_space(self, space):
@@ -248,7 +301,9 @@ class TestCostAwareScheduling:
         assert len(cuts) - 1 >= 3
         block_of = np.repeat(np.arange(len(cuts) - 1), np.diff(cuts))
         tiles = _tiles(ids, lens, cuts, blk, triu)
-        plan = _tile_schedule([t[5] for t in tiles], 4)
+        # 1 s per cost unit: the time floor stays below the guided
+        # quantum, so the ranges are many and cross tile boundaries
+        plan = _tile_schedule([t[5] for t in tiles], 4, 1.0)
         got = []
         for (a, b, rows, cols, tri, (_, n_pairs, _)), ranges in zip(tiles,
                                                                   plan):
@@ -273,18 +328,19 @@ class TestCostAwareScheduling:
         assert len(got) == len(set(got))  # every pair exactly once
 
     def test_one_block_schedule_pinned(self):
-        # one block is the plain schedule: the pinned 44 ranges above
+        # one block is the plain schedule: the pinned 7 ranges above
         from dtaidistance_spark.operators.matrix import (
-            _block_cuts, _tile_schedule, _tiles)
+            _DTW_CELL_S, _block_cuts, _cost_s, _tile_schedule, _tiles)
 
         ids = np.arange(480, dtype=np.int64)
         lens = np.full(480, 504, dtype=np.int64)
         cuts = _block_cuts(8 * lens, 128 * 1024 * 1024)
         assert cuts == [0, 480]
         tiles = _tiles(ids, lens, cuts, None, True)
-        (ranges,) = _tile_schedule([t[5] for t in tiles], 4)
-        assert len(ranges) == 44
-        assert ranges[0] == (0, 7185)
+        (ranges,) = _tile_schedule([t[5] for t in tiles], 4,
+                                   _cost_s(lens, 24, _DTW_CELL_S))
+        assert len(ranges) == 7
+        assert ranges[0] == (0, 17017)
         assert ranges[-1][1] == 480 * 479 // 2
 
     def test_blocked_vs_one_block_bit_identical(self, spark, rng,

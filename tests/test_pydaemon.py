@@ -1,7 +1,8 @@
 """The Python worker daemon entry (dtaidistance_spark/pydaemon.py): an
 unchanged archive is not re-read on ``importlib.invalidate_caches()``,
-a changed one is, and Spark workers started from it still pick up
-``addPyFile`` modules."""
+a changed one is, Spark workers started from it still pick up
+``addPyFile`` modules, and they fork from a daemon that already imported
+the Arrow UDF stack and froze its heap."""
 
 import importlib
 import os
@@ -91,6 +92,46 @@ def test_worker_sees_wrapped_method(spark):
     rows = spark.range(4).repartition(4).mapInPandas(
         probe, "wrapped boolean").collect()
     assert rows and all(r.wrapped == WRAPS for r in rows)
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/task"),
+                    reason="reads the daemon's threads from /proc")
+def test_workers_fork_from_frozen_preloaded_daemon(spark):
+    def probe(it):
+        import gc
+        import os
+        import sys
+
+        daemon = os.getppid()
+        with open(f"/proc/{daemon}/cmdline", "rb") as f:
+            cmd = f.read().split(b"\0")
+        threads = []
+        for t in os.listdir(f"/proc/{daemon}/task"):
+            with open(f"/proc/{daemon}/task/{t}/comm") as f:
+                threads.append(f.read().strip())
+        # a module imported before the fork sits in the permanent
+        # generation, which the collector no longer lists
+        pa = vars(sys.modules["pyarrow"])
+        inherited = not any(o is pa for o in gc.get_objects())
+        for _ in it:
+            yield pd.DataFrame({"entry": [b"dtaidistance_spark.pydaemon"
+                                          in cmd],
+                                "frozen": [gc.get_freeze_count()],
+                                "pyarrow_inherited": [inherited],
+                                "threads": [sorted(threads)]})
+
+    rows = spark.range(4, numPartitions=4).mapInPandas(
+        probe, "entry boolean, frozen long, pyarrow_inherited boolean, "
+        "threads array<string>").collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r.entry
+        assert r.frozen >= 30_000
+        assert r.pyarrow_inherited
+        # fork-safe: besides its main thread the daemon runs at most
+        # pyarrow's jemalloc background thread, which jemalloc's own
+        # fork handlers cover
+        assert len([t for t in r.threads if t != "jemalloc_bg_thd"]) == 1
 
 
 def test_add_py_file_after_tasks_ran(spark, tmp_path):

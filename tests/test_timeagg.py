@@ -314,6 +314,41 @@ class TestCandlestick:
         assert (r.n, r.open, r.high, r.low, r.close) == (3, 3.0, 5.0,
                                                          3.0, 4.0)
 
+    def test_packed_key_matches_struct_key(self, spark):
+        from dtaidistance_spark.functions.timeagg import candlestick
+        # pre-epoch samples and timestamp ties broken by the order col;
+        # each bucket's open/close sit on a tie or cross the epoch
+        E = dt.datetime(1970, 1, 1)
+        at = lambda sec: E + dt.timedelta(seconds=sec)
+        rows = [("a", at(-7200), 5, 1.0), ("a", at(-7200), 2, 2.0),
+                ("a", at(-3700), 9, 3.0), ("a", at(-3700), 0, 4.0),
+                ("a", at(-1), 3, 5.0), ("a", at(0), 1, 6.0),
+                ("a", at(0), 4, 7.0), ("a", at(3599), 8, 8.0),
+                ("b", at(-5), 10 ** 18 - 1, 9.0),
+                ("b", at(-5), 10 ** 17, 10.0)]
+        df = spark.createDataFrame(
+            rows, "series_id string, ts timestamp, event_id long, "
+            "value double")
+
+        def run(pack):
+            return sorted(candlestick(df, "1h", order_cols=("event_id",),
+                                      pack_key=pack).collect())
+
+        want = run(False)
+        assert [(r.open, r.close) for r in want] == [
+            (2.0, 3.0), (5.0, 5.0), (6.0, 8.0), (10.0, 9.0)]
+        assert run(True) == want
+
+    @pytest.mark.parametrize("event_id", [-1, 10 ** 18])
+    def test_packed_key_domain_fails_loudly(self, spark, event_id):
+        from dtaidistance_spark.functions.timeagg import candlestick
+        df = spark.createDataFrame(
+            [("a", _ts(0), 0, 1.0), ("a", _ts(1), event_id, 2.0)],
+            "series_id string, ts timestamp, event_id long, value double")
+        out = candlestick(df, "1h", order_cols=("event_id",), pack_key=True)
+        with pytest.raises(Exception, match="decimal\\(38,0\\) ordering key"):
+            out.collect()
+
     def test_brute_parity(self, spark, rng):
         from dtaidistance_spark.functions.timeagg import candlestick
         rows = []
