@@ -1,11 +1,21 @@
 """Shared pytest fixtures.
 
-The pure-Python reference (wannesm/dtaidistance) imports with zero build
-steps from /root/reference/src (verified in SURVEY.md §5); it is the
-correctness oracle for all kernel tests (use_c=False paths only).  The
-``dtw_oracle`` fixture falls back to a textbook DP when it is absent.
+Kernel parity runs against the pure-Python reference (wannesm/
+dtaidistance, ``use_c=False`` paths) when it imports, from
+``REFERENCE_SRC`` or the environment, and otherwise against in-repo
+textbook oracles written from the documented recurrences
+(tests/textbook_dtw.py, tests/textbook_oracles.py).  The ``oracle``
+fixture picks one per reference module; ``ref_dtw`` (also named
+``dtw_oracle``) and ``ref_ed`` are its ``dtw`` and ``ed`` modules.
+
+Eleven tests check conventions only the reference's own code fixes
+(DetectKnee, the relaxed postprocessing rules, the weighted DTW profile,
+LoCo, hangover, ``linearly_scale``, ``mixedlinearlogdomain``'s tuple
+form).  They read the reference through ``pytest.importorskip`` and are
+skipped where it does not import.
 """
 
+import importlib
 import sys
 
 import numpy as np
@@ -17,29 +27,34 @@ if REFERENCE_SRC not in sys.path:
 
 
 @pytest.fixture(scope="session")
-def ref_dtw():
-    from dtaidistance import dtw as ref_dtw_mod
+def oracle():
+    """``oracle(name)``: the reference's ``dtaidistance.<name>`` when it
+    imports, else its textbook stand-in with the same call surface for
+    the calls the tests make."""
+    def get(name):
+        try:
+            return importlib.import_module("dtaidistance." + name)
+        except ImportError:
+            import textbook_oracles
 
-    return ref_dtw_mod
+            return textbook_oracles.MODULES[name]
 
-
-@pytest.fixture(scope="session")
-def dtw_oracle():
-    """The reference's ``dtaidistance.dtw`` when it imports, else the
-    in-repo textbook DP (tests/textbook_dtw.py) with the same call
-    surface for distance, distance_matrix and distance_array_index."""
-    try:
-        from dtaidistance import dtw as ref_dtw_mod
-    except ImportError:
-        import textbook_dtw as ref_dtw_mod
-    return ref_dtw_mod
+    return get
 
 
 @pytest.fixture(scope="session")
-def ref_ed():
-    from dtaidistance import ed as ref_ed_mod
+def ref_dtw(oracle):
+    return oracle("dtw")
 
-    return ref_ed_mod
+
+@pytest.fixture(scope="session")
+def dtw_oracle(ref_dtw):
+    return ref_dtw
+
+
+@pytest.fixture(scope="session")
+def ref_ed(oracle):
+    return oracle("ed")
 
 
 @pytest.fixture(scope="session")

@@ -105,10 +105,8 @@ class TestSubsequence:
         assert [[m.start, m.end] for m in best_k] == [[2, 4], [5, 7], [0, 1],
                                                       [4, 5]]
 
-    def test_matching_vs_reference(self, rng):
-        import sys
-        sys.path.insert(0, "/root/reference/src")
-        from dtaidistance.subsequence import subsequence_alignment as ref_sa
+    def test_matching_vs_reference(self, oracle, rng):
+        ref_sa = oracle("subsequence").subsequence_alignment
 
         query = rng.normal(size=5)
         series = rng.normal(size=40)
@@ -139,10 +137,8 @@ class TestAlignment:
         assert "".join(s1a) == "G-ATTACA"
         assert "".join(s2a) == "GCA-TGCU"
 
-    def test_vs_reference_random(self, rng):
-        import sys
-        sys.path.insert(0, "/root/reference/src")
-        from dtaidistance import alignment as ref_al
+    def test_vs_reference_random(self, oracle, rng):
+        ref_al = oracle("alignment")
 
         syms = list("ABCD")
         for _ in range(5):

@@ -18,8 +18,8 @@ from dtaidistance_spark.kernels.extras import (DetectKnee, distance_from_path,
 
 
 class TestMsm:
-    def test_vs_reference_equal_length(self, rng):
-        from dtaidistance import msm as ref_msm
+    def test_vs_reference_equal_length(self, oracle, rng):
+        ref_msm = oracle("msm")
 
         for _ in range(6):
             x = rng.normal(size=12)
@@ -36,7 +36,7 @@ class TestMsm:
 
 class TestWeighted:
     def test_vs_reference(self, rng):
-        from dtaidistance import dtw_weighted as ref_w
+        ref_w = pytest.importorskip("dtaidistance.dtw_weighted")
 
         for _ in range(4):
             s1 = rng.normal(size=10)
@@ -48,8 +48,8 @@ class TestWeighted:
             assert dg == pytest.approx(de)
             np.testing.assert_allclose(mg, me, rtol=1e-12)
 
-    def test_unweighted(self, rng):
-        from dtaidistance import dtw_weighted as ref_w
+    def test_unweighted(self, oracle, rng):
+        ref_w = oracle("dtw_weighted")
 
         s1 = rng.normal(size=9)
         s2 = rng.normal(size=9)
@@ -60,7 +60,7 @@ class TestWeighted:
 
 class TestDetectKnee:
     def test_vs_reference(self, rng):
-        from dtaidistance.util import DetectKnee as RefDK
+        RefDK = pytest.importorskip("dtaidistance.util").DetectKnee
 
         values = np.concatenate([np.linspace(0, 1, 20),
                                  np.linspace(1, 10, 10)])
@@ -73,7 +73,7 @@ class TestDetectKnee:
 
 class TestPostprocessing:
     def test_distance_from_path(self, rng):
-        from dtaidistance import postprocessing as ref_pp
+        ref_pp = pytest.importorskip("dtaidistance.postprocessing")
 
         s1 = rng.normal(size=12)
         s2 = rng.normal(size=12)
@@ -84,7 +84,7 @@ class TestPostprocessing:
             assert got == pytest.approx(float(expected))
 
     def test_points_with_min_diff(self, rng):
-        from dtaidistance import postprocessing as ref_pp
+        ref_pp = pytest.importorskip("dtaidistance.postprocessing")
 
         s1 = rng.normal(size=12)
         s2 = rng.normal(size=12)
@@ -106,8 +106,8 @@ class TestPostprocessing:
 
 
 class TestPreprocessing:
-    def test_derivative_vs_reference(self, rng):
-        from dtaidistance import preprocessing as ref_pre
+    def test_derivative_vs_reference(self, oracle, rng):
+        ref_pre = oracle("preprocessing")
 
         s = rng.normal(size=20)
         np.testing.assert_allclose(kp.derivative(s), ref_pre.derivative(s),
@@ -117,14 +117,14 @@ class TestPreprocessing:
         s = rng.normal(size=20)
         np.testing.assert_allclose(kp.differencing(s), np.diff(s))
 
-    def test_logdomain_vs_reference(self, rng):
-        from dtaidistance import preprocessing as ref_pre
+    def test_logdomain_vs_reference(self, oracle, rng):
+        ref_pre = oracle("preprocessing")
 
         s = rng.normal(size=20) * 10
         np.testing.assert_allclose(kp.logdomain(s), ref_pre.logdomain(s))
 
     def test_mixedlinearlog_vs_reference(self, rng):
-        from dtaidistance import preprocessing as ref_pre
+        ref_pre = pytest.importorskip("dtaidistance.preprocessing")
 
         s = rng.normal(size=50) * 30
         np.testing.assert_allclose(kp.mixedlinearlogdomain(s, 10),

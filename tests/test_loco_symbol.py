@@ -23,8 +23,8 @@ def _motif_series(rng, n=120):
 
 class TestLocoMatrix:
     def test_wp_matches_reference(self, rng):
-        from dtaidistance.subsequence.localconcurrences import (
-            loco_warping_paths as ref_wp)
+        ref_wp = pytest.importorskip(
+            "dtaidistance.subsequence.localconcurrences").loco_warping_paths
 
         s = _motif_series(rng)
         for kwargs in (
@@ -38,8 +38,8 @@ class TestLocoMatrix:
             np.testing.assert_allclose(got, expected, rtol=1e-12)
 
     def test_wp_window(self, rng):
-        from dtaidistance.subsequence.localconcurrences import (
-            loco_warping_paths as ref_wp)
+        ref_wp = pytest.importorskip(
+            "dtaidistance.subsequence.localconcurrences").loco_warping_paths
 
         s1 = rng.normal(size=40)
         s2 = rng.normal(size=55)
@@ -156,7 +156,8 @@ class TestSymbolization:
         assert idx[0] == (0, 10)
 
     def test_hangover_vs_reference(self, rng):
-        from dtaidistance.symbolization.alignment import SymbolAlignment
+        SymbolAlignment = pytest.importorskip(
+            "dtaidistance.symbolization.alignment").SymbolAlignment
 
         sa = SymbolAlignment(codebook=[np.zeros(4)])
         symbols = rng.integers(0, 3, size=(3, 60))

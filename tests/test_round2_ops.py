@@ -55,8 +55,9 @@ class TestMatchingLastrow:
 
 class TestLinearlyScale:
     def test_matches_reference(self, rng):
-        from dtaidistance.subsequence.subsequencealignment import (
-            subsequence_alignment as ref_sa)
+        ref_sa = pytest.importorskip(
+            "dtaidistance.subsequence.subsequencealignment"
+        ).subsequence_alignment
         from dtaidistance_spark.kernels.subsequence import (
             linearly_scale, subsequence_alignment)
         series = np.concatenate([np.zeros(20),
@@ -173,8 +174,8 @@ class TestWarpingPathProb:
 
 
 class TestGenericDp:
-    def test_matches_reference_dp_dtw_costs(self, rng):
-        from dtaidistance import dp as ref_dp
+    def test_matches_reference_dp_dtw_costs(self, oracle, rng):
+        ref_dp = oracle("dp")
         from dtaidistance_spark.kernels.dp import dp
 
         fn = lambda a, b: ((a - b) ** 2, (a - b) ** 2)
@@ -210,7 +211,7 @@ class TestGenericDp:
 
 class TestWeightedMatrix:
     def test_vs_reference(self, spark, rng):
-        from dtaidistance import dtw_weighted as ref_w
+        ref_w = pytest.importorskip("dtaidistance.dtw_weighted")
         from dtaidistance_spark.operators.matrix import distance_matrix_weighted
 
         n, L = 6, 30
@@ -231,7 +232,7 @@ class TestWeightedMatrix:
     def test_blocked_vs_reference(self, spark, rng, in_blocks):
         """Cut the corpus into several broadcast blocks, weight profiles
         included, and check the same reference parity through them."""
-        from dtaidistance import dtw_weighted as ref_w
+        ref_w = pytest.importorskip("dtaidistance.dtw_weighted")
         from dtaidistance_spark.operators.matrix import distance_matrix_weighted
 
         n, L = 6, 30
@@ -291,8 +292,8 @@ class TestWeightedMatrix:
 
 
 class TestNdimMatrix:
-    def test_vs_reference_ndim(self, spark, rng):
-        from dtaidistance import dtw_ndim as ref_nd
+    def test_vs_reference_ndim(self, spark, oracle, rng):
+        ref_nd = oracle("dtw_ndim")
         from dtaidistance_spark.operators.matrix import distance_matrix
 
         n, L, d = 6, 40, 3
