@@ -4,10 +4,10 @@ Series Database", VLDB 2015 — public paper; this is an independent
 implementation).
 
 Pure numpy + Python ints, no Spark imports: the engine invokes
-``encode_chunk`` / ``decode_chunk`` inside ``applyInPandas`` /
-``mapInPandas`` with one chunk per series slice.  Round-trips are exact
-to the float64 bit pattern (tested), which is what the north rule's
-bit-for-bit tier parity needs.
+``encode_chunk`` / ``decode_chunk`` inside ``mapInPandas`` with one
+chunk per series slice.  Round-trips are exact to the float64 bit
+pattern (tested), which is what the north rule's bit-for-bit tier
+parity needs.
 
 One format, Gorilla's classic bit-serial layout.  The engine's chunks
 are one series × UTC day of the 1h tier, so at most 24 points; at that

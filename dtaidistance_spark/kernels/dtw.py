@@ -357,21 +357,6 @@ def _pooled(key: str, shape: tuple, grow_axis: int = 1) -> np.ndarray:
     return a[tuple(sl)]
 
 
-def _band_bounds(r: int, c: int, window: int):
-    """Per-row column band [j_lo(i), j_hi(i)) in 0-based s2 coordinates.
-
-    Matches the reference loop bounds (dtw.py:351-352):
-    j_start = max(0, i - max(0, r-c) - window + 1),
-    j_end   = min(c, i + max(0, c-r) + window).
-    """
-    M = max(0, r - c)
-    N = max(0, c - r)
-    i = np.arange(r)
-    j_lo = np.maximum(0, i - M - window + 1)
-    j_hi = np.minimum(c, i + N + window)
-    return j_lo, j_hi
-
-
 def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
                     keep_matrix: bool = False, keep_lastrow: bool = False):
     """Banded DTW over a batch of pairs of equal shapes.

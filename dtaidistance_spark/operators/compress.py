@@ -1,10 +1,14 @@
 """Chunk compression operator: tier rows → Gorilla-encoded binary chunks.
 
-``compress_tier`` groups a (gap-filled) aggregate tier into one chunk per
+``compress_tier`` cuts a (gap-filled) aggregate tier into one chunk per
 series × UTC day and encodes each with the Gorilla codec
-(``kernels/codec.py``) inside ``applyInPandas`` (one Arrow batch = many
-chunks, no per-row Python).  ``decompress_chunks`` is the exact inverse;
-round-trip equality is the acceptance test.
+(``kernels/codec.py``).  The tier is hash-partitioned by series and
+sorted by (series, time) within each partition; one ``mapInPandas``
+pass then streams each partition, encodes every complete chunk of an
+Arrow batch and carries the last, possibly incomplete one into the next
+batch, so a task holds one batch plus one chunk and pays the Python
+call cost per batch, not per chunk.  ``decompress_chunks`` is the exact
+inverse; round-trip equality is the acceptance test.
 
 A day of the 1h tier is at most 24 points (1,440 at 1m), small enough
 for the codec's bit-serial loop and to decode in one task.  The chunk
@@ -29,15 +33,7 @@ CHUNK_SCHEMA = ("series_id string, chunk_start timestamp, codec string, "
                 "n int, first_val double, checksum long, payload binary")
 
 _CHUNK_SPAN = "day"
-# Encoder groups are series-hash buckets, not series: one Arrow group
-# then carries ~n_series/_NUM_BUCKETS series and the encoder splits
-# chunks with numpy inside, so the per-group Python/Arrow overhead is
-# amortized over thousands of chunks (a per-series groupBy costs one
-# exchange per series — measured 6 s of pure group overhead at 1,500
-# 64-point series).  The count bounds the group size: at any scale a
-# bucket holds ~|tier| / 128 rows (128 ≈ 2-4 groups per core on
-# local[32]).
-_NUM_BUCKETS = 128
+_CHUNK_COLS = [c.split()[0] for c in CHUNK_SCHEMA.split(", ")]
 
 
 def compress_tier(agg: DataFrame, value_col: str = "sum") -> DataFrame:
@@ -48,30 +44,34 @@ def compress_tier(agg: DataFrame, value_col: str = "sum") -> DataFrame:
         F.date_trunc(_CHUNK_SPAN, F.col("bucket_ts")).alias("chunk_start"),
         F.col("bucket_ts").cast("long").alias("ts_s"),
         F.coalesce(F.col(value_col).cast("double"), F.lit(float("nan"))).alias("v"),
-        F.pmod(F.xxhash64("series_id"), F.lit(_NUM_BUCKETS)).alias("__bkt"),
-    )
+    ).repartition("series_id").sortWithinPartitions("series_id", "ts_s")
 
-    def encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one pandas group per series-hash bucket; series and chunk
-        # boundaries split with numpy inside
-        out = []
-        pdf = pdf.sort_values(["series_id", "ts_s"])
-        sids_all = pdf["series_id"].to_numpy()
-        cs_all = pdf["chunk_start"].to_numpy()
-        ts_all = pdf["ts_s"].to_numpy(np.int64)
-        v_all = pdf["v"].to_numpy(np.float64)
-        keys = pd.MultiIndex.from_arrays([sids_all, cs_all])
-        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-        bounds = np.r_[starts, len(pdf)]
-        for k in range(len(starts)):
-            b, e = bounds[k], bounds[k + 1]
-            payload = encode_chunk(ts_all[b:e], v_all[b:e])
-            out.append((sids_all[b], cs_all[b], "gorilla1", int(e - b),
-                        float(v_all[b]), zlib.crc32(payload), payload))
-        return pd.DataFrame(out, columns=["series_id", "chunk_start", "codec",
-                                          "n", "first_val", "checksum", "payload"])
+    def encode(cols, b: int, e: int) -> tuple:
+        sids, cs, ts, v = cols
+        payload = encode_chunk(ts[b:e], v[b:e])
+        return (sids[b], cs[b], "gorilla1", int(e - b), float(v[b]),
+                zlib.crc32(payload), payload)
 
-    return src.groupBy("__bkt").applyInPandas(encode_groups, schema=CHUNK_SCHEMA)
+    def encode_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry = None  # the last chunk seen, which the next batch may extend
+        for pdf in batches:
+            cols = (pdf["series_id"].to_numpy(), pdf["chunk_start"].to_numpy(),
+                    pdf["ts_s"].to_numpy(np.int64), pdf["v"].to_numpy(np.float64))
+            if carry is not None:
+                cols = tuple(np.concatenate(p) for p in zip(carry, cols))
+            sids, cs = cols[0], cols[1]
+            bounds = np.r_[0, np.flatnonzero((sids[1:] != sids[:-1])
+                                             | (cs[1:] != cs[:-1])) + 1]
+            carry = tuple(c[bounds[-1]:] for c in cols)
+            out = [encode(cols, int(b), int(e))
+                   for b, e in zip(bounds[:-1], bounds[1:])]
+            if out:
+                yield pd.DataFrame(out, columns=_CHUNK_COLS)
+        if carry is not None and len(carry[0]):
+            yield pd.DataFrame([encode(carry, 0, len(carry[0]))],
+                               columns=_CHUNK_COLS)
+
+    return src.mapInPandas(encode_parts, schema=CHUNK_SCHEMA)
 
 
 def decompress_chunks(chunks: DataFrame) -> DataFrame:

@@ -27,6 +27,12 @@ Mechanism (exactly Iceberg's, minus the catalog service):
   lists — no directory walk, which matters when a 100 TB table holds
   files from many snapshots), and hands Spark the exact file list with
   ``basePath`` so partition columns still parse.
+* **The manifest records the table schema** (Iceberg's manifests do
+  too).  `read_tier` hands it to Spark, so a read infers nothing from
+  parquet footers and, with the session's listing threshold
+  (session.py), starts no Spark job at all.  A manifest without one is
+  rejected, and an append whose schema differs from its parent's
+  raises, since the files of one day must share one schema.
 * **Retention as metadata.**  `commit_retention` publishes a snapshot
   that simply omits expired days — Iceberg's ``DELETE WHERE`` on a
   partition predicate: O(partitions) manifest edit, zero data I/O, and
@@ -55,6 +61,7 @@ from typing import Dict, List, Optional
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .tiers import P_DAY_FMT
 
@@ -88,6 +95,33 @@ def load_manifest(base: str, tier: str,
         return json.load(f)
 
 
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _file_schema(df: DataFrame) -> dict:
+    """``df``'s schema, JSON form, as its parquet files hold it: Spark
+    writes every column, array element and map value as nullable."""
+    def relax(node):
+        if isinstance(node, list):
+            return [relax(v) for v in node]
+        if not isinstance(node, dict):
+            return node
+        return {k: True if k in _NULLABLE_KEYS else relax(v)
+                for k, v in node.items()}
+    return relax(json.loads(df.schema.json()))
+
+
+def _manifest_schema(man: dict, base: str, tier: str) -> dict:
+    """The table schema ``man`` records; a manifest without one was not
+    written by `commit_tier`, and guessing its schema is not safe."""
+    if "schema" not in man:
+        raise ValueError(
+            "snapshot manifest "
+            f"{_manifest_path(base, tier, man['snapshot_id'])} records no "
+            "table schema")
+    return man["schema"]
+
+
 def _partition_entry(pdir: str, files: List[str]) -> dict:
     rows = 0
     nbytes = 0
@@ -116,24 +150,34 @@ def commit_tier(agg: DataFrame, base: str, tier: str,
     the data, which is what makes exactly-once `foreachBatch` possible
     (streaming/rollup_stream.py::stream_to_snapshots).
 
-    The staged write keeps `write_tier`'s physical sort
-    (series_id, bucket_ts) so parquet min/max stats still support
-    series_id pushdown within a day."""
+    Each staged file is sorted by (series_id, bucket_ts), as
+    `write_tier`'s are, so parquet min/max stats still support
+    series_id pushdown within a day; the sort leads with ``p_day``
+    because Spark's planned write otherwise re-sorts by the partition
+    column alone.  The manifest records ``agg``'s schema; in append
+    mode it must equal the parent's."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown commit mode {mode!r}")
     ids = snapshot_ids(base, tier)
     parent = ids[-1] if ids else None
     sid = (parent or 0) + 1
+    schema = _file_schema(agg)
+    partitions: Dict[str, dict] = {}
+    if parent is not None:
+        parent_man = load_manifest(base, tier, parent)
+        if mode == "append" \
+                and _manifest_schema(parent_man, base, tier) != schema:
+            raise ValueError(
+                f"append to tier={tier}: the batch schema "
+                f"{agg.schema.simpleString()} differs from snapshot "
+                f"v{parent}'s")
+        partitions.update(parent_man["partitions"])
 
     staging = os.path.join(base, "_staging", tier,
                            f"v{sid}-{uuid.uuid4().hex[:8]}")
     (agg.withColumn("p_day", F.date_format("bucket_ts", P_DAY_FMT))
-        .sortWithinPartitions("series_id", "bucket_ts")
+        .sortWithinPartitions("p_day", "series_id", "bucket_ts")
         .write.mode("overwrite").partitionBy("p_day").parquet(staging))
-
-    partitions: Dict[str, dict] = {}
-    if parent is not None:
-        partitions.update(load_manifest(base, tier, parent)["partitions"])
 
     for pdir in sorted(glob.glob(os.path.join(staging, "p_day=*"))):
         day = os.path.basename(pdir).split("=", 1)[1]
@@ -155,6 +199,7 @@ def commit_tier(agg: DataFrame, base: str, tier: str,
         "parent_id": parent,
         "committed_at": time.time(),
         "operation": mode,
+        "schema": schema,
         "partitions": partitions,
         "summary": {"days": len(partitions),
                     "rows": sum(p["rows"] for p in partitions.values()),
@@ -183,6 +228,7 @@ def commit_retention(base: str, tier: str, keep_since: str) -> int:
         "parent_id": parent["snapshot_id"],
         "committed_at": time.time(),
         "operation": "delete",
+        "schema": _manifest_schema(parent, base, tier),
         "partitions": kept,
         "summary": {"days": len(kept),
                     "rows": sum(p["rows"] for p in kept.values()),
@@ -204,8 +250,10 @@ def read_tier(spark: SparkSession, base: str, tier: str,
     and/or an explicit ``days`` set) happens against the manifest keys
     on the driver (manifest pruning, not directory listing), then Spark
     receives the pruned file list with ``basePath`` so ``p_day`` still
-    parses as a partition column."""
+    parses as a partition column, and the manifest's schema, so it
+    reads no footer to infer one."""
     man = load_manifest(base, tier, snapshot)
+    schema = StructType.fromJson(_manifest_schema(man, base, tier))
     files = []
     for day, entry in sorted(man["partitions"].items()):
         if since is not None and day < since:
@@ -217,11 +265,9 @@ def read_tier(spark: SparkSession, base: str, tier: str,
         pdir = os.path.join(base, f"tier={tier}", f"p_day={day}")
         files.extend(os.path.join(pdir, fn) for fn in entry["files"])
     if not files:
-        # preserve the schema contract on an empty selection
-        empty = spark.read.option("basePath", base).parquet(
-            os.path.join(base, f"tier={tier}"))
-        return empty.where(F.lit(False)).drop("tier", "p_day")
-    return (spark.read.option("basePath", base).parquet(*files)
+        return spark.createDataFrame([], schema)
+    return (spark.read.schema(schema.add("p_day", "string"))
+            .option("basePath", base).parquet(*files)
             .drop("tier", "p_day"))
 
 

@@ -47,13 +47,17 @@ def write_tier(agg: DataFrame, base: str, tier: str,
     streaming/rollup_stream.py).
 
     The day column is derived from ``bucket_ts`` so a tier row always
-    lands in the partition its bucket belongs to; the physical sort
-    within each partition is (series_id, bucket_ts), giving parquet
-    min/max column stats that support series_id predicate pushdown
-    inside a partition."""
+    lands in the partition its bucket belongs to; each file is sorted by
+    (series_id, bucket_ts), giving parquet min/max column stats that
+    support series_id predicate pushdown inside a partition.  Spark's
+    planned write re-sorts its input by the partition columns unless the
+    input already starts with them, which would drop a (series_id,
+    bucket_ts) sort; ``tier`` is a literal, so an order led by ``p_day``
+    counts as started with them and is kept (one led by ``tier`` is
+    not: every file of such a write came out unsorted)."""
     w = (agg.withColumn("tier", F.lit(tier))
          .withColumn("p_day", F.date_format("bucket_ts", P_DAY_FMT))
-         .sortWithinPartitions("series_id", "bucket_ts")
+         .sortWithinPartitions("p_day", "series_id", "bucket_ts")
          .write.mode(mode))
     if mode == "overwrite":
         w = w.option("partitionOverwriteMode", "dynamic")

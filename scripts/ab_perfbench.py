@@ -1,0 +1,131 @@
+"""A/B the repo benchmark between two checkouts, in alternating pairs.
+
+    python3 scripts/ab_perfbench.py PARENT_DIR CHANGE_DIR \\
+        --workload tiers --pairs 10 --seeds 1-10 [--metric pass_s]
+
+Each pair runs ``perfbench/run.py --trace 0`` once in each checkout, from
+that checkout's root and with the same seed and ``--seconds`` (the
+``run_seconds`` of the change's ``BENCHMARK.json``); even pairs start
+with the parent, odd pairs with the change, so a slow drift of the host
+falls on both sides.  Pair k uses the k-th seed of ``--seeds`` (a list
+such as ``1,4,7`` or a range such as ``1-10``, cycled when shorter than
+the pair count).
+
+The script prints every pair, then each side's median and quartiles for
+every end-to-end metric of ``BENCHMARK.json``, then whether the claim
+rule holds for ``--metric``: the change is better in at least nine
+pairs out of ten, and the two medians differ, in the better direction,
+by more than the parent's interquartile range.  It exits 1 when a run
+fails or reports an incorrect output, and writes nothing under either
+checkout's ``perfbench/`` other than what ``run.py`` itself writes.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import math
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+
+def parse_seeds(text: str) -> list:
+    seeds = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def run_once(root: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced benchmark run; its end-to-end metric values."""
+    cmd = [sys.executable, os.path.join("perfbench", "run.py"),
+           "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    t0 = time.time()
+    proc = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
+    lines = proc.stdout.strip().splitlines()
+    try:
+        out = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
+        raise SystemExit(f"ab_perfbench: run failed in {root} "
+                         f"(seed {seed}, rc={proc.returncode})")
+    if not out["correct"]:
+        sys.stderr.write("\n".join(lines[:-1]) + "\n")
+        raise SystemExit(f"ab_perfbench: incorrect output in {root} "
+                         f"(seed {seed})")
+    vals = {k: v["value"] for k, v in out["metrics"].items()}
+    print(f"    {os.path.basename(os.path.abspath(root)):>12s} seed {seed}: "
+          f"{time.time() - t0:5.1f} s", file=sys.stderr, flush=True)
+    return vals
+
+
+def quartiles(xs: list) -> tuple:
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent", help="root of the parent checkout")
+    ap.add_argument("change", help="root of the change checkout")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seeds", default="1-10")
+    ap.add_argument("--metric", default="pass_s",
+                    help="the end-to-end metric the claim rule checks")
+    args = ap.parse_args()
+
+    with open(os.path.join(args.change, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    if args.metric not in better:
+        raise SystemExit(f"ab_perfbench: {args.metric} is not an "
+                         f"end-to-end metric of BENCHMARK.json")
+    seeds = parse_seeds(args.seeds)
+    sides = {"parent": args.parent, "change": args.change}
+    runs = {"parent": [], "change": []}
+    for k in range(args.pairs):
+        seed = seeds[k % len(seeds)]
+        order = ("parent", "change") if k % 2 == 0 else ("change", "parent")
+        got = {side: run_once(sides[side], args.workload, seed,
+                              spec["run_seconds"]) for side in order}
+        for side in order:
+            runs[side].append(got[side])
+        p, c = got["parent"][args.metric], got["change"][args.metric]
+        print(f"pair {k + 1:2d} seed {seed:3d} first={order[0]:6s} "
+              f"{args.metric}: parent {p:.4g}  change {c:.4g}  "
+              f"({100 * (c - p) / p:+.1f}%)", flush=True)
+
+    print(f"\n{'metric':14s} {'side':7s} {'median':>10s} {'q1':>10s} "
+          f"{'q3':>10s}")
+    for name in better:
+        for side in ("parent", "change"):
+            q1, med, q3 = quartiles([r[name] for r in runs[side]])
+            print(f"{name:14s} {side:7s} {med:10.4g} {q1:10.4g} {q3:10.4g}")
+
+    sign = 1 if better[args.metric] == "lower" else -1
+    wins = sum(sign * (p[args.metric] - c[args.metric]) > 0
+               for p, c in zip(runs["parent"], runs["change"]))
+    q1, med_p, q3 = quartiles([r[args.metric] for r in runs["parent"]])
+    med_c = statistics.median(r[args.metric] for r in runs["change"])
+    gain = sign * (med_p - med_c)
+    need = math.ceil(0.9 * args.pairs)
+    holds = wins >= need and gain > q3 - q1
+    print(f"\nclaim on {args.metric} ({better[args.metric]} is better): "
+          f"change better in {wins}/{args.pairs} pairs (need {need}); "
+          f"median {med_p:.4g} -> {med_c:.4g} "
+          f"({100 * (med_c - med_p) / med_p:+.1f}%), gain {gain:.4g} "
+          f"vs parent IQR {q3 - q1:.4g}: "
+          f"{'HOLDS' if holds else 'does not hold'}")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -27,20 +27,53 @@ def agg1m(spark):
     return agg
 
 
+def _assert_roundtrip_exact(agg):
+    """compress → decompress gives back ``agg``'s sums bit for bit."""
+    back = decompress_chunks(compress_tier(agg, value_col="sum"))
+    a = agg.select("series_id", "bucket_ts",
+                   F.col("sum").cast("double").alias("v")) \
+        .orderBy("series_id", "bucket_ts").toPandas()
+    b = back.orderBy("series_id", "bucket_ts").toPandas()
+    assert len(a) == len(b)
+    assert (a["series_id"].values == b["series_id"].values).all()
+    assert (a["bucket_ts"].values == b["bucket_ts"].values).all()
+    np.testing.assert_array_equal(
+        a["v"].to_numpy().view(np.uint64),
+        b["value"].to_numpy().view(np.uint64))  # bit-for-bit
+
+
 class TestCompressOperator:
     def test_roundtrip_exact(self, spark, agg1m):
-        chunks = compress_tier(agg1m, value_col="sum")
-        back = decompress_chunks(chunks)
-        a = agg1m.select("series_id", "bucket_ts",
-                         F.col("sum").cast("double").alias("v")) \
-            .orderBy("series_id", "bucket_ts").toPandas()
-        b = back.orderBy("series_id", "bucket_ts").toPandas()
-        assert len(a) == len(b)
-        assert (a["series_id"].values == b["series_id"].values).all()
-        assert (a["bucket_ts"].values == b["bucket_ts"].values).all()
-        np.testing.assert_array_equal(
-            a["v"].to_numpy().view(np.uint64),
-            b["value"].to_numpy().view(np.uint64))  # bit-for-bit
+        _assert_roundtrip_exact(agg1m)
+
+    def test_roundtrip_across_arrow_batches(self, spark, agg1m):
+        """With 7-row Arrow batches nearly every chunk spans a batch
+        boundary: the encoder must carry it over, not cut or repeat it,
+        so there is still one chunk per series and UTC day."""
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "7")
+        try:
+            _assert_roundtrip_exact(agg1m)
+            chunks = compress_tier(agg1m) \
+                .select("series_id", "chunk_start").toPandas()
+        finally:
+            spark.conf.set(key, old)
+        days = agg1m.select("series_id", F.date_trunc("day", "bucket_ts")) \
+            .distinct().count()
+        keys = set(zip(chunks["series_id"], chunks["chunk_start"]))
+        assert len(chunks) == len(keys) == days
+
+    def test_empty_partitions(self, spark, agg1m):
+        """An empty tier encodes to no chunks, and a one-series tier to
+        its own chunks, though all but one hash partition is empty."""
+        assert compress_tier(agg1m.where(F.lit(False))).count() == 0
+        sid = agg1m.select(F.min("series_id")).first()[0]
+        one = agg1m.where(F.col("series_id") == sid)
+        chunks = compress_tier(one).select("chunk_start", "n").toPandas()
+        want = one.groupBy(F.date_trunc("day", "bucket_ts").alias("d")) \
+            .count().toPandas()
+        assert sorted(chunks["n"]) == sorted(want["count"])
 
     def test_compression_ratio(self, spark, agg1m):
         chunks = compress_tier(agg1m, value_col="cnt").toPandas()

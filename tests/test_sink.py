@@ -359,3 +359,94 @@ class TestSnapshotStreaming:
             series_expr="series_id")
         assert SN.snapshot_ids(base, "1m") == ids
         assert _canon(SN.read_tier(spark, base, "1m")) == canon_before
+
+
+def _unsorted_files(root):
+    """The parquet files under ``root`` whose rows are not in
+    (series_id, bucket_ts) order."""
+    import glob
+
+    import pyarrow.parquet as pq
+    bad = []
+    files = sorted(glob.glob(os.path.join(root, "**", "*.parquet"),
+                             recursive=True))
+    assert files
+    for path in files:
+        t = pq.read_table(path, columns=["series_id", "bucket_ts"])
+        keys = list(zip(t["series_id"].to_pylist(),
+                        t["bucket_ts"].to_pylist()))
+        if keys != sorted(keys):
+            bad.append(path)
+    return bad
+
+
+class TestFileOrder:
+    """Each written file is sorted by (series_id, bucket_ts), as both
+    sinks document, so parquet min/max stats prune series_id inside a
+    day; Spark's planned write must not replace that sort."""
+
+    def test_write_tier_files_sorted(self, agg1h, base):
+        SK.write_tier(agg1h, base, "1h")
+        SK.write_tier(agg1h.repartition(8), base, "1h", mode="append")
+        assert _unsorted_files(base) == []
+
+    def test_commit_tier_files_sorted(self, agg1h, base):
+        SN.commit_tier(agg1h, base, "1h")
+        SN.commit_tier(agg1h.repartition(8), base, "1h", mode="append")
+        assert _unsorted_files(base) == []
+
+
+class TestSnapshotSchema:
+    """The manifest records the table schema, so a snapshot read infers
+    nothing and lists nothing through Spark."""
+
+    def test_read_starts_no_job(self, spark, agg1h, base):
+        SN.commit_tier(agg1h.repartition(8), base, "1h")
+        man = SN.load_manifest(base, "1h")
+        assert sum(len(e["files"]) for e in man["partitions"].values()) > 32
+        sc = spark.sparkContext
+        group = "snapshot-read-jobs"
+        sc.setJobGroup(group, "snapshots.read_tier call")
+        try:
+            got = SN.read_tier(spark, base, "1h")
+            empty = SN.read_tier(spark, base, "1h", days=set())
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert got.columns == agg1h.columns == empty.columns
+        assert _canon(got) == _canon(agg1h)
+        assert empty.count() == 0
+
+    def test_retention_keeps_schema(self, spark, agg1h, base):
+        SN.commit_tier(agg1h, base, "1h")
+        days = sorted(SN.load_manifest(base, "1h")["partitions"])
+        sid = SN.commit_retention(base, "1h", days[1])
+        assert SN.load_manifest(base, "1h", sid)["schema"] \
+            == SN.load_manifest(base, "1h", sid - 1)["schema"]
+        assert SN.read_tier(spark, base, "1h").schema \
+            == SN.read_tier(spark, base, "1h", snapshot=1).schema
+
+    def test_manifest_without_schema_raises(self, spark, agg1h, base):
+        import json
+        SN.commit_tier(agg1h, base, "1h")
+        path = os.path.join(base, "_snapshots", "1h", "v1.json")
+        with open(path) as f:
+            man = json.load(f)
+        del man["schema"]
+        with open(path, "w") as f:
+            json.dump(man, f)
+        with pytest.raises(ValueError, match="v1.json"):
+            SN.read_tier(spark, base, "1h")
+        with pytest.raises(ValueError, match="v1.json"):
+            SN.commit_retention(base, "1h", "2000-01-01")
+
+    def test_append_with_other_schema_raises(self, agg1h, base):
+        SN.commit_tier(agg1h, base, "1h", mode="append")
+        # nullability alone is not a difference: parquet columns are
+        # all nullable
+        SN.commit_tier(agg1h.where(F.col("sum").isNotNull()), base, "1h",
+                       mode="append")
+        with pytest.raises(ValueError, match="differs from snapshot v2"):
+            SN.commit_tier(agg1h.withColumn("sum", F.col("sum").cast("string")),
+                           base, "1h", mode="append")
+        assert SN.snapshot_ids(base, "1h") == [1, 2]
