@@ -10,9 +10,9 @@ this user or writable by group or others is refused before ``dlopen``,
 as is a per-user directory that is not private (a warning, then the
 numpy path).  Any other failure — a compiler error, a dlopen error —
 warns once per process with its reason and degrades to ``lib() is
-None``: callers fall back to the numpy path, which is bit-identical.
-
-Set ``DTW_C_KERNEL=0`` to disable the C path entirely (A/B harness).
+None``: callers then run the numpy DP in ``kernels/dtw.py``, whose
+results are bit-identical.  Tests hide the library by setting
+``_lib, _tried = None, True``.
 """
 
 from __future__ import annotations
@@ -115,13 +115,11 @@ def _compile(tag: str) -> str | None:
 
 
 def lib():
-    """The loaded C library, or None if unavailable/disabled."""
+    """The loaded C library, or None if unavailable."""
     global _lib, _tried
     if _tried:
         return _lib
     _tried = True
-    if os.environ.get("DTW_C_KERNEL", "1") != "1":
-        return None
     try:
         path = _compile(_tag())
         if path is None:
@@ -138,7 +136,7 @@ def lib():
         fn.argtypes = [
             ctypes.c_void_p, ctypes.c_void_p,          # X1, X2
             ctypes.c_long, ctypes.c_long, ctypes.c_long,  # B, r, c
-            ctypes.c_long,                             # window
+            ctypes.c_long, ctypes.c_long,              # dim, window
             ctypes.c_long, ctypes.c_long,              # psi1b, psi1e
             ctypes.c_long, ctypes.c_long,              # psi2b, psi2e
             ctypes.c_double, ctypes.c_double,          # pen, max_step

@@ -1,4 +1,5 @@
-"""Batched, banded DTW kernels (pure numpy — no Spark imports).
+"""Batched, banded DTW kernels (numpy and the C distance kernel in
+``_dtw_kernel.c`` — no Spark imports).
 
 These are the numeric hearts of the engine.  They re-express the math of
 ``dtaidistance`` (reference: ``src/dtaidistance/dtw.py:299-400`` for the
@@ -366,20 +367,30 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
     Returns ``(dist, wps)`` where ``dist`` is (B,) float64 in the *user*
     domain (sqrt applied for squared-euclidean inner) and ``wps`` is the
     (B, r+1, c+1) accumulated-cost matrix in the *internal* domain if
-    ``keep_matrix`` else None.
+    ``keep_matrix`` else None (with ``keep_lastrow``, the (c+1, B) last
+    row instead).
+
+    Distance-only calls run the C kernel (``_dtw_kernel.c``) for 1-D and
+    n-D pairs alike.  Everything else — warping paths, last rows, and
+    distances when the library cannot load — runs the numpy loop below,
+    the package's one numpy DP; tests assert the two are ``==``.
 
     Anti-diagonal formulation: matrix cell (I, J), I=1..r, J=1..c holds
     the accumulated cost ending at (s1[I-1], s2[J-1]).  Cells on
     anti-diagonal t = I + J depend only on diagonals t-1 and t-2, so each
     diagonal is one vectorized update over all batch members at once.
-    Per-cell arithmetic identical to reference dtw.py:370-372.
+    Per-cell arithmetic identical to reference dtw.py:370-372; an n-D
+    cell cost sums the squared per-dimension differences in ascending k.
     """
     if X1.ndim == 2:
         X1 = X1[:, :, None]
     if X2.ndim == 2:
         X2 = X2[:, :, None]
-    B, r, _ = X1.shape
-    _, c, _ = X2.shape
+    B, r, d_ = X1.shape
+    c = X2.shape[1]
+    if X2.shape[0] != B or X2.shape[2] != d_:
+        raise ValueError(f"pair stacks {X1.shape} and {X2.shape} differ in "
+                         "batch size or point dimension")
 
     window = max(r, c) if not s.window else s.window
     psi_1b, psi_1e, psi_2b, psi_2e = s.split_psi()
@@ -393,10 +404,25 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
 
     M = max(0, r - c)
     N = max(0, c - r)
+    amd = s.adj_max_dist
 
-    if not keep_matrix and not keep_lastrow:
-        # distance-only: band-relative buffers (cache-resident fast path)
-        return _dtw_batch_banded(X1, X2, s, window)
+    if not keep_matrix and not keep_lastrow and r >= 1 and c >= 1:
+        from . import _dtwc
+
+        clib = _dtwc.lib()
+        if clib is not None:
+            x1 = np.ascontiguousarray(X1, dtype=np.float64)
+            x2 = np.ascontiguousarray(X2, dtype=np.float64)
+            out = np.empty(B, dtype=np.float64)
+            rc = clib.dtw_batch(
+                x1.ctypes.data, x2.ctypes.data, B, r, c, d_,
+                int(window), int(psi_1b), int(psi_1e), int(psi_2b),
+                int(psi_2e), float(pen), float(ms), 1 if squared else 0,
+                out.ctypes.data)
+            if rc == 0:
+                if amd != INF:
+                    out = np.where(out > amd, INF, out)
+                return s.result(out), None
     if keep_matrix:
         wps = np.full((B, r + 1, c + 1), INF)
         wps[:, 0, 0] = 0.0
@@ -417,7 +443,6 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
     # [lo-1, hi+1] of diag t-1 / [lo-1, hi] of diag t-2, and those edge
     # cells are explicitly reset below, so stale values are never
     # observed (band bounds move by at most 1 per diagonal).
-    d_ = X1.shape[2]
     X1T = _pooled("x1", (r, B, d_))
     np.copyto(X1T, np.swapaxes(X1, 0, 1))
     X2T = _pooled("x2", (c, B, d_))
@@ -470,18 +495,16 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
             j_bot = t - hi - 1
             y = X2T[j_top : (None if j_bot == 0 else j_bot - 1) : -1]
             diff = x - y
-            if squared:
-                if diff.shape[2] == 1:
-                    cost = diff[:, :, 0]
-                    cost = cost * cost
-                else:
-                    cost = np.einsum("ibk,ibk->ib", diff, diff)
+            if d_ == 1:
+                cost = diff[:, :, 0]
+                cost = cost * cost if squared else np.abs(cost)
             else:
-                # euclidean inner dist: |x-y| (1-D) / sqrt of sq-sum (n-D)
-                if diff.shape[2] == 1:
-                    cost = np.abs(diff[:, :, 0])
-                else:
-                    cost = np.sqrt(np.einsum("ibk,ibk->ib", diff, diff))
+                # squares summed in ascending k, as the C kernel sums them
+                cost = diff[:, :, 0] ** 2
+                for k_ in range(1, d_):
+                    cost += diff[:, :, k_] ** 2
+                if not squared:
+                    cost = np.sqrt(cost)
             if ms != INF:
                 cost = np.where(cost > ms, INF, cost)
             diag = D2[lo - 1 : hi]
@@ -517,7 +540,6 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
         if lastcol is not None:
             cands.append(lastcol.min(axis=0))
         d = np.minimum.reduce(cands)
-    amd = s.adj_max_dist
     if amd != INF:
         d = np.where(d > amd, INF, d)
     d = s.result(d)
@@ -525,164 +547,6 @@ def _dtw_batch_core(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
         # internal-domain full last row, shape (c+1, B)
         return d, rowcap
     return d, wps
-
-
-def _dtw_batch_banded(X1: np.ndarray, X2: np.ndarray, s: DtwSettings,
-                      window: int):
-    """Distance-only fast path of :func:`_dtw_batch_core` with
-    band-relative rotating buffers.
-
-    The three diagonal buffers are (band+3, B) instead of (r+1, B):
-    slot k of the diagonal-t buffer holds matrix row I = base_t + k with
-    base_t = max(0, lo_t - 1).  Because the band bounds move by at most
-    one row per diagonal, every read lands inside the written+cleared
-    envelope of the two previous buffers (same invariant as the
-    full-width version, proof in comments there).  The entire DP state
-    (~3·band·B doubles) stays cache-resident across all r+c steps, so
-    DRAM traffic per pair drops from O(r·band) to O(r) — this is what
-    makes 32 concurrent workers scale instead of fighting for memory
-    bandwidth.  Per-cell arithmetic is unchanged → results stay
-    bit-identical (asserted in tests against the full-width path).
-    """
-    B, r, dd = X1.shape
-    c = X2.shape[1]
-    psi_1b, psi_1e, psi_2b, psi_2e = s.split_psi()
-    pen = s.adj_penalty
-    ms = s.adj_max_step
-    squared = s.squared
-    M = max(0, r - c)
-    N = max(0, c - r)
-
-    if dd == 1:
-        # C fast path (kernels/_dtw_kernel.c): the same anti-diagonal DP
-        # with the five numpy passes per diagonal fused into one — per-cell
-        # IEEE op sequence identical, results bit-equal (tests assert ==).
-        # Falls through to numpy when no compiler/lib is available.
-        from . import _dtwc
-
-        clib = _dtwc.lib()
-        if clib is not None and r >= 1 and c >= 1:
-            x1 = np.ascontiguousarray(X1[:, :, 0])
-            x2 = np.ascontiguousarray(X2[:, :, 0])
-            out = np.empty(B, dtype=np.float64)
-            rc = clib.dtw_batch(
-                x1.ctypes.data, x2.ctypes.data, B, r, c, int(window),
-                int(psi_1b), int(psi_1e), int(psi_2b), int(psi_2e),
-                float(pen), float(ms), 1 if squared else 0,
-                out.ctypes.data)
-            if rc == 0:
-                amd = s.adj_max_dist
-                if amd != INF:
-                    out = np.where(out > amd, INF, out)
-                return s.result(out), None
-
-    T = r + c
-    los = np.empty(T + 1, dtype=np.int64)
-    his = np.empty(T + 1, dtype=np.int64)
-    bases = np.empty(T + 1, dtype=np.int64)
-    for t in range(T + 1):
-        lo = max(1, t - c, -(-(t + 1 - N - window) // 2))
-        hi = min(r, t - 1, (t + M + window - 1) // 2)
-        los[t], his[t] = lo, hi
-        bases[t] = max(0, lo - 1)
-    width = int(max(3, (his - los).max() + 3))
-
-    X1T = _pooled("x1", (r, B, dd))
-    np.copyto(X1T, np.swapaxes(X1, 0, 1))
-    X2T = _pooled("x2", (c, B, dd))
-    np.copyto(X2T, np.swapaxes(X2, 0, 1))
-    bufs = [_pooled(f"b{k}", (width, B)) for k in range(3)]
-    for bf in bufs:
-        bf.fill(INF)
-    scratch = _pooled("sc", (width, B))
-
-    # seed diagonals 0 and 1 (bases are 0 for t <= 1)
-    D2, D1 = bufs[0], bufs[1]
-    D2[0, :] = 0.0                                   # cell (0, 0)
-    if c >= 1:
-        D1[0, :] = 0.0 if psi_2b >= 1 else INF       # cell (0, 1)
-    if r >= 1:
-        D1[1, :] = 0.0 if psi_1b >= 1 else INF       # cell (1, 0)
-
-    lastcol = np.full((psi_1e + 1, B), INF) if psi_1e > 0 else None
-    lastrow = np.full((psi_2e + 1, B), INF) if psi_2e > 0 else None
-    corner = np.full(B, INF)
-
-    for t in range(2, T + 1):
-        cur = bufs[t % 3]
-        lo, hi, base = int(los[t]), int(his[t]), int(bases[t])
-        b1, b2 = int(bases[t - 1]), int(bases[t - 2])
-        # clear stale edge slots around the active range
-        if lo - 1 >= 0:
-            cur[lo - 1 - base, :] = INF
-        if hi + 1 <= r and hi + 1 - base < width:
-            cur[hi + 1 - base, :] = INF
-        # boundary cells
-        if t <= c and lo == 1:                       # cell (0, t) at slot 0
-            cur[0, :] = 0.0 if t <= psi_2b else INF
-        if t <= r and t == hi + 1:                   # cell (t, 0)
-            cur[t - base, :] = 0.0 if t <= psi_1b else INF
-        if lo <= hi:
-            w_ = hi - lo + 1
-            x = X1T[lo - 1 : hi]
-            j_top = t - lo - 1
-            j_bot = t - hi - 1
-            y = X2T[j_top : (None if j_bot == 0 else j_bot - 1) : -1]
-            cost = scratch[:w_]
-            if dd == 1:
-                np.subtract(x[:, :, 0], y[:, :, 0], out=cost)
-                if squared:
-                    np.multiply(cost, cost, out=cost)
-                else:
-                    np.abs(cost, out=cost)
-            else:
-                diff = x - y
-                if squared:
-                    np.einsum("ibk,ibk->ib", diff, diff, out=cost)
-                else:
-                    np.sqrt(np.einsum("ibk,ibk->ib", diff, diff), out=cost)
-            if ms != INF:
-                cost[cost > ms] = INF
-            diag = D2[lo - 1 - b2 : hi - b2]
-            up = D1[lo - 1 - b1 : hi - b1]
-            left = D1[lo - b1 : hi + 1 - b1]
-            out = cur[lo - base : hi + 1 - base]
-            if pen == 0.0:
-                np.minimum(up, left, out=out)
-                np.minimum(out, diag, out=out)
-            else:
-                np.minimum(up + pen, left + pen, out=out)
-                np.minimum(out, diag, out=out)
-            np.add(out, cost, out=out)
-        # psi-end collectors
-        if lastcol is not None:
-            I = t - c
-            if max(1, r - psi_1e) <= I <= r:
-                lastcol[I - (r - psi_1e), :] = (
-                    cur[I - base, :] if lo <= I <= hi else INF)
-        if lastrow is not None:
-            J = t - r
-            if max(1, c - psi_2e) <= J <= c:
-                lastrow[J - (c - psi_2e), :] = (
-                    cur[r - base, :] if lo <= r <= hi else INF)
-        if t == T:
-            corner = cur[r - base, :].copy()
-        D2, D1 = D1, cur
-
-    if psi_1e == 0 and psi_2e == 0:
-        d = corner
-    else:
-        cands = [corner]
-        if lastrow is not None:
-            cands.append(lastrow.min(axis=0))
-        if lastcol is not None:
-            cands.append(lastcol.min(axis=0))
-        d = np.minimum.reduce(cands)
-    amd = s.adj_max_dist
-    if amd != INF:
-        d = np.where(d > amd, INF, d)
-    d = s.result(d)
-    return d, None
 
 
 def dtw_distance(s1, s2, settings: Optional[DtwSettings] = None, **kwargs) -> float:

@@ -1251,35 +1251,16 @@ def _daily_series(spark, sf_dir, cap: int) -> DataFrame:
     return with_index(arrays, order_col="series_id").where(F.col("i") < cap)
 
 
-def q_lb_keogh_pairs(spark, sf_dir):
-    """LB_Keogh lower bound over all ordered pairs of the first 32 daily
-    series, window=12 — pure JVM column algebra (functions/bounds.py:
-    envelope via transform/slice/array_min, excess via zip_with +
-    aggregate; no UDF in the plan).  Reference dtw.py:266-291; DuckDB
-    twin replays the envelope with a ROWS BETWEEN window."""
-    from ..functions.bounds import lb_keogh_pairs
-
-    series = _daily_series(spark, sf_dir, 32)
-    out = lb_keogh_pairs(series, window=12)
-    return out.select("i", "j", F.round("lb", 6).alias("lb"))
-
-
-def q_ub_euclidean_pairs(spark, sf_dir):
-    """Euclidean DTW upper bound (reference ed.py:47-79, equal-length
-    case) over the same pairs — one zip_with/aggregate expression."""
-    from ..functions.bounds import ub_euclidean_pairs
-
-    series = _daily_series(spark, sf_dir, 32)
-    out = ub_euclidean_pairs(series)
-    return out.select("i", "j", F.round("ub", 6).alias("ub"))
-
-
 def q_bounds_pairs(spark, sf_dir):
     """LB_Keogh (window=12) + Euclidean upper bound over the same 32
     daily series as ONE long-format result (metric ∈ {lb_keogh,
-    ub_euclidean}) — merges the two former standalone queries into one
-    driver-window slot; both remain pure JVM column algebra over one
-    unhinted self-join that Spark plans itself (functions/bounds.py)."""
+    ub_euclidean}) in one driver-window slot.  Both are pure JVM column
+    algebra over one unhinted self-join that Spark plans itself
+    (functions/bounds.py: envelope via transform/slice/array_min, excess
+    via zip_with + aggregate; no UDF in the plan).  LB_Keogh follows
+    reference dtw.py:266-291 and the upper bound ed.py:47-79 (equal
+    lengths); the DuckDB twin replays the envelope with a ROWS BETWEEN
+    window."""
     from ..functions.bounds import lb_keogh_pairs, ub_euclidean_pairs
 
     series = _daily_series(spark, sf_dir, 32)

@@ -16,7 +16,9 @@ UDF stack and freezes its heap before it forks, so a reused worker's
 per-task ``gc.collect()`` skips those imports' objects.  The package
 root goes first on the workers' PYTHONPATH
 (``spark.executorEnv.PYTHONPATH``), so the daemon imports even when the
-driver found the package through ``sys.path`` alone.
+driver found the package through ``sys.path`` alone, and
+``PYTHONSAFEPATH=1`` keeps the JVM's working directory off the workers'
+``sys.path``, so a checkout there cannot shadow it.
 
 The driver heap defaults to half of ``MemTotal`` (at most 24g);
 ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
@@ -137,6 +139,10 @@ def get_spark(app_name: str = "dtaidistance_spark", cores: int | None = None,
     conf = dict(extra_conf or {})
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PKG_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    # the daemon starts as `python -m`, which would put the JVM's working
+    # directory ahead of PYTHONPATH: run from another checkout's root, the
+    # workers would import that checkout's package (Python >= 3.11)
+    conf.setdefault("spark.executorEnv.PYTHONSAFEPATH", "1")
     for key, val in conf.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()

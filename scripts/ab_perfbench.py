@@ -15,7 +15,14 @@ The script prints every pair, then each side's median and quartiles for
 every end-to-end metric of ``BENCHMARK.json``, then whether the claim
 rule holds for ``--metric``: the change is better in at least nine
 pairs out of ten, and the two medians differ, in the better direction,
-by more than the parent's interquartile range.  It exits 1 when a run
+by more than the parent's interquartile range.  Last comes one
+no-regression line per end-to-end metric: the change's median move
+against the parent's, the metric's bound from ``BENCHMARK.json`` and a
+verdict.  ``WORSE`` means the median moved the wrong way by more than
+the bound; ``unresolved`` means the parent's interquartile range is
+wider than the bound and not every change run beats every parent run;
+otherwise ``ok``.  Moves, bounds and ranges are relative to the parent's
+median.  It exits 1 when a run
 fails or reports an incorrect output, and writes nothing under either
 checkout's ``perfbench/`` other than what ``run.py`` itself writes.
 """
@@ -71,6 +78,21 @@ def quartiles(xs: list) -> tuple:
     return q1, q2, q3
 
 
+def verdict(parent: list, change: list, better: str, bound: float) -> tuple:
+    """(relative median move, relative parent IQR, ok/WORSE/unresolved)
+    for one end-to-end metric's runs on each side."""
+    q1, med_p, q3 = quartiles(parent)
+    med_c = statistics.median(change)
+    move = (med_c - med_p) / abs(med_p)
+    spread = (q3 - q1) / abs(med_p)
+    sign = 1 if better == "lower" else -1
+    if all(sign * (p - c) > 0 for p in parent for c in change):
+        return move, spread, "ok"
+    if sign * move > bound:
+        return move, spread, "WORSE"
+    return move, spread, "unresolved" if spread > bound else "ok"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent", help="root of the parent checkout")
@@ -124,6 +146,15 @@ def main() -> int:
           f"({100 * (med_c - med_p) / med_p:+.1f}%), gain {gain:.4g} "
           f"vs parent IQR {q3 - q1:.4g}: "
           f"{'HOLDS' if holds else 'does not hold'}")
+
+    print(f"\n{'metric':14s} {'move':>8s} {'bound':>7s} {'IQR':>7s}  verdict")
+    for m in spec["end_to_end"]:
+        name = m["name"]
+        move, spread, word = verdict([r[name] for r in runs["parent"]],
+                                     [r[name] for r in runs["change"]],
+                                     m["better"], m["bound"])
+        print(f"{name:14s} {move:+8.1%} {m['bound']:7.0%} {spread:7.1%}  "
+              f"{word}")
     return 0
 
 

@@ -57,6 +57,16 @@ def ref_ed(oracle):
     return oracle("ed")
 
 
+@pytest.fixture
+def numpy_dtw(monkeypatch):
+    """Hide the C DTW kernel, as if it could not load: distance calls
+    run the numpy DP in kernels/dtw.py."""
+    from dtaidistance_spark.kernels import _dtwc
+
+    monkeypatch.setattr(_dtwc, "_lib", None)
+    monkeypatch.setattr(_dtwc, "_tried", True)
+
+
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)

@@ -1,6 +1,6 @@
 """The C banded-DTW kernel (kernels/_dtw_kernel.c) must be bit-identical
-to the numpy anti-diagonal path it replaces — every setting combination,
-both inner distances, ragged shapes, degenerate lengths."""
+to the numpy anti-diagonal DP — every setting combination, both inner
+distances, ragged shapes, degenerate lengths, 1-D and n-D points."""
 
 import os
 import stat
@@ -36,21 +36,24 @@ def clib():
                                    (53, 37), (24, 24), (2, 5), (1, 1)])
 @pytest.mark.parametrize("window", [None, 24, 3, 1])
 def test_c_bitequal_shapes_windows(clib, shape, window):
-    rng = np.random.default_rng(7)
     r, c = shape
-    X1 = rng.normal(size=(9, r))
-    X2 = rng.normal(size=(9, c))
-    for psi in [None, 2, (1, 2, 3, 0)]:
-        for pen in [None, 0.7]:
-            for ms in [None, 1.5]:
-                for inner in ["squared euclidean", "euclidean"]:
-                    s = K.DtwSettings(window=window, psi=psi, penalty=pen,
-                                      max_step=ms, inner_dist=inner)
-                    d_c = K.dtw_distance_batch(X1, X2, settings=s)
-                    d_np = _numpy_only(K.dtw_distance_batch, X1, X2,
-                                       settings=s)
-                    assert np.array_equal(d_c, d_np), \
-                        (shape, window, psi, pen, ms, inner)
+    for dim in (1, 2, 3):
+        rng = np.random.default_rng(7)
+        ext = () if dim == 1 else (dim,)
+        X1 = rng.normal(size=(9, r) + ext)
+        X2 = rng.normal(size=(9, c) + ext)
+        for psi in [None, 2, (1, 2, 3, 0)]:
+            for pen in [None, 0.7]:
+                for ms in [None, 1.5]:
+                    for inner in ["squared euclidean", "euclidean"]:
+                        s = K.DtwSettings(window=window, psi=psi,
+                                          penalty=pen, max_step=ms,
+                                          inner_dist=inner)
+                        d_c = K.dtw_distance_batch(X1, X2, settings=s)
+                        d_np = _numpy_only(K.dtw_distance_batch, X1, X2,
+                                           settings=s)
+                        assert np.array_equal(d_c, d_np), \
+                            (dim, shape, window, psi, pen, ms, inner)
 
 
 def test_c_bitequal_max_dist(clib):
@@ -84,16 +87,6 @@ def test_indexed_entry_bitequal():
         assert np.array_equal(d_idx, d_ref)
         oi, oj, od = _compute_pairs(ii, jj, vals, s)
         assert np.array_equal(np.sort(od), np.sort(d_ref))
-
-
-def test_c_disabled_env(monkeypatch):
-    """DTW_C_KERNEL=0 must force the numpy path (A/B harness)."""
-    monkeypatch.setenv("DTW_C_KERNEL", "0")
-    monkeypatch.setattr(_dtwc, "_lib", None)
-    monkeypatch.setattr(_dtwc, "_tried", False)
-    assert _dtwc.lib() is None
-    # reset the loader state for other tests
-    monkeypatch.setattr(_dtwc, "_tried", False)
 
 
 @pytest.fixture
@@ -178,12 +171,4 @@ def test_dlopen_error_warns(fresh_loader, monkeypatch):
 
     monkeypatch.setattr(_dtwc.ctypes, "CDLL", fail)
     with pytest.warns(RuntimeWarning, match="OSError: .*invalid ELF header"):
-        assert _dtwc.lib() is None
-
-
-def test_disabled_kernel_does_not_warn(fresh_loader, monkeypatch):
-    monkeypatch.setenv("DTW_C_KERNEL", "0")
-    monkeypatch.setattr(_dtwc, "_CFLAGS", ["-fno-such-flag-here"])
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
         assert _dtwc.lib() is None

@@ -8,9 +8,12 @@ import pytest
 from dtaidistance_spark.kernels.dtw import DtwSettings
 from dtaidistance_spark.kernels.explain import ExplainedPair
 
-ref_explain = pytest.importorskip(
-    "dtaidistance.explain.dsw.explainpair",
-    reason="pure-Python reference not on PYTHONPATH")
+
+def _ref_explain():
+    """The reference's explainpair module; skips where it is absent."""
+    return pytest.importorskip("dtaidistance.explain.dsw.explainpair",
+                               reason="pure-Python reference not on "
+                               "PYTHONPATH")
 
 
 def _ref_segs(ep):
@@ -25,6 +28,7 @@ def _got_segs(ep):
 
 class TestExplainParity:
     def test_bit_exact_vs_reference(self):
+        ref_explain = _ref_explain()
         rng = np.random.default_rng(7)
         for trial in range(15):
             n = int(rng.integers(8, 120))
@@ -42,6 +46,7 @@ class TestExplainParity:
                     got.distance_approx(per_segment=True)
 
     def test_parity_without_prune_and_with_onlychanges(self):
+        ref_explain = _ref_explain()
         rng = np.random.default_rng(11)
         a = np.cumsum(rng.normal(0, 1, 80))
         b = np.cumsum(rng.normal(0, 1, 90))
@@ -53,6 +58,7 @@ class TestExplainParity:
         assert _ref_segs(ref2) == _got_segs(got2)
 
     def test_parity_approx_types(self):
+        ref_explain = _ref_explain()
         # non-default approximation types (VERDICT r4 item 6): only the
         # tolerance factors differ — bit-exact segments + distances for
         # each supported type
@@ -78,6 +84,7 @@ class TestExplainParity:
                     got.distance_approx(per_segment=True)
 
     def test_parity_global_tolerance(self):
+        ref_explain = _ref_explain()
         # approx_local=False: the running global-bound merge criterion
         # (reference remove_segments else-branch) — previously silently
         # ignored (ADVICE r4 medium)
@@ -100,6 +107,7 @@ class TestExplainParity:
                     got.distance_approx(per_segment=True)
 
     def test_parity_split_strategies(self):
+        ref_explain = _ref_explain()
         # non-default split-point selection (pathdiff / deriv /
         # derivdist) — bit-exact segments + distances vs the reference
         rng = np.random.default_rng(29)
@@ -122,6 +130,7 @@ class TestExplainParity:
                         got.distance_approx(per_segment=True)
 
     def test_parity_max_index(self):
+        ref_explain = _ref_explain()
         # the epsilon-spatial RDP type (rdp_vectorized + the
         # vertical-segment tilt pass) — bit-exact vs the reference
         rng = np.random.default_rng(31)
@@ -200,6 +209,7 @@ class TestExplainOperator:
 
 class TestExplainVariations:
     def test_variations_bounds_path_parity(self):
+        ref_explain = _ref_explain()
         rng = np.random.default_rng(21)
         for t in range(6):
             a = np.cumsum(rng.normal(0, 1, 70))

@@ -189,6 +189,16 @@ class TestBatch:
             assert d[b] == pytest.approx(k.ed_distance(X1[b], X2[b]))
 
 
+@pytest.mark.usefixtures("numpy_dtw")
+class TestOracleParityNumpy(TestOracleParity):
+    """TestOracleParity with the C kernel hidden: the numpy DP."""
+
+
+@pytest.mark.usefixtures("numpy_dtw")
+class TestBatchNumpy(TestBatch):
+    """TestBatch with the C kernel hidden: the numpy DP."""
+
+
 class TestWarping:
     def test_warping_paths_matrix(self, ref_dtw, rng):
         for _ in range(6):

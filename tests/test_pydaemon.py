@@ -196,3 +196,44 @@ def test_session_outside_checkout_runs_udf(tmp_path):
                           timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "UDF_SUM 90" in proc.stdout
+
+
+def test_decoy_checkout_in_cwd_does_not_shadow(tmp_path):
+    """A driver run from the root of another checkout gets its own
+    package on the workers, not the one in its working directory: the
+    decoy's daemon and package never load."""
+    decoy = tmp_path / "decoy" / "dtaidistance_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "pydaemon.py").write_text(textwrap.dedent("""
+        if __name__ == "__main__":
+            from pyspark.daemon import manager
+            manager()
+    """))
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        import pandas as pd
+        from dtaidistance_spark.session import get_spark
+
+        spark = get_spark(app_name="decoy", cores=1, shuffle_partitions=1)
+
+        def f(it):
+            import dtaidistance_spark
+            for _ in it:
+                yield pd.DataFrame({{"file": [dtaidistance_spark.__file__]}})
+
+        files = {{r.file for r in spark.range(2, numPartitions=1)
+                 .mapInPandas(f, "file string").collect()}}
+        spark.stop()
+        print("FILES", sorted(files))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, str(script)], cwd=decoy.parent,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    real = os.path.join(REPO, "dtaidistance_spark", "__init__.py")
+    assert f"FILES {[real]!r}" in proc.stdout, proc.stdout

@@ -9,10 +9,15 @@ import pytest
 
 from dtaidistance_spark.kernels import weights as W
 
-ref_w = pytest.importorskip("dtaidistance.dtw_weighted",
-                            reason="reference not on PYTHONPATH")
-# the reference uses the numpy<1.24 `np.int` alias (dtw_weighted.py:201)
-np.int = int
+
+def _ref_w():
+    """The reference's dtw_weighted module; skips where it is absent."""
+    ref_w = pytest.importorskip("dtaidistance.dtw_weighted",
+                                reason="reference not on PYTHONPATH")
+    # the reference uses the numpy<1.24 `np.int` alias (dtw_weighted.py:201)
+    np.int = int
+    return ref_w
+
 
 S7 = np.array([
     [0., 0, 1, 2, 1, 0, 1.3, 0, 0],
@@ -40,6 +45,7 @@ class TestDecisionTree:
         assert W.DecisionTreeClassifier.kdistance(z, 0.0) == pytest.approx(0.0)
 
     def test_tree_structure_matches_reference(self):
+        ref_w = _ref_w()
         rng = np.random.default_rng(2)
         feats = rng.random((40, 6))
         targ = (rng.random(40) > 0.5).astype(int)
@@ -60,12 +66,14 @@ class TestDecisionTree:
 
 class TestWeightLearning:
     def test_end_to_end_equal_reference(self):
+        ref_w = _ref_w()
         wr, ir = ref_w.compute_weights_using_dt(S7, L7, 0, max_clfs=50)
         wg, ig = W.compute_weights_using_dt(S7, L7, 0, max_clfs=50)
         assert np.array_equal(wr, wg)
         assert dict(ir) == dict(ig)
 
     def test_patternlen_and_only_max_equal_reference(self):
+        ref_w = _ref_w()
         wr, ir = ref_w.compute_weights_using_dt(S7, L7, 0, patternlen=4)
         wg, ig = W.compute_weights_using_dt(S7, L7, 0, patternlen=4)
         assert np.array_equal(wr, wg)
@@ -81,6 +89,7 @@ class TestWeightLearning:
                                               only_max=True))
 
     def test_randomized_end_to_end(self):
+        ref_w = _ref_w()
         rng = np.random.default_rng(5)
         for trial in range(4):
             L = 24
@@ -123,6 +132,7 @@ class TestDtWindowsGuard:
         assert w.shape == (4, 8)
 
     def test_non_empty_path_unchanged_vs_reference(self):
+        ref_w = _ref_w()
         wr, ir = ref_w.compute_weights_using_dt(S7, L7, 0, patternlen=4)
         wg, ig = W.compute_weights_using_dt(S7, L7, 0, patternlen=4)
         assert np.array_equal(wr, wg)
