@@ -6,35 +6,25 @@ per-pair kernel; its own distribution primitive is the rectangular
 ``block`` (dtw.py:757-761, intended "to distribute the computations over
 multiple nodes", README.md:191-193).
 
-Every self-matrix here — DTW (:func:`distance_matrix`) and weighted DTW
-(:func:`distance_matrix_weighted`) — runs through ONE pair executor,
-:func:`_pair_matrix`.  It takes the source columns, a pair space (the
-upper triangle, or a ``block`` rectangle with or without ``triu``) and a
-per-pair kernel callback ``kernel(ii, jj, *corpus) -> (i, j, d)`` where
-``corpus`` holds one ``{id: array}`` dict per source column, and has one
-physical strategy, blocked broadcast pair ranges:
+:func:`distance_matrix` runs one pair executor, :func:`_pair_matrix`,
+over a pair space (the upper triangle, or a ``block`` rectangle with or
+without ``triu``), with one physical strategy, blocked broadcast pair
+ranges:
 
 * the corpus is collected once, cut in id order into K blocks of at
   most ``_BLOCK_BYTES`` and each block is broadcast on its own;
 * the pair space becomes tiles in the reference's ``block`` shape, one
   per block pair, so a tile reads at most two blocks;
-* one guided schedule over the tiles' summed cost cuts work into
-  ``(lo, hi)`` ranges of a tile's linear pair space.  A task unranks its
-  pairs in closed form, so the driver never materializes O(n²) pair
-  lists.  The ranges follow the reference's OMP ``guided`` loop
-  (dd_dtw_openmp.c:99), weighted by estimated kernel cost
-  ``len_i·len_j``: each range takes 1/(4·par) of the cost still
-  remaining, so early tasks are big and the tail is fine-grained, but
-  no range holds less than ``_TASK_FLOOR_S`` of estimated kernel time
-  (capped at 1/par of the job), so a task's fixed cost stays small
-  beside its kernel work.  The caller gives the kernel's time per
-  computed cell, from which the cost unit's seconds follow.  A
-  range yields sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so a
-  task's memory stays bounded whatever the pair count;
-* each tile's ranges run in their own ``mapInPandas`` branch, unioned
-  in schedule order.  A branch's closure references only its tile's
-  blocks: PySpark ships a task every broadcast its closure references,
-  and a reused worker keeps only those.
+* one cost-weighted guided schedule (:func:`_guided_ranges_cost`, the
+  reference's OMP ``guided`` loop) over the tiles laid end to end cuts
+  the work into ranges; a range that crosses a tile boundary becomes one
+  ``(tile, lo, hi)`` segment per tile.  A task unranks its pairs in
+  closed form, so the driver never materializes O(n²) pair lists, and
+  yields sub-batches of at most ``_SUB_BATCH_PAIRS`` pairs, so its
+  memory stays bounded whatever the pair count;
+* every range runs in ONE ``mapInPandas`` over ``spark.range``, one task
+  per range, whatever K is.  Each task references every block and reads
+  only its current segment's ≤ 2 (:func:`_range_task`).
 
 Output is the long-format ``(i, j, d)`` DataFrame — the "condensed"
 matrix is this table ordered row-major; a full numpy matrix is
@@ -46,8 +36,8 @@ kernel, :func:`_compute_pairs`.
 from __future__ import annotations
 
 import bisect
+import ctypes
 import weakref
-from functools import partial, reduce
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -58,7 +48,6 @@ from pyspark.sql import types as T
 
 from ..kernels.dtw import (DtwSettings, _BATCH_ELEMS, dtw_distance_batch,
                            dtw_distance_batch_indexed, lb_keogh_batch)
-from ..kernels.extras import weighted_warping_paths
 from ..resources import track_broadcast, track_persist
 
 PAIR_SCHEMA = "i long, j long, d double"
@@ -72,10 +61,9 @@ _SUB_BATCH_PAIRS = 2_000_000
 
 # Series bytes per broadcast block, and the worker-side bytes of stacked
 # (n, L) corpora kept for the indexed kernel entry.  They are sized
-# together: a task reads at most two blocks, whose joint stack is
+# together: a segment reads at most two blocks, whose joint stack is
 # 2·_BLOCK_BYTES, so a Python worker peaks near two live blocks plus the
-# cache, 4·_BLOCK_BYTES = 512 MB — what one corpus at the former 256 MB
-# broadcast limit plus its cached stack took before blocks.
+# cache, 4·_BLOCK_BYTES = 512 MB.
 _BLOCK_BYTES = 128 * 1024 * 1024
 _CORPUS_CACHE_BYTES = 2 * _BLOCK_BYTES
 
@@ -86,16 +74,14 @@ _TASK_FLOOR_S = 0.5
 
 # Kernel seconds per computed DP cell.  The C DTW kernel: 29.4 us per
 # pair over 23,136 band cells (504 points, window 24), single-thread on a
-# 4-vCPU host.  weighted_warping_paths with an 8-knot profile: 4.7-5.6 us
-# per cell at 100-300 points on the same host.
+# 4-vCPU host.
 _DTW_CELL_S = 1.27e-9
-_WEIGHTED_CELL_S = 5e-6
 
 
 def _series_np(v) -> Optional[np.ndarray]:
     """Arrow→numpy for a series cell: 1-D array<double> or 2-D
-    array<array<double>> (n-D series and weight profiles arrive as
-    object arrays of rows).  A null cell stays None."""
+    array<array<double>> (n-D series arrive as object arrays of rows).
+    A null cell stays None."""
     if v is None:
         return None
     a = np.asarray(v)
@@ -176,8 +162,8 @@ def _norm_block(block) -> Tuple[Optional[tuple], bool]:
 
 
 class _SharedCorpus(dict):
-    """An ``{id: array}`` corpus dict that many tasks of one worker share:
-    a broadcast block, or a tile's join of two blocks, whose ``parts``
+    """An ``{id: array}`` corpus dict that many segments of one worker
+    share: a broadcast block, or a join of two blocks, whose ``parts``
     are those blocks.  Only these dicts get their stacked matrix cached;
     one-shot dicts (cross batches) are stacked and dropped."""
 
@@ -188,9 +174,7 @@ class _SharedCorpus(dict):
         """One block as it is; two as one dict over both."""
         if len(blocks) == 1:
             return blocks[0]
-        out = cls()
-        for b in blocks:
-            out.update(b)
+        out = cls({**blocks[0], **blocks[1]})
         out.parts = tuple(blocks)
         return out
 
@@ -205,24 +189,20 @@ def _corpus_matrix(values_by_idx: dict):
     (n, L) matrix, or None for ragged or n-D corpora.
 
     A :class:`_SharedCorpus` is cached by the blocks it holds, so every
-    task of a tile in a worker reuses one stack.  The cache holds those
-    blocks weakly — the worker's broadcast registry owns them — and
-    counts only the stacks against ``_CORPUS_CACHE_BYTES``: a miss first
-    drops the stacks of blocks the worker has let go, then the oldest
-    until the new stack fits (the newest entry always stays)."""
+    segment of a tile in a worker reuses one stack.  The cache holds
+    those blocks weakly — the worker's broadcast registry owns them — and
+    counts only the stacks against ``_CORPUS_CACHE_BYTES``: a stack goes
+    as soon as one of its blocks does, and a miss drops the oldest until
+    the new stack fits (the newest entry always stays)."""
     shared = isinstance(values_by_idx, _SharedCorpus)
     parts = (values_by_idx.parts or (values_by_idx,)) if shared else ()
     key = tuple(map(id, parts))
-    hit = _CORPUS_CACHE.get(key) if shared else None
-    if hit is not None and all(r() is p for r, p in zip(hit[0], parts)):
-        return hit[1]
+    if shared and key in _CORPUS_CACHE:
+        return _CORPUS_CACHE[key][1]
     arrs = list(values_by_idx.values())
     if not arrs or any(a.ndim != 1 or len(a) != len(arrs[0]) for a in arrs):
         return None
     if shared:
-        for k in [k for k, e in _CORPUS_CACHE.items()
-                  if any(r() is None for r in e[0])]:
-            del _CORPUS_CACHE[k]
         need = len(arrs) * arrs[0].nbytes
         while _CORPUS_CACHE and need + sum(
                 e[1][1].nbytes for e in _CORPUS_CACHE.values()) \
@@ -232,7 +212,9 @@ def _corpus_matrix(values_by_idx: dict):
     order = np.argsort(ids)
     res = (ids[order], np.stack([arrs[k] for k in order]))
     if shared:
-        _CORPUS_CACHE[key] = (tuple(map(weakref.ref, parts)), res)
+        _CORPUS_CACHE[key] = (tuple(
+            weakref.ref(p, lambda _, k=key: _CORPUS_CACHE.pop(k, None))
+            for p in parts), res)
     return res
 
 
@@ -294,15 +276,6 @@ def _compute_pairs(left: np.ndarray, right_idx: np.ndarray,
     return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_d)
 
 
-def _weighted_pairs(ii: np.ndarray, jj: np.ndarray, vals: dict, wts: dict,
-                    window: Optional[int] = None):
-    """The weighted-DTW pair kernel: row i's weight profile reshapes the
-    local difference (reference dtw_weighted.py:121-152)."""
-    d = [weighted_warping_paths(vals[a], vals[b], weights=wts[a],
-                                window=window)[0] for a, b in zip(ii, jj)]
-    return ii, jj, np.asarray(d, dtype=np.float64)
-
-
 def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None,
                     block=None, chunk_size: Optional[int] = None,
                     index_col: str = "i", values_col: str = "values",
@@ -346,106 +319,108 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
         i = F.col("i")
         src = src.where(i.isNull() | ((i >= rb) & (i < re_)) |
                         ((i >= cb) & (i < ce)))
-    return _pair_matrix(src, ["values"], partial(_compute_pairs, settings=s),
-                        _DTW_CELL_S, s.window, blk, triu, order_col,
-                        index_col)
+    return _pair_matrix(src, s, blk, triu, order_col, index_col)
 
 
-def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
-                             index_col: str = "i", values_col: str = "values",
-                             weights_col: str = "weights") -> DataFrame:
-    """All-pairs *weighted* DTW (reference dtw_weighted.py:121-152
-    distance_matrix): per-point 8-knot weight profiles reshape the local
-    difference of the row series.  The per-pair kernel is
-    kernels/extras.weighted_warping_paths.  Like the reference (triu
-    only, matrix[i,j] uses weights[i]), the output is asymmetric in
-    principle and only i<j pairs are produced.  Runs on the same pair
-    executor as :func:`distance_matrix`; the weight profiles ride along
-    in the broadcast blocks and count toward their bytes."""
-    src = series_df.select(F.col(index_col).cast("long").alias("i"),
-                           F.col(values_col).alias("values"),
-                           F.col(weights_col).alias("weights"))
-    return _pair_matrix(src, ["values", "weights"],
-                        partial(_weighted_pairs, window=window),
-                        _WEIGHTED_CELL_S, window, index_col=index_col)
-
-
-def _pair_matrix(src: DataFrame, data_cols: list, kernel, cell_s: float,
-                 window: Optional[int], blk=None, triu: bool = True,
-                 order_col: Optional[str] = None,
+def _pair_matrix(src: DataFrame, settings: DtwSettings, blk=None,
+                 triu: bool = True, order_col: Optional[str] = None,
                  index_col: str = "i") -> DataFrame:
     """The pair executor: ``src`` holds ``i`` or, with ``order_col``,
-    that column to rank ``i`` by, plus ``data_cols``; ``kernel(ii, jj,
-    *dicts)`` computes ``(i, j, d)`` for id pairs given one ``{id:
-    array}`` dict per data column, at about ``cell_s`` seconds per cell
-    of a DP band ``window`` wide.  Rows outside the block may stay in
-    ``src``: only the block's series are broadcast.  ``index_col`` names
-    the source of ``i`` in errors."""
+    that column to rank ``i`` by, plus ``values``; every pair of the
+    space runs through :func:`_compute_pairs` under ``settings``.  Rows
+    outside the block may stay in ``src``: only the block's series are
+    broadcast.  ``index_col`` names the source of ``i`` in errors.  A
+    corpus of several blocks under ``spark.io.encryption.enabled``,
+    whose workers load every broadcast of a task, raises ``ValueError``."""
     spark = src.sparkSession
     sc = spark.sparkContext
-    ids, corpus = _collect_corpus(src, data_cols, order_col, index_col)
+    ids, corpus = _collect_corpus(src, order_col, index_col)
     if blk is not None:
         (rb, re_), (cb, ce) = blk
         ids = ids[((ids >= rb) & (ids < re_)) | ((ids >= cb) & (ids < ce))]
     keys = ids.tolist()
-    lens = np.array([len(corpus[0][k]) for k in keys], dtype=np.int64)
-    nbytes = np.array([sum(d[k].nbytes for d in corpus if d[k] is not None)
-                       for k in keys], dtype=np.int64)
+    lens = np.array([len(corpus[k]) for k in keys], dtype=np.int64)
+    nbytes = np.array([corpus[k].nbytes for k in keys], dtype=np.int64)
     cuts = _block_cuts(nbytes, _BLOCK_BYTES)
+    if len(cuts) > 2 and sc._encryption_enabled:
+        raise ValueError(f"a corpus of {len(cuts) - 1} broadcast blocks "
+                         "needs spark.io.encryption.enabled off: with it "
+                         "every task loads every block")
     tiles = _tiles(ids, lens, cuts, blk, triu)
     if not tiles:
         return spark.createDataFrame([], PAIR_SCHEMA)
     plan = _tile_schedule([t[5] for t in tiles], sc.defaultParallelism,
-                          _cost_s(lens, window, cell_s))
+                          _cost_s(lens, settings.window, _DTW_CELL_S))
     bcs = [track_broadcast(sc.broadcast(
-        [_SharedCorpus((k, d[k]) for k in keys[lo:hi]) for d in corpus]))
+        _SharedCorpus((k, corpus[k]) for k in keys[lo:hi])))
         for lo, hi in zip(cuts, cuts[1:])]
-
     # one range per partition, IN ORDER (big ranges first): Spark launches
     # tasks by partition index as slots free, which is exactly OMP guided
-    # scheduling; .repartition() would round-robin the order away.  Task
-    # k reads range k from the closure: spark.range needs no Python-side
-    # row conversion (measured ~0.1 s less per task than parallelize on a
-    # 4-core local[4] session)
-    branches = [
-        spark.range(len(ranges), numPartitions=len(ranges)).mapInPandas(
-            _range_task([bcs[x] for x in sorted({a, b})], ranges, rows,
-                        cols, tri, kernel), schema=PAIR_SCHEMA)
-        for (a, b, rows, cols, tri, _), ranges in zip(tiles, plan)]
-    return reduce(DataFrame.union, branches)
+    # scheduling.  spark.range needs no Python-side row conversion
+    # (~0.1 s less per task than parallelize on a local[4] session)
+    return spark.range(len(plan), numPartitions=len(plan)).mapInPandas(
+        _range_task(bcs, ids, [t[:5] for t in tiles], plan, settings),
+        schema=PAIR_SCHEMA)
 
 
-def _range_task(blocks: list, ranges: list, rows: np.ndarray,
-                cols: Optional[np.ndarray], triu: bool, kernel):
-    """One tile's ``mapInPandas`` function: task k runs ``ranges[k]`` of
-    the tile's pair space over the join of its ≤ 2 block broadcasts, the
-    only ones its closure references."""
+def _range_task(blocks: list, ids: np.ndarray, tiles: list, plan: list,
+                settings: DtwSettings):
+    """The matrix's one ``mapInPandas`` function: task k runs the
+    segments ``plan[k]``, each a ``(tile, lo, hi)`` range of the pair
+    space of ``tiles[tile] = (a, b, rows, cols, triu)``; ``rows`` and
+    ``cols`` slice ``ids``.
+
+    Every task references every block.  A PySpark worker registers a
+    broadcast by its file path, unpickles it only on ``.value`` and
+    caches the value in the broadcast object, which it keeps across
+    tasks.  So before each segment the task drops the previous segment's
+    dict and the cached values (and stacks) of the blocks the segment
+    does not read, and only then reads its ≤ 2 blocks.  On a cluster each
+    executor JVM still fetches every block once (not measured)."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dicts = [_SharedCorpus.join(d)
-                 for d in zip(*(b.value for b in blocks))]
         for pdf in batches:
             for k in pdf["id"]:
-                lo, hi = ranges[int(k)]
-                for ii, jj in _range_pairs(lo, hi, rows, cols, triu):
-                    if len(ii):
-                        oi, oj, od = kernel(ii, jj, *dicts)
-                        yield pd.DataFrame({"i": oi, "j": oj, "d": od})
+                for t, lo, hi in plan[int(k)]:
+                    a, b, rows, cols, tri = tiles[t]
+                    values = None
+                    for x, bc in enumerate(blocks):
+                        if x != a and x != b:
+                            bc.__dict__.pop("_value", None)
+                    if any("_value" not in blocks[x].__dict__ for x in (a, b)):
+                        _trim_heap()
+                    values = _SharedCorpus.join(
+                        [blocks[x].value for x in sorted({a, b})])
+                    for ii, jj in _range_pairs(
+                            lo, hi, ids[rows],
+                            None if cols is None else ids[cols], tri):
+                        if len(ii):
+                            oi, oj, od = _compute_pairs(ii, jj, values,
+                                                        settings)
+                            yield pd.DataFrame({"i": oi, "j": oj, "d": od})
 
     return compute
 
 
-def _collect_corpus(src: DataFrame, data_cols: list,
-                    order_col: Optional[str] = None,
-                    index_col: str = "i") -> Tuple[np.ndarray, list]:
-    """Collect ``i`` (or ``order_col``) + ``data_cols`` once → (sorted
-    ids, one ``{id: float64 array}`` dict per column).
+def _trim_heap() -> None:
+    """Hand the heap's free pages back to the OS (glibc): a dropped
+    block's pages do not always fit the next block (peak worker RSS over
+    16 blocks of 24 MB: 267 MB without this, 220 MB with it)."""
+    try:
+        ctypes.CDLL(None).malloc_trim(0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _collect_corpus(src: DataFrame, order_col: Optional[str] = None,
+                    index_col: str = "i") -> Tuple[np.ndarray, dict]:
+    """Collect ``i`` (or ``order_col``) + ``values`` once → (sorted
+    ids, ``{id: float64 array}``).
 
     The collect is one ``toArrow()``: a flat, null-free ``array<double>``
     column arrives as ONE contiguous values buffer + offsets, and each
     series becomes a numpy slice view of it — no per-row Python objects.
-    Nested (n-D series, weight profiles) or null-holding columns convert
-    cell by cell.
+    A nested (n-D) or null-holding column converts cell by cell.
 
     Without ``order_col`` a null or repeated ``i`` raises ``ValueError``
     naming ``index_col``: a repeated id would silently keep one series.
@@ -458,7 +433,7 @@ def _collect_corpus(src: DataFrame, data_cols: list,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tb = src.select(order_col or "i", *data_cols).toArrow()
+    tb = src.select(order_col or "i", "values").toArrow()
     if order_col is None:
         col = tb.column("i")
         if col.null_count:
@@ -475,19 +450,14 @@ def _collect_corpus(src: DataFrame, data_cols: list,
                              null_placement="at_start").to_numpy()] = \
             np.arange(tb.num_rows)
         keys = rank.tolist()
-    dicts = []
-    for c in data_cols:
-        va = tb.column(c).combine_chunks()
-        if (va.type.value_type == pa.float64() and va.null_count == 0
-                and va.values.null_count == 0):
-            off = va.offsets.to_numpy()
-            buf = va.values.to_numpy()
-            dicts.append(_SharedCorpus(
-                (k, buf[off[r]:off[r + 1]]) for r, k in enumerate(keys)))
-        else:
-            dicts.append(_SharedCorpus(
-                (k, _series_np(v)) for k, v in zip(keys, va.to_pandas())))
-    return np.array(sorted(dicts[0]), dtype=np.int64), dicts
+    va = tb.column("values").combine_chunks()
+    if (va.type.value_type == pa.float64() and va.null_count == 0
+            and va.values.null_count == 0):
+        off, buf = va.offsets.to_numpy(), va.values.to_numpy()
+        corpus = {k: buf[off[r]:off[r + 1]] for r, k in enumerate(keys)}
+    else:
+        corpus = {k: _series_np(v) for k, v in zip(keys, va.to_pandas())}
+    return np.array(sorted(corpus), dtype=np.int64), corpus
 
 
 def _block_cuts(nbytes: np.ndarray, cap: int) -> list:
@@ -508,32 +478,34 @@ def _tiles(ids: np.ndarray, lens: np.ndarray, cuts: list, blk,
            triu: bool) -> list:
     """The pair space as tiles ``(a, b, rows, cols, triu, space)`` over
     the id-sorted blocks ``ids[cuts[k]:cuts[k + 1]]``, in row-major block
-    order.  Without ``blk``: the triangle of each block (``cols=None``)
-    and the rectangle of each block pair ``a < b``.  With it: the block
-    rows of block ``a`` × the block cols of block ``b``, for ``a <= b``
-    under ``triu`` (a later block holds no ``j > i`` partner of an earlier
-    one), every ``(a, b)`` otherwise; only a diagonal tile keeps the
-    ``i < j`` filter.  ``space`` is ``(cost_upto, n_pairs, total)``; tiles
-    without pairs are dropped."""
-    if blk is None:
-        rsel = csel = np.ones(len(ids), dtype=bool)
-    else:
-        (rb, re_), (cb, ce) = blk
-        rsel, csel = (ids >= rb) & (ids < re_), (ids >= cb) & (ids < ce)
+    order; ``rows`` and ``cols`` are slices of ``ids``.  Without ``blk``:
+    the triangle of each block (``cols=None``) and the rectangle of each
+    block pair ``a < b``.  With it: the block rows of block ``a`` × the
+    block cols of block ``b``, for ``a <= b`` under ``triu`` (a later
+    block holds no ``j > i`` partner of an earlier one), every ``(a, b)``
+    otherwise; only a diagonal tile keeps the ``i < j`` filter.
+    ``space`` is ``(cost_upto, n_pairs, total)``; tiles without pairs are
+    dropped."""
+    # the block's rows and cols are each one run of the sorted ids
+    (r0, r1), (c0, c1) = ([(0, len(ids))] * 2 if blk is None else
+                          np.searchsorted(ids, blk).tolist())
+
+    def part(k: int, lo: int, hi: int) -> slice:
+        lo, hi = max(cuts[k], lo), min(cuts[k + 1], hi)
+        return slice(lo, max(lo, hi))
+
     out = []
     for a in range(len(cuts) - 1):
-        ra = slice(cuts[a], cuts[a + 1])
+        rows = part(a, r0, r1)
         for b in range(a if blk is None or triu else 0, len(cuts) - 1):
             if blk is None and a == b:
-                rows, cols = ids[ra], None
-                n_pairs = len(rows) * (len(rows) - 1) // 2
-                cost_upto, total = _triu_cost_fn(lens[ra])
+                cols, m = None, rows.stop - rows.start
+                n_pairs = m * (m - 1) // 2
+                cost_upto, total = _triu_cost_fn(lens[rows])
             else:
-                cb_ = slice(cuts[b], cuts[b + 1])
-                rm, cm = rsel[ra], csel[cb_]
-                rows, cols = ids[ra][rm], ids[cb_][cm]
-                n_pairs = len(rows) * len(cols)
-                cost_upto, total = _rect_cost_fn(lens[ra][rm], lens[cb_][cm])
+                cols = part(b, c0, c1)
+                n_pairs = (rows.stop - rows.start) * (cols.stop - cols.start)
+                cost_upto, total = _rect_cost_fn(lens[rows], lens[cols])
             if n_pairs:
                 out.append((a, b, rows, cols, triu and a == b,
                             (cost_upto, n_pairs, total)))
@@ -550,12 +522,12 @@ def _cost_s(lens: np.ndarray, window: Optional[int], cell_s: float) -> float:
 
 
 def _tile_schedule(spaces: list, par: int, cost_s: float) -> list:
-    """Each tile's ``(lo, hi)`` ranges, in its own pair positions: ONE
-    guided schedule (:func:`_guided_ranges_cost`) over the tiles' pair
-    spaces laid end to end, its ranges cut where one tile ends and the
-    next begins.  ``spaces`` holds ``(cost_upto, n_pairs, total)`` per
-    tile and ``cost_s`` the estimated kernel seconds per cost unit; with
-    one tile the schedule is that tile's own."""
+    """Each task's segments ``[(tile, lo, hi), ...]`` in the tiles' own
+    pair positions: ONE guided schedule (:func:`_guided_ranges_cost`)
+    over the tiles' pair spaces laid end to end, each range cut where one
+    tile ends and the next begins.  ``spaces`` holds ``(cost_upto,
+    n_pairs, total)`` per tile, ``cost_s`` the estimated kernel seconds
+    per cost unit."""
     starts = [0]
     base = [0.0]
     for _, n_pairs, total in spaces:
@@ -566,16 +538,18 @@ def _tile_schedule(spaces: list, par: int, cost_s: float) -> list:
         t = min(bisect.bisect_right(starts, p) - 1, len(spaces) - 1)
         return base[t] + spaces[t][0](p - starts[t])
 
-    out: list = [[] for _ in spaces]
+    out = []
     t = 0
     for lo, hi in _guided_ranges_cost(cost_upto, starts[-1], base[-1], par,
                                       cost_s):
+        segs = []
         while lo < hi:
             while starts[t + 1] <= lo:
                 t += 1
             end = min(hi, starts[t + 1])
-            out[t].append((lo - starts[t], end - starts[t]))
+            segs.append((t, lo - starts[t], end - starts[t]))
             lo = end
+        out.append(segs)
     return out
 
 
@@ -633,13 +607,11 @@ def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
     wave at a 15k-series corpus made single tasks ~40 s, so any one
     slowed worker stretched the job by most of a wave.
 
-    A range task has a fixed cost, 56 ms of slot time per trivial task
-    on a local[4] session, so no range holds less than
-    ``_TASK_FLOOR_S`` (~10x that) of estimated kernel time, with
-    ``cost_s`` the estimated seconds per cost unit.  That floor is
-    capped at ``total / par``, so a small job still fills every slot; a
-    corpus with hours of kernel time keeps the plain guided schedule,
-    whose ``total / (24·par)`` floor is the larger one there.
+    No range holds less than ``_TASK_FLOOR_S`` of estimated kernel
+    time, with ``cost_s`` the estimated seconds per cost unit, capped at
+    ``total / par`` so a small job still fills every slot; a corpus with
+    hours of kernel time keeps the plain guided schedule, whose
+    ``total / (24·par)`` floor is the larger one there.
 
     ``cost_upto(p)`` must return the closed-form cumulative cost of the
     first ``p`` pairs of the linear pair space; boundaries are found by

@@ -9,8 +9,7 @@ driver is (n_series+1) x 2·len(prototype) — tiny next to the corpus —
 so the tree-ensemble fit (an inherently sequential boosting loop over
 <= max_clfs rounds) runs driver-side, exactly like the linkage and
 k-means reduce steps elsewhere in this engine.  The learned 8-knot
-profile array is then broadcast back into
-``operators/matrix.py::distance_matrix_weighted``.
+profile array feeds ``kernels/extras.weighted_warping_paths``.
 
 Kernel parity: kernels/weights.py is array-equal with the reference's
 ``compute_weights_using_dt`` (tests/test_weights.py), and this operator

@@ -8,7 +8,7 @@ textbook oracles written from the documented recurrences
 fixture picks one per reference module; ``ref_dtw`` (also named
 ``dtw_oracle``) and ``ref_ed`` are its ``dtw`` and ``ed`` modules.
 
-Eleven tests check conventions only the reference's own code fixes
+Nine tests check conventions only the reference's own code fixes
 (DetectKnee, the relaxed postprocessing rules, the weighted DTW profile,
 LoCo, hangover, ``linearly_scale``, ``mixedlinearlogdomain``'s tuple
 form).  They read the reference through ``pytest.importorskip`` and are

@@ -26,6 +26,19 @@ def _got_segs(ep):
             for s in ep.segments]
 
 
+# d' <= bound(d, delta_rel, delta_abs) per bounded approximation type:
+# the cost bounds of kernels/explain.py::_bounds_global as distances.
+# max_dist's budget delta_abs holds only where the exact path is within
+# it; above it no segment merges and d' is d.
+BOUNDS = {
+    "max_factor_and_diff": lambda d, dr, da: (1 + dr) * d + da,
+    "max_factor": lambda d, dr, da: (1 + dr) * d,
+    "max_diff": lambda d, dr, da: d + da,
+    "max_factor_loose": lambda d, dr, da: ((1 + da) * dr + 1) * d,
+    "max_dist": lambda d, dr, da: max(d, da),
+}
+
+
 class TestExplainParity:
     def test_bit_exact_vs_reference(self):
         ref_explain = _ref_explain()
@@ -155,16 +168,25 @@ class TestExplainParity:
         with pytest.raises(NotImplementedError):
             ExplainedPair([1.0, 2.0], [1.0, 2.0], split_strategy="nope")
 
-    def test_approximation_guarantee(self):
-        # the defining DSW bound: d' <= d*(1+delta_rel) + delta_abs
+    @pytest.mark.parametrize("approx_type,split_strategy", [
+        (a, s) for a in BOUNDS
+        for s in ExplainedPair.SUPPORTED_SPLIT_STRATEGIES])
+    def test_approximation_guarantee(self, approx_type, split_strategy):
+        # the DSW bound of each approximation type under the local
+        # criterion, on seeded random walks
+        bound = BOUNDS[approx_type]
         rng = np.random.default_rng(3)
-        for _ in range(10):
-            a = np.cumsum(rng.normal(0, 1, 100))
-            b = np.cumsum(rng.normal(0, 1, 100))
-            for dr, da in ((1, 0.1), (0.25, 0.05)):
-                ep = ExplainedPair(a, b, delta_rel=dr, delta_abs=da)
+        for _ in range(5):
+            a = np.cumsum(rng.normal(0, 1, 60))
+            b = np.cumsum(rng.normal(0, 1, 70))
+            for dr, da in ((1, 0.1), (0.25, 0.05), (0.5, 2.0)):
+                ep = ExplainedPair(a, b, delta_rel=dr, delta_abs=da,
+                                   approx_type=approx_type,
+                                   split_strategy=split_strategy,
+                                   approx_local=True)
                 d = ep.distance()
-                assert ep.distance_approx() <= d * (1 + dr) + da + 1e-12
+                assert ep.distance_approx() <= \
+                    bound(d, dr, da) * (1 + 1e-12) + 1e-12, (d, dr, da)
 
     def test_segments_tile_the_path(self):
         rng = np.random.default_rng(5)

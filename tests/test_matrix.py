@@ -4,6 +4,7 @@ condensed ordering, golden fixtures from reference tests/test_dtw.py)."""
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from dtaidistance_spark.kernels.dtw import DtwSettings, dtw_distance
@@ -304,14 +305,20 @@ class TestCostAwareScheduling:
         # 1 s per cost unit: the time floor stays below the guided
         # quantum, so the ranges are many and cross tile boundaries
         plan = _tile_schedule([t[5] for t in tiles], 4, 1.0)
+        assert any(len(task) > 1 for task in plan)
+        segs = [seg for task in plan for seg in task]
+        # tasks take the tiles laid end to end, in order
+        assert [t for t, _, _ in segs] == sorted(t for t, _, _ in segs)
         got = []
-        for (a, b, rows, cols, tri, (_, n_pairs, _)), ranges in zip(tiles,
-                                                                  plan):
-            # the tile's ranges partition its pair space, in order
-            assert ranges[0][0] == 0 and ranges[-1][1] == n_pairs
-            assert all(r[1] == q[0] for r, q in zip(ranges, ranges[1:]))
-            for lo, hi in ranges:
-                for ii, jj in _range_pairs(lo, hi, rows, cols, tri):
+        for t, (a, b, rows, cols, tri, (_, n_pairs, _)) in enumerate(tiles):
+            mine = [(lo, hi) for u, lo, hi in segs if u == t]
+            # the tile's segments partition its pair space, in order
+            assert mine[0][0] == 0 and mine[-1][1] == n_pairs
+            assert all(r[1] == q[0] for r, q in zip(mine, mine[1:]))
+            for lo, hi in mine:
+                for ii, jj in _range_pairs(
+                        lo, hi, ids[rows],
+                        None if cols is None else ids[cols], tri):
                     touched = set(block_of[np.searchsorted(ids, ii)]) | \
                         set(block_of[np.searchsorted(ids, jj)])
                     assert touched <= {a, b}  # at most two blocks
@@ -328,7 +335,8 @@ class TestCostAwareScheduling:
         assert len(got) == len(set(got))  # every pair exactly once
 
     def test_one_block_schedule_pinned(self):
-        # one block is the plain schedule: the pinned 7 ranges above
+        # one block is the plain schedule: the pinned 7 ranges above,
+        # as 7 tasks of one segment
         from dtaidistance_spark.operators.matrix import (
             _DTW_CELL_S, _block_cuts, _cost_s, _tile_schedule, _tiles)
 
@@ -337,11 +345,12 @@ class TestCostAwareScheduling:
         cuts = _block_cuts(8 * lens, 128 * 1024 * 1024)
         assert cuts == [0, 480]
         tiles = _tiles(ids, lens, cuts, None, True)
-        (ranges,) = _tile_schedule([t[5] for t in tiles], 4,
-                                   _cost_s(lens, 24, _DTW_CELL_S))
-        assert len(ranges) == 7
-        assert ranges[0] == (0, 17017)
-        assert ranges[-1][1] == 480 * 479 // 2
+        plan = _tile_schedule([t[5] for t in tiles], 4,
+                              _cost_s(lens, 24, _DTW_CELL_S))
+        assert len(plan) == 7
+        assert all(len(task) == 1 for task in plan)  # one segment each
+        assert plan[0] == [(0, 0, 17017)]
+        assert plan[-1][0][2] == 480 * 479 // 2
 
     def test_blocked_vs_one_block_bit_identical(self, spark, rng,
                                                 in_blocks):
@@ -357,6 +366,49 @@ class TestCostAwareScheduling:
         b = in_blocks(8 * 60 * 4, run)
         assert len(a) == 20 * 19 // 2
         assert a.equals(b)  # bit-identical: blocks only move work
+
+    def test_task_count_independent_of_blocks(self, spark, rng, in_blocks):
+        """One plan at every K: over several blocks the pairs stage runs
+        as many tasks as over one, in one MapInPandas and no Union."""
+        import uuid
+
+        df = _series_df(spark, [list(rng.normal(size=40))
+                                for _ in range(30)])
+        sc = spark.sparkContext
+
+        def run(dist):
+            plan = dist._jdf.queryExecution().executedPlan().toString()
+            group = f"matrix-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                rows = dist.toPandas().sort_values(["i", "j"]) \
+                    .reset_index(drop=True)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            st = sc.statusTracker()
+            tasks = sum(st.getStageInfo(s).numTasks
+                        for j in st.getJobIdsForGroup(group)
+                        for s in st.getJobInfo(j).stageIds)
+            return plan, tasks, rows
+
+        one = run(distance_matrix(df))
+        many = run(in_blocks(8 * 40 * 8, lambda: distance_matrix(df)))
+        for plan, _, _ in (one, many):
+            assert plan.count("MapInPandas") == 1
+            assert "Union" not in plan
+        assert one[1] > 1
+        assert many[1] == one[1]
+        assert many[2].equals(one[2])
+
+    def test_encryption_needs_one_block(self, spark, rng, in_blocks,
+                                        monkeypatch):
+        """With I/O encryption a worker loads every broadcast of a task
+        eagerly, so a corpus of several blocks is refused by name."""
+        df = _series_df(spark, [list(rng.normal(size=20))
+                                for _ in range(12)])
+        monkeypatch.setattr(spark.sparkContext, "_encryption_enabled", True)
+        with pytest.raises(ValueError, match="spark.io.encryption.enabled"):
+            in_blocks(8 * 20 * 3, lambda: distance_matrix(df))
 
     def test_ragged_blocked_matches_reference(self, spark, dtw_oracle, rng,
                                               in_blocks):
@@ -572,6 +624,74 @@ class TestPairExecutor:
             d_parts = np.concatenate(
                 [_compute_pairs(ii, jj, vals, st)[2] for ii, jj in parts])
             assert np.array_equal(d_parts, d_one)
+
+    def test_range_task_holds_at_most_two_blocks(self, monkeypatch):
+        """The one plan's task function, run in-process over stub
+        broadcasts that load and cache their value the way a PySpark
+        worker does, tasks in a scrambled order as one reused worker would
+        get them: at most two blocks are alive at every kernel call, none
+        but those the broadcasts hold, at most one when another loads,
+        and the rows are the kernel's over the whole corpus."""
+        import pickle
+        import weakref
+
+        from dtaidistance_spark.operators import matrix as M
+
+        rng = np.random.default_rng(4)
+        ids = np.arange(0, 120, 3, dtype=np.int64)
+        vals = {int(i): rng.normal(size=16) for i in ids}
+        lens = np.full(len(ids), 16, dtype=np.int64)
+        cuts = M._block_cuts(8 * lens, 8 * 16 * 6)
+        tiles = M._tiles(ids, lens, cuts, None, True)
+        plan = M._tile_schedule([t[5] for t in tiles], 4, 1.0)
+        assert len(cuts) - 1 >= 6 and any(len(task) > 1 for task in plan)
+        loaded = []
+
+        def live():
+            return sum(r() is not None for r in loaded)
+
+        def held():
+            return sum("_value" in b.__dict__ for b in blocks)
+
+        class StubBroadcast:
+            def __init__(self, value):
+                self._pickled = pickle.dumps(value)
+
+            @property
+            def value(self):
+                if not hasattr(self, "_value"):
+                    # every live block is one a broadcast still holds
+                    assert live() == held() <= 1
+                    assert all(r() is not None for e in
+                               M._CORPUS_CACHE.values() for r in e[0])
+                    self._value = pickle.loads(self._pickled)
+                    loaded.append(weakref.ref(self._value))
+                return self._value
+
+        blocks = [StubBroadcast(M._SharedCorpus(
+            (int(k), vals[int(k)]) for k in ids[lo:hi]))
+            for lo, hi in zip(cuts, cuts[1:])]
+        kernel = M._compute_pairs
+        calls = []
+
+        def spy(ii, jj, values, settings):
+            assert live() == held() <= 2
+            calls.append(len(ii))
+            return kernel(ii, jj, values, settings)
+
+        monkeypatch.setattr(M, "_compute_pairs", spy)
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        st = DtwSettings(window=3)
+        task = M._range_task(blocks, ids, [t[:5] for t in tiles], plan, st)
+        order = rng.permutation(len(plan))
+        got = pd.concat(list(task(iter([pd.DataFrame({"id": order})]))))
+        assert len(calls) >= len(tiles)
+        got = got.sort_values(["i", "j"]).reset_index(drop=True)
+        ii, jj = np.triu_indices(len(ids), k=1)
+        want_d = kernel(ids[ii], ids[jj], vals, st)[2]
+        assert np.array_equal(got["i"].to_numpy(), ids[ii])
+        assert np.array_equal(got["j"].to_numpy(), ids[jj])
+        assert np.array_equal(got["d"].to_numpy(), want_d)
 
     def test_corpus_cache_evicts_past_byte_cap(self, monkeypatch):
         from dtaidistance_spark.operators import matrix as M

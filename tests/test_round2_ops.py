@@ -1,5 +1,5 @@
 """Round-2 operator tests: last-row subsequence kernel + LB/UB pruning,
-Hirschberg low-mem path, generic dp engine, weighted/ndim matrices,
+Hirschberg low-mem path, generic dp engine, ndim matrices,
 connected components, simhash pairing, kmeans++ init quality."""
 
 import sys
@@ -207,88 +207,6 @@ class TestGenericDp:
         border = lambda ri, ci: float(ri + ci)
         d, _, _ = dp("kitten", "sitting", fn, border=border)
         assert d == 3
-
-
-class TestWeightedMatrix:
-    def test_vs_reference(self, spark, rng):
-        ref_w = pytest.importorskip("dtaidistance.dtw_weighted")
-        from dtaidistance_spark.operators.matrix import distance_matrix_weighted
-
-        n, L = 6, 30
-        S = rng.normal(0, 1, (n, L))
-        weights = np.abs(rng.normal(0.5, 0.2, (n, L, 8)))
-        weights.sort(axis=2)
-        rows = [(i, S[i].tolist(), [w.tolist() for w in weights[i]])
-                for i in range(n)]
-        df = spark.createDataFrame(
-            rows, "i long, values array<double>, "
-                  "weights array<array<double>>")
-        got = distance_matrix_weighted(df).toPandas()
-        for r in got.itertuples(index=False):
-            exp, _ = ref_w.warping_paths(S[r.i], S[r.j],
-                                         weights=weights[r.i])
-            assert r.d == pytest.approx(exp, rel=1e-12)
-
-    def test_blocked_vs_reference(self, spark, rng, in_blocks):
-        """Cut the corpus into several broadcast blocks, weight profiles
-        included, and check the same reference parity through them."""
-        ref_w = pytest.importorskip("dtaidistance.dtw_weighted")
-        from dtaidistance_spark.operators.matrix import distance_matrix_weighted
-
-        n, L = 6, 30
-        S = rng.normal(0, 1, (n, L))
-        weights = np.abs(rng.normal(0.5, 0.2, (n, L, 8)))
-        weights.sort(axis=2)
-        rows = [(i, S[i].tolist(), [w.tolist() for w in weights[i]])
-                for i in range(n)]
-        df = spark.createDataFrame(
-            rows, "i long, values array<double>, "
-                  "weights array<array<double>>")
-        one = distance_matrix_weighted(df).toPandas() \
-            .sort_values(["i", "j"]).reset_index(drop=True)
-        # 2160 B per series (values + profiles): two per block
-        got = in_blocks(2 * 8 * L * 9, lambda: distance_matrix_weighted(df)
-                        .toPandas().sort_values(["i", "j"])
-                        .reset_index(drop=True))
-        assert got.equals(one)
-        assert len(got) == n * (n - 1) // 2
-        for r in got.itertuples(index=False):
-            exp, _ = ref_w.warping_paths(S[r.i], S[r.j],
-                                         weights=weights[r.i])
-            assert r.d == pytest.approx(exp, rel=1e-12)
-
-    def test_both_paths_equal_in_process_kernel(self, spark, rng, in_blocks):
-        """One block and several both return, for every i < j pair,
-        exactly the in-process weighted_warping_paths distance with row
-        i's weights (a null profile means unweighted)."""
-        from dtaidistance_spark.kernels.extras import weighted_warping_paths
-        from dtaidistance_spark.operators.matrix import distance_matrix_weighted
-
-        n, L = 7, 20
-        S = rng.normal(0, 1, (n, L))
-        weights = np.abs(rng.normal(0.5, 0.2, (n, L, 8)))
-        weights.sort(axis=2)
-        rows = [(i, S[i].tolist(),
-                 None if i == 3 else [w.tolist() for w in weights[i]])
-                for i in range(n)]
-        df = spark.createDataFrame(
-            rows, "i long, values array<double>, "
-                  "weights array<array<double>>")
-
-        def run():
-            return distance_matrix_weighted(df, window=5).toPandas() \
-                .sort_values(["i", "j"]).reset_index(drop=True)
-
-        got = {"one_block": run(), "blocks": in_blocks(2 * 8 * L * 9, run)}
-        assert got["blocks"].equals(got["one_block"])
-        for name, pdf in got.items():
-            assert sorted(zip(pdf["i"], pdf["j"])) == [
-                (i, j) for i in range(n) for j in range(i + 1, n)], name
-            for r in pdf.itertuples(index=False):
-                w = None if r.i == 3 else weights[r.i]
-                exp, _ = weighted_warping_paths(S[r.i], S[r.j], weights=w,
-                                                window=5)
-                assert r.d == exp, (name, r.i, r.j)
 
 
 class TestNdimMatrix:
