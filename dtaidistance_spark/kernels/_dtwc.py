@@ -20,10 +20,11 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
-import stat
 import subprocess
 import tempfile
 import warnings
+
+from .._private import check_owned, private_dir
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                     "_dtw_kernel.c")
@@ -44,20 +45,15 @@ def _build_dir() -> str | None:
     if os.access(pkg, os.W_OK):
         return pkg
     # read-only checkout (e.g. a driver running the tree from a
-    # protected location): build in a per-user 0700 directory under tmp
-    # instead of silently losing the C path; a shared tmp path would let
-    # another user plant the .so.  None (numpy path) if that directory
-    # exists but is not private to this user.
-    d = os.path.join(tempfile.gettempdir(), f"dtaidistance_spark-{os.getuid()}")
-    os.makedirs(d, 0o700, exist_ok=True)
-    st = os.lstat(d)
-    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid() \
-            or st.st_mode & 0o077:
-        warnings.warn(f"{d} is not a directory private to this user; "
-                      "using the numpy DTW path", RuntimeWarning,
+    # protected location): build in the per-user private directory
+    # instead of silently losing the C path.  None (numpy path) if that
+    # directory exists but is not private to this user.
+    try:
+        return private_dir()
+    except PermissionError as e:
+        warnings.warn(f"{e}; using the numpy DTW path", RuntimeWarning,
                       stacklevel=2)
         return None
-    return d
 
 
 def _so_path(tag: str) -> str | None:
@@ -124,11 +120,11 @@ def lib():
         path = _compile(_tag())
         if path is None:
             return None
-        st = os.stat(path)
-        if st.st_uid != os.getuid() or st.st_mode & 0o022:
-            warnings.warn(f"refusing to load {path}: not owned by this user "
-                          "or writable by group/others; using the numpy "
-                          "DTW path", RuntimeWarning, stacklevel=2)
+        try:
+            check_owned(path)
+        except PermissionError as e:
+            warnings.warn(f"refusing to load {e}; using the numpy DTW path",
+                          RuntimeWarning, stacklevel=2)
             return None
         cdll = ctypes.CDLL(path)
         fn = cdll.dtw_batch

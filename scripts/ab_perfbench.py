@@ -7,7 +7,12 @@ Each pair runs ``perfbench/run.py --trace 0`` once in each checkout, from
 that checkout's root and with the same seed and ``--seconds`` (the
 ``run_seconds`` of the change's ``BENCHMARK.json``); even pairs start
 with the parent, odd pairs with the change, so a slow drift of the host
-falls on both sides.  Pair k uses the k-th seed of ``--seeds`` (a list
+falls on both sides.  Before pair 1, each side makes one untimed
+warm-up run with the first seed, so one-time caches never land inside
+a timed pair: the generated input, the C kernel build, and the driver
+JVM's class-data archive, which the first session of a checkout trains
+(``perfbench/run.py`` points the session's tmp, and with it the archive,
+into the checkout).  Pair k uses the k-th seed of ``--seeds`` (a list
 such as ``1,4,7`` or a range such as ``1-10``, cycled when shorter than
 the pair count).
 
@@ -113,6 +118,9 @@ def main() -> int:
     seeds = parse_seeds(args.seeds)
     sides = {"parent": args.parent, "change": args.change}
     runs = {"parent": [], "change": []}
+    print("warm-up: one untimed run per side", file=sys.stderr, flush=True)
+    for side in ("parent", "change"):
+        run_once(sides[side], args.workload, seeds[0], spec["run_seconds"])
     for k in range(args.pairs):
         seed = seeds[k % len(seeds)]
         order = ("parent", "change") if k % 2 == 0 else ("change", "parent")

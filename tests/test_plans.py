@@ -129,6 +129,40 @@ class TestPlans:
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
         assert dist.count() > 0
 
+    def test_events_schema_inferred_once_per_file_version(self, spark,
+                                                          tmp_path):
+        """``_events`` infers the schema (one job) on its first read of a
+        file; a second read of the unchanged file starts no job, and a
+        rewritten file is inferred again."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from dtaidistance_spark.plans import driver_queries as DQ
+        path = tmp_path / "events.parquet"
+        pq.write_table(pa.table({"event_id": [1, 2], "value": [0.5, 1.5]}),
+                       path)
+        sc = spark.sparkContext
+
+        def read(group):
+            sc.setJobGroup(group, "_events call")
+            try:
+                ev = DQ._events(spark, str(tmp_path))
+            finally:
+                sc.setJobGroup(None, None)
+            return ev, list(sc.statusTracker().getJobIdsForGroup(group))
+
+        first, jobs = read("events-first-read")
+        assert jobs
+        second, jobs = read("events-second-read")
+        assert jobs == []
+        assert second.schema == first.schema
+        assert sorted(second.collect()) == sorted(first.collect())
+        pq.write_table(pa.table({"event_id": [3], "value": [2.5],
+                                 "user_id": [7]}), path)
+        third, jobs = read("events-rewritten")
+        assert jobs
+        assert third.columns == ["event_id", "value", "user_id"]
+        assert [tuple(r) for r in third.collect()] == [(3, 2.5, 7)]
+
     def test_bounds_call_runs_no_job(self, spark):
         """A bounds call only builds a plan: no persist and no stats
         pass run before its result is forced."""
