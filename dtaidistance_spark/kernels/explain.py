@@ -12,10 +12,10 @@ the tolerance factors (reference
 ``compute_tolerance_criterion_factors``, explainpair.py:725) — with
 top-down RDP over the self-similarity
 matrix followed by the bottom-up merge pass (``approx_prune``) under
-either the local (``approx_local=True``, per-segment) or the global
-(``approx_local=False``, running full-path bound — reference
-``remove_segments`` else-branch, explainpair.py:660-672) tolerance
-criterion, squared-euclidean inner distance; split strategies
+the local, per-segment tolerance criterion (the reference's default
+``approx_local=True``; its global running-bound criterion is not
+offered: a re-expression of it broke its own full-path bound),
+squared-euclidean inner distance; split strategies
 ``spatialdist`` (default), ``pathdiff``, ``deriv`` and ``derivdist``
 (reference max_change_in_path / max_2ndderiv_in_path /
 max_2ndderiv_deviation with the 1st/2nd-derivative cost-surface
@@ -301,8 +301,8 @@ def _max_deviation_from_line(points: np.ndarray, i0: int, i1: int):
 
 class ExplainedPair:
     """Segments + approximate distances for one series pair (every
-    approx type / split strategy / tolerance criterion the reference
-    implements; see module docstring)."""
+    approx type and split strategy the reference implements, under its
+    local tolerance criterion; see module docstring)."""
 
     SUPPORTED_APPROX_TYPES = ("max_factor", "max_diff",
                               "max_factor_and_diff", "max_factor_loose",
@@ -312,7 +312,7 @@ class ExplainedPair:
 
     def __init__(self, series_from, series_to, delta_rel: float = 1.0,
                  delta_abs: float = 0.1, approx_prune: bool = True,
-                 approx_local: bool = True, onlychanges=None,
+                 onlychanges=None,
                  approx_type: str = "max_factor_and_diff",
                  split_strategy: str = "spatialdist",
                  settings: DtwSettings | None = None, path=None):
@@ -321,7 +321,6 @@ class ExplainedPair:
         self.delta_rel = float(delta_rel)
         self.delta_abs = float(delta_abs)
         self.approx_prune = approx_prune
-        self.approx_local = approx_local
         if approx_type not in self.SUPPORTED_APPROX_TYPES:
             raise NotImplementedError(
                 f"approx_type {approx_type!r} not supported (see module "
@@ -381,24 +380,6 @@ class ExplainedPair:
         ub_a = ((math.sqrt(ccost) + self.delta_abs) ** 2 - ccost) / length
         return ub_m, ub_a
 
-    def _bounds_global(self, ccost: float) -> float:
-        """Global upper bound on the approximated full-path cost
-        (reference compute_bounds_global, explainpair.py:683), used by
-        the approx_local=False merge criterion."""
-        d = math.sqrt(ccost)
-        at = self.approx_type
-        if at == "max_factor":
-            ub = (self.delta_rel + 1) * d
-        elif at == "max_factor_loose":
-            ub = ((1 + self.delta_abs) * self.delta_rel + 1) * d
-        elif at == "max_diff":
-            ub = self.delta_abs + d
-        elif at == "max_dist":
-            ub = self.delta_abs
-        else:  # max_factor_and_diff
-            ub = (1 + self.delta_rel) * d + self.delta_abs
-        return ub * ub  # dist2cost
-
     # -- top-down RDP over the SSM (explainpair.py:478) --
 
     def _rdp_ssm(self, points: np.ndarray) -> np.ndarray:
@@ -455,9 +436,8 @@ class ExplainedPair:
             idxs = self._merge_segments(points, idxs, ccostv, ub_m, ub_a)
         return points[np.asarray(idxs, dtype=np.int64)], list(idxs)
 
-    # -- bottom-up merge pass (explainpair.py:610; approx_local=True →
-    # per-segment criterion, False → running global bound, the
-    # reference's remove_segments else-branch :660-672) --
+    # -- bottom-up merge pass (explainpair.py:610), per-segment
+    # criterion --
 
     def _merge_segments(self, points, idxs: List[int], ccostv,
                         ub_m: float, ub_a: float) -> List[int]:
@@ -473,18 +453,6 @@ class ExplainedPair:
                                         include_end=True)[0]
             return cache[key]
 
-        if self.approx_local:
-            global_ub = ccost_a = None
-        else:
-            global_ub = self._bounds_global(float(ccostv[-1]))
-            # running cost of the current approximated path (sequential
-            # accumulation order as the reference: consecutive kept
-            # segments, then the last path point's inner distance)
-            ccost_a = 0.0
-            for a, b in zip(kept, kept[1:]):
-                ccost_a += line_cost(a, b)
-            ccost_a += _inner(sf[-1], st[-1])
-
         heap: list = []
         for a, b, c in zip(kept, kept[1:], kept[2:]):
             heappush(heap, (min(c - b, b - a), (a, b, c)))
@@ -498,17 +466,10 @@ class ExplainedPair:
             if not (_contains(i0) and _contains(i1) and _contains(i2)):
                 continue
             c_02a = line_cost(i0, i2)
-            if self.approx_local:
-                ccostp_o = float(ccostv[i2] - ccostv[i0])
-                lenp_o = i2 - i0
-                do_simplify = c_02a <= max(ccostp_o + lenp_o * ub_a,
-                                           ccostp_o * (1 + ub_m))
-            else:
-                c_02 = line_cost(i0, i1) + line_cost(i1, i2)
-                do_simplify = ccost_a - c_02 + c_02a < global_ub
-                if do_simplify:
-                    ccost_a = ccost_a - c_02 + c_02a
-            if do_simplify:
+            ccostp_o = float(ccostv[i2] - ccostv[i0])
+            lenp_o = i2 - i0
+            if c_02a <= max(ccostp_o + lenp_o * ub_a,
+                            ccostp_o * (1 + ub_m)):
                 pos = bisect_left(kept, i0)
                 if pos > 0:
                     i_n = kept[pos - 1]

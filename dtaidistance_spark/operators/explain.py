@@ -30,14 +30,13 @@ def explain_pairs(series: DataFrame, delta_rel: float = 1.0,
                   delta_abs: float = 0.1,
                   settings: Optional[DtwSettings] = None,
                   approx_type: str = "max_factor_and_diff",
-                  approx_local: bool = True,
                   split_strategy: str = "spatialdist",
                   id_col: str = "i",
                   values_col: str = "values") -> DataFrame:
     """Explain the warping path of every series pair (i < j): one row
     per DSW segment with its position in both series, angle, shift,
     elasticity, and the segment's share of the approximated distance.
-    ``approx_type`` / ``approx_local`` select the tolerance criterion
+    ``approx_type`` selects the tolerance criterion
     and ``split_strategy`` the split-point selection (kernels/explain.py
     module docstring lists the supported sets)."""
     s = settings or DtwSettings()
@@ -63,7 +62,7 @@ def explain_pairs(series: DataFrame, delta_rel: float = 1.0,
                     np.asarray(r.values, dtype=np.float64),
                     np.asarray(r.values_j, dtype=np.float64),
                     delta_rel=delta_rel, delta_abs=delta_abs,
-                    approx_type=approx_type, approx_local=approx_local,
+                    approx_type=approx_type,
                     split_strategy=split_strategy, settings=s)
                 rows.extend((int(r.i), int(r.j)) + row
                             for row in ep.segment_rows())

@@ -6,13 +6,17 @@ per-pair kernel; its own distribution primitive is the rectangular
 ``block`` (dtw.py:757-761, intended "to distribute the computations over
 multiple nodes", README.md:191-193).
 
-:func:`distance_matrix` runs one pair executor, :func:`_pair_matrix`,
-over a pair space (the upper triangle, or a ``block`` rectangle with or
-without ``triu``), with one physical strategy, blocked broadcast pair
-ranges:
+:func:`distance_matrix` runs one pair executor over a pair space (the
+upper triangle, or a ``block`` rectangle with or without ``triu``), in
+two steps: a collect step, :func:`_collect_corpus`, brings the corpus to
+the driver once, and a plan step, :func:`_pair_matrix`, plans the pairs
+with one physical strategy, blocked broadcast pair ranges.
+:func:`distance_matrix_dense` enters at the plan step with a matrix the
+caller already holds on the driver (the flagship query densifies its
+1h tier there, ``rollup.collect_dense_arrays``).  The plan step:
 
-* the corpus is collected once, cut in id order into K blocks of at
-  most ``_BLOCK_BYTES`` and each block is broadcast on its own;
+* cuts the corpus in id order into K blocks of at most ``_BLOCK_BYTES``
+  and broadcasts each block on its own;
 * the pair space becomes tiles in the reference's ``block`` shape, one
   per block pair, so a tile reads at most two blocks;
 * one cost-weighted guided schedule (:func:`_guided_ranges_cost`, the
@@ -72,10 +76,13 @@ _CORPUS_CACHE_BYTES = 2 * _BLOCK_BYTES
 # on a local[4] session (4-vCPU host; 200 vs 8 one-row tasks).
 _TASK_FLOOR_S = 0.5
 
-# Kernel seconds per computed DP cell.  The C DTW kernel: 29.4 us per
-# pair over 23,136 band cells (504 points, window 24), single-thread on a
-# 4-vCPU host.
-_DTW_CELL_S = 1.27e-9
+# Kernel seconds per computed DP cell: the C kernel's lanes (eight pairs
+# to a vector), 4.97-5.76 us per pair over 23,136 band cells (504
+# points, window 24) with four processes at once on a 4-vCPU host (5.2
+# us alone), so 0.21-0.25 ns.  One pair at a time it was 14.2-14.6 us.
+# Bands past the lane gate (window > 160) run one pair at a time at
+# 0.29-0.32 ns per cell alone (windows 161 and 504), within 1.4x of this.
+_DTW_CELL_S = 0.23e-9
 
 
 def _series_np(v) -> Optional[np.ndarray]:
@@ -319,22 +326,36 @@ def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None
         i = F.col("i")
         src = src.where(i.isNull() | ((i >= rb) & (i < re_)) |
                         ((i >= cb) & (i < ce)))
-    return _pair_matrix(src, s, blk, triu, order_col, index_col)
-
-
-def _pair_matrix(src: DataFrame, settings: DtwSettings, blk=None,
-                 triu: bool = True, order_col: Optional[str] = None,
-                 index_col: str = "i") -> DataFrame:
-    """The pair executor: ``src`` holds ``i`` or, with ``order_col``,
-    that column to rank ``i`` by, plus ``values``; every pair of the
-    space runs through :func:`_compute_pairs` under ``settings``.  Rows
-    outside the block may stay in ``src``: only the block's series are
-    broadcast.  ``index_col`` names the source of ``i`` in errors.  A
-    corpus of several blocks under ``spark.io.encryption.enabled``,
-    whose workers load every broadcast of a task, raises ``ValueError``."""
-    spark = src.sparkSession
-    sc = spark.sparkContext
     ids, corpus = _collect_corpus(src, order_col, index_col)
+    return _pair_matrix(src.sparkSession, ids, corpus, s, blk, triu)
+
+
+def distance_matrix_dense(spark, V: np.ndarray,
+                          settings: Optional[DtwSettings] = None,
+                          **kwargs) -> DataFrame:
+    """All-pairs DTW distances between the rows of a driver-side (n, L)
+    matrix → long DataFrame ``(i, j, d)`` with ``i`` the row index: the
+    upper triangle :func:`distance_matrix` gives for a DataFrame of
+    those rows, without a corpus collect.  The call broadcasts the rows
+    and starts no Spark job."""
+    s = settings if settings is not None else DtwSettings(**kwargs)
+    V = np.asarray(V, dtype=np.float64)
+    return _pair_matrix(spark, np.arange(len(V), dtype=np.int64),
+                        dict(enumerate(V)), s)
+
+
+def _pair_matrix(spark, ids: np.ndarray, corpus: dict,
+                 settings: DtwSettings, blk=None,
+                 triu: bool = True) -> DataFrame:
+    """The pair executor's plan step: every pair of the space over the
+    collected corpus (sorted ``ids``, ``{id: float64 array}``) runs
+    through :func:`_compute_pairs` under ``settings``.  Ids outside the
+    block may stay in the corpus: only the block's series are broadcast.
+    A corpus of several blocks under ``spark.io.encryption.enabled``,
+    whose workers load every broadcast of a task, raises ``ValueError``.
+    The collect step is :func:`_collect_corpus`, or the caller's own
+    driver-side matrix (:func:`distance_matrix_dense`)."""
+    sc = spark.sparkContext
     if blk is not None:
         (rb, re_), (cb, ce) = blk
         ids = ids[((ids >= rb) & (ids < re_)) | ((ids >= cb) & (ids < ce))]
@@ -611,7 +632,12 @@ def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
     time, with ``cost_s`` the estimated seconds per cost unit, capped at
     ``total / par`` so a small job still fills every slot; a corpus with
     hours of kernel time keeps the plain guided schedule, whose
-    ``total / (24·par)`` floor is the larger one there.
+    ``total / (24·par)`` floor is the larger one there.  Where the floor
+    binds from the first range on, the job is cut into equal-cost
+    ranges whose count is a multiple of ``par``: the floor alone left a
+    last wave that used some slots and idled the rest (the dtw_matrix
+    benchmark's 7 ranges on 4 slots ran in a median of 0.95 s, 4 ranges
+    in 0.88 s).
 
     ``cost_upto(p)`` must return the closed-form cumulative cost of the
     first ``p`` pairs of the linear pair space; boundaries are found by
@@ -623,8 +649,13 @@ def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
     cost_lo = 0.0
     floor_c = max(total / n_pairs, total / (par * 24),
                   min(_TASK_FLOOR_S / cost_s, total / par))
+    # the floor binds from the first range: equal ranges, as many as
+    # fit the floor rounded down to whole waves of par slots
+    k = (min(n_pairs, par * max(1, int(total / floor_c) // par))
+         if floor_c >= total / (4 * par) else 0)
     while lo < n_pairs:
-        want = cost_lo + max(floor_c, (total - cost_lo) / (4 * par))
+        want = (total * (len(ranges) + 1) / k if k else
+                cost_lo + max(floor_c, (total - cost_lo) / (4 * par)))
         if want >= total:
             hi = n_pairs
         else:

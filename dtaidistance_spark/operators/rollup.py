@@ -9,11 +9,13 @@ plain Spark hash aggregations that Catalyst executes with map-side
 partial aggregation (one shuffle per tier, keyed by series_id — skew-safe
 because bucket cardinality per series is bounded).
 
-All functions take and return DataFrames; nothing collects to the driver.
+All functions take and return DataFrames and collect nothing to the
+driver, except :func:`collect_dense_arrays`, which returns numpy.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -313,6 +315,52 @@ def dense_arrays(agg: DataFrame, bucket: str, value_col: str | list,
     return per_series.crossJoin(F.broadcast(bounds)).select(
         "series_id", F.timestamp_seconds(b0).alias("t0"),
         F.lit(step).alias("step_s"), "n", lookup.alias("values"))
+
+
+def collect_dense_arrays(agg: DataFrame, bucket: str, value_col: str,
+                         span_cap: int | None = None,
+                         min_len: int | None = None) -> tuple:
+    """The collected twin of :func:`dense_arrays`: ``(series ids, V)``
+    with row ``k`` of the float64 matrix ``V`` the ``values`` of series
+    ``ids[k]`` that ``dense_arrays(agg, bucket, value_col, span_cap)``
+    gives, ``==`` element for element.
+
+    The tier is collected sparse, ``(series_id, unix seconds, value)``,
+    and densified on the driver: the same global ``[b0, b1]`` with
+    ``b0`` trimmed by ``span_cap``, ``n = (b1 - b0)/step + 1``, a null
+    value or a missing bucket reads 0.0, a series with no bucket in the
+    window keeps an all-zero row.  ``min_len`` keeps every series when
+    ``n >= min_len`` and none otherwise, as ``where(n >= min_len)`` does
+    on equal-length rows.  ``ids`` are in the stable Arrow sort of
+    ``series_id`` (nulls first) that ``matrix._collect_corpus`` ranks
+    ``order_col`` by, so row ``k`` is the series that
+    ``distance_matrix(..., order_col="series_id")`` numbers ``k``.  An
+    empty tier gives no ids and a (0, 0) matrix."""
+    import pyarrow.compute as pc
+
+    _, step = BUCKET_SPEC[bucket]
+    tb = agg.select("series_id", F.unix_seconds("bucket_ts").alias("t"),
+                    F.col(value_col).cast("double").alias("v")).toArrow()
+    if tb.num_rows == 0:
+        return [], np.zeros((0, 0))
+    sid = tb.column("series_id")
+    uniq = pc.unique(sid)
+    ids = uniq.take(pc.sort_indices(uniq, null_placement="at_start"))
+    t = tb.column("t").to_numpy()
+    b0, b1 = int(t.min()), int(t.max())
+    if span_cap is not None:
+        b0 = max(b0, b1 - (span_cap - 1) * step)
+    n = int((b1 - b0) / step + 1)
+    if min_len is not None and n < min_len:
+        return [], np.zeros((0, n))
+    off = t - b0
+    k = off // step
+    keep = (off >= 0) & (off % step == 0)
+    V = np.zeros((len(ids), n))
+    row = pc.index_in(sid, value_set=ids).to_numpy()
+    v = pc.fill_null(tb.column("v"), 0.0).to_numpy()
+    V[row[keep], k[keep]] = v[keep]
+    return ids.to_pylist(), V
 
 
 def rollup_distinct(points: DataFrame, bucket: str = "1h",

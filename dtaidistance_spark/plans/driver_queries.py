@@ -21,7 +21,8 @@ from pyspark.sql import Window as W
 from ..kernels.dtw import DtwSettings
 from ..operators import rollup as R
 from ..operators.compress import compress_tier, decompress_chunks
-from ..operators.matrix import distance_matrix, with_index
+from ..operators.matrix import (distance_matrix, distance_matrix_dense,
+                                with_index)
 from ..operators import text as TX
 from ..operators import dedup as DD
 from ..operators import ann as ANN
@@ -1211,9 +1212,10 @@ def q_event_type_daily(spark, sf_dir):
 
 
 HOURLY_SPAN_CAP = 504  # trailing 21 days of hourly buckets
+HOURLY_MIN_LEN = 24
 
 
-def hourly_series(spark, sf_dir, min_len: int = 24) -> DataFrame:
+def hourly_series(spark, sf_dir, min_len: int = HOURLY_MIN_LEN) -> DataFrame:
     """Zero-filled per-user hourly event-count arrays on one global grid —
     the engine's dense series input for DTW.
 
@@ -1223,20 +1225,29 @@ def hourly_series(spark, sf_dir, min_len: int = 24) -> DataFrame:
     explode and join.  ``span_cap`` bounds the global grid to the
     trailing ``HOURLY_SPAN_CAP`` hourly buckets: with global alignment
     one long-lived series otherwise forces a full-span dense row for
-    *every* series (n_series × corpus span).  All downstream consumers
-    (DTW matrices, subsequence search, kmeans, linkage) see equal-length
-    trailing-window arrays; the subsequence_topk SQL oracle applies the
-    same cap.  Every array has the shared grid length, so ``min_len``
-    keeps all series or none."""
+    *every* series (n_series × corpus span).  The downstream consumers
+    (subsequence search, kmeans, linkage, the other DTW matrices) see
+    equal-length trailing-window arrays; the subsequence_topk SQL oracle
+    applies the same cap.  Every array has the shared grid length, so
+    ``min_len`` keeps all series or none.  ``q_dtw_distance_matrix``
+    does not read this frame: it densifies the same rows on the driver
+    (``rollup.collect_dense_arrays``)."""
     agg1h = R.rollup_points(event_points_rollup(spark, sf_dir), "1h")
     arrays = R.dense_arrays(agg1h, "1h", "cnt", span_cap=HOURLY_SPAN_CAP)
     return arrays.where(F.col("n") >= min_len)
 
 
 def q_dtw_distance_matrix(spark, sf_dir):
-    st = DtwSettings(window=24)
-    dist = distance_matrix(hourly_series(spark, sf_dir), settings=st,
-                           order_col="series_id")
+    """The flagship all-pairs matrix over the ``hourly_series`` arrays,
+    ``i`` the rank of ``series_id``.  The arrays are densified from the
+    sparse 1h tier inside the matrix's own collect
+    (``rollup.collect_dense_arrays``: two Spark jobs), where collecting
+    ``hourly_series`` and ranking it took five."""
+    agg1h = R.rollup_points(event_points_rollup(spark, sf_dir), "1h")
+    _, V = R.collect_dense_arrays(agg1h, "1h", "cnt",
+                                  span_cap=HOURLY_SPAN_CAP,
+                                  min_len=HOURLY_MIN_LEN)
+    dist = distance_matrix_dense(spark, V, settings=DtwSettings(window=24))
     return dist.select("i", "j", F.round("d", 6).alias("d"))
 
 

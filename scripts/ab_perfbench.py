@@ -1,7 +1,7 @@
 """A/B the repo benchmark between two checkouts, in alternating pairs.
 
     python3 scripts/ab_perfbench.py PARENT_DIR CHANGE_DIR \\
-        --workload tiers --pairs 10 --seeds 1-10 [--metric pass_s]
+        --workload tiers --pairs 10 --seeds 1-10 [--metric pass_s] [--layers]
 
 Each pair runs ``perfbench/run.py --trace 0`` once in each checkout, from
 that checkout's root and with the same seed and ``--seconds`` (the
@@ -27,7 +27,12 @@ verdict.  ``WORSE`` means the median moved the wrong way by more than
 the bound; ``unresolved`` means the parent's interquartile range is
 wider than the bound and not every change run beats every parent run;
 otherwise ``ok``.  Moves, bounds and ranges are relative to the parent's
-median.  It exits 1 when a run
+median.  With ``--layers`` it also reads each run's artifact (the file
+``run.py`` names on its ``artifact:`` line) and prints, per op, each
+side's median ``call`` time (building the op's plan, with the eager work
+inside the query call, such as a corpus collect and broadcast) and
+``force`` time (running that plan), from the same untraced passes that
+give the end-to-end metrics.  It exits 1 when a run
 fails or reports an incorrect output, and writes nothing under either
 checkout's ``perfbench/`` other than what ``run.py`` itself writes.
 """
@@ -52,8 +57,29 @@ def parse_seeds(text: str) -> list:
     return seeds
 
 
-def run_once(root: str, workload: str, seed: int, seconds: float) -> dict:
-    """One untraced benchmark run; its end-to-end metric values."""
+def op_layers(root: str, stdout: str) -> dict:
+    """``{op.call_s, op.force_s: seconds}``, the median over the run's
+    untraced passes, from the artifact named on run.py's ``artifact:``
+    line (a path relative to the checkout root)."""
+    path = next(line.split(":", 1)[1].strip()
+                for line in stdout.splitlines()
+                if line.strip().startswith("artifact:"))
+    with open(os.path.join(root, path)) as f:
+        art = json.load(f)
+    out = {}
+    for op in art["op_kinds"]:
+        done = [p for p in art["passes"] if op in p["ops"]]
+        out[f"{op}.call_s"] = statistics.median(
+            p["call"][op] for p in done)
+        out[f"{op}.force_s"] = statistics.median(
+            p["ops"][op] - p["call"][op] for p in done)
+    return out
+
+
+def run_once(root: str, workload: str, seed: int, seconds: float,
+             layers: bool = False) -> dict:
+    """One untraced benchmark run; its end-to-end metric values, and
+    with ``layers`` its per-op call and force times."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
@@ -71,6 +97,8 @@ def run_once(root: str, workload: str, seed: int, seconds: float) -> dict:
         raise SystemExit(f"ab_perfbench: incorrect output in {root} "
                          f"(seed {seed})")
     vals = {k: v["value"] for k, v in out["metrics"].items()}
+    if layers:
+        vals.update(op_layers(root, proc.stdout))
     print(f"    {os.path.basename(os.path.abspath(root)):>12s} seed {seed}: "
           f"{time.time() - t0:5.1f} s", file=sys.stderr, flush=True)
     return vals
@@ -107,6 +135,9 @@ def main() -> int:
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--metric", default="pass_s",
                     help="the end-to-end metric the claim rule checks")
+    ap.add_argument("--layers", action="store_true",
+                    help="also print each op's median call and force "
+                         "time per side, read from the run artifacts")
     args = ap.parse_args()
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -125,7 +156,8 @@ def main() -> int:
         seed = seeds[k % len(seeds)]
         order = ("parent", "change") if k % 2 == 0 else ("change", "parent")
         got = {side: run_once(sides[side], args.workload, seed,
-                              spec["run_seconds"]) for side in order}
+                              spec["run_seconds"], args.layers)
+               for side in order}
         for side in order:
             runs[side].append(got[side])
         p, c = got["parent"][args.metric], got["change"][args.metric]
@@ -139,6 +171,15 @@ def main() -> int:
         for side in ("parent", "change"):
             q1, med, q3 = quartiles([r[name] for r in runs[side]])
             print(f"{name:14s} {side:7s} {med:10.4g} {q1:10.4g} {q3:10.4g}")
+
+    if args.layers:
+        print(f"\n{'layer (s)':32s} {'side':7s} {'median':>10s} "
+              f"{'q1':>10s} {'q3':>10s}")
+        for name in sorted(k for k in runs["change"][0] if k not in better):
+            for side in ("parent", "change"):
+                q1, med, q3 = quartiles([r[name] for r in runs[side]])
+                print(f"{name:32s} {side:7s} {med:10.4g} {q1:10.4g} "
+                      f"{q3:10.4g}")
 
     sign = 1 if better[args.metric] == "lower" else -1
     wins = sum(sign * (p[args.metric] - c[args.metric]) > 0

@@ -89,6 +89,32 @@ def test_indexed_entry_bitequal():
         assert np.array_equal(np.sort(od), np.sort(d_ref))
 
 
+_LANE_SETTINGS = [{}, {"psi": 2}, {"psi": (1, 2, 3, 0)}, {"penalty": 0.7},
+                  {"max_step": 1.5}, {"inner_dist": "euclidean"},
+                  {"psi": 2, "penalty": 0.7, "max_step": 1.5,
+                   "inner_dist": "euclidean"}]
+
+
+@pytest.mark.parametrize("B", [1, 7, 8, 9, 500])
+@pytest.mark.parametrize("window", [None, 1, 3, 24, 160, 161, 200])
+def test_indexed_lanes_bitequal(clib, B, window):
+    """dtw_batch_idx runs pairs eight to a vector up to a band of 160
+    (LANE_MAX_WINDOW) and pads the last group; a wider band (161, and
+    None or 200 = L) runs one pair at a time.  Both must equal the numpy
+    DP bit for bit, whatever B leaves in the last group."""
+    rng = np.random.default_rng(B)
+    n, L = 40, 200
+    V = rng.normal(size=(n, L))
+    ii = rng.integers(0, n, B)
+    jj = rng.integers(0, n, B)
+    for kw in _LANE_SETTINGS:
+        s = K.DtwSettings(window=window, **kw)
+        d_c = K.dtw_distance_batch_indexed(V, ii, jj, settings=s)
+        d_np = _numpy_only(K.dtw_distance_batch_indexed, V, ii, jj,
+                           settings=s)
+        assert np.array_equal(d_c, d_np), kw
+
+
 @pytest.fixture
 def fresh_loader(monkeypatch, tmp_path):
     """Loader state reset, builds under tmp_path, CDLL calls recorded."""

@@ -27,7 +27,8 @@ def _got_segs(ep):
 
 
 # d' <= bound(d, delta_rel, delta_abs) per bounded approximation type:
-# the cost bounds of kernels/explain.py::_bounds_global as distances.
+# the reference's full-path bounds (compute_bounds_global,
+# explainpair.py:683) as distances.
 # max_dist's budget delta_abs holds only where the exact path is within
 # it; above it no segment merges and d' is d.
 BOUNDS = {
@@ -96,29 +97,6 @@ class TestExplainParity:
                 assert ref.distance_approx(per_segment=True) == \
                     got.distance_approx(per_segment=True)
 
-    def test_parity_global_tolerance(self):
-        ref_explain = _ref_explain()
-        # approx_local=False: the running global-bound merge criterion
-        # (reference remove_segments else-branch) — previously silently
-        # ignored (ADVICE r4 medium)
-        rng = np.random.default_rng(23)
-        for trial in range(8):
-            n = int(rng.integers(8, 110))
-            m = int(rng.integers(8, 110))
-            a = np.cumsum(rng.normal(0, 1, n))
-            b = np.cumsum(rng.normal(0, 1, m))
-            for at, dr, da in (("max_factor_and_diff", 1.0, 0.1),
-                               ("max_factor", 0.5, 0.0),
-                               ("max_diff", 1.0, 0.5)):
-                ref = ref_explain.ExplainPair(
-                    a, b, approx_type=ref_explain.ApproxType(at),
-                    delta_rel=dr, delta_abs=da, approx_local=False)
-                got = ExplainedPair(a, b, approx_type=at, delta_rel=dr,
-                                    delta_abs=da, approx_local=False)
-                assert _ref_segs(ref) == _got_segs(got), (trial, at, dr, da)
-                assert ref.distance_approx(per_segment=True) == \
-                    got.distance_approx(per_segment=True)
-
     def test_parity_split_strategies(self):
         ref_explain = _ref_explain()
         # non-default split-point selection (pathdiff / deriv /
@@ -182,8 +160,7 @@ class TestExplainParity:
             for dr, da in ((1, 0.1), (0.25, 0.05), (0.5, 2.0)):
                 ep = ExplainedPair(a, b, delta_rel=dr, delta_abs=da,
                                    approx_type=approx_type,
-                                   split_strategy=split_strategy,
-                                   approx_local=True)
+                                   split_strategy=split_strategy)
                 d = ep.distance()
                 assert ep.distance_approx() <= \
                     bound(d, dr, da) * (1 + 1e-12) + 1e-12, (d, dr, da)

@@ -202,8 +202,10 @@ class TestCostAwareScheduling:
     def test_cost_ranges_time_floor(self):
         from dtaidistance_spark.operators.matrix import _TASK_FLOOR_S
 
-        # 40 s over 32 slots: ranges of at least the floor's seconds
-        assert self.PAR < len(self._check_profile(40.0)) \
+        # 40 s over 32 slots: the floor binds from the first range, so
+        # equal ranges of at least the floor's seconds, 80 rounded down
+        # to two whole waves
+        assert len(self._check_profile(40.0)) == 2 * self.PAR \
             <= np.ceil(40.0 / _TASK_FLOOR_S)
         # 1 ms: the floor is capped at 1/par of the job, so a small job
         # still fills every slot
@@ -232,6 +234,16 @@ class TestCostAwareScheduling:
         slack = float(sl[-1] * sl[-2])  # max possible single-pair cost
         floor_c = max(total / n_pairs, total / (par * 24),
                       min(_TASK_FLOOR_S / cost_s, total / par))
+        if floor_c >= total / (4 * par):
+            # the floor binds from the first range: whole waves of equal
+            # ranges, each ending at the first pair that reaches its share
+            waves = max(1, int(total / floor_c) // par)
+            assert len(ranges) == par * waves
+            for k, (lo, hi) in enumerate(ranges[:-1]):
+                want = total * (k + 1) / len(ranges)
+                assert cost_upto(hi) >= want > cost_upto(hi) - slack
+                assert cost_upto(hi) - cost_upto(lo) >= floor_c - slack
+            return ranges
         for k, (lo, hi) in enumerate(ranges):
             c_lo, c_hi = cost_upto(lo), cost_upto(hi)
             quantum = max(floor_c, (total - c_lo) / (4 * par))
@@ -242,8 +254,8 @@ class TestCostAwareScheduling:
 
     def test_equal_length_schedule_pinned(self):
         # the dtw_matrix benchmark corpus: 480 equal-length series of 504
-        # points, window 24, on 4 cores — 3.38 s of estimated C-kernel
-        # time, so 7 ranges of the 0.5 s floor (17,017 pairs) and a tail
+        # points, window 24, on 4 cores — 0.61 s of estimated C-kernel
+        # time, under 4 × the 0.5 s floor, so one equal range per slot
         from dtaidistance_spark.operators.matrix import (
             _DTW_CELL_S, _cost_s, _guided_ranges_cost, _triu_cost_fn)
 
@@ -252,14 +264,14 @@ class TestCostAwareScheduling:
         cost_upto, total = _triu_cost_fn(lens)
         ranges = _guided_ranges_cost(cost_upto, n_pairs, total, 4,
                                      _cost_s(lens, 24, _DTW_CELL_S))
-        assert len(ranges) == 7
-        assert ranges[0] == (0, 17017)
+        assert len(ranges) == 4
+        assert ranges[0] == (0, 28740)
         assert ranges[-1][1] == n_pairs
         assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
 
     def test_long_job_keeps_plain_guided_schedule(self):
-        # 15k series of 504 points hold ~55 min of kernel time: the
-        # total / (24·par) floor (34 s) is above the time floor, so the
+        # 15k series of 504 points hold ~10 min of kernel time: the
+        # total / (24·par) floor (6.2 s) is above the time floor, so the
         # ranges are the plain guided schedule's, cut by the formula below
         from dtaidistance_spark.operators.matrix import (
             _DTW_CELL_S, _cost_s, _guided_ranges_cost, _triu_cost_fn)
@@ -335,8 +347,8 @@ class TestCostAwareScheduling:
         assert len(got) == len(set(got))  # every pair exactly once
 
     def test_one_block_schedule_pinned(self):
-        # one block is the plain schedule: the pinned 7 ranges above,
-        # as 7 tasks of one segment
+        # one block is the plain schedule: the pinned 4 ranges above,
+        # as 4 tasks of one segment
         from dtaidistance_spark.operators.matrix import (
             _DTW_CELL_S, _block_cuts, _cost_s, _tile_schedule, _tiles)
 
@@ -347,9 +359,9 @@ class TestCostAwareScheduling:
         tiles = _tiles(ids, lens, cuts, None, True)
         plan = _tile_schedule([t[5] for t in tiles], 4,
                               _cost_s(lens, 24, _DTW_CELL_S))
-        assert len(plan) == 7
+        assert len(plan) == 4
         assert all(len(task) == 1 for task in plan)  # one segment each
-        assert plan[0] == [(0, 0, 17017)]
+        assert plan[0] == [(0, 0, 28740)]
         assert plan[-1][0][2] == 480 * 479 // 2
 
     def test_blocked_vs_one_block_bit_identical(self, spark, rng,

@@ -129,6 +129,25 @@ class TestPlans:
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
         assert dist.count() > 0
 
+    def test_dtw_distance_matrix_call_runs_two_jobs(self, spark):
+        """``q_dtw_distance_matrix``'s call collects the sparse 1h tier
+        (the aggregate's map stage and the collect: two jobs) and
+        densifies it on the driver; collecting ``hourly_series`` and
+        ranking it took five.  The first call may also infer the events
+        schema, so the second is counted."""
+        from dtaidistance_spark.plans import driver_queries as DQ
+        sc = spark.sparkContext
+        DQ.q_dtw_distance_matrix(spark, SF_DIR)
+        group = "dtw-distance-matrix-call-jobs"
+        sc.setJobGroup(group, "q_dtw_distance_matrix call")
+        try:
+            dist = DQ.q_dtw_distance_matrix(spark, SF_DIR)
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+        n = DQ.hourly_series(spark, SF_DIR).count()
+        assert dist.count() == n * (n - 1) // 2
+
     def test_events_schema_inferred_once_per_file_version(self, spark,
                                                           tmp_path):
         """``_events`` infers the schema (one job) on its first read of a

@@ -11,8 +11,8 @@ import pytest
 
 from dtaidistance_spark.operators.ingest import transcript_points
 from dtaidistance_spark.operators.rollup import (
-    BUCKET_SPEC, dense_arrays, gap_fill, rollup_cascade, rollup_points,
-    series_arrays,
+    BUCKET_SPEC, collect_dense_arrays, dense_arrays, gap_fill,
+    rollup_cascade, rollup_points, series_arrays,
 )
 from dtaidistance_spark.sources.transcripts import synth_transcripts
 
@@ -264,6 +264,43 @@ class TestDenseArrays:
         # the null max at offset 5 reads as the fill, like a gap
         assert (a[0], a[1], a[5], a[9]) == (1.25, 2.25, 0.0, 10.25)
         assert sum(1 for x in a if x) == 3
+
+    @pytest.mark.parametrize("bucket", ["1h", "1d"])
+    @pytest.mark.parametrize("span_cap", [None, 10, 1000])
+    def test_collected_twin_equals_dense_arrays(self, spark, bucket,
+                                                span_cap):
+        """``collect_dense_arrays`` gives ``dense_arrays``' rows as one
+        matrix, ``==`` element for element, in series_id order; under
+        span_cap 10 "c" (wholly before the window) keeps a zero row."""
+        agg = self._agg(spark, bucket)
+        for col in ("cnt", "sum", "max"):
+            want = sorted(dense_arrays(agg, bucket, col,
+                                       span_cap=span_cap).collect(),
+                          key=lambda r: r["series_id"])
+            ids, V = collect_dense_arrays(agg, bucket, col,
+                                          span_cap=span_cap)
+            assert ids == [r["series_id"] for r in want] == ["a", "b", "c"]
+            assert V.dtype == np.float64
+            assert V.shape == (3, want[0]["n"])
+            assert V.tolist() == [r["values"] for r in want], col
+
+    @pytest.mark.parametrize("min_len", [None, 10, 11])
+    def test_collected_twin_min_len_and_empty(self, spark, min_len):
+        """``min_len`` keeps every series or none, as ``where(n >=
+        min_len)`` on ``dense_arrays``; an empty tier gives nothing."""
+        agg = self._agg(spark, "1h")
+        want = dense_arrays(agg, "1h", "cnt", span_cap=10)
+        if min_len is not None:
+            want = want.where(f"n >= {min_len}")
+        want = sorted(want.collect(), key=lambda r: r["series_id"])
+        ids, V = collect_dense_arrays(agg, "1h", "cnt", span_cap=10,
+                                      min_len=min_len)
+        assert ids == [r["series_id"] for r in want]
+        assert V.tolist() == [r["values"] for r in want]
+        assert len(want) == (0 if min_len == 11 else 3)
+        ids, V = collect_dense_arrays(agg.where("false"), "1h", "cnt",
+                                      min_len=min_len)
+        assert ids == [] and V.shape == (0, 0)
 
     def test_plan_one_aggregate_no_grid(self, spark):
         df = dense_arrays(self._agg(spark, "1h"), "1h", "cnt")
